@@ -13,7 +13,9 @@ same -d accumulate idempotently (dedup A5). The store is written via the
 SQLite sink, so `sqlite3 sms-db.db "SELECT ..."` works exactly as
 querying.md documents. Import rewrites the store through a staging file +
 atomic rename (the batch-transaction equivalent of the reference's single
-commit, sms-db.pl:47,231).
+commit, sms-db.pl:47,231). Export has one path, like the reference's
+single exporter: sinks.xml_export.export_xml, which serializes the
+document in fragments on the executors.
 """
 
 from __future__ import annotations
@@ -33,14 +35,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("-i", help="input to import (file for xml, directory/db for bugle/signal)")
     p.add_argument("-o", help="XML export output path")
     p.add_argument("-t", default="all", choices=["sms", "mms", "all"], help="message type")
-    # Spark-engine extension (no reference twin, sms-db.pl has no flag
-    # here): route -o through the distributed fragment serializer for
-    # big exports; output is byte-identical to the default path.
-    p.add_argument(
-        "--sharded-export",
-        action="store_true",
-        help="serialize XML export fragments on executors (large stores)",
-    )
     return p
 
 
@@ -116,10 +110,9 @@ def main(argv: list[str] | None = None) -> int:
         if existing[0] is None:
             print(f"No store at '{args.d}'", file=sys.stderr)
             return 1
-        from .sinks.xml_export import export_xml, export_xml_sharded
+        from .sinks.xml_export import export_xml
 
-        exporter = export_xml_sharded if args.sharded_export else export_xml
-        count = exporter(existing[0], existing[1], args.o, message_type=args.t)
+        count = export_xml(existing[0], existing[1], args.o, message_type=args.t)
         print(f"Total messages exported:\t{count}")
 
     print(f"Elapsed time:\t\t\t{round(time.time() - t0, 3)} seconds")

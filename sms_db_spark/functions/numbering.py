@@ -11,8 +11,8 @@ only serial work is the cumsum over per-partition counts (one row per
 partition).
 
 Shared core of `sources.canonical.dense_ids` (importer W2 id
-assignment, adds a range-repartition so ids follow a total order) and
-`operators.similarity._balanced_rank_ids` (packed-centroid chunk
+assignment, adds a pinned range-repartition so ids follow a total
+order) and `operators.similarity._balanced_rank_ids` (packed-centroid chunk
 numbering, where any balanced bijective numbering will do). They were
 deliberate twins through r12 to keep a pure refactor from re-gating the
 importer lineage; extracted in r13 while those rows rotate anyway
@@ -21,11 +21,11 @@ importer lineage; extracted in r13 while those rows rotate anyway
 CALLER CONTRACT — stable partition ids: the counts job and the
 numbering job are two Spark actions over the same frame, and the
 pid → offset map is only valid if both actions see identical
-partitioning. Two ways to satisfy it:
-  * deterministic lineage re-execution (dense_ids: `repartitionByRange`
-    over a deterministic scan re-partitions identically on re-run), or
-  * a pinned frame (persist / localCheckpoint — _balanced_rank_ids
-    requires this of its caller).
+partitioning. So the frame must be PINNED (persist / localCheckpoint):
+re-running an unpinned lineage is no substitute, because each action
+samples fresh range bounds and shuffle reads arrive in a different row
+order. dense_ids localCheckpoints its range-partitioned frame;
+_balanced_rank_ids requires a pinned frame of its caller.
 
 `strict` picks the failure mode when the contract breaks (a numbering
 task lands in a pid the counts job never saw):

@@ -118,53 +118,25 @@ def _tuned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessi
 # function, not the modules it lives near.
 #
 _CHANGED_THIS_ROUND = [
-    # Round 18 OPTIMIZATION diff. FIRST: the r17 driver-verification
-    # debt (VERDICT r17 "Next round" item 2) — these four audits'
-    # executed code changed in r17's late continuation (_pq_parallel
-    # concurrency in storage_queries.py) but were omitted from the r17
-    # list, so no driver row covers the changed code objects yet.
+    # One XML export path: export_xml became the fragment serializer and
+    # q148 runs one export + one re-import checksum (its oracle dropped
+    # to the same single row); the read_xml_staging_distributed it
+    # re-imports through numbers rows with dense_ids.
     "q148_sharded_export_audit",
-    "q154_bucketed_join_audit",
-    "q170_cascade_delete_audit",
-    "q175_cow_cascade_delete_audit",
-    # fingerprint lanes: positional frame assembly in the batch path
-    # of _fingerprint_frame (ADVICE r17 #4 — same values on every
-    # default-indexed batch, but the executed code object changed)
-    "q161_image_phash_neardup",
-    "q162_audio_fingerprint_neardup",
-    "q164_video_frame_neardup",
-    # r18 streaming/write-audit optimizations (results identical by
-    # construction — every entry re-passed tools/selfcheck.py after its
-    # change): source pins (localCheckpoint before slicing), concurrent
-    # independent lane chains/read-backs (_pq_parallel), the staged-
-    # parallel fold (fold_cold_batches_all), the gate helper's
-    # collect ∥ append overlap (quality.py — re-gates q146/q149/q160),
-    # the q158 probe fused to one aggregate, q178's checksum-count
-    # reuse, the orphan-agg fold (q170/q175), and export_xml's
-    # prefetching iterator (q148).
-    "q156_streaming_parity_audit",
-    "q169_streaming_events_parity_audit",
-    "q158_stream_join_ingest_audit",
-    "q178_stream_ingest_audit",
-    "q152_stream_neardup_audit",
-    "q159_stream_quality_monitor_audit",
-    "q149_stream_gated_upsert_audit",
-    "q146_gated_upsert_audit",
-    "q160_day2_chain_audit",
+    # dense_ids pins its range-partitioned frame (localCheckpoint) so the
+    # counts and numbering jobs read one partitioning.
+    "q141_epoch_shuffle",
+    # finalize_import (dense_ids pin, one store probe per table, total
+    # from the persisted batch, hashed unpersisted) and sms_export_frame
+    # (first-part decode moved after the join to SMS rows).
+    "q63_import_pipeline",
+    "q64_export_frame",
+    "q65_sql_verbatim",
+    "q171_sql_verbatim_ci",
+    "q172_quarantine_audit",
+    # fold_cold_batches_all normalizes shard ids to sorted distinct
+    # values before its concurrent stage.
     "q139_fold_audit",
-    # r18 wave 2: q135's batch-reference ∥ streaming-landing overlap,
-    # q151's bounds-probe fused into the read-back aggregate, q163's
-    # CLI-parity count fused into the detach, q179's lazy bpe_train
-    # round chain (initial pin only).
-    "q135_stream_shard_manifest_audit",
-    "q151_layout_audit",
-    "q163_sqlite_store_audit",
-    "q179_bpe_store_tokenize",
-    # star-round inner distinct dropped (dedup.py) — re-gates the three
-    # consumers (q70 shares the oracle closure and is unchanged code)
-    "q83_dedup_clusters_star",
-    "q97_cluster_representatives",
-    "q117_entity_resolution",
 ]
 
 

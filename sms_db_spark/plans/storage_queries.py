@@ -662,8 +662,8 @@ def q146_gated_upsert_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # q148 synthetic store shape: timestamps collide heavily (TS_MOD values
 # across the whole corpus) so the audit exercises exactly the tied-key
-# regime where the _id total order is what keeps the sharded and
-# single-writer documents byte-identical; addresses collide too
+# regime where the _id total order is what keeps the document order
+# independent of where the range bounds fall; addresses collide too
 # (ADDR_MOD distinct values) so ties are ties on the full (date,
 # address) prefix, not just the date.
 _EXPORT_TS_BASE = 1_500_000_000_000
@@ -672,35 +672,29 @@ _EXPORT_ADDR_MOD = 50
 
 
 def q148_sharded_export_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DISTRIBUTED XML serializer under the hash gate (VERDICT r7
-    item 4 — q64 gates the export frame, pytest pins byte-parity on
-    fixtures; the sharded writer itself had no driver-green row):
+    """The XML exporter under the hash gate (VERDICT r7 item 4 — q64
+    gates the export frame; this gates the fragment serializer itself):
     derive a synthetic SMS store from the documents corpus, export it
-    through BOTH export_xml_sharded (range-partitioned fragment
-    serialization) and export_xml (single driver writer), re-import
-    each document through the distributed XML source, and return per
-    path the exported count, re-imported count, and a content checksum
-    over the four exported attributes — which the oracle recomputes
-    from the raw corpus. A hash match proves the whole chain per path:
-    frame construction, serialization, the root count, fragment
-    ordering/concat, and the re-import parse. `bytes_equal` pins the
-    sharded==single byte-identity law on corpus-scale tied keys (only
-    the creation-stamp comment, different by design, is excluded).
+    through export_xml (range-partitioned fragment serialization),
+    re-import the document through the distributed XML source, and
+    return the exported count, re-imported count, and a content
+    checksum over the four exported attributes — which the oracle
+    recomputes from the raw corpus. A hash match proves the whole
+    chain: frame construction, serialization, the root count, fragment
+    ordering/concat, and the re-import parse.
 
     Scale note: fragment serialization and the re-import parse are
     distributed; the driver streams fragment bytes (O(chunk) memory)
-    and holds two aggregate rows. The document files are driver-local
-    by the exporters' contract; fragments go through the shared
-    scratch root when configured.
+    and holds one aggregate row. The document file is driver-local by
+    the exporter's contract; fragments go through the shared scratch
+    root when configured.
     """
-    import hashlib
     import os as _os
     import tempfile
 
-    from ..operators.similarity import _pq_parallel
     from ..operators.sketches import _h60
     from ..schemas import MSG_SMS
-    from ..sinks.xml_export import export_xml, export_xml_sharded
+    from ..sinks.xml_export import export_xml
     from ..sources.xml_source import read_xml_staging_distributed
 
     docs = load_table(spark, sf_dir, "documents")
@@ -726,72 +720,35 @@ def q148_sharded_export_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("binary").alias("data"),
     )
 
-    def digest(path: str) -> str:
-        h = hashlib.sha256()
-        with open(path, "rb") as fh:
-            for ln in fh:
-                if ln.startswith(b"<!--File Created By"):
-                    continue  # the creation stamp differs by design
-                h.update(ln)
-        return h.hexdigest()
-
     with _scratch_dir(spark, "sms_db_spark_export_frag_") as frag_root, (
         tempfile.TemporaryDirectory(prefix="sms_db_spark_export_docs_")
     ) as tmp:
-        single = _os.path.join(tmp, "single.xml")
-        sharded = _os.path.join(tmp, "sharded.xml")
-        # the single-writer export is DRIVER-bound (per-row ElementTree
-        # serialization off toLocalIterator) while the sharded export is
-        # cluster-bound — run them as concurrent driver jobs (guide
-        # §2.6; r17). They write distinct files; each persists its own
-        # export frames, and the shared cache entry a finishing side
-        # unpersists just falls back to a deterministic recompute.
-        n_single, n_sharded = _pq_parallel(
-            lambda: export_xml(messages, parts, single, "sms"),
-            lambda: export_xml_sharded(
-                messages, parts, sharded, "sms", fragments_dir=frag_root
-            ),
-        )
-        bytes_equal = int(digest(single) == digest(sharded))
-
-        def reimport(label: str, fpath: str, n_exported: int) -> tuple:
-            sms, _mms, _addr, _part = read_xml_staging_distributed(spark, fpath)
-            agg = sms.agg(
-                F.count(F.lit(1)).alias("n"),
-                (
-                    F.sum(
-                        _h60(
-                            F.concat_ws(
-                                "\x01",
-                                F.col("address"),
-                                F.col("date").cast("string"),
-                                F.col("type").cast("string"),
-                                F.col("body"),
-                            )
-                        ).cast("decimal(38,0)")
-                    )
-                    % F.lit(_CHECKSUM_MOD)
+        doc = _os.path.join(tmp, "export.xml")
+        n_exported = export_xml(messages, parts, doc, "sms", fragments_dir=frag_root)
+        sms, _mms, _addr, _part = read_xml_staging_distributed(spark, doc)
+        agg = sms.agg(
+            F.count(F.lit(1)).alias("n"),
+            (
+                F.sum(
+                    _h60(
+                        F.concat_ws(
+                            "\x01",
+                            F.col("address"),
+                            F.col("date").cast("string"),
+                            F.col("type").cast("string"),
+                            F.col("body"),
+                        )
+                    ).cast("decimal(38,0)")
                 )
-                .cast("bigint")
-                .alias("chk"),
-            ).collect()[0]
-            return (
-                label, int(n_exported), int(agg["n"]), int(agg["chk"]), bytes_equal
+                % F.lit(_CHECKSUM_MOD)
             )
-
-        # the two re-import parse+agg jobs read distinct finished files —
-        # independent, so they also run concurrently
-        rows = list(
-            _pq_parallel(
-                lambda: reimport("sharded", sharded, n_sharded),
-                lambda: reimport("single", single, n_single),
-            )
-        )
+            .cast("bigint")
+            .alias("chk"),
+        ).collect()[0]
     return spark.createDataFrame(
-        rows,
-        "path string, n_exported bigint, n_reimported bigint,"
-        " checksum_mod bigint, bytes_equal int",
-    ).orderBy("path")
+        [(int(n_exported), int(agg["n"]), int(agg["chk"]))],
+        "n_exported bigint, n_reimported bigint, checksum_mod bigint",
+    )
 
 
 def _q148_sql() -> str:
@@ -804,13 +761,10 @@ WITH synth AS (
          CAST(doc_id % 2 + 1 AS VARCHAR) AS type_s,
          'doc ' || CAST(doc_id AS VARCHAR) || ' len ' || CAST(n_chars AS VARCHAR) AS body
   FROM documents
-), agg AS (
-  SELECT COUNT(*) AS n, CAST(SUM({h}) % {_CHECKSUM_MOD} AS BIGINT) AS chk FROM synth
 )
-SELECT p.path, agg.n AS n_exported, agg.n AS n_reimported,
-       agg.chk AS checksum_mod, 1 AS bytes_equal
-FROM agg CROSS JOIN (VALUES ('sharded'), ('single')) AS p(path)
-ORDER BY path
+SELECT COUNT(*) AS n_exported, COUNT(*) AS n_reimported,
+       CAST(SUM({h}) % {_CHECKSUM_MOD} AS BIGINT) AS checksum_mod
+FROM synth
 """
 
 
@@ -3893,7 +3847,7 @@ QUERIES = {
     "q148_sharded_export_audit": QuerySpec(
         q148_sharded_export_audit,
         _q148_sql(),
-        "distributed XML export: sharded==single bytes + re-import hash",
+        "distributed XML export: fragment serializer + re-import hash",
     ),
     "q149_stream_gated_upsert_audit": QuerySpec(
         q149_stream_gated_upsert_audit,

@@ -2,9 +2,10 @@
 
 Spark shape (SURVEY.md E2): the per-message scalar subqueries (J10) become
 one join + deterministic first-part pick (W1); ordering is the reference's
-ORDER BY timestamp with an _id tiebreak for a stable total order; the
-single-document XML serialization is inherently sequential → driver-side
-via toLocalIterator (constant driver memory, no full collect).
+ORDER BY timestamp with an _id tiebreak for a stable total order. The
+single XML document is serialized in range-partitioned fragments on the
+executors; the driver only streams the fragment bytes, in partition
+order, between the document header and footer.
 """
 
 from __future__ import annotations
@@ -39,13 +40,15 @@ def sms_export_frame(messages: DataFrame, parts: DataFrame) -> DataFrame:
     """SMS rows with body = first part (W1: row_number by part _id replaces
     the reference's unordered selectrow_array, sms-db.pl:247). Carries the
     store `_id` as the FINAL sort key: with it the export order is a total
-    order, so single-writer and sharded serialization produce identical
-    bytes even on tied (date, address) pairs."""
+    order, so the document bytes do not depend on how the range
+    partitioning splits tied (date, address) pairs. The first part's
+    bytes are UTF-8-decoded only AFTER the join to SMS rows: an MMS
+    whose first part is binary never reaches the decode."""
     w = Window.partitionBy("message_id").orderBy("_id")
     first_part = (
         parts.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("message_id", F.coalesce(F.col("text"), F.decode(F.col("data"), "UTF-8")).alias("body"))
+        .select("message_id", "text", "data")
     )
     return (
         messages.filter(F.col("message_type") == MSG_SMS)
@@ -56,7 +59,7 @@ def sms_export_frame(messages: DataFrame, parts: DataFrame) -> DataFrame:
             .alias("address"),
             F.col("timestamp").alias("date"),
             F.col("msg_box").alias("type"),
-            "body",
+            F.coalesce(F.col("text"), F.decode(F.col("data"), "UTF-8")).alias("body"),
             messages._id.alias("_id"),
         )
         .orderBy("date", "address", "_id")
@@ -174,38 +177,38 @@ def _stream_fragment(fh, jvm, fs, p) -> None:
         os.unlink(tmp.name)
 
 
-def export_xml_sharded(
+def export_xml(
     messages: DataFrame,
     parts: DataFrame,
     path: str,
     message_type: str = "all",
     fragments_dir: str | None = None,
 ) -> int:
-    """export_xml with the serialization DISTRIBUTED (the 100x-scale
-    path): each range partition of the ordered export frame renders its
-    messages to an XML fragment (the per-element bytes are produced by
-    the same _sms_element/_mms_element builders, so fragment content is
-    identical to the single-writer path); the driver then only streams
-    fragment bytes between the header and footer. The single-document
-    contract (one root, global timestamp order, exact root count —
-    sms-db.pl:237-311) is preserved, but the ElementTree work — the
-    actual cost of a big export — scales with executors instead of
-    bottlenecking on one writer, and driver memory is O(one fragment).
+    """Write the Synctech XML document; returns the exported-message
+    count (the root `count` attribute, sms-db.pl:306).
+
+    Each range partition of an ordered export frame renders its messages
+    to an XML fragment on an executor (_sms_element/_mms_element); the
+    driver then streams the fragment bytes between the header and
+    footer. The single-document contract (one root, global timestamp
+    order, exact root count — sms-db.pl:237-311) holds, while the
+    ElementTree work — the actual cost of a big export — scales with
+    executors and driver memory stays O(one copy chunk). (The reference
+    builds the whole XML::LibXML doc in memory.)
 
     Ordering: repartitionByRange + sortWithinPartitions on the export
     sort keys IS Spark's global sort, and fragment files are
-    concatenated in partition order, so the document order equals
-    export_xml's. The store `_id` is the final sort key on BOTH paths
-    (a total order), so byte-identity with export_xml is unconditional
-    — tied timestamps included — and heavy key ties cannot collapse
-    the range partitioning into one oversized fragment.
+    concatenated in partition order. The store `_id` is the final sort
+    key (a total order), so the bytes do not depend on where the range
+    bounds fall — tied timestamps included — and heavy key ties cannot
+    collapse the range partitioning into one oversized fragment.
 
     `fragments_dir`, when given, is a PARENT under which a unique
     per-run child is created and deleted — nothing else in it is
     touched (so a shared scratch root is safe to pass). It must be
     visible to both executors and driver — on a cluster, shared
     storage. Default: a unique `<path>.fragments-<run>` sibling. The
-    final document itself is written driver-local like export_xml.
+    final document itself is written driver-local.
     """
     import uuid
 
@@ -244,8 +247,8 @@ def export_xml_sharded(
                     e = build(row)
                     ET.indent(e, level=1)
                     # tostring char-ref-escapes non-ASCII, so the record
-                    # is pure ASCII and the text write re-emits the exact
-                    # bytes the single-writer path produces
+                    # is pure ASCII and the text write re-emits
+                    # ET.tostring's bytes exactly
                     yield ((b"  " + ET.tostring(e)).decode("ascii"),)
 
             # DataFrame text writer with compression pinned OFF: a site
@@ -277,55 +280,4 @@ def export_xml_sharded(
         for frame, *_ in jobs:
             frame.unpersist()
         fs.delete(jvm.org.apache.hadoop.fs.Path(frag_root), True)
-    return total
-
-
-def export_xml(messages: DataFrame, parts: DataFrame, path: str, message_type: str = "all") -> int:
-    """Write the Synctech XML document; returns exported-message count
-    (the root `count` attribute, sms-db.pl:306).
-
-    Stream-serialized: counts come from cheap count() actions, then each
-    message element is serialized and written as it arrives from
-    toLocalIterator — driver memory is O(one message), not O(document).
-    (The reference builds the whole XML::LibXML doc in memory; a 100 GB
-    export would OOM there but streams here.)
-    """
-    sms_frame = sms_export_frame(messages, parts) if message_type in ("sms", "all") else None
-    mms_frame = mms_export_frame(messages, parts) if message_type in ("mms", "all") else None
-    frames = [f for f in (sms_frame, mms_frame) if f is not None]
-    # The root `count` attribute is written before any row, so each frame
-    # is needed twice (count, then iterate). Persist so the plan executes
-    # ONCE into the block cache and both actions read the cached result —
-    # without this the whole export pipeline ran twice per frame.
-    for f in frames:
-        f.persist()
-    try:
-        total = sum(f.count() for f in frames)
-        with open(path, "wb") as fh:
-            fh.write(b"<?xml version='1.0' encoding='UTF-8' standalone='yes'?>\n")
-            # the reference stamps a creation comment (sms-db.pl:240)
-            fh.write(
-                f"<!--File Created By sms-db-spark v{__version__} on {time.ctime()}-->\n".encode()
-            )
-            fh.write(f'<smses count="{total}">\n'.encode())
-            for frame, build in ((sms_frame, _sms_element), (mms_frame, _mms_element)):
-                if frame is None:
-                    continue
-                # prefetchPartitions: without it the driver serializes
-                # partition k while the cluster idles, then waits a full
-                # job round-trip for partition k+1 (32 sequential mini
-                # jobs under the 32-partition sort). Prefetch overlaps
-                # the fetch with the ElementTree work; memory stays
-                # O(partitions in flight), never O(document) (guide
-                # §2.6 — r18). Iteration order is unchanged.
-                for row in frame.toLocalIterator(prefetchPartitions=True):
-                    e = build(row)
-                    ET.indent(e, level=1)
-                    fh.write(b"  ")
-                    fh.write(ET.tostring(e))
-                    fh.write(b"\n")
-            fh.write(b"</smses>\n")
-    finally:
-        for f in frames:
-            f.unpersist()
     return total

@@ -59,19 +59,19 @@ def dense_ids(df: DataFrame, order_cols: list[str], id_col: str = "_id", start: 
     """Assign dense sequential ids start..start+N-1 in the total order
     of order_cols (W2, the AUTOINCREMENT shape of sms-db.pl:49).
 
-    Range-repartition on the order (deterministic on re-run, which is
-    what makes the kernel's two-action contract hold over unpinned
-    lineage), then the shared two-phase partition-offset numbering —
-    per-partition row_number + driver-side cumsum of per-partition
-    counts, no global single-partition window (functions/numbering.py;
-    extracted from the r12 deliberate twin with
-    similarity._balanced_rank_ids, VERDICT r12 item 4). strict=True:
-    this path has no downstream bijectivity validation, so a
-    broken-contract pid should throw Spark's ANSI map-key error rather
-    than silently yield NULL ids.
+    Range-repartition on the order and PIN the result with
+    localCheckpoint: the kernel's counts job and numbering job must see
+    one partitioning, and re-running the lineage does not reproduce it
+    (each action samples fresh range bounds, and a shuffled input reaches
+    the sampler in a different row order). Then the shared two-phase
+    partition-offset numbering — per-partition row_number + driver-side
+    cumsum of per-partition counts, no global single-partition window
+    (functions/numbering.py). strict=True: this path has no downstream
+    bijectivity validation, so a broken-contract pid should throw
+    Spark's ANSI map-key error rather than silently yield NULL ids.
     """
     n_part = max(df.rdd.getNumPartitions(), 1)
-    ordered = df.repartitionByRange(n_part, *[F.col(c) for c in order_cols])
+    ordered = df.repartitionByRange(n_part, *[F.col(c) for c in order_cols]).localCheckpoint()
     return partition_offset_ids(ordered, order_cols, id_col, start=start, strict=True)
 
 
@@ -101,20 +101,25 @@ def finalize_import(
     reference's insert order). Store-side dedup: left_anti on hash.
     """
     # persist the hashed batch: this function drives several actions over
-    # it (counts, id-offset collect, final select) — without a persist each
-    # action re-executes the normalizer join chain from the source
+    # it (the total count, the keeper join, the id-offset collects) —
+    # without a persist each action re-executes the normalizer join chain
     hashed = with_message_hash(staged_messages, staged_parts).persist()
+    total = hashed.count() + ignored_count
 
     keeper = hashed.groupBy("hash").agg(F.min("local_id").alias("local_id"))
     batch_unique = hashed.join(keeper, ["hash", "local_id"], "inner")
 
-    if existing_messages is not None and existing_messages.head(1):
+    has_store = existing_messages is not None and bool(existing_messages.head(1))
+    has_store_parts = (
+        has_store and existing_parts is not None and bool(existing_parts.head(1))
+    )
+    if has_store:
         store_hashes = existing_messages.select("hash")
         new_msgs = batch_unique.join(store_hashes, "hash", "left_anti")
         id_start = existing_messages.agg(F.max("_id")).collect()[0][0] + 1
         part_id_start = (
             existing_parts.agg(F.max("_id")).collect()[0][0] + 1
-            if existing_parts is not None and existing_parts.head(1)
+            if has_store_parts
             else 1
         )
     else:
@@ -123,7 +128,6 @@ def finalize_import(
 
     with_ids = dense_ids(new_msgs, ["local_id"], "_id", start=id_start)
 
-    total = staged_messages.count() + ignored_count
     inserted = with_ids.count()
     duplicates = total - inserted - ignored_count
 
@@ -137,11 +141,13 @@ def finalize_import(
     parts = dense_ids(
         kept_parts, ["message_id", "part_seq"], "_id", start=part_id_start
     ).select("_id", "message_id", "data", "text", "content_type", "filename")
+    # both id frames are pinned by dense_ids: nothing reads `hashed` now
+    hashed.unpersist()
     total_parts = parts.count()
 
-    if existing_messages is not None and existing_messages.head(1):
+    if has_store:
         messages = existing_messages.unionByName(messages)
-        if existing_parts is not None and existing_parts.head(1):
+        if has_store_parts:
             parts = existing_parts.unionByName(parts)
 
     return ImportResult(

@@ -360,7 +360,9 @@ def fold_cold_batches_all(
 
     recover_interrupted_fold(spark, shard_dir)  # nothing else is in flight
     manifest = _load_manifest(spark, shard_dir)
-    ids = list(shard_ids)
+    # sorted distinct: a repeated id would stage the same `.fold_*` dir
+    # from two threads at once
+    ids = sorted({int(sid) for sid in shard_ids})
     if not ids:
         return []
     with ThreadPoolExecutor(max_workers=min(8, len(ids))) as pool:

@@ -87,3 +87,13 @@ def test_dense_ids_helper_multi_partition(spark):
     out = dense_ids(df, ["k"], "_id", start=1)
     rows = out.orderBy("k").collect()
     assert [r["_id"] for r in rows] == list(range(1, 1001))
+
+
+def test_dense_ids_dense_over_shuffled_input(spark):
+    """Each Spark action samples fresh range bounds, and a shuffled
+    input reaches the sampler in a different row order each time, so
+    re-running the lineage may re-partition differently: the counts job
+    and the numbering job must read ONE pinned partitioning."""
+    df = spark.range(2000).repartition(4).select(F.col("id").alias("k"))
+    rows = dense_ids(df, ["k"], "_id", start=1).orderBy("k").collect()
+    assert [r["_id"] for r in rows] == list(range(1, 2001))

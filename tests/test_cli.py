@@ -195,18 +195,15 @@ def test_read_sqlite_without_rowid_table_degrades_to_null(spark, tmp_path):
     assert rows2["a"].rowid == 1 and rows2["b"].rowid == 2
 
 
-def test_cli_sharded_export_matches_default(spark, tmp_path, xml_file):
-    """--sharded-export routes through the distributed serializer and
-    produces the same document (modulo the timestamp comment)."""
+def test_cli_export_matches_golden(spark, tmp_path, xml_file):
+    """-o writes, byte for byte (modulo the timestamp comment), the
+    document recorded in tests/golden/cli_export.xml for this store."""
+    from pathlib import Path
+
     db = str(tmp_path / "sms-db.db")
-    out_a, out_b = str(tmp_path / "a.xml"), str(tmp_path / "b.xml")
+    out = tmp_path / "export.xml"
     assert main(["-f", "xml", "-i", xml_file, "-d", db]) == 0
-    assert main(["-f", "xml", "-o", out_a, "-d", db]) == 0
-    assert main(["-f", "xml", "-o", out_b, "-d", db, "--sharded-export"]) == 0
-
-    def strip_stamp(p):
-        lines = open(p, "rb").read().split(b"\n")
-        return b"\n".join(lines[:1] + lines[2:])
-
-    assert strip_stamp(out_a) == strip_stamp(out_b)
-    assert ET.parse(out_b).getroot().get("count") == "3"
+    assert main(["-f", "xml", "-o", str(out), "-d", db]) == 0
+    lines = out.read_bytes().split(b"\n")
+    golden = (Path(__file__).parent / "golden" / "cli_export.xml").read_bytes()
+    assert b"\n".join(lines[:1] + lines[2:]) == golden

@@ -228,11 +228,25 @@ def test_q141_epoch_shuffle_partitions_and_mixes(spark):
     assert curation.q141_epoch_shuffle(spark, SF_DIR).collect() == rows
 
 
-def test_q141_epoch_shuffle_sort_is_distributed(spark):
+def test_q141_epoch_shuffle_sort_is_distributed(spark, monkeypatch):
     """The global order must come from a range-partitioned sort plus a
     per-partition window (dense_ids' two-phase kernel) — never a
-    single-partition global window over row data."""
+    single-partition global window over row data. dense_ids pins the
+    range-partitioned frame with localCheckpoint, so the range exchange
+    runs in the pin job: it is asserted on the pinned frame's plan, and
+    neither that plan nor the lane's own may hold a SinglePartition."""
+    DataFrame = type(spark.range(1))  # the concrete class localCheckpoint runs on
+    pinned_plans = []
+    orig_pin = DataFrame.localCheckpoint
+
+    def recording_pin(self, *a, **k):
+        pinned_plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig_pin(self, *a, **k)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording_pin)
     d = curation.q141_epoch_shuffle(spark, SF_DIR)
     plan = d._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning(_k" in plan
+    (pinned,) = [p for p in pinned_plans if "_k" in p]
+    assert "rangepartitioning(_k" in pinned
+    assert "SinglePartition" not in pinned
     assert "SinglePartition" not in plan

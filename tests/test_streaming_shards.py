@@ -353,3 +353,21 @@ def test_fold_cold_batches_all_crash_between_commits_recovers(spark, tmp_path):
     assert spark.read.parquet(shard_dir).count() == docs.count()
     # every shard folded: a full pass finds nothing pending
     assert [fold_cold_batches(spark, shard_dir, s) for s in range(N)] == [None] * N
+
+
+def test_fold_cold_batches_all_dedups_shard_ids(spark, tmp_path):
+    """A repeated shard id folds once: the ids are normalized to sorted
+    distinct values before the concurrent stage, so no two threads
+    stage the same `.fold_*` dir."""
+    from sms_db_spark.streaming.shards import _load_manifest, fold_cold_batches_all
+
+    shard_dir = str(tmp_path / "stream")
+    docs = _three_batches(spark, shard_dir)
+    before = merged_manifest(spark, shard_dir)
+    per_batch = [set(e) for e in _load_manifest(spark, shard_dir)["batches"].values()]
+    a, b = sorted(int(s) for s in set.intersection(*per_batch))[:2]
+    metas = fold_cold_batches_all(spark, shard_dir, [a, a, b])
+    assert [m["shard"] for m in metas] == [a, b]
+    assert merged_manifest(spark, shard_dir) == before
+    assert verify_stream_shards(spark, shard_dir)["ok"]
+    assert spark.read.parquet(shard_dir).count() == docs.count()
