@@ -1,152 +1,80 @@
-"""Pin tools/bench_compare.refresh_check — the mechanical gate the r14
-anchor refresh went through. Synthetic run artifacts on disk, real
-criteria against the EMBEDDED bench anchor, so a future edit cannot
-silently loosen a criterion (the exact laundering class the checker
-exists to stop)."""
+"""Pin tools/bench_compare's two-artifact diff: its exit code is the
+CI-style guard (1 when a shared query got slower than the threshold, 0
+otherwise), and it must read both an artifact that wraps the bench line
+under "parsed" and bench.py's raw stdout."""
 
-import copy
 import json
 import sys
 from pathlib import Path
 
-import pytest
-
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import bench
 import bench_compare
 
-
-def _clean_run():
-    """A run that satisfies criteria 1-3 against the embedded anchor."""
-    return {
-        "anchor_round": bench.ANCHOR_ROUND,
-        "anchor_total_ratio": 1.0,
-        "calibration_sec": bench.ANCHOR_CAL_SEC,
-        "calibration_overhead_sec": 0.06,
-        "suspects_vs_anchor": {},
-        "watch_vs_anchor": {},
-        "suspect_ambient": False,
-        "write_audits_rotated_out": [],
-        "queries": dict(bench.ANCHOR),
-    }
+OLD = {"q01": 1.0, "q06": 2.0, "q07": 0.5}
 
 
-def _write(tmp_path, name, run):
-    p = tmp_path / name
-    p.write_text(json.dumps(run))
+def _wrapped_artifact(tmp_path, queries):
+    """The bench line wrapped under "parsed", next to other fields."""
+    p = tmp_path / "old.json"
+    doc = {"metric": "headline_queries_total_wall", "queries": queries}
+    p.write_text(json.dumps({"rc": 0, "parsed": doc, "tail": "..."}))
     return str(p)
 
 
-def test_two_clean_runs_permit(tmp_path, capsys):
-    paths = [
-        _write(tmp_path, "a.json", _clean_run()),
-        _write(tmp_path, "b.json", _clean_run()),
-    ]
-    assert bench_compare.refresh_check(paths) == 0
-    assert "PERMITTED" in capsys.readouterr().out
-
-
-def test_one_run_is_a_preview_not_a_pass(tmp_path, capsys):
-    paths = [_write(tmp_path, "a.json", _clean_run())]
-    assert bench_compare.refresh_check(paths) == 1
-    assert "preview" in capsys.readouterr().out
-
-
-def test_same_artifact_twice_is_not_two_runs(tmp_path, capsys):
-    p = _write(tmp_path, "a.json", _clean_run())
-    assert bench_compare.refresh_check([p, p]) == 1
-    assert "SAME artifact" in capsys.readouterr().out
-
-
-def test_stale_anchor_round_blocks(tmp_path, capsys):
-    stale = _clean_run()
-    stale["anchor_round"] = bench.ANCHOR_ROUND - 1
-    paths = [
-        _write(tmp_path, "a.json", stale),
-        _write(tmp_path, "b.json", _clean_run()),
-    ]
-    assert bench_compare.refresh_check(paths) == 1
-
-
-def test_rotation_reduced_write_bucket_blocks(tmp_path, capsys):
-    # ADVICE r13 #4: a run without SMS_DB_SPARK_BENCH_ALL_AUDITS=1
-    # carries rotated-out audits and must not anchor
-    reduced = _clean_run()
-    reduced["write_audits_rotated_out"] = ["q156_streaming_parity_audit"]
-    paths = [
-        _write(tmp_path, "a.json", _clean_run()),
-        _write(tmp_path, "b.json", reduced),
-    ]
-    assert bench_compare.refresh_check(paths) == 1
-    assert "full write bucket" in capsys.readouterr().out
-
-
-def test_missing_tier_fields_fail_closed(tmp_path, capsys):
-    # a truncated/totals-only artifact must FAIL with the fields named,
-    # never pass vacuously (review r12)
-    truncated = _clean_run()
-    del truncated["suspects_vs_anchor"]
-    paths = [
-        _write(tmp_path, "a.json", _clean_run()),
-        _write(tmp_path, "b.json", truncated),
-    ]
-    assert bench_compare.refresh_check(paths) == 1
-    assert "missing" in capsys.readouterr().out
-
-
-def test_era_normalization_rescues_a_slower_machine(tmp_path, capsys):
-    # raw ratio 1.25 on a 1.3x-slower machine: era-normalized ~0.96
-    # passes criterion 1 (the r14 run-3 shape)
-    slow = _clean_run()
-    slow["calibration_sec"] = round(bench.ANCHOR_CAL_SEC * 1.3, 3)
-    slow["anchor_total_ratio"] = 1.25
-    paths = [
-        _write(tmp_path, "a.json", _clean_run()),
-        _write(tmp_path, "b.json", slow),
-    ]
-    assert bench_compare.refresh_check(paths) == 0
-
-
-def test_drastically_faster_cal_blocks_both_directions(tmp_path):
-    # ADVICE r12 #3: a much FASTER calibration breaks era-normalized
-    # comparability exactly like a slower one
-    fast = _clean_run()
-    fast["calibration_sec"] = round(
-        bench.ANCHOR_CAL_SEC / (bench.CAL_FLAT_RATIO * 1.2), 3
+def _raw_stdout(tmp_path, queries):
+    """bench.py's stdout: progress-bar noise, the main line, the compact
+    per-query lines (which also carry a "queries" key) and the totals."""
+    main = {"metric": "headline_queries_total_wall", "queries": queries,
+            "value": round(sum(queries.values()), 3)}
+    compact = {"metric": "per_query_headline", "part": "1/1", "n_omitted": 0,
+               "queries": {"q01": 99.0}}
+    totals = {"metric": "headline_queries_total_wall", "value": main["value"]}
+    p = tmp_path / "new.txt"
+    p.write_text(
+        "[Stage 3:====>   (2 + 2) / 4]\r"
+        + "\n".join(json.dumps(d) for d in (main, compact, totals))
+        + "\n"
     )
-    paths = [
-        _write(tmp_path, "a.json", _clean_run()),
-        _write(tmp_path, "b.json", fast),
-    ]
-    assert bench_compare.refresh_check(paths) == 1
+    return str(p)
 
 
-def test_criterion4_floor_hides_subsecond_movers_and_flags_big_ones(
-    tmp_path, capsys
-):
-    run = _clean_run()
-    # a sub-second-anchor query inflated 1.6x: below the mover floor,
-    # must NOT be flagged for explanation
-    sub = next(
-        q for q, t in bench.ANCHOR.items()
-        if t < bench.REFRESH_MOVER_MIN_ANCHOR_SEC
-    )
-    big = next(
-        q for q, t in bench.ANCHOR.items()
-        if t >= bench.REFRESH_MOVER_MIN_ANCHOR_SEC
-    )
-    run["queries"] = dict(bench.ANCHOR)
-    run["queries"][sub] = bench.ANCHOR[sub] * 1.6
-    run["queries"][big] = bench.ANCHOR[big] * 1.6
-    paths = [
-        _write(tmp_path, "a.json", _clean_run()),
-        _write(tmp_path, "b.json", run),
-    ]
-    rc = bench_compare.refresh_check(paths)
+def _paths(tmp_path, new):
+    return _wrapped_artifact(tmp_path, OLD), _raw_stdout(tmp_path, new)
+
+
+def _main(monkeypatch, *argv):
+    monkeypatch.setattr(sys, "argv", ["bench_compare.py", *argv])
+    return bench_compare.main()
+
+
+def test_loads_wrapped_artifact_and_raw_stdout(tmp_path):
+    assert bench_compare.load(_wrapped_artifact(tmp_path, OLD))["queries"] == OLD
+    # the main line, not a compact per-query line, is what gets diffed
+    assert bench_compare.load(_raw_stdout(tmp_path, OLD))["queries"] == OLD
+
+
+def test_shared_query_past_threshold_exits_1(tmp_path, monkeypatch, capsys):
+    new = dict(OLD, q06=3.2)  # 1.6x > default 1.5x
+    rc = _main(monkeypatch, *_paths(tmp_path, new))
     out = capsys.readouterr().out
-    assert rc == 0  # criteria 1-3 still pass; criterion 4 is by-name
-    flagged_lines = [l for l in out.splitlines() if "EXPLAIN BY NAME" in l]
-    assert any(big in l for l in flagged_lines)
-    assert not any(sub in l for l in flagged_lines)
+    assert rc == 1
+    flagged = [line for line in out.splitlines() if "REGRESSION" in line]
+    assert len(flagged) == 1 and flagged[0].startswith("q06")
+
+
+def test_within_threshold_exits_0(tmp_path, monkeypatch, capsys):
+    # q06 slower by 1.6x but under an explicit 2.0 threshold; an added
+    # lane is reported, never flagged
+    new = dict(OLD, q06=3.2, q99=10.0)
+    assert _main(monkeypatch, *_paths(tmp_path, new), "2.0") == 0
+    out = capsys.readouterr().out
+    assert "REGRESSION" not in out
+    assert "added (1)" in out
+
+
+def test_faster_and_removed_queries_exit_0(tmp_path, monkeypatch, capsys):
+    new = {"q01": 0.5, "q06": 2.0}
+    rc = _main(monkeypatch, *_paths(tmp_path, new))
+    assert rc == 0
+    assert "removed (1): ['q07']" in capsys.readouterr().out

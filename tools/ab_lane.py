@@ -6,8 +6,9 @@ committed here so the A/B methodology is reproducible from the repo).
 Times registry lanes with the noop sink (guide §1.4) against an
 arbitrary TREE (the working repo or a git worktree pinned at a "before"
 commit) in a fresh session per process, two passes per lane (r1 ≈
-bucket-cold, r2 ≈ warm). An honest A/B runs this once per tree in BOTH
-orders (tree A first, then tree B first): a serial pair has a
+bucket-cold, r2 ≈ warm). The session's core count (defaultParallelism)
+prints first, so every A/B states it. An honest A/B runs this once per
+tree in BOTH orders (tree A first, then tree B first): a serial pair has a
 warm-machine bias toward whichever tree runs second — the r18 sf1 spot
 check showed per-lane order effects of the same magnitude (±1.5 s) as
 several real wins.
@@ -17,7 +18,6 @@ Usage: python tools/ab_lane.py TREE_ROOT SF_DIR LANE [LANE ...]
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 
@@ -25,12 +25,12 @@ import time
 def main() -> None:
     root, sf = sys.argv[1], sys.argv[2]
     sys.path.insert(0, root)
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     from sms_db_spark.session import get_spark
     from sms_db_spark.plans import registry
 
     spark = get_spark("ab_lane")
     spark.sparkContext.setLogLevel("ERROR")
+    print(f"cores {spark.sparkContext.defaultParallelism}", flush=True)
     specs = registry()
     # untimed scheduler/codegen warm-up job
     (

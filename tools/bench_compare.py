@@ -1,23 +1,11 @@
-"""Diff two bench JSON artifacts (BENCH_r*.json or bench.py output):
-per-query deltas, regressions flagged, net total movement — so a round's
-plan changes can be separated from query-set changes at a glance.
+"""Diff two bench JSON artifacts (bench.py's main line, its raw stdout,
+or an artifact that wraps that line under "parsed"): per-query
+deltas, regressions flagged, and the net total movement, so plan
+changes can be told apart from query-set changes at a glance.
 
 Usage: python tools/bench_compare.py OLD.json NEW.json [threshold_ratio]
-Exit code 1 if any shared query regressed by more than the threshold
-(default 1.5x), making it usable as a CI-style guard.
-
-Refresh mode (VERDICT r11 item 5 — the ANCHOR REFRESH CRITERION next
-to bench.py's ANCHOR_ROUND, checked mechanically):
-
-    python tools/bench_compare.py --refresh-check RUN1.json [RUN2.json]
-
-Checks each run against the EMBEDDED anchor: total ratio in [0.9, 1.1],
-JVM axes flat, suspect/watch tiers empty, suspect_ambient false — and
-prints the per-query era-normalized delta table with every query past
-1.15x flagged (those must be explained by name before an anchor
-refresh; ADVICE r11 #3). Exit 0 = a refresh from these runs satisfies
-criteria 1-3 (criterion 4 remains a human call on the flagged names);
-exit 1 = the refresh is blocked.
+Exit code 1 if any shared query got slower by more than the threshold
+(default 1.5x), 0 otherwise.
 """
 
 from __future__ import annotations
@@ -44,136 +32,7 @@ def load(path: str) -> dict:
     return json.loads(m.group(0))
 
 
-def refresh_check(paths: list[str]) -> int:
-    """Mechanical half of the anchor-refresh criterion (bench.py's
-    ANCHOR REFRESH CRITERION block): criteria 1-3 pass/fail per run,
-    plus the criterion-4 delta table (era-normalized per-query ratios
-    vs the embedded anchor, >1.15x flagged for by-name explanation)."""
-    import os
-
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    import bench  # the embedded anchor is the refresh target
-
-    ok = True
-    if len(paths) < 2:
-        print(
-            "NOTE: criterion 1 needs TWO consecutive runs; "
-            f"got {len(paths)} — treating as a preview, not a pass."
-        )
-        ok = False
-    elif len({os.path.realpath(p) for p in paths}) < len(paths):
-        # one clean run passed twice must not masquerade as two
-        # consecutive agreeing runs (review r12, second pass)
-        print("NOTE: criterion 1 got the SAME artifact more than once — "
-              "distinct runs required.")
-        ok = False
-    for path in paths:
-        run = load(path)
-        # A totals-only artifact (the compact final line the driver's
-        # tail capture keeps, or a truncated "parsed" doc) is missing
-        # the suspect/watch tiers and the per-query map — treating
-        # absent fields as empty tiers would pass the guard vacuously
-        # (review r12: fail CLOSED, name what's missing).
-        required = (
-            "anchor_round",
-            "anchor_total_ratio",
-            "calibration_sec",
-            "calibration_overhead_sec",
-            "suspects_vs_anchor",
-            "watch_vs_anchor",
-            "suspect_ambient",
-            "queries",
-        )
-        # every field must be PRESENT and non-null (suspect_ambient is
-        # a real bool in every genuine artifact; review r12 second
-        # pass — absent-field-passes-vacuously is the bug class)
-        missing = [k for k in required if run.get(k) is None]
-        if missing:
-            print(f"\n{path}: FAIL — not a full bench artifact, missing {missing}")
-            ok = False
-            continue
-        cal = run["calibration_sec"]
-        era = max(0.5, cal / bench.ANCHOR_CAL_SEC)
-        ratio = run["anchor_total_ratio"]
-        checks = {
-            # the stored ratio was computed against the anchor embedded
-            # WHEN THE RUN EXECUTED — judging it against a different
-            # anchor generation is meaningless (review r12)
-            f"run's anchor_round == embedded ({bench.ANCHOR_ROUND})": (
-                run["anchor_round"] == bench.ANCHOR_ROUND
-            ),
-            # raw OR era-normalized within band: pure cal-normalization
-            # over-corrects scheduler-bound queries (see bench.py's
-            # calibration_overhead docstring), so a run that agrees RAW
-            # — like both r11 refresh runs, 1.023/0.989 — passes; on a
-            # genuinely slower machine the era-normalized form rescues
-            # a raw miss that is pure machine drift.
-            "total ratio in [0.9, 1.1] (raw or era-norm)": (
-                0.9 <= ratio <= 1.1 or 0.9 <= ratio / era <= 1.1
-            ),
-            # BOTH directions (ADVICE r12 #3): a drastically FASTER
-            # calibration (machine/JVM change) invalidates
-            # era-normalized comparability just as a slower one does —
-            # "within CAL_FLAT_RATIO" means a band, not a ceiling.
-            "cal flat vs prior anchor era (both directions)": (
-                bench.ANCHOR_CAL_SEC / bench.CAL_FLAT_RATIO
-                <= cal
-                <= bench.CAL_FLAT_RATIO * bench.ANCHOR_CAL_SEC
-            ),
-            "overhead axis flat (<= 0.25s)": (
-                run["calibration_overhead_sec"] <= 0.25
-            ),
-            "suspect tier empty": not run["suspects_vs_anchor"],
-            "watch tier empty": not run["watch_vs_anchor"],
-            "suspect_ambient false": not run.get("suspect_ambient"),
-            # a qualifying refresh run must have timed the FULL write
-            # bucket — a run that forgot SMS_DB_SPARK_BENCH_ALL_AUDITS=1
-            # carries a rotation-reduced bucket and must not anchor
-            # (ADVICE r13 #4)
-            "full write bucket (nothing rotated out)": not run.get(
-                "write_audits_rotated_out"
-            ),
-        }
-        print(f"\n{path} (cal {cal}, era {era:.3f}):")
-        for name, passed in checks.items():
-            print(f"  {'PASS' if passed else 'FAIL'}  {name}")
-            ok = ok and passed
-        queries = run.get("queries") or {}
-        movers = sorted(
-            (
-                (q, t / (bench.ANCHOR[q] * era))
-                for q, t in queries.items()
-                # refresh floor (r14): only >=1s-anchor queries — the
-                # sub-second set is scheduler-bound and era-inflates
-                # uniformly under a fast calibration (see bench.py's
-                # criterion 4 note); one constant, no drift
-                if q in bench.ANCHOR
-                and bench.ANCHOR[q] >= bench.REFRESH_MOVER_MIN_ANCHOR_SEC
-            ),
-            key=lambda kv: -kv[1],
-        )
-        flagged = [(q, r) for q, r in movers if r > 1.15]
-        print(f"  criterion 4 — per-query era-normalized vs anchor:")
-        # EVERY flagged mover prints — truncating the explain-by-name
-        # list is exactly the laundering hole criterion 4 closes
-        # (review r12, second pass); below-bar context caps at 5.
-        shown = flagged + [m for m in movers if m[1] <= 1.15][:5]
-        for q, r in shown:
-            mark = "  <-- EXPLAIN BY NAME" if r > 1.15 else ""
-            print(f"    {q:<34} {r:5.2f}x{mark}")
-        if not flagged:
-            print("    (no query past 1.15x — criterion 4 clean)")
-    print(
-        f"\nrefresh {'PERMITTED (explain any flagged names)' if ok else 'BLOCKED'}"
-    )
-    return 0 if ok else 1
-
-
 def main() -> int:
-    if len(sys.argv) >= 3 and sys.argv[1] == "--refresh-check":
-        return refresh_check(sys.argv[2:])
     if len(sys.argv) < 3:
         print(__doc__)
         return 2
