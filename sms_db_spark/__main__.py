@@ -57,7 +57,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("sms-db-spark-cli")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from .sinks.sqlite_sink import read_store_sqlite, write_store_sqlite
+    from .sinks.sqlite_sink import read_store_sqlite, store_message_count, write_store_sqlite
 
     existing = (None, None)
     if os.path.exists(args.d):
@@ -98,7 +98,7 @@ def main(argv: list[str] | None = None) -> int:
             os.remove(tmp)
         write_store_sqlite(result.messages, result.parts, tmp)
         os.replace(tmp, args.d)
-        n_rows = result.messages.count()
+        n_rows = store_message_count(args.d)
         print(f"Total messages seen:\t\t{result.total}")
         print(f"Total messages imported:\t{result.inserted}")
         print(f"Duplicate messages:\t\t{result.duplicates}")

@@ -24,8 +24,14 @@ pid → offset map is only valid if both actions see identical
 partitioning. So the frame must be PINNED (persist / localCheckpoint):
 re-running an unpinned lineage is no substitute, because each action
 samples fresh range bounds and shuffle reads arrive in a different row
-order. dense_ids localCheckpoints its range-partitioned frame;
+order. dense_ids localCheckpoints its range-partitioned frame (the
+partition count is left to AQE: probing `df.rdd.getNumPartitions()`
+would run the input's shuffle stages an extra time);
 _balanced_rank_ids requires a pinned frame of its caller.
+
+The kernel returns (frame, N), N the total of the counts job. Callers
+take their row count from N: a `count()` of the numbered frame is one
+more action over it.
 
 `strict` picks the failure mode when the contract breaks (a numbering
 task lands in a pid the counts job never saw):
@@ -50,8 +56,10 @@ def partition_offset_ids(
     id_col: str,
     start: int = 0,
     strict: bool = True,
-) -> DataFrame:
-    """Assign dense sequential ids start..start+N-1 to `df` as `id_col`.
+) -> tuple[DataFrame, int]:
+    """Assign dense sequential ids start..start+N-1 to `df` as `id_col`;
+    returns (numbered frame, N). N is the sum of the counts job's
+    per-partition counts, so callers need no separate count action.
 
     Within each physical partition, ids follow `order_cols`; across
     partitions, ids follow ascending partition id. So the numbering is
@@ -85,7 +93,7 @@ def partition_offset_ids(
     else:
         offset_col = F.lit(start)
     w = Window.partitionBy("_pid").orderBy(*order_cols)
-    return (
-        with_pid.withColumn(id_col, F.row_number().over(w) - 1 + offset_col)
-        .drop("_pid")
-    )
+    numbered = with_pid.withColumn(
+        id_col, F.row_number().over(w) - 1 + offset_col
+    ).drop("_pid")
+    return numbered, sum(counts.values())

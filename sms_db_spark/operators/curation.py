@@ -890,7 +890,7 @@ def q141_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_k",
         F.md5(F.concat(F.lit(EPOCH_SEED + ":"), F.col("doc_id").cast("string"))),
     )
-    pos = dense_ids(keyed, ["_k", "doc_id"], "_pos", start=1)
+    pos, _ = dense_ids(keyed, ["_k", "doc_id"], "_pos", start=1)
     per_src = (
         pos.withColumn("batch", F.expr(f"(_pos - 1) div {EPOCH_BATCH}"))
         .groupBy("batch", "source")

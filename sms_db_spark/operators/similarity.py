@@ -504,8 +504,8 @@ def _n_pack_chunks(
     return -(-cent.count() // max_packed_k)
 
 
-def _balanced_rank_ids(pinned: DataFrame) -> DataFrame:
-    """0-based dense ids `_rn` (a permutation of 0..K-1) over a PINNED
+def _balanced_rank_ids(pinned: DataFrame) -> tuple[DataFrame, int]:
+    """(frame, K): 0-based dense ids `_rn` (a permutation of 0..K-1) over a PINNED
     (persisted or localCheckpointed) frame — the shared two-phase
     partition-offset numbering (functions/numbering.py; extracted from
     the r12 deliberate twin with canonical.dense_ids, VERDICT r12
@@ -577,12 +577,13 @@ def _packed_fold(
     try:
         # the counts job inside _balanced_rank_ids materializes the
         # persist; the eager checkpoint then owns the ranked copy
-        ranked = _balanced_rank_ids(pinned).localCheckpoint(eager=True)
+        ranked, k = _balanced_rank_ids(pinned)
+        ranked = ranked.localCheckpoint(eager=True)
     finally:
         pinned.unpersist()
     # fail-loud bijectivity validation (see docstring): one aggregate
-    # over the K checkpointed rows — a permutation of 0..K-1 has no
-    # NULLs, min 0, max K-1, and K distinct values
+    # over the K checkpointed rows — a permutation of 0..K-1 has the
+    # counts job's K rows, no NULLs, min 0, max K-1, and K distinct values
     v = ranked.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.col("_rn").isNull().cast("int")), F.lit(0)).alias(
@@ -592,15 +593,15 @@ def _packed_fold(
         F.max("_rn").alias("mx"),
         F.count_distinct("_rn").alias("nd"),
     ).first()
-    if v["n"] > 0 and not (
+    if v["n"] != k or (v["n"] > 0 and not (
         v["nulls"] == 0
         and v["mn"] == 0
         and v["mx"] == v["n"] - 1
         and v["nd"] == v["n"]
-    ):
+    )):
         raise RuntimeError(
             "chunked packing rank is not a 0..K-1 permutation "
-            f"(n={v['n']}, nulls={v['nulls']}, min={v['mn']}, max={v['mx']}, "
+            f"(K={k}, n={v['n']}, nulls={v['nulls']}, min={v['mn']}, max={v['mx']}, "
             f"distinct={v['nd']}) — the persisted centroid frame was likely "
             "recomputed with a different partition layout between the two "
             "numbering phases; failing instead of silently mis-chunking"

@@ -118,25 +118,26 @@ def _tuned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessi
 # function, not the modules it lives near.
 #
 _CHANGED_THIS_ROUND = [
-    # One XML export path: export_xml became the fragment serializer and
-    # q148 runs one export + one re-import checksum (its oracle dropped
-    # to the same single row); the read_xml_staging_distributed it
-    # re-imports through numbers rows with dense_ids.
-    "q148_sharded_export_audit",
-    # dense_ids pins its range-partitioned frame (localCheckpoint) so the
-    # counts and numbering jobs read one partitioning.
-    "q141_epoch_shuffle",
-    # finalize_import (dense_ids pin, one store probe per table, total
-    # from the persisted batch, hashed unpersisted) and sms_export_frame
-    # (first-part decode moved after the join to SMS rows).
+    # Driver-built frames (XML staging, store read-back, driver-path
+    # SQLite tables, demo fixtures) became Arrow local relations;
+    # dense_ids returns (frame, N), sizes its range partitioning by AQE
+    # and feeds finalize_import's counters; finalize_import probes each
+    # store table once.
+    "q60_import_xml",
+    "q61_import_bugle",
+    "q62_import_signal",
     "q63_import_pipeline",
     "q64_export_frame",
     "q65_sql_verbatim",
     "q171_sql_verbatim_ci",
     "q172_quarantine_audit",
-    # fold_cold_batches_all normalizes shard ids to sorted distinct
-    # values before its concurrent stage.
-    "q139_fold_audit",
+    "q163_sqlite_store_audit",
+    # read_xml_staging_distributed (dense_ids) and the export re-import
+    "q148_sharded_export_audit",
+    # dense_ids callers
+    "q141_epoch_shuffle",
+    # _balanced_rank_ids returns (frame, K); the packed fold checks K
+    "q174_ivfadc_clustered",
 ]
 
 

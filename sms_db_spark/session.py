@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def env_flag(name: str) -> bool:
@@ -74,3 +77,36 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """A frame over driver-held `rows` (tuples in `schema` field order)
+    that plans as a JVM-side LocalTableScan.
+
+    createDataFrame(list-of-tuples) parallelizes the rows as a Python
+    RDD: the plan is an ExistingRDD scan behind a PythonRDD, and every
+    action that re-scans the frame starts Python workers (0.35-1.5 s
+    per scan job of a few thousand rows on 4 cores, multiplied across
+    the import pipeline's many actions). One Arrow table built here and
+    handed to createDataFrame becomes a local relation instead, so
+    re-scans stay inside the JVM.
+
+    createDataFrame(pa.Table) skips verifySchema, and Arrow does not
+    enforce a field's nullable=False, so a NULL in a non-nullable column
+    is rejected here; otherwise Spark would trust the schema and read
+    it back as a default value (a WITHOUT ROWID part table's NULL rowid
+    would become one shared row order).
+    """
+    arrow_schema = to_arrow_schema(schema)
+    columns = zip(*rows) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    for field, column in zip(arrow_schema, table.columns):
+        if not field.nullable and column.null_count:
+            raise ValueError(
+                f"field {field.name!r} is not nullable, but got None "
+                f"in {column.null_count} row(s)"
+            )
+    return spark.createDataFrame(table, schema)

@@ -26,6 +26,7 @@ import sqlite3
 from pyspark.sql import DataFrame
 
 from .. import DATABASE_VERSION
+from ..session import local_frame
 
 MESSAGES_DDL = (
     "CREATE TABLE IF NOT EXISTS messages(_id INTEGER PRIMARY KEY AUTOINCREMENT,"
@@ -88,6 +89,15 @@ def write_store_sqlite(messages: DataFrame, parts: DataFrame, db_path: str) -> N
         con.close()
 
 
+def store_message_count(db_path: str) -> int:
+    """Rows in the store's messages table, read from the file (no Spark job)."""
+    con = sqlite3.connect(db_path)
+    try:
+        return con.execute("SELECT count(*) FROM messages").fetchone()[0]
+    finally:
+        con.close()
+
+
 def read_store_sqlite(spark, db_path: str):
     """Load an existing store db back into the canonical frames.
 
@@ -108,7 +118,7 @@ def read_store_sqlite(spark, db_path: str):
         ).fetchall()
     finally:
         con.close()
-    messages = spark.createDataFrame(msg_rows, MESSAGES_SCHEMA)
+    messages = local_frame(spark, msg_rows, MESSAGES_SCHEMA)
     raw = [
         (
             _id,
@@ -120,7 +130,7 @@ def read_store_sqlite(spark, db_path: str):
         )
         for (_id, mid, data, ct, fn) in part_rows
     ]
-    parts = spark.createDataFrame(raw, PARTS_SCHEMA)
+    parts = local_frame(spark, raw, PARTS_SCHEMA)
     return messages, parts
 
 

@@ -55,24 +55,38 @@ def with_message_hash(staged_messages: DataFrame, staged_parts: DataFrame) -> Da
     return joined.withColumn("hash", message_hash(F.col("parts_bytes"))).drop("parts_bytes")
 
 
-def dense_ids(df: DataFrame, order_cols: list[str], id_col: str = "_id", start: int = 1) -> DataFrame:
+def dense_ids(
+    df: DataFrame, order_cols: list[str], id_col: str = "_id", start: int = 1
+) -> tuple[DataFrame, int]:
     """Assign dense sequential ids start..start+N-1 in the total order
-    of order_cols (W2, the AUTOINCREMENT shape of sms-db.pl:49).
+    of order_cols (W2, the AUTOINCREMENT shape of sms-db.pl:49); returns
+    (numbered frame, N).
 
     Range-repartition on the order and PIN the result with
     localCheckpoint: the kernel's counts job and numbering job must see
     one partitioning, and re-running the lineage does not reproduce it
     (each action samples fresh range bounds, and a shuffled input reaches
-    the sampler in a different row order). Then the shared two-phase
-    partition-offset numbering — per-partition row_number + driver-side
-    cumsum of per-partition counts, no global single-partition window
-    (functions/numbering.py). strict=True: this path has no downstream
-    bijectivity validation, so a broken-contract pid should throw
-    Spark's ANSI map-key error rather than silently yield NULL ids.
+    the sampler in a different row order). AQE sizes the range
+    partitioning; the pin fixes whatever it picks. Then the shared
+    two-phase partition-offset numbering — per-partition row_number +
+    driver-side cumsum of per-partition counts, no global
+    single-partition window (functions/numbering.py). strict=True: this
+    path has no downstream bijectivity validation, so a broken-contract
+    pid should throw Spark's ANSI map-key error rather than silently
+    yield NULL ids.
     """
-    n_part = max(df.rdd.getNumPartitions(), 1)
-    ordered = df.repartitionByRange(n_part, *[F.col(c) for c in order_cols]).localCheckpoint()
+    ordered = df.repartitionByRange(*[F.col(c) for c in order_cols]).localCheckpoint()
     return partition_offset_ids(ordered, order_cols, id_col, start=start, strict=True)
+
+
+def _next_id(store_table: DataFrame | None) -> int:
+    """max(_id) + 1 of a store table, 1 when it is absent or empty: one
+    aggregate job per table (`_id` is non-null, so an empty table is
+    exactly a NULL max)."""
+    if store_table is None:
+        return 1
+    top = store_table.agg(F.max("_id")).first()[0]
+    return 1 if top is None else top + 1
 
 
 @dataclass
@@ -109,26 +123,15 @@ def finalize_import(
     keeper = hashed.groupBy("hash").agg(F.min("local_id").alias("local_id"))
     batch_unique = hashed.join(keeper, ["hash", "local_id"], "inner")
 
-    has_store = existing_messages is not None and bool(existing_messages.head(1))
-    has_store_parts = (
-        has_store and existing_parts is not None and bool(existing_parts.head(1))
-    )
+    id_start = _next_id(existing_messages)
+    has_store = id_start > 1
     if has_store:
-        store_hashes = existing_messages.select("hash")
-        new_msgs = batch_unique.join(store_hashes, "hash", "left_anti")
-        id_start = existing_messages.agg(F.max("_id")).collect()[0][0] + 1
-        part_id_start = (
-            existing_parts.agg(F.max("_id")).collect()[0][0] + 1
-            if has_store_parts
-            else 1
-        )
+        new_msgs = batch_unique.join(existing_messages.select("hash"), "hash", "left_anti")
+        part_id_start = _next_id(existing_parts)
     else:
-        new_msgs = batch_unique
-        id_start, part_id_start = 1, 1
+        new_msgs, part_id_start = batch_unique, 1
 
-    with_ids = dense_ids(new_msgs, ["local_id"], "_id", start=id_start)
-
-    inserted = with_ids.count()
+    with_ids, inserted = dense_ids(new_msgs, ["local_id"], "_id", start=id_start)
     duplicates = total - inserted - ignored_count
 
     messages = with_ids.select(
@@ -138,17 +141,17 @@ def finalize_import(
     kept_parts = staged_parts.join(
         with_ids.select("local_id", F.col("_id").alias("message_id")), "local_id", "inner"
     )
-    parts = dense_ids(
+    parts, total_parts = dense_ids(
         kept_parts, ["message_id", "part_seq"], "_id", start=part_id_start
-    ).select("_id", "message_id", "data", "text", "content_type", "filename")
+    )
+    parts = parts.select("_id", "message_id", "data", "text", "content_type", "filename")
     # both id frames are pinned by dense_ids: nothing reads `hashed` now
     hashed.unpersist()
-    total_parts = parts.count()
 
     if has_store:
         messages = existing_messages.unionByName(messages)
-        if has_store_parts:
-            parts = existing_parts.unionByName(parts)
+    if part_id_start > 1:
+        parts = existing_parts.unionByName(parts)
 
     return ImportResult(
         messages=messages,

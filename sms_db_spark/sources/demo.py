@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from base64 import b64encode
 
+from sms_db_spark.session import local_frame
 from sms_db_spark.sources.bugle import (
     BUGLE_CONV_PARTICIPANTS_SCHEMA,
     BUGLE_CONVERSATIONS_SCHEMA,
@@ -31,21 +32,8 @@ from sms_db_spark.sources.xml_source import (
 JPEG_BYTES = bytes([0xFF, 0xD8, 0xFF, 0xE0, 0x80, 0xFE, 0x01, 0x02])  # >0x7F bytes exercise latin1→utf8 hash expansion
 
 
-def _df(spark, rows, schema):
-    # Route through pandas + Arrow so the frame plans as a JVM-side
-    # LocalTableScan. createDataFrame(list-of-tuples) builds an RDD-backed
-    # plan instead, and every downstream action then pays a Python-worker
-    # round trip (~1s per action here, multiplied across the import
-    # pipeline's many actions).
-    import pandas as pd
-
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields], dtype=object)
-    return spark.createDataFrame(pdf, schema)
-
-
 def xml_frames(spark):
-    sms = _df(spark, 
+    sms = local_frame(spark,
         [
             (0, 1577836800000, 1, "+15550001111", "Alice", "hi there"),
             (1, 1577836900000, 2, "+15550001111", "Alice", "hello back ünïcödé"),
@@ -53,14 +41,14 @@ def xml_frames(spark):
         ],
         XML_SMS_SCHEMA,
     )
-    mms = _df(spark, 
+    mms = local_frame(spark,
         [
             (0, 1577840000000, 1, "+15550003333", "Carol"),
             (1, 1577841000000, 2, "+15550004444", "Dave"),
         ],
         XML_MMS_SCHEMA,
     )
-    addr = _df(spark, 
+    addr = local_frame(spark,
         [
             (0, 0, "+15550003333", "137"),   # from — filtered out
             (0, 1, "+15559998888", "151"),   # to
@@ -71,7 +59,7 @@ def xml_frames(spark):
         ],
         XML_ADDR_SCHEMA,
     )
-    part = _df(spark, 
+    part = local_frame(spark,
         [
             (0, 0, "text/plain", None, "photo attached", None),
             (0, 1, "image/jpeg", "IMG_0001.jpg", "null", b64encode(JPEG_BYTES).decode()),
@@ -83,7 +71,7 @@ def xml_frames(spark):
 
 
 def bugle_frames(spark):
-    messages = _df(spark, 
+    messages = local_frame(spark,
         [
             (1, 1600000000000, 0, 10, 100),  # incoming sms (conv sub_id=-2)
             (2, 1600000100000, 0, 11, 101),  # outgoing sms
@@ -91,7 +79,7 @@ def bugle_frames(spark):
         ],
         BUGLE_MESSAGES_SCHEMA,
     )
-    participants = _df(spark, 
+    participants = local_frame(spark,
         [
             (10, "+15551110000", "Eve"),
             (11, "+15552220000", None),  # null name → <UNAVAILABLE>
@@ -99,7 +87,7 @@ def bugle_frames(spark):
         ],
         BUGLE_PARTICIPANTS_SCHEMA,
     )
-    conversations = _df(spark, 
+    conversations = local_frame(spark,
         [
             (100, "+15551110000", 1, "Eve", -2),
             (101, "+15552220000", 1, "NoName", 1),
@@ -107,10 +95,10 @@ def bugle_frames(spark):
         ],
         BUGLE_CONVERSATIONS_SCHEMA,
     )
-    conv_parts = _df(spark, 
+    conv_parts = local_frame(spark,
         [(102, 10), (102, 11), (102, 12)], BUGLE_CONV_PARTICIPANTS_SCHEMA
     )
-    parts = _df(spark, 
+    parts = local_frame(spark,
         [
             (1, 1, "hey", None, "text/plain"),
             (2, 2, "yo", None, "text/plain"),
@@ -123,7 +111,7 @@ def bugle_frames(spark):
 
 
 def signal_frames(spark):
-    sms = _df(spark, 
+    sms = local_frame(spark,
         [
             (1, 10, 1610000000000, 20, "received text"),        # 20 → box 1
             (2, 11, 1610000100000, 10485783, "sent text"),      # → box 2
@@ -133,7 +121,7 @@ def signal_frames(spark):
         ],
         SIGNAL_SMS_SCHEMA,
     )
-    mms = _df(spark, 
+    mms = local_frame(spark,
         [
             (1, 1, 10, 1610001000000, 20, "mms body"),          # received, w/ attachment
             (2, 2, 30, 1610002000000, 10485783, "to the group"),  # sent to group thread
@@ -141,7 +129,7 @@ def signal_frames(spark):
         ],
         SIGNAL_MMS_SCHEMA,
     )
-    recipient = _df(spark, 
+    recipient = local_frame(spark,
         [
             (10, "+15556660000", "Grace", None),
             (11, "+15557770000", None, None),     # null name
@@ -150,16 +138,16 @@ def signal_frames(spark):
         ],
         SIGNAL_RECIPIENT_SCHEMA,
     )
-    groups = _df(spark, [("g1", "10,12")], SIGNAL_GROUPS_SCHEMA)
-    thread = _df(spark, [(1, 10), (2, 30)], SIGNAL_THREAD_SCHEMA)
-    part = _df(spark,
+    groups = local_frame(spark, [("g1", "10,12")], SIGNAL_GROUPS_SCHEMA)
+    thread = local_frame(spark, [(1, 10), (2, 30)], SIGNAL_THREAD_SCHEMA)
+    part = local_frame(spark,
         [
             (1, "image/jpeg", "photo.jpg", 4001, 1),
             (1, "image/png", "missing.png", 4999, 2),  # no matching file → skipped
         ],
         SIGNAL_PART_SCHEMA,
     )
-    attachments = _df(spark, 
+    attachments = local_frame(spark,
         [
             ("/backup/attachment/4001_1610001000.jpg", JPEG_BYTES),
             ("/backup/attachment/4002_1610001100.jpg", b"unused"),

@@ -2,9 +2,10 @@
 normalizers consume (S2/S3, sms-db.pl:95-100 and 119-124).
 
 Read strategy, sized to the table: a phone backup is usually
-single-device data (MB) — a driver-side stdlib-sqlite3 read into
-`createDataFrame` with the EXPLICIT staging schema is correct and
-dependency-free. Past DISTRIBUTED_ROWS_THRESHOLD rows the reader
+single-device data (MB) — a driver-side stdlib-sqlite3 read with the
+EXPLICIT staging schema into `session.local_frame` (one Arrow table,
+planned as a JVM-side local relation, so re-scans start no Python
+worker) is correct and cheap. Past DISTRIBUTED_ROWS_THRESHOLD rows the reader
 switches itself to rowid-range parallel scans: the db file ships once
 per executor via SparkContext.addFile, each task opens it read-only
 and reads its `rowid BETWEEN lo AND hi` slice through `mapInPandas`
@@ -27,6 +28,8 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..session import local_frame
 
 # Above this row count the one-file read is worth parallelizing; below
 # it, task scheduling would cost more than the driver-side fetch. A
@@ -167,7 +170,7 @@ def read_sqlite_table(
     try:
         proj = _projection(con, table, schema)
         if proj is None:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         cols, rowid_ok = proj
         if rowid_ok:
             # COUNT(*) alone keeps SQLite's b-tree count optimization;
@@ -186,7 +189,7 @@ def read_sqlite_table(
         rows = con.execute(f"SELECT {cols} FROM {table}").fetchall()
     finally:
         con.close()
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # (applicationId, realpath, mtime_ns, size) -> unique shipped name.
@@ -464,7 +467,7 @@ def read_signal_staging(
             .selectExpr("path", "content")
         )
     else:
-        attachments = spark.createDataFrame([], SIGNAL_ATTACHMENTS_SCHEMA)
+        attachments = local_frame(spark, [], SIGNAL_ATTACHMENTS_SCHEMA)
     return (
         read_sqlite_table(spark, db_path, "sms", SIGNAL_SMS_SCHEMA),
         read_sqlite_table(spark, db_path, "mms", SIGNAL_MMS_SCHEMA),

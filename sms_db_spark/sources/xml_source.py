@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import MSG_MMS, MSG_SMS, SELF, SOURCE_XML
+from ..session import local_frame
 
 XML_SMS_SCHEMA = T.StructType(
     [
@@ -242,14 +243,14 @@ def read_xml_staging_distributed(
         F.col("_contact_name").alias("contact_name"),
         F.col("_body").alias("body"),
     )
-    sms = dense_ids(sms_raw, ["date", "address", "body"], "sms_id", start=0).select(
+    sms = dense_ids(sms_raw, ["date", "address", "body"], "sms_id", start=0)[0].select(
         "sms_id", "date", "type", "address", "contact_name", "body"
     )
 
     mms_raw = (
         spark.read.format("xml").option("rowTag", "mms").schema(mms_read_schema).load(path)
     )
-    mms_keyed = dense_ids(
+    mms_keyed, _ = dense_ids(
         mms_raw.withColumn("date", F.col("_date")).withColumn("address", F.col("_address")),
         ["date", "address"],
         "mms_id",
@@ -286,7 +287,8 @@ def read_xml_staging_distributed(
 def read_xml_staging(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Parse a Synctech backup XML into the four staging frames."""
+    """Parse a Synctech backup XML into the four staging frames (local
+    relations, see session.local_frame)."""
     import xml.etree.ElementTree as ET
 
     root = ET.parse(path).getroot()
@@ -311,8 +313,8 @@ def read_xml_staging(
         for j, p in enumerate(e.iter("part")):
             part_rows.append((i, j, p.get("ct"), p.get("name"), p.get("text"), p.get("data")))
     return (
-        spark.createDataFrame(sms_rows, XML_SMS_SCHEMA),
-        spark.createDataFrame(mms_rows, XML_MMS_SCHEMA),
-        spark.createDataFrame(addr_rows, XML_ADDR_SCHEMA),
-        spark.createDataFrame(part_rows, XML_PART_SCHEMA),
+        local_frame(spark, sms_rows, XML_SMS_SCHEMA),
+        local_frame(spark, mms_rows, XML_MMS_SCHEMA),
+        local_frame(spark, addr_rows, XML_ADDR_SCHEMA),
+        local_frame(spark, part_rows, XML_PART_SCHEMA),
     )

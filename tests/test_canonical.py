@@ -48,6 +48,7 @@ def test_dedup_idempotence(spark):
     second = finalize_import(m, p, existing_messages=first.messages, existing_parts=first.parts)
     assert second.inserted == 0
     assert second.duplicates == 5
+    assert second.total_parts == 0
     assert second.messages.count() == 5
     assert second.parts.count() == 6
 
@@ -84,9 +85,10 @@ def test_within_batch_dup_first_wins(spark):
 
 def test_dense_ids_helper_multi_partition(spark):
     df = spark.range(0, 1000).select(F.col("id").alias("k")).repartition(7)
-    out = dense_ids(df, ["k"], "_id", start=1)
+    out, n = dense_ids(df, ["k"], "_id", start=1)
     rows = out.orderBy("k").collect()
     assert [r["_id"] for r in rows] == list(range(1, 1001))
+    assert n == 1000
 
 
 def test_dense_ids_dense_over_shuffled_input(spark):
@@ -95,5 +97,49 @@ def test_dense_ids_dense_over_shuffled_input(spark):
     re-running the lineage may re-partition differently: the counts job
     and the numbering job must read ONE pinned partitioning."""
     df = spark.range(2000).repartition(4).select(F.col("id").alias("k"))
-    rows = dense_ids(df, ["k"], "_id", start=1).orderBy("k").collect()
+    out, n = dense_ids(df, ["k"], "_id", start=1)
+    rows = out.orderBy("k").collect()
     assert [r["_id"] for r in rows] == list(range(1, 2001))
+    assert n == 2000
+
+
+def test_store_with_empty_parts_table(spark):
+    """A store with messages but no parts: message ids continue from
+    max(_id)+1, part ids start at 1."""
+    m, p = normalize_xml(*xml_frames(spark))
+    store = finalize_import(m, p)
+    bm, bp = normalize_bugle(*bugle_frames(spark))
+    res = finalize_import(bm, bp, store.messages, store.parts.limit(0))
+    assert res.inserted == 3
+    assert [r["_id"] for r in res.messages.orderBy("_id").collect()] == list(range(1, 9))
+    part_rows = res.parts.orderBy("_id").collect()
+    assert [r["_id"] for r in part_rows] == list(range(1, res.total_parts + 1))
+    assert {r["message_id"] for r in part_rows} == {6, 7, 8}
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_dense_ids_runs_no_job_before_its_pin(spark, monkeypatch):
+    """dense_ids leaves the range partitioning to AQE: probing the
+    input's partition count would run a joined input's stages before
+    the pin job. N comes from the counts job and equals the count."""
+    DataFrame = type(spark.range(1))  # the concrete class localCheckpoint runs on
+    at_pin = []
+    orig_pin = DataFrame.localCheckpoint
+
+    def recording_pin(self, *a, **k):
+        at_pin.append(_next_job_id(spark))
+        return orig_pin(self, *a, **k)
+
+    left = spark.range(500).select(F.col("id").alias("k"), (F.col("id") % 7).alias("g"))
+    right = spark.range(0, 500, 2).select(F.col("id").alias("k"))
+    joined = left.join(right.hint("shuffle_hash"), "k").groupBy("k").agg(F.max("g").alias("g"))
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording_pin)
+    start = _next_job_id(spark)
+    out, n = dense_ids(joined, ["k"], "_id", start=1)
+    monkeypatch.undo()
+    assert at_pin == [start]
+    assert n == out.count() == 250
+

@@ -342,7 +342,8 @@ def test_balanced_rank_ids_is_distributed_and_bijective(spark):
         .repartition(7)  # deliberately scattered, uneven partitions
         .localCheckpoint(eager=True)
     )
-    ranked = S._balanced_rank_ids(cent)
+    ranked, k = S._balanced_rank_ids(cent)
+    assert k == 101
     got = sorted(r["_rn"] for r in ranked.select("_rn").collect())
     assert got == list(range(101))
 
@@ -356,7 +357,8 @@ def test_balanced_rank_ids_is_distributed_and_bijective(spark):
 
     # empty frame: zero rows, no crash
     empty = cent.filter(F.lit(False)).localCheckpoint(eager=True)
-    assert S._balanced_rank_ids(empty).count() == 0
+    ranked_empty, k_empty = S._balanced_rank_ids(empty)
+    assert ranked_empty.count() == 0 and k_empty == 0
 
     # hint validation: opt-in, names the violated contract
     os.environ["SMS_DB_SPARK_VALIDATE_K_HINT"] = "1"

@@ -41,7 +41,9 @@ def test_dense_ids_is_an_order_respecting_dense_numbering(spark, keys, n_part):
         spark.createDataFrame([(k, i) for i, k in enumerate(keys)], "k long, row long")
         .repartition(n_part)
     )
-    out = dense_ids(df, ["k", "row"], "_id", start=1).collect()
+    out, n = dense_ids(df, ["k", "row"], "_id", start=1)
+    out = out.collect()
+    assert n == len(keys)
     ids = sorted(r._id for r in out)
     assert ids == list(range(1, len(keys) + 1))  # dense, no gaps, no dups
     by_id = sorted(out, key=lambda r: r._id)
@@ -308,7 +310,9 @@ def test_balanced_rank_ids_is_a_permutation_on_any_pinned_layout(
         .repartition(n_part)
         .localCheckpoint(eager=True)
     )
-    out = _balanced_rank_ids(pinned).collect()
+    out, k = _balanced_rank_ids(pinned)
+    out = out.collect()
+    assert k == len(cids)
     assert sorted(r._rn for r in out) == list(range(len(cids)))
     assert {r.cid for r in out} == set(cids)  # nothing dropped or invented
 
