@@ -10,13 +10,16 @@ frame through ONE task — a non-starter at 10^8+ rows; this kernel's
 only serial work is the cumsum over per-partition counts (one row per
 partition).
 
-Shared core of `sources.canonical.dense_ids` (importer W2 id
-assignment, adds a pinned range-repartition so ids follow a total
-order) and `operators.similarity._balanced_rank_ids` (packed-centroid chunk
-numbering, where any balanced bijective numbering will do). They were
-deliberate twins through r12 to keep a pure refactor from re-gating the
-importer lineage; extracted in r13 while those rows rotate anyway
-(VERDICT r12 item 4).
+Callers:
+  * `sources.canonical.dense_ids` (q141's epoch shuffle and
+    `read_xml_staging_distributed`) adds a pinned range-repartition,
+    so ids follow a total order;
+  * `sources.canonical.finalize_import` numbers the kept messages of
+    its own pinned, range-partitioned batch, and takes each message's
+    first part id from a running sum of part counts (`sums`), so
+    messages and parts are numbered off one counts job;
+  * `operators.similarity._balanced_rank_ids` (packed-centroid chunk
+    numbering, where any balanced bijective numbering will do).
 
 CALLER CONTRACT — stable partition ids: the counts job and the
 numbering job are two Spark actions over the same frame, and the
@@ -24,14 +27,14 @@ pid → offset map is only valid if both actions see identical
 partitioning. So the frame must be PINNED (persist / localCheckpoint):
 re-running an unpinned lineage is no substitute, because each action
 samples fresh range bounds and shuffle reads arrive in a different row
-order. dense_ids localCheckpoints its range-partitioned frame (the
-partition count is left to AQE: probing `df.rdd.getNumPartitions()`
-would run the input's shuffle stages an extra time);
-_balanced_rank_ids requires a pinned frame of its caller.
+order. dense_ids and finalize_import localCheckpoint their
+range-partitioned frames (the partition count is left to AQE: probing
+`df.rdd.getNumPartitions()` would run the input's shuffle stages an
+extra time); _balanced_rank_ids requires a pinned frame of its caller.
 
-The kernel returns (frame, N), N the total of the counts job. Callers
-take their row count from N: a `count()` of the numbered frame is one
-more action over it.
+The kernel returns (frame, N, sum totals), N the row total of the
+counts job. Callers take their row count from N: a `count()` of the
+numbered frame is one more action over it.
 
 `strict` picks the failure mode when the contract breaks (a numbering
 task lands in a pid the counts job never saw):
@@ -46,7 +49,7 @@ task lands in a pid the counts job never saw):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -56,10 +59,12 @@ def partition_offset_ids(
     id_col: str,
     start: int = 0,
     strict: bool = True,
-) -> tuple[DataFrame, int]:
+    sums: dict[str, Column] | None = None,
+) -> tuple[DataFrame, int, dict[str, int]]:
     """Assign dense sequential ids start..start+N-1 to `df` as `id_col`;
-    returns (numbered frame, N). N is the sum of the counts job's
-    per-partition counts, so callers need no separate count action.
+    returns (numbered frame, N, sum totals). N is the sum of the counts
+    job's per-partition counts, so callers need no separate count
+    action.
 
     Within each physical partition, ids follow `order_cols`; across
     partitions, ids follow ascending partition id. So the numbering is
@@ -67,33 +72,49 @@ def partition_offset_ids(
     range-ordered on them (dense_ids), and otherwise a balanced
     bijection (chunk assignment needs nothing more).
 
+    `sums` maps extra output columns to non-null numeric weights. The
+    same counts job totals each weight per partition, and each output
+    column is the running (inclusive) sum of its weight in the id
+    order, continued across partitions from 0: the row count is the
+    weight-1 case of the same offset scheme. The third return value
+    maps each `sums` column to its total over the frame.
+
     See the module docstring for the stable-partition-ids caller
     contract and the `strict` failure-mode switch. An empty frame
-    degrades cleanly: no counts → a constant `lit(start)` offset under
-    a window that produces no rows.
+    degrades cleanly: no counts → constant offsets under a window that
+    produces no rows.
     """
+    sums = sums or {}
     with_pid = df.withColumn("_pid", F.spark_partition_id())
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in with_pid.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    if counts:
-        offsets, acc = {}, start
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-        pick = F.element_at if strict else F.try_element_at
-        offset_col = pick(
+    rows = with_pid.groupBy("_pid").agg(
+        F.count(F.lit(1)).alias("_cnt"), *[F.sum(w).alias(c) for c, w in sums.items()]
+    ).collect()
+    pids = sorted(r["_pid"] for r in rows)
+    by_pid = {r["_pid"]: r for r in rows}
+    pick = F.element_at if strict else F.try_element_at
+
+    def offset_col(key: str, base: int) -> Column:
+        """`base` plus the total of `key` over all earlier partitions,
+        looked up by the row's partition id."""
+        if not pids:
+            return F.lit(base)
+        offsets, acc = [], base
+        for pid in pids:
+            offsets.append(acc)
+            acc += by_pid[pid][key]
+        return pick(
             F.map_from_arrays(
-                F.array(*[F.lit(p) for p in sorted(counts)]),
-                F.array(*[F.lit(offsets[p]) for p in sorted(counts)]),
+                F.array(*[F.lit(p) for p in pids]), F.array(*[F.lit(o) for o in offsets])
             ),
             F.col("_pid"),
         )
-    else:
-        offset_col = F.lit(start)
+
     w = Window.partitionBy("_pid").orderBy(*order_cols)
+    running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     numbered = with_pid.withColumn(
-        id_col, F.row_number().over(w) - 1 + offset_col
-    ).drop("_pid")
-    return numbered, sum(counts.values())
+        id_col, F.row_number().over(w) - 1 + offset_col("_cnt", start)
+    )
+    for c, weight in sums.items():
+        numbered = numbered.withColumn(c, F.sum(weight).over(running) + offset_col(c, 0))
+    totals = {c: sum(by_pid[p][c] for p in pids) for c in sums}
+    return numbered.drop("_pid"), sum(by_pid[p]["_cnt"] for p in pids), totals

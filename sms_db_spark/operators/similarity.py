@@ -520,7 +520,8 @@ def _balanced_rank_ids(pinned: DataFrame) -> tuple[DataFrame, int]:
     into NULLs, and _packed_fold's post-checkpoint bijectivity
     aggregate raises its explanatory error instead of Spark's opaque
     mid-job MAP_KEY_DOES_NOT_EXIST."""
-    return partition_offset_ids(pinned, ["cid"], "_rn", start=0, strict=False)
+    numbered, k, _ = partition_offset_ids(pinned, ["cid"], "_rn", start=0, strict=False)
+    return numbered, k
 
 
 def _packed_fold(

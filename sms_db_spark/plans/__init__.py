@@ -118,11 +118,11 @@ def _tuned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessi
 # function, not the modules it lives near.
 #
 _CHANGED_THIS_ROUND = [
-    # Driver-built frames (XML staging, store read-back, driver-path
-    # SQLite tables, demo fixtures) became Arrow local relations;
-    # dense_ids returns (frame, N), sizes its range partitioning by AQE
-    # and feeds finalize_import's counters; finalize_import probes each
-    # store table once.
+    # finalize_import numbers messages and parts off one pinned frame
+    # (with_message_hash also returns the part count); the SQLite sink
+    # is one Arrow fetch per table; the export frames lost their own
+    # sort (q64 sorts its frame itself) and export_xml takes its counts
+    # from one message_type aggregate.
     "q60_import_xml",
     "q61_import_bugle",
     "q62_import_signal",
@@ -132,11 +132,13 @@ _CHANGED_THIS_ROUND = [
     "q171_sql_verbatim_ci",
     "q172_quarantine_audit",
     "q163_sqlite_store_audit",
-    # read_xml_staging_distributed (dense_ids) and the export re-import
     "q148_sharded_export_audit",
-    # dense_ids callers
+    # the map lookup is spelled col[key], not the deprecated getItem(col)
+    "q10_dict_decode",
+    # partition_offset_ids gained per-partition running sums and returns
+    # (frame, N, sums): dense_ids (q141) and _balanced_rank_ids (q174)
+    # run the changed kernel
     "q141_epoch_shuffle",
-    # _balanced_rank_ids returns (frame, K); the packed fold checks K
     "q174_ivfadc_clustered",
 ]
 

@@ -236,7 +236,7 @@ def q10_dict_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         orders.select(
-            "o_orderkey", mapping.getItem(F.col("o_orderstatus")).alias("status_code")
+            "o_orderkey", mapping[F.col("o_orderstatus")].alias("status_code")
         )
         .filter(F.col("status_code").isNotNull())
         .orderBy("o_orderkey")

@@ -109,16 +109,22 @@ def _shift(msgs: DataFrame, parts: DataFrame, offset: int):
 
 
 def q64_export_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E2/S6/J10/W1/O1: the ordered SMS export frame (body = deterministic
-    first part) over a finalized import — the frame the XML serializer
-    streams via toLocalIterator (sms-db.pl:242-253)."""
+    """E2/S6/J10/W1/O1: the SMS export frame (body = deterministic first
+    part) over a finalized import, in the order the XML serializer
+    writes it: export_xml range-partitions and sorts the frame on
+    (date, address, _id) and serializes each partition to a fragment
+    (sms-db.pl:242-253)."""
     xm, xp = normalize_xml(*xml_frames(spark))
     xm, xp = _ckpt(xm, xp)
     res = finalize_import(xm, xp)
-    # the frame carries the store _id as its tie-breaking sort key; the
-    # golden oracle pins the four exported columns (projection preserves
-    # the sort — no exchange is added)
-    return sms_export_frame(res.messages, res.parts).drop("_id")
+    # the store _id is the tie-breaking sort key; the golden oracle pins
+    # the four exported columns (projection preserves the sort — no
+    # exchange is added)
+    return (
+        sms_export_frame(res.messages, res.parts)
+        .orderBy("date", "address", "_id")
+        .drop("_id")
+    )
 
 
 def q65_sql_verbatim(spark: SparkSession, sf_dir: str) -> DataFrame:

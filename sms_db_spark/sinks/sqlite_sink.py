@@ -1,15 +1,19 @@
 """SQLite-compatible sink: the output db is literally queryable with the
 sqlite3 CLI like the reference's store (README.md:103-105).
 
-ONE write path — python sqlite3 over toLocalIterator. Streams partition
-iterators (constant driver memory) into a single writer, which is the
-only parallelism SQLite itself admits: the output is one single-writer
-db file, so no cluster-side writer (JDBC included) could parallelize
-the final insert anyway — it would funnel the same rows through the
-same file lock. A JDBC lane existed through round 6 but could never
-execute here (no sqlite-jdbc jar is vendored and none can be fetched),
-and an unprovable lane on the primary compat sink is worse than no
-lane (VERDICT r6 item 4): deleted, driver writer promoted to the only
+ONE write path — one Arrow fetch per table (`toArrow`), sorted by
+`_id` in pyarrow, inserted by python sqlite3 `executemany` from the
+column lists into a single writer, which is the only parallelism
+SQLite itself admits: the output is one single-writer db file, so no
+cluster-side writer (JDBC included) could parallelize the final insert
+anyway — it would funnel the same rows through the same file lock. The
+driver holds one table at a time, as Arrow (the messages table is
+released before the parts fetch); the CLI already holds the whole
+store on the driver when it reads it back (`read_store_sqlite`). A
+JDBC lane existed through round 6 but could never execute here (no
+sqlite-jdbc jar is vendored and none can be fetched), and an
+unprovable lane on the primary compat sink is worse than no lane
+(VERDICT r6 item 4): deleted, driver writer promoted to the only
 documented path. On a cluster the export cost is the upstream
 DataFrame work, which stays distributed; the final file write is
 inherently serial either way.
@@ -26,6 +30,7 @@ import sqlite3
 from pyspark.sql import DataFrame
 
 from .. import DATABASE_VERSION
+from ..schemas import MESSAGES_SCHEMA, PARTS_SCHEMA
 from ..session import local_frame
 
 MESSAGES_DDL = (
@@ -53,37 +58,42 @@ def _create_store_schema(db_path: str) -> None:
         con.close()
 
 
+_INSERT_BATCH_ROWS = 10_000  # bounds the Python row tuples alive at once
+
+
+def _sorted_batches(frame: DataFrame, columns):
+    """One Arrow fetch of `frame`, sorted by `_id`: yields each batch of
+    at most _INSERT_BATCH_ROWS rows as one Python list per column."""
+    table = frame.select(*columns).toArrow().sort_by("_id")
+    for batch in table.to_batches(max_chunksize=_INSERT_BATCH_ROWS):
+        yield [batch.column(c).to_pylist() for c in columns]
+
+
 def write_store_sqlite(messages: DataFrame, parts: DataFrame, db_path: str) -> None:
     """Write the canonical store to a SQLite file the reference's users can
     query verbatim (querying.md). Reconstitutes the parts.data polymorphism:
-    text parts store their text in `data` (sms-db.pl:54-55 simplified table)."""
+    text parts store their text in `data` (sms-db.pl:54-55 simplified table),
+    so they land as TEXT and binary parts as BLOB."""
     _create_store_schema(db_path)
     con = sqlite3.connect(db_path)
     try:
-        con.executemany(
-            "INSERT INTO messages(_id,timestamp,sender_address,sender_name,"
-            "recipient_address,recipient_name,msg_box,message_type,source_format,hash)"
-            " VALUES(?,?,?,?,?,?,?,?,?,?)",
-            (
-                (
-                    r["_id"], r["timestamp"], r["sender_address"], r["sender_name"],
-                    r["recipient_address"], r["recipient_name"], r["msg_box"],
-                    r["message_type"], r["source_format"], r["hash"],
-                )
-                for r in messages.orderBy("_id").toLocalIterator()
-            ),
-        )
-        con.executemany(
-            "INSERT INTO parts(_id,message_id,data,content_type,filename) VALUES(?,?,?,?,?)",
-            (
-                (
-                    r["_id"], r["message_id"],
-                    r["data"] if r["data"] is not None else r["text"],
-                    r["content_type"], r["filename"],
-                )
-                for r in parts.orderBy("_id").toLocalIterator()
-            ),
-        )
+        # each generator is drained before the next starts, so the
+        # messages table is released before the parts fetch
+        for cols in _sorted_batches(messages, MESSAGES_SCHEMA.fieldNames()):
+            con.executemany(
+                "INSERT INTO messages(_id,timestamp,sender_address,sender_name,"
+                "recipient_address,recipient_name,msg_box,message_type,source_format,hash)"
+                " VALUES(?,?,?,?,?,?,?,?,?,?)",
+                zip(*cols),
+            )
+        for ids, mids, data, text, cts, fns in _sorted_batches(
+            parts, PARTS_SCHEMA.fieldNames()
+        ):
+            con.executemany(
+                "INSERT INTO parts(_id,message_id,data,content_type,filename)"
+                " VALUES(?,?,?,?,?)",
+                zip(ids, mids, [d if d is not None else t for d, t in zip(data, text)], cts, fns),
+            )
         con.commit()
     finally:
         con.close()
@@ -105,8 +115,6 @@ def read_store_sqlite(spark, db_path: str):
     'text/*' parts surface their bytes in the text lane (UTF-8), others in
     the binary lane — so import→write→read round-trips the two-lane model.
     """
-    from ..schemas import MESSAGES_SCHEMA, PARTS_SCHEMA
-
     con = sqlite3.connect(db_path)
     try:
         msg_rows = con.execute(

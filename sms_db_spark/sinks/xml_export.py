@@ -38,12 +38,13 @@ _PART_CONST_ATTRS = {
 
 def sms_export_frame(messages: DataFrame, parts: DataFrame) -> DataFrame:
     """SMS rows with body = first part (W1: row_number by part _id replaces
-    the reference's unordered selectrow_array, sms-db.pl:247). Carries the
-    store `_id` as the FINAL sort key: with it the export order is a total
-    order, so the document bytes do not depend on how the range
-    partitioning splits tied (date, address) pairs. The first part's
-    bytes are UTF-8-decoded only AFTER the join to SMS rows: an MMS
-    whose first part is binary never reaches the decode."""
+    the reference's unordered selectrow_array, sms-db.pl:247), one row
+    per SMS message, unordered: export_xml sorts them. Carries the store
+    `_id` for the FINAL sort key ("date", "address", "_id"): with it the
+    export order is a total order, so the document bytes do not depend
+    on how the range partitioning splits tied (date, address) pairs. The
+    first part's bytes are UTF-8-decoded only AFTER the join to SMS
+    rows: an MMS whose first part is binary never reaches the decode."""
     w = Window.partitionBy("message_id").orderBy("_id")
     first_part = (
         parts.withColumn("rn", F.row_number().over(w))
@@ -62,14 +63,14 @@ def sms_export_frame(messages: DataFrame, parts: DataFrame) -> DataFrame:
             F.coalesce(F.col("text"), F.decode(F.col("data"), "UTF-8")).alias("body"),
             messages._id.alias("_id"),
         )
-        .orderBy("date", "address", "_id")
     )
 
 
 def mms_export_frame(messages: DataFrame, parts: DataFrame) -> DataFrame:
-    """MMS rows with nested parts collected per message in _id order;
-    the store `_id` rides along as the tie-breaking final sort key
-    (same total-order contract as sms_export_frame)."""
+    """MMS rows with nested parts collected per message in _id order,
+    one row per MMS message, unordered; the store `_id` rides along for
+    the tie-breaking final sort key ("timestamp", "sender_address",
+    "_id": same total-order contract as sms_export_frame)."""
     parts_nested = parts.groupBy("message_id").agg(
         F.array_sort(
             F.collect_list(F.struct("_id", "text", "data", "content_type", "filename"))
@@ -83,7 +84,6 @@ def mms_export_frame(messages: DataFrame, parts: DataFrame) -> DataFrame:
             "recipient_address", "recipient_name", "parts",
             messages._id.alias("_id"),
         )
-        .orderBy("timestamp", "sender_address", "_id")
     )
 
 
@@ -187,7 +187,7 @@ def export_xml(
     """Write the Synctech XML document; returns the exported-message
     count (the root `count` attribute, sms-db.pl:306).
 
-    Each range partition of an ordered export frame renders its messages
+    Each range partition of an export frame renders its messages
     to an XML fragment on an executor (_sms_element/_mms_element); the
     driver then streams the fragment bytes between the header and
     footer. The single-document contract (one root, global timestamp
@@ -196,8 +196,14 @@ def export_xml(
     executors and driver memory stays O(one copy chunk). (The reference
     builds the whole XML::LibXML doc in memory.)
 
+    Counting: the root count and the fragment sizing come from one
+    `message_type` aggregate over `messages` (each export frame has one
+    row per message of its type), so no export frame is persisted or
+    counted.
+
     Ordering: repartitionByRange + sortWithinPartitions on the export
-    sort keys IS Spark's global sort, and fragment files are
+    sort keys IS Spark's global sort (the export frames carry no sort
+    of their own), and fragment files are
     concatenated in partition order. The store `_id` is the final sort
     key (a total order), so the bytes do not depend on where the range
     bounds fall — tied timestamps included — and heavy key ties cannot
@@ -222,23 +228,27 @@ def export_xml(
     sms_frame = sms_export_frame(messages, parts) if message_type in ("sms", "all") else None
     mms_frame = mms_export_frame(messages, parts) if message_type in ("mms", "all") else None
     jobs = [
-        (frame, build, keys, f"{frag_root}/{tag}")
-        for frame, build, keys, tag in (
-            (sms_frame, _sms_element, ("date", "address", "_id"), "sms"),
-            (mms_frame, _mms_element, ("timestamp", "sender_address", "_id"), "mms"),
+        (frame, build, keys, f"{frag_root}/{tag}", mtype)
+        for frame, build, keys, tag, mtype in (
+            (sms_frame, _sms_element, ("date", "address", "_id"), "sms", MSG_SMS),
+            (mms_frame, _mms_element, ("timestamp", "sender_address", "_id"), "mms", MSG_MMS),
         )
         if frame is not None
     ]
-    for frame, *_ in jobs:
-        frame.persist()  # counted for the header, then serialized
     from ..fsutil import hadoop_fs
 
     jvm, fs = hadoop_fs(spark, frag_root)
     try:
-        counts = [frame.count() for frame, *_ in jobs]
+        # each export frame has exactly one row per message of its type,
+        # so one aggregate over the store sizes the header and fragments
+        per_type = {
+            r["message_type"]: r["count"]
+            for r in messages.groupBy("message_type").count().collect()
+        }
+        counts = [per_type.get(mtype, 0) for *_, mtype in jobs]
         total = sum(counts)
         par = spark.sparkContext.defaultParallelism
-        for (frame, build, keys, frag_dir), n in zip(jobs, counts):
+        for (frame, build, keys, frag_dir, _), n in zip(jobs, counts):
             n_parts = max(1, par, -(-n // ROWS_PER_FRAGMENT))
             ordered = frame.repartitionByRange(n_parts, *keys).sortWithinPartitions(*keys)
 
@@ -264,7 +274,7 @@ def export_xml(
                 f"<!--File Created By sms-db-spark v{__version__} on {time.ctime()}-->\n".encode()
             )
             fh.write(f'<smses count="{total}">\n'.encode())
-            for _, _, _, frag_dir in jobs:
+            for _, _, _, frag_dir, _ in jobs:
                 frags = [
                     st.getPath()
                     for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(frag_dir))
@@ -277,7 +287,5 @@ def export_xml(
                     _stream_fragment(fh, jvm, fs, p)
             fh.write(b"</smses>\n")
     finally:
-        for frame, *_ in jobs:
-            frame.unpersist()
         fs.delete(jvm.org.apache.hadoop.fs.Path(frag_root), True)
     return total

@@ -2,15 +2,19 @@
 assignment, import statistics — the Spark shape of the reference's
 `insert()` + transaction loop (sms-db.pl:318-339, :47, :231).
 
-Pipeline (SURVEY.md E1):
+Pipeline (SURVEY.md E1), all in `finalize_import`:
     staged (messages, parts) from a normalizer
-      → compute hash (batch-wide, one pass)
-      → within-batch dedup: first-wins by staging order (≙ AUTOINCREMENT
-        insert order, sms-db.pl:49)
-      → against-store dedup: left_anti on hash (≙ UNIQUE constraint probe,
-        sms-db.pl:326-328)
-      → dense id assignment continuing from the store's max ids (W2)
-      → parts wired to parent ids by construction (FK by construction)
+      → compute hash and per-message part count (batch-wide, one pass)
+      → within-batch dedup: keep flag = first by staging order per hash
+        (≙ AUTOINCREMENT insert order, sms-db.pl:49)
+      → against-store dedup: a left join on the store's hash clears the
+        flag (≙ UNIQUE constraint probe, sms-db.pl:326-328)
+      → range-partition on local_id, pin once (localCheckpoint)
+      → one counts job over the pin: rows, kept rows, kept parts per
+        partition → message ids and each message's first part id,
+        continuing from the store's max ids (W2)
+      → parts joined to their kept message and ranked inside it
+        (FK by construction)
 
 Scale: the hash is uniformly distributed → dedup shuffles are skew-free.
 Dense id assignment uses the two-phase partition-offset pattern (no
@@ -23,7 +27,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import message_hash, part_bytes
@@ -32,7 +36,8 @@ from ..schemas import MESSAGE_HASH_FIELDS
 
 
 def with_message_hash(staged_messages: DataFrame, staged_parts: DataFrame) -> DataFrame:
-    """Attach the reference-recipe `hash` column to staged messages.
+    """Attach the reference-recipe `hash` column to staged messages,
+    and each message's part count as `_n_parts` (0 when it has none).
 
     Parts contribute (data, content_type) bytes in part_seq order
     (sms-db.pl:325 iterates @parts in insertion order).
@@ -47,10 +52,15 @@ def with_message_hash(staged_messages: DataFrame, staged_parts: DataFrame) -> Da
         F.expr(
             "aggregate(transform(array_sort(collect_list(struct(part_seq, pbytes))),"
             " s -> s.pbytes), CAST('' AS BINARY), (acc, b) -> concat(acc, b))"
-        ).alias("parts_bytes")
+        ).alias("parts_bytes"),
+        F.count(F.lit(1)).alias("_n_parts"),
     )
-    joined = staged_messages.join(agg, "local_id", "left").withColumn(
-        "parts_bytes", F.coalesce(F.col("parts_bytes"), F.encode(F.lit(""), "UTF-8"))
+    joined = (
+        staged_messages.join(agg, "local_id", "left")
+        .withColumn(
+            "parts_bytes", F.coalesce(F.col("parts_bytes"), F.encode(F.lit(""), "UTF-8"))
+        )
+        .withColumn("_n_parts", F.coalesce(F.col("_n_parts"), F.lit(0).cast("long")))
     )
     return joined.withColumn("hash", message_hash(F.col("parts_bytes"))).drop("parts_bytes")
 
@@ -76,7 +86,8 @@ def dense_ids(
     yield NULL ids.
     """
     ordered = df.repartitionByRange(*[F.col(c) for c in order_cols]).localCheckpoint()
-    return partition_offset_ids(ordered, order_cols, id_col, start=start, strict=True)
+    numbered, n, _ = partition_offset_ids(ordered, order_cols, id_col, start=start, strict=True)
+    return numbered, n
 
 
 def _next_id(store_table: DataFrame | None) -> int:
@@ -111,42 +122,67 @@ def finalize_import(
 ) -> ImportResult:
     """Dedup + id-assign a staged batch, appending to an optional store.
 
-    first-wins within batch: min(local_id) per hash (staging order ≙ the
-    reference's insert order). Store-side dedup: left_anti on hash.
+    first-wins within batch: the lowest local_id per hash (staging order
+    ≙ the reference's insert order). Store-side dedup: a left join on
+    the store's hash clears the keep flag.
+
+    The flagged batch is range-partitioned on local_id and pinned once
+    (localCheckpoint). One counts job over the pin gives, per
+    partition, the rows, the kept rows and the kept part count: `total`,
+    `inserted` and `total_parts` are their sums. A kept message's `_id`
+    is its running kept count plus its partition's offset, and
+    `_part_start` (the id before its first part) is the running sum of
+    kept part counts before it, offset the same way. Parts then take
+    `_part_start` + their rank within the message, ranked by part_seq
+    and then every other part column, so the lazy `parts` frame gives
+    each part row the same id however often it is evaluated, ties in
+    part_seq included.
     """
-    # persist the hashed batch: this function drives several actions over
-    # it (the total count, the keeper join, the id-offset collects) —
-    # without a persist each action re-executes the normalizer join chain
-    hashed = with_message_hash(staged_messages, staged_parts).persist()
-    total = hashed.count() + ignored_count
-
-    keeper = hashed.groupBy("hash").agg(F.min("local_id").alias("local_id"))
-    batch_unique = hashed.join(keeper, ["hash", "local_id"], "inner")
-
     id_start = _next_id(existing_messages)
     has_store = id_start > 1
-    if has_store:
-        new_msgs = batch_unique.join(existing_messages.select("hash"), "hash", "left_anti")
-        part_id_start = _next_id(existing_parts)
-    else:
-        new_msgs, part_id_start = batch_unique, 1
+    part_id_start = _next_id(existing_parts) if has_store else 1
 
-    with_ids, inserted = dense_ids(new_msgs, ["local_id"], "_id", start=id_start)
+    first = Window.partitionBy("hash").orderBy("local_id")
+    flagged = with_message_hash(staged_messages, staged_parts).withColumn(
+        "_keep", F.row_number().over(first) == 1
+    )
+    if has_store:
+        stored = existing_messages.select("hash", F.lit(True).alias("_stored"))
+        flagged = flagged.join(stored, "hash", "left").withColumn(
+            "_keep", F.col("_keep") & F.col("_stored").isNull()
+        )
+    pinned = flagged.repartitionByRange(F.col("local_id")).localCheckpoint()
+    kept_n = F.col("_keep").cast("long")
+    # `_row` numbers every batch row and goes unused: the ids are the
+    # running sums, and the kernel's row total N is the batch total
+    numbered, seen, sums = partition_offset_ids(
+        pinned,
+        ["local_id"],
+        "_row",
+        sums={"_kept": kept_n, "_kept_parts": kept_n * F.col("_n_parts")},
+    )
+    total = seen + ignored_count
+    inserted, total_parts = sums["_kept"], sums["_kept_parts"]
     duplicates = total - inserted - ignored_count
 
-    messages = with_ids.select(
-        "_id", *MESSAGE_HASH_FIELDS, "hash"
+    kept = numbered.filter("_keep").select(
+        (F.col("_kept") + (id_start - 1)).alias("_id"),
+        *MESSAGE_HASH_FIELDS,
+        "hash",
+        "local_id",
+        (F.col("_kept_parts") - F.col("_n_parts") + (part_id_start - 1)).alias("_part_start"),
     )
+    messages = kept.drop("local_id", "_part_start")
 
-    kept_parts = staged_parts.join(
-        with_ids.select("local_id", F.col("_id").alias("message_id")), "local_id", "inner"
+    part_cols = ["data", "text", "content_type", "filename"]
+    in_message = Window.partitionBy("local_id").orderBy("part_seq", *part_cols)
+    parts = staged_parts.join(
+        kept.select("local_id", F.col("_id").alias("message_id"), "_part_start"), "local_id"
+    ).select(
+        (F.col("_part_start") + F.row_number().over(in_message)).alias("_id"),
+        "message_id",
+        *part_cols,
     )
-    parts, total_parts = dense_ids(
-        kept_parts, ["message_id", "part_seq"], "_id", start=part_id_start
-    )
-    parts = parts.select("_id", "message_id", "data", "text", "content_type", "filename")
-    # both id frames are pinned by dense_ids: nothing reads `hashed` now
-    hashed.unpersist()
 
     if has_store:
         messages = existing_messages.unionByName(messages)

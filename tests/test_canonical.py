@@ -117,6 +117,46 @@ def test_store_with_empty_parts_table(spark):
     assert {r["message_id"] for r in part_rows} == {6, 7, 8}
 
 
+def test_part_ids_repeat_under_part_seq_ties(spark):
+    """Two parts of one message with equal part_seq (Signal stages its
+    body part with `lit(0)`), numbered into a non-empty store. `parts`
+    is a lazy frame, and a shuffled staging frame reaches it in any row
+    order, so a part's id must depend on the part row alone: two
+    evaluations, and an import of the same rows staged in reverse
+    order, give identical (_id, row) pairs. The new ids are dense from
+    the store's max+1 in (message_id, part_seq) order."""
+    m, p = normalize_xml(*xml_frames(spark))
+    store = finalize_import(m, p)  # 5 messages, part ids 1..6
+    msgs = spark.createDataFrame(
+        [
+            (1, 1_700_000_000_000, "+15550009999", "Zed", None, None, 1, 1, 0),
+            (2, 1_700_000_100_000, "+15550009999", "Zed", None, None, 1, 0, 0),
+        ],
+        m.schema,
+    )
+    part_rows = [
+        (1, 1, b"\x89PNG", None, "image/png", "a.png"),
+        (1, 0, None, "second", "text/plain", None),
+        (1, 0, None, "first", "text/plain", None),
+        (2, 0, None, "sms body", "text/plain", None),
+    ]
+
+    def new_parts(rows):
+        res = finalize_import(
+            msgs, spark.createDataFrame(rows, p.schema), store.messages, store.parts
+        )
+        assert (res.inserted, res.total_parts) == (2, 4)
+        return [sorted(tuple(r) for r in res.parts.filter("_id > 6").collect()) for _ in (0, 1)]
+
+    first, again = new_parts(part_rows)
+    assert first == again == new_parts(part_rows[::-1])[0]
+    assert [r[0] for r in first] == [7, 8, 9, 10]
+    # rows are (_id, message_id, data, text, ...): recover each part_seq
+    part_seq = {"first": 0, "second": 0, b"\x89PNG": 1, "sms body": 0}
+    keys = [(r[1], part_seq[r[3] if r[3] is not None else r[2]]) for r in first]
+    assert keys == [(6, 0), (6, 0), (6, 1), (7, 0)]
+
+
 def _next_job_id(spark) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
