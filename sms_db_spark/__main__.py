@@ -11,11 +11,11 @@ Semantics mirrored from the reference driver (sms-db.pl:42-235, 237-312):
 of -i (import) / -o (export) must be given; repeated -i runs against the
 same -d accumulate idempotently (dedup A5). The store is written via the
 SQLite sink, so `sqlite3 sms-db.db "SELECT ..."` works exactly as
-querying.md documents. Import rewrites the store through a staging file +
-atomic rename (the batch-transaction equivalent of the reference's single
-commit, sms-db.pl:47,231). Export has one path, like the reference's
-single exporter: sinks.xml_export.export_xml, which serializes the
-document in fragments on the executors.
+querying.md documents. Import appends its new rows in one transaction
+(the reference's single commit, sms-db.pl:47,231), and writes nothing
+when none is new. Export has one path, like the reference's single
+exporter: sinks.xml_export.export_xml, which serializes the document in
+fragments on the executors.
 """
 
 from __future__ import annotations
@@ -57,14 +57,11 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("sms-db-spark-cli")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from .sinks.sqlite_sink import read_store_sqlite, store_message_count, write_store_sqlite
-
-    existing = (None, None)
-    if os.path.exists(args.d):
-        existing = read_store_sqlite(spark, args.d)
-
+    # a first import that failed leaves an empty file: no store yet
+    store = args.d if os.path.isfile(args.d) and os.path.getsize(args.d) else None
     if args.i:
         print(f"Importing messages from '{args.i}' ...")
+        from .sinks.sqlite_sink import store_message_count, write_store_sqlite
         from .sources.canonical import finalize_import
 
         ignored = 0
@@ -89,15 +86,9 @@ def main(argv: list[str] | None = None) -> int:
                 *read_signal_staging(spark, args.i), message_type=args.t
             )
 
-        result = finalize_import(
-            msgs, parts, existing_messages=existing[0], existing_parts=existing[1],
-            ignored_count=ignored,
-        )
-        tmp = args.d + ".staging"
-        if os.path.exists(tmp):
-            os.remove(tmp)
-        write_store_sqlite(result.messages, result.parts, tmp)
-        os.replace(tmp, args.d)
+        result = finalize_import(msgs, parts, store=store, ignored_count=ignored)
+        if store is None or result.inserted:
+            write_store_sqlite(result.messages, result.parts, args.d)
         n_rows = store_message_count(args.d)
         print(f"Total messages seen:\t\t{result.total}")
         print(f"Total messages imported:\t{result.inserted}")
@@ -107,12 +98,14 @@ def main(argv: list[str] | None = None) -> int:
         print(f"Messages in database:\t\t{n_rows}")
     else:
         print(f"Exporting messages to '{args.o}' ...")
-        if existing[0] is None:
+        if store is None:
             print(f"No store at '{args.d}'", file=sys.stderr)
             return 1
+        from .sinks.sqlite_sink import read_store_sqlite
         from .sinks.xml_export import export_xml
 
-        count = export_xml(existing[0], existing[1], args.o, message_type=args.t)
+        messages, parts = read_store_sqlite(spark, store)
+        count = export_xml(messages, parts, args.o, message_type=args.t)
         print(f"Total messages exported:\t{count}")
 
     print(f"Elapsed time:\t\t\t{round(time.time() - t0, 3)} seconds")

@@ -8,15 +8,16 @@ SQLite itself admits: the output is one single-writer db file, so no
 cluster-side writer (JDBC included) could parallelize the final insert
 anyway — it would funnel the same rows through the same file lock. The
 driver holds one table at a time, as Arrow (the messages table is
-released before the parts fetch); the CLI already holds the whole
-store on the driver when it reads it back (`read_store_sqlite`). A
-JDBC lane existed through round 6 but could never execute here (no
-sqlite-jdbc jar is vendored and none can be fetched), and an
-unprovable lane on the primary compat sink is worse than no lane
-(VERDICT r6 item 4): deleted, driver writer promoted to the only
-documented path. On a cluster the export cost is the upstream
+released before the parts fetch). A JDBC lane existed through round 6
+but could never execute here (no sqlite-jdbc jar is vendored and none
+can be fetched), and an unprovable lane on the primary compat sink is
+worse than no lane (VERDICT r6 item 4): deleted, driver writer
+promoted to the only documented path. On a cluster the export cost is the upstream
 DataFrame work, which stays distributed; the final file write is
 inherently serial either way.
+
+A write appends in ONE transaction, as the reference's import does
+(sms-db.pl:47, :231): a write that fails part-way is rolled back whole.
 
 Schema parity: CREATE TABLE statements mirror sms-db.pl:49,53 including
 `hash INT UNIQUE` (SQLite type affinity stores the hex text) and
@@ -45,17 +46,17 @@ PARTS_DDL = (
 )
 
 
-def _create_store_schema(db_path: str) -> None:
-    """Driver-side store-schema bootstrap for the write path:
-    the reference DDL (sms-db.pl:49,53) + PRAGMA user_version (sms-db.pl:50)."""
+def store_next_ids(db_path: str) -> tuple[int, int]:
+    """max(_id) + 1 of the store's messages and parts tables (1 when
+    empty), read in one SELECT."""
     con = sqlite3.connect(db_path)
     try:
-        con.execute(MESSAGES_DDL)
-        con.execute(PARTS_DDL)
-        con.execute(f"PRAGMA user_version = {DATABASE_VERSION}")
-        con.commit()
+        tops = con.execute(
+            "SELECT (SELECT max(_id) FROM messages), (SELECT max(_id) FROM parts)"
+        ).fetchone()
     finally:
         con.close()
+    return tuple(1 if top is None else top + 1 for top in tops)
 
 
 _INSERT_BATCH_ROWS = 10_000  # bounds the Python row tuples alive at once
@@ -70,13 +71,17 @@ def _sorted_batches(frame: DataFrame, columns):
 
 
 def write_store_sqlite(messages: DataFrame, parts: DataFrame, db_path: str) -> None:
-    """Write the canonical store to a SQLite file the reference's users can
-    query verbatim (querying.md). Reconstitutes the parts.data polymorphism:
-    text parts store their text in `data` (sms-db.pl:54-55 simplified table),
-    so they land as TEXT and binary parts as BLOB."""
-    _create_store_schema(db_path)
-    con = sqlite3.connect(db_path)
+    """Append the canonical rows, in one transaction, to a SQLite file the
+    reference's users can query verbatim (querying.md). Reconstitutes the
+    parts.data polymorphism: text parts store their text in `data`
+    (sms-db.pl:54-55 simplified table), so they land as TEXT and binary
+    parts as BLOB."""
+    con = sqlite3.connect(db_path, isolation_level=None)  # transactions by hand
     try:
+        con.execute("BEGIN IMMEDIATE")
+        con.execute(MESSAGES_DDL)
+        con.execute(PARTS_DDL)
+        con.execute(f"PRAGMA user_version = {DATABASE_VERSION}")
         # each generator is drained before the next starts, so the
         # messages table is released before the parts fetch
         for cols in _sorted_batches(messages, MESSAGES_SCHEMA.fieldNames()):
@@ -94,8 +99,8 @@ def write_store_sqlite(messages: DataFrame, parts: DataFrame, db_path: str) -> N
                 " VALUES(?,?,?,?,?)",
                 zip(ids, mids, [d if d is not None else t for d, t in zip(data, text)], cts, fns),
             )
-        con.commit()
-    finally:
+        con.execute("COMMIT")
+    finally:  # closing with the transaction still open rolls it back
         con.close()
 
 

@@ -7,20 +7,20 @@ Pipeline (SURVEY.md E1), all in `finalize_import`:
       → compute hash and per-message part count (batch-wide, one pass)
       → within-batch dedup: keep flag = first by staging order per hash
         (≙ AUTOINCREMENT insert order, sms-db.pl:49)
-      → against-store dedup: a left join on the store's hash clears the
-        flag (≙ UNIQUE constraint probe, sms-db.pl:326-328)
+      → against-store dedup: a left join on the store's hash column
+        clears the flag (≙ UNIQUE constraint probe, sms-db.pl:326-328)
       → range-partition on local_id, pin once (localCheckpoint)
       → one counts job over the pin: rows, kept rows, kept parts per
         partition → message ids and each message's first part id,
         continuing from the store's max ids (W2)
       → parts joined to their kept message and ranked inside it
-        (FK by construction)
+        (FK by construction): the rows to append to the store
 
 Scale: the hash is uniformly distributed → dedup shuffles are skew-free.
 Dense id assignment uses the two-phase partition-offset pattern (no
 global single-partition window). Against-store dedup only moves the
-store's (hash) column — broadcastable when the batch is small, AQE
-picks the strategy otherwise.
+store's (hash) column, read by `read_sqlite_table` — broadcastable
+when the batch is small, AQE picks the strategy otherwise.
 """
 
 from __future__ import annotations
@@ -29,10 +29,15 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.hashing import message_hash, part_bytes
 from ..functions.numbering import partition_offset_ids
-from ..schemas import MESSAGE_HASH_FIELDS
+from ..schemas import MESSAGE_HASH_FIELDS, MESSAGES_SCHEMA
+from ..sinks.sqlite_sink import store_next_ids
+from .sqlite_io import read_sqlite_table
+
+_HASH_SCHEMA = T.StructType([MESSAGES_SCHEMA["hash"]])
 
 
 def with_message_hash(staged_messages: DataFrame, staged_parts: DataFrame) -> DataFrame:
@@ -90,19 +95,9 @@ def dense_ids(
     return numbered, n
 
 
-def _next_id(store_table: DataFrame | None) -> int:
-    """max(_id) + 1 of a store table, 1 when it is absent or empty: one
-    aggregate job per table (`_id` is non-null, so an empty table is
-    exactly a NULL max)."""
-    if store_table is None:
-        return 1
-    top = store_table.agg(F.max("_id")).first()[0]
-    return 1 if top is None else top + 1
-
-
 @dataclass
 class ImportResult:
-    """The reference's run report (sms-db.pl:233)."""
+    """The reference's run report (sms-db.pl:233) and the rows to append."""
 
     messages: DataFrame
     parts: DataFrame
@@ -116,15 +111,16 @@ class ImportResult:
 def finalize_import(
     staged_messages: DataFrame,
     staged_parts: DataFrame,
-    existing_messages: DataFrame | None = None,
-    existing_parts: DataFrame | None = None,
+    store: str | None = None,
     ignored_count: int = 0,
 ) -> ImportResult:
-    """Dedup + id-assign a staged batch, appending to an optional store.
+    """Dedup + id-assign a staged batch against an optional SQLite store
+    file, returning the rows to append to it.
 
     first-wins within batch: the lowest local_id per hash (staging order
     ≙ the reference's insert order). Store-side dedup: a left join on
-    the store's hash clears the keep flag.
+    the store's hash column clears the keep flag. The pin consumes that
+    read, so the frames stay valid after their rows are appended.
 
     The flagged batch is range-partitioned on local_id and pinned once
     (localCheckpoint). One counts job over the pin gives, per
@@ -138,16 +134,16 @@ def finalize_import(
     each part row the same id however often it is evaluated, ties in
     part_seq included.
     """
-    id_start = _next_id(existing_messages)
-    has_store = id_start > 1
-    part_id_start = _next_id(existing_parts) if has_store else 1
+    id_start, part_id_start = store_next_ids(store) if store is not None else (1, 1)
 
     first = Window.partitionBy("hash").orderBy("local_id")
     flagged = with_message_hash(staged_messages, staged_parts).withColumn(
         "_keep", F.row_number().over(first) == 1
     )
-    if has_store:
-        stored = existing_messages.select("hash", F.lit(True).alias("_stored"))
+    if id_start > 1:
+        stored = read_sqlite_table(
+            staged_messages.sparkSession, store, "messages", _HASH_SCHEMA
+        ).withColumn("_stored", F.lit(True))
         flagged = flagged.join(stored, "hash", "left").withColumn(
             "_keep", F.col("_keep") & F.col("_stored").isNull()
         )
@@ -183,11 +179,6 @@ def finalize_import(
         "message_id",
         *part_cols,
     )
-
-    if has_store:
-        messages = existing_messages.unionByName(messages)
-    if part_id_start > 1:
-        parts = existing_parts.unionByName(parts)
 
     return ImportResult(
         messages=messages,

@@ -3,8 +3,15 @@ guarantees: README.md:113-115 idempotence, sms-db.pl:233 reconciliation)."""
 
 from __future__ import annotations
 
+import os
+import sqlite3
+
+import pytest
 from pyspark.sql import functions as F
 
+from sms_db_spark.sinks import sqlite_sink
+from sms_db_spark.sinks.sqlite_sink import write_store_sqlite
+from sms_db_spark.sources import sqlite_io
 from sms_db_spark.sources.canonical import dense_ids, finalize_import
 from sms_db_spark.sources.xml_source import normalize_xml
 from sms_db_spark.sources.bugle import normalize_bugle
@@ -41,35 +48,58 @@ def test_parts_fk_integrity(spark):
     assert orphans.count() == 0
 
 
-def test_dedup_idempotence(spark):
-    """import twice ≡ once — the reference's core guarantee (README.md:113-115)."""
+def _query(db: str, sql: str) -> list[tuple]:
+    con = sqlite3.connect(db)
+    try:
+        return con.execute(sql).fetchall()
+    finally:
+        con.close()
+
+
+def _append(staged, db: str, **kw):
+    """finalize_import against the store at `db`, then append its rows."""
+    res = finalize_import(*staged, store=db, **kw)
+    write_store_sqlite(res.messages, res.parts, db)
+    return res
+
+
+def _xml_store(spark, db: str):
+    """The 5-message XML fixture written as a fresh store (part ids 1..6)."""
     m, p = normalize_xml(*xml_frames(spark))
     first = finalize_import(m, p)
-    second = finalize_import(m, p, existing_messages=first.messages, existing_parts=first.parts)
+    write_store_sqlite(first.messages, first.parts, db)
+    return m, p, first
+
+
+def test_dedup_idempotence(spark, tmp_path):
+    """import twice ≡ once — the reference's core guarantee (README.md:113-115)."""
+    db = str(tmp_path / "sms.db")
+    m, p, _ = _xml_store(spark, db)
+    second = _append((m, p), db)
     assert second.inserted == 0
     assert second.duplicates == 5
     assert second.total_parts == 0
-    assert second.messages.count() == 5
-    assert second.parts.count() == 6
+    assert second.messages.count() == second.parts.count() == 0
+    assert _query(db, "SELECT (SELECT count(*) FROM messages), (SELECT count(*) FROM parts)") == [
+        (5, 6)
+    ]
 
 
-def test_incremental_append_across_sources(spark):
-    xm, xp = normalize_xml(*xml_frames(spark))
-    store = finalize_import(xm, xp)
-    bm, bp = normalize_bugle(*bugle_frames(spark))
-    store2 = finalize_import(bm, bp, store.messages, store.parts)
+def test_incremental_append_across_sources(spark, tmp_path):
+    db = str(tmp_path / "sms.db")
+    _xml_store(spark, db)
+    store2 = _append(normalize_bugle(*bugle_frames(spark)), db)
     assert store2.inserted == 3
-    assert store2.messages.count() == 8
+    assert _query(db, "SELECT count(*) FROM messages") == [(8,)]
     sm, sp, ign = normalize_signal(*signal_frames(spark))
-    store3 = finalize_import(sm, sp, store2.messages, store2.parts, ignored_count=ign)
+    store3 = _append((sm, sp), db, ignored_count=ign)
     assert store3.ignored == 4
     assert store3.total == 4 + 4  # 2 sms + 2 mms staged + 4 ignored
-    assert store3.messages.count() == 12
     # ids stay dense across appends
-    ids = [r["_id"] for r in store3.messages.orderBy("_id").collect()]
+    ids = [r[0] for r in _query(db, "SELECT _id FROM messages ORDER BY _id")]
     assert ids == list(range(1, 13))
     # hash uniqueness (the UNIQUE constraint, sms-db.pl:49)
-    assert store3.messages.select("hash").distinct().count() == 12
+    assert _query(db, "SELECT count(DISTINCT hash) FROM messages") == [(12,)]
 
 
 def test_within_batch_dup_first_wins(spark):
@@ -103,21 +133,25 @@ def test_dense_ids_dense_over_shuffled_input(spark):
     assert n == 2000
 
 
-def test_store_with_empty_parts_table(spark):
+def test_store_with_empty_parts_table(spark, tmp_path):
     """A store with messages but no parts: message ids continue from
     max(_id)+1, part ids start at 1."""
-    m, p = normalize_xml(*xml_frames(spark))
-    store = finalize_import(m, p)
-    bm, bp = normalize_bugle(*bugle_frames(spark))
-    res = finalize_import(bm, bp, store.messages, store.parts.limit(0))
+    db = str(tmp_path / "sms.db")
+    _xml_store(spark, db)
+    con = sqlite3.connect(db)
+    con.execute("DELETE FROM parts")
+    con.commit()
+    con.close()
+    res = _append(normalize_bugle(*bugle_frames(spark)), db)
     assert res.inserted == 3
-    assert [r["_id"] for r in res.messages.orderBy("_id").collect()] == list(range(1, 9))
-    part_rows = res.parts.orderBy("_id").collect()
-    assert [r["_id"] for r in part_rows] == list(range(1, res.total_parts + 1))
-    assert {r["message_id"] for r in part_rows} == {6, 7, 8}
+    ids = [r[0] for r in _query(db, "SELECT _id FROM messages ORDER BY _id")]
+    assert ids == list(range(1, 9))
+    part_rows = _query(db, "SELECT _id, message_id FROM parts ORDER BY _id")
+    assert [r[0] for r in part_rows] == list(range(1, res.total_parts + 1))
+    assert {r[1] for r in part_rows} == {6, 7, 8}
 
 
-def test_part_ids_repeat_under_part_seq_ties(spark):
+def test_part_ids_repeat_under_part_seq_ties(spark, tmp_path):
     """Two parts of one message with equal part_seq (Signal stages its
     body part with `lit(0)`), numbered into a non-empty store. `parts`
     is a lazy frame, and a shuffled staging frame reaches it in any row
@@ -125,8 +159,8 @@ def test_part_ids_repeat_under_part_seq_ties(spark):
     evaluations, and an import of the same rows staged in reverse
     order, give identical (_id, row) pairs. The new ids are dense from
     the store's max+1 in (message_id, part_seq) order."""
-    m, p = normalize_xml(*xml_frames(spark))
-    store = finalize_import(m, p)  # 5 messages, part ids 1..6
+    db = str(tmp_path / "sms.db")
+    m, p, _ = _xml_store(spark, db)  # 5 messages, part ids 1..6
     msgs = spark.createDataFrame(
         [
             (1, 1_700_000_000_000, "+15550009999", "Zed", None, None, 1, 1, 0),
@@ -142,11 +176,9 @@ def test_part_ids_repeat_under_part_seq_ties(spark):
     ]
 
     def new_parts(rows):
-        res = finalize_import(
-            msgs, spark.createDataFrame(rows, p.schema), store.messages, store.parts
-        )
+        res = finalize_import(msgs, spark.createDataFrame(rows, p.schema), store=db)
         assert (res.inserted, res.total_parts) == (2, 4)
-        return [sorted(tuple(r) for r in res.parts.filter("_id > 6").collect()) for _ in (0, 1)]
+        return [sorted(tuple(r) for r in res.parts.collect()) for _ in (0, 1)]
 
     first, again = new_parts(part_rows)
     assert first == again == new_parts(part_rows[::-1])[0]
@@ -155,6 +187,95 @@ def test_part_ids_repeat_under_part_seq_ties(spark):
     part_seq = {"first": 0, "second": 0, b"\x89PNG": 1, "sms body": 0}
     keys = [(r[1], part_seq[r[3] if r[3] is not None else r[2]]) for r in first]
     assert keys == [(6, 0), (6, 0), (6, 1), (7, 0)]
+
+
+def _store_rows(db: str):
+    return [
+        _query(db, "SELECT * FROM messages ORDER BY _id"),
+        _query(db, "SELECT * FROM parts ORDER BY _id"),
+        _query(db, "PRAGMA user_version"),
+    ]
+
+
+def test_failed_append_leaves_the_store_as_it_was(spark, tmp_path, monkeypatch):
+    """The write is one transaction: a parts insert that raises after
+    its first batch leaves an existing store with exactly its
+    pre-import rows, and a failed first import leaves an empty file."""
+    db = str(tmp_path / "sms.db")
+    _, _, first = _xml_store(spark, db)
+    before = _store_rows(db)
+    res = finalize_import(*normalize_bugle(*bugle_frames(spark)), store=db)
+    assert res.inserted == 3
+
+    monkeypatch.setattr(sqlite_sink, "_INSERT_BATCH_ROWS", 1)
+    batches_of = sqlite_sink._sorted_batches
+
+    def parts_fail_after_first_batch(frame, columns):
+        batches = batches_of(frame, columns)
+        if "message_id" not in columns:
+            yield from batches
+            return
+        yield next(batches)
+        raise RuntimeError("parts insert failed")
+
+    monkeypatch.setattr(sqlite_sink, "_sorted_batches", parts_fail_after_first_batch)
+    with pytest.raises(RuntimeError, match="parts insert failed"):
+        write_store_sqlite(res.messages, res.parts, db)
+    assert _store_rows(db) == before
+    assert _query(db, "PRAGMA integrity_check") == [("ok",)]
+
+    fresh = str(tmp_path / "fresh.db")
+    with pytest.raises(RuntimeError, match="parts insert failed"):
+        write_store_sqlite(first.messages, first.parts, fresh)
+    assert _query(fresh, "SELECT name FROM sqlite_master WHERE name = 'messages'") == []
+    assert os.path.getsize(fresh) == 0
+
+
+def test_store_read_is_pinned_before_the_append(spark, tmp_path, monkeypatch):
+    """Past the distributed threshold the store's hash column is read by
+    a rowid-range scan of the file itself. The import's pin consumes
+    that read: the returned frames give the same rows after
+    write_store_sqlite has appended them to the same file, and neither
+    the write nor a later evaluation scans the store again (a scan
+    running inside the write's transaction would read a file its own
+    writer holds locked)."""
+    scans = []
+    scanned_batches = spark.sparkContext.accumulator(0)
+    ranges = sqlite_io._read_sqlite_ranges
+
+    def counted_ranges(*args):
+        scans.append(args[2])
+
+        def tick(batches):
+            for batch in batches:
+                scanned_batches.add(1)
+                yield batch
+
+        return ranges(*args).mapInPandas(tick, args[3])
+
+    monkeypatch.setattr(sqlite_io, "DISTRIBUTED_ROWS_THRESHOLD", 1)
+    monkeypatch.setattr(sqlite_io, "_read_sqlite_ranges", counted_ranges)
+    db = str(tmp_path / "sms.db")
+    m, p, _ = _xml_store(spark, db)
+    again = finalize_import(m, p, store=db)
+    assert (again.inserted, again.duplicates) == (0, 5)
+    assert scans == ["messages"]  # the hash column came from the file scan
+
+    def rows(res):
+        # a fresh plan per call: collecting the same DataFrame again would
+        # reuse its shuffle files and never re-read the store
+        return [sorted((tuple(r) for r in f.select("*").collect()), key=lambda r: r[0])
+                for f in (res.messages, res.parts)]
+
+    res = finalize_import(*normalize_bugle(*bugle_frames(spark)), store=db)
+    read_at_pin = scanned_batches.value
+    assert read_at_pin > 0
+    before = rows(res)
+    assert len(before[0]) == res.inserted == 3
+    write_store_sqlite(res.messages, res.parts, db)
+    assert rows(res) == before
+    assert scanned_batches.value == read_at_pin
+    assert _query(db, "SELECT count(*) FROM messages") == [(8,)]
 
 
 def _next_job_id(spark) -> int:

@@ -5,6 +5,7 @@ exactly how the reference's users query it (querying.md:7-13)."""
 
 from __future__ import annotations
 
+import hashlib
 import sqlite3
 import xml.etree.ElementTree as ET
 
@@ -103,9 +104,12 @@ def test_cli_xml_import_is_idempotent(spark, tmp_path, xml_file):
     assert main(["-f", "xml", "-i", xml_file, "-d", db]) == 0
     n_msg, n_parts, version = _store_counts(db)
     assert (n_msg, n_parts, version) == (3, 4, 2)
-    # re-import: every message a duplicate (A5 idempotence through the CLI)
+    # re-import: every message a duplicate (A5 idempotence through the CLI),
+    # and an import that adds nothing leaves the file byte for byte as it was
+    digest = hashlib.sha256(open(db, "rb").read()).hexdigest()
     assert main(["-f", "xml", "-i", xml_file, "-d", db]) == 0
     assert _store_counts(db)[:2] == (3, 4)
+    assert hashlib.sha256(open(db, "rb").read()).hexdigest() == digest
     # the store is queryable with plain sqlite3 like querying.md promises
     con = sqlite3.connect(db)
     got = con.execute(
@@ -113,6 +117,19 @@ def test_cli_xml_import_is_idempotent(spark, tmp_path, xml_file):
     ).fetchall()
     con.close()
     assert got == [("Alice",), ("Carol",)]
+
+
+def test_cli_imports_into_an_empty_file(spark, tmp_path, xml_file):
+    """An empty file at -d (what a failed first import leaves) is no store
+    yet: the import creates it, even when it adds no message."""
+    db = tmp_path / "sms-db.db"
+    db.touch()
+    empty_backup = tmp_path / "empty.xml"
+    empty_backup.write_text("<?xml version='1.0'?><smses count=\"0\"></smses>")
+    assert main(["-f", "xml", "-i", str(empty_backup), "-d", str(db)]) == 0
+    assert _store_counts(str(db)) == (0, 0, 2)
+    assert main(["-f", "xml", "-i", xml_file, "-d", str(db)]) == 0
+    assert _store_counts(str(db)) == (3, 4, 2)
 
 
 def test_cli_multi_source_accumulation(spark, tmp_path, xml_file):

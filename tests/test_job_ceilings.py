@@ -19,7 +19,7 @@ CEILINGS = {
     "finalize_import": 10,
     "write_store_sqlite": 6,
     "export_xml": 12,
-    "finalize_import into a store": 15,
+    "finalize_import into a store": 11,
 }
 
 
@@ -30,7 +30,7 @@ def _next_job_id(spark) -> int:
 def test_round_trip_job_ceilings(spark, tmp_path):
     """The CLI's path on the 5-message fixture: import into an empty
     store, write it, export the store read back from the file, then
-    import the same backup again into that store (all duplicates)."""
+    import the same backup again into that store file (all duplicates)."""
     jobs = {}
 
     def counted(name, fn, *args):
@@ -45,7 +45,7 @@ def test_round_trip_job_ceilings(spark, tmp_path):
     counted("write_store_sqlite", write_store_sqlite, res.messages, res.parts, db)
     messages, parts = read_store_sqlite(spark, db)
     assert counted("export_xml", export_xml, messages, parts, str(tmp_path / "out.xml")) == 5
-    again = counted("finalize_import into a store", finalize_import, m, p, messages, parts)
+    again = counted("finalize_import into a store", finalize_import, m, p, db)
     assert (again.inserted, again.duplicates) == (0, 5)
     over = {k: (n, CEILINGS[k]) for k, n in jobs.items() if n > CEILINGS[k]}
     assert not over, f"jobs over their ceiling (count, ceiling): {over}"
