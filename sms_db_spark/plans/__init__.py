@@ -118,28 +118,10 @@ def _tuned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessi
 # function, not the modules it lives near.
 #
 _CHANGED_THIS_ROUND = [
-    # finalize_import numbers messages and parts off one pinned frame
-    # (with_message_hash also returns the part count); the SQLite sink
-    # is one Arrow fetch per table; the export frames lost their own
-    # sort (q64 sorts its frame itself) and export_xml takes its counts
-    # from one message_type aggregate.
-    "q60_import_xml",
-    "q61_import_bugle",
-    "q62_import_signal",
-    "q63_import_pipeline",
-    "q64_export_frame",
-    "q65_sql_verbatim",
-    "q171_sql_verbatim_ci",
-    "q172_quarantine_audit",
+    # read_store_sqlite reads both tables through read_sqlite_table and
+    # splits parts.data into the text/binary lanes in one column
+    # expression; q163 is its only lane
     "q163_sqlite_store_audit",
-    "q148_sharded_export_audit",
-    # the map lookup is spelled col[key], not the deprecated getItem(col)
-    "q10_dict_decode",
-    # partition_offset_ids gained per-partition running sums and returns
-    # (frame, N, sums): dense_ids (q141) and _balanced_rank_ids (q174)
-    # run the changed kernel
-    "q141_epoch_shuffle",
-    "q174_ivfadc_clustered",
 ]
 
 

@@ -19,6 +19,14 @@ inherently serial either way.
 A write appends in ONE transaction, as the reference's import does
 (sms-db.pl:47, :231): a write that fails part-way is rolled back whole.
 
+The read side (`read_store_sqlite`, the CLI's `-o`) has no reader of its
+own: both tables go through `sources/sqlite_io.read_sqlite_table`, the
+reader of every backup db, so its size routing holds here too. A store
+below DISTRIBUTED_ROWS_THRESHOLD rows per table becomes Arrow local
+relations on the driver; a larger one is a rowid-range scan, and the
+driver never holds the whole store. The text/binary split of
+`parts.data` is one column expression over the bytes read.
+
 Schema parity: CREATE TABLE statements mirror sms-db.pl:49,53 including
 `hash INT UNIQUE` (SQLite type affinity stores the hex text) and
 PRAGMA user_version = 2 (sms-db.pl:50).
@@ -29,10 +37,12 @@ from __future__ import annotations
 import sqlite3
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import DATABASE_VERSION
 from ..schemas import MESSAGES_SCHEMA, PARTS_SCHEMA
-from ..session import local_frame
+from ..sources.sqlite_io import read_sqlite_table
 
 MESSAGES_DDL = (
     "CREATE TABLE IF NOT EXISTS messages(_id INTEGER PRIMARY KEY AUTOINCREMENT,"
@@ -58,6 +68,10 @@ def store_next_ids(db_path: str) -> tuple[int, int]:
         con.close()
     return tuple(1 if top is None else top + 1 for top in tops)
 
+
+# the parts table as written: one binary `data` column holding the text
+# lane too (TEXT for text/* parts, BLOB for the rest)
+_STORED_PARTS_SCHEMA = T.StructType([f for f in PARTS_SCHEMA.fields if f.name != "text"])
 
 _INSERT_BATCH_ROWS = 10_000  # bounds the Python row tuples alive at once
 
@@ -114,50 +128,29 @@ def store_message_count(db_path: str) -> int:
 
 
 def read_store_sqlite(spark, db_path: str):
-    """Load an existing store db back into the canonical frames.
+    """Load an existing store db back into the canonical frames, through
+    `read_sqlite_table`: a store below DISTRIBUTED_ROWS_THRESHOLD rows
+    per table is read on the driver into Arrow local relations (no Spark
+    job), a larger one is a rowid-range scan of a shipped snapshot of
+    the file. `read_sqlite_table`'s rewrite hazard applies: run or pin
+    the frames before appending to the same store again.
 
-    Inverts the write's parts.data polymorphism (P8, sms-db.pl:277-281):
-    'text/*' parts surface their bytes in the text lane (UTF-8), others in
-    the binary lane — so import→write→read round-trips the two-lane model.
+    Inverts the write's parts.data polymorphism (P8, sms-db.pl:277-281)
+    in one column expression: `data` is read as bytes (pyarrow encodes
+    TEXT values to UTF-8 and passes BLOBs through), then 'text/*' parts
+    surface it decoded in the text lane (a non-UTF-8 text part fails the
+    first action on the frame) and all others keep it in the binary
+    lane, so import→write→read round-trips the two-lane model.
     """
-    con = sqlite3.connect(db_path)
-    try:
-        msg_rows = con.execute(
-            "SELECT _id,timestamp,sender_address,sender_name,recipient_address,"
-            "recipient_name,msg_box,message_type,source_format,hash FROM messages"
-        ).fetchall()
-        part_rows = con.execute(
-            "SELECT _id,message_id,data,content_type,filename FROM parts"
-        ).fetchall()
-    finally:
-        con.close()
-    messages = local_frame(spark, msg_rows, MESSAGES_SCHEMA)
-    raw = [
-        (
-            _id,
-            mid,
-            None if _is_text(ct) else _as_bytes(data),
-            _as_text(data) if _is_text(ct) else None,
-            ct,
-            fn,
-        )
-        for (_id, mid, data, ct, fn) in part_rows
-    ]
-    parts = local_frame(spark, raw, PARTS_SCHEMA)
+    messages = read_sqlite_table(spark, db_path, "messages", MESSAGES_SCHEMA)
+    stored = read_sqlite_table(spark, db_path, "parts", _STORED_PARTS_SCHEMA)
+    is_text = F.col("content_type").startswith("text/")
+    parts = stored.select(
+        "_id",
+        "message_id",
+        F.when(is_text, None).otherwise(F.col("data")).alias("data"),
+        F.when(is_text, F.decode("data", "UTF-8")).alias("text"),
+        "content_type",
+        "filename",
+    )
     return messages, parts
-
-
-def _is_text(content_type) -> bool:
-    return content_type is not None and content_type.startswith("text/")
-
-
-def _as_bytes(data):
-    if data is None:
-        return None
-    return data if isinstance(data, (bytes, bytearray)) else str(data).encode("utf-8")
-
-
-def _as_text(data):
-    if data is None:
-        return None
-    return data.decode("utf-8") if isinstance(data, (bytes, bytearray)) else str(data)

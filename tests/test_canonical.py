@@ -4,19 +4,20 @@ guarantees: README.md:113-115 idempotence, sms-db.pl:233 reconciliation)."""
 from __future__ import annotations
 
 import os
+import shutil
 import sqlite3
 
 import pytest
 from pyspark.sql import functions as F
 
 from sms_db_spark.sinks import sqlite_sink
-from sms_db_spark.sinks.sqlite_sink import write_store_sqlite
+from sms_db_spark.sinks.sqlite_sink import read_store_sqlite, write_store_sqlite
 from sms_db_spark.sources import sqlite_io
 from sms_db_spark.sources.canonical import dense_ids, finalize_import
 from sms_db_spark.sources.xml_source import normalize_xml
 from sms_db_spark.sources.bugle import normalize_bugle
 from sms_db_spark.sources.signal import normalize_signal
-from tests.fixtures import bugle_frames, signal_frames, xml_frames
+from tests.fixtures import JPEG_BYTES, bugle_frames, signal_frames, xml_frames
 
 
 def test_first_import_counts(spark):
@@ -100,6 +101,51 @@ def test_incremental_append_across_sources(spark, tmp_path):
     assert ids == list(range(1, 13))
     # hash uniqueness (the UNIQUE constraint, sms-db.pl:49)
     assert _query(db, "SELECT count(DISTINCT hash) FROM messages") == [(12,)]
+
+
+def test_store_read_is_path_independent(spark, tmp_path, monkeypatch):
+    """read_store_sqlite gives the same frames on the driver path and on
+    the rowid-range scan, over TEXT text/* parts, a BLOB image/jpeg part
+    and non-text parts stored as TEXT (Bugle's image/png, and one with
+    no content type); the scanned frames still collect after the store's
+    directory is removed, as q163 uses its read-back frames after
+    removing its temp dir."""
+    store_dir = tmp_path / "store"
+    store_dir.mkdir()
+    db = str(store_dir / "sms.db")
+    _xml_store(spark, db)
+    _append(normalize_bugle(*bugle_frames(spark)), db)
+    assert _query(db, "SELECT DISTINCT typeof(data), content_type FROM parts ORDER BY 1, 2") == [
+        ("blob", "image/jpeg"),
+        ("text", "image/png"),
+        ("text", "text/plain"),
+    ]
+    # a part with no content type stays in the binary lane
+    con = sqlite3.connect(db)
+    con.execute("INSERT INTO parts(message_id, data) VALUES (1, 'x')")
+    con.commit()
+    con.close()
+
+    def rows(frames):
+        return [sorted(tuple(r) for r in df.collect()) for df in frames]
+
+    local = rows(read_store_sqlite(spark, db))
+    monkeypatch.setattr(sqlite_io, "DISTRIBUTED_ROWS_THRESHOLD", 1)
+    scanned = read_store_sqlite(spark, db)
+    for df in scanned:
+        assert "MapInPandas" in df._jdf.queryExecution().executedPlan().toString()
+    shutil.rmtree(store_dir)
+    assert rows(scanned) == local
+    messages, parts = local
+    assert len(messages) == 8
+    lanes = {(ct, data is None, text is None) for _, _, data, text, ct, _ in parts}
+    assert lanes == {
+        ("text/plain", True, False),
+        ("image/jpeg", False, True),
+        ("image/png", False, True),
+        (None, False, True),
+    }
+    assert [data for _, _, data, _, ct, _ in parts if ct == "image/jpeg"] == [JPEG_BYTES]
 
 
 def test_within_batch_dup_first_wins(spark):

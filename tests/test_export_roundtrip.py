@@ -7,7 +7,9 @@ import sqlite3
 import xml.etree.ElementTree as ET
 from pathlib import Path
 
-from sms_db_spark.sinks.sqlite_sink import write_store_sqlite
+import pytest
+
+from sms_db_spark.sinks.sqlite_sink import read_store_sqlite, write_store_sqlite
 from sms_db_spark.sinks.xml_export import export_xml
 from sms_db_spark.sources.canonical import finalize_import
 from sms_db_spark.sources.xml_source import normalize_xml, read_xml_staging
@@ -107,6 +109,25 @@ def test_sqlite_sink_keeps_text_and_blob_typing(spark, tmp_path):
     assert {(ct.startswith("text/"), kind) for _, ct, kind in rows} == {
         (True, "text"), (False, "blob")
     }
+
+
+def test_export_of_non_utf8_text_part_fails_without_a_document(spark, tmp_path):
+    """A text/* part whose stored bytes are not UTF-8 cannot surface in
+    the text lane: the export fails loudly and writes no document."""
+    res = _store(spark)
+    db = tmp_path / "sms.db"
+    write_store_sqlite(res.messages, res.parts, str(db))
+    con = sqlite3.connect(db)
+    con.execute(
+        "UPDATE parts SET data = X'FF00FE' WHERE _id ="
+        " (SELECT min(_id) FROM parts WHERE content_type = 'text/plain')"
+    )
+    con.commit()
+    con.close()
+    with pytest.raises(Exception):
+        messages, parts = read_store_sqlite(spark, str(db))
+        export_xml(messages, parts, str(tmp_path / "out.xml"))
+    assert [f.name for f in tmp_path.iterdir()] == ["sms.db"]
 
 
 def test_csv_export_documented_query(spark, tmp_path):

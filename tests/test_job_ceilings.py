@@ -18,6 +18,7 @@ from tests.fixtures import xml_frames
 CEILINGS = {
     "finalize_import": 10,
     "write_store_sqlite": 6,
+    "read_store_sqlite": 0,
     "export_xml": 12,
     "finalize_import into a store": 11,
 }
@@ -29,7 +30,7 @@ def _next_job_id(spark) -> int:
 
 def test_round_trip_job_ceilings(spark, tmp_path):
     """The CLI's path on the 5-message fixture: import into an empty
-    store, write it, export the store read back from the file, then
+    store, write it, read it back from the file and export it, then
     import the same backup again into that store file (all duplicates)."""
     jobs = {}
 
@@ -43,7 +44,7 @@ def test_round_trip_job_ceilings(spark, tmp_path):
     res = counted("finalize_import", finalize_import, m, p)
     db = str(tmp_path / "sms.db")
     counted("write_store_sqlite", write_store_sqlite, res.messages, res.parts, db)
-    messages, parts = read_store_sqlite(spark, db)
+    messages, parts = counted("read_store_sqlite", read_store_sqlite, spark, db)
     assert counted("export_xml", export_xml, messages, parts, str(tmp_path / "out.xml")) == 5
     again = counted("finalize_import into a store", finalize_import, m, p, db)
     assert (again.inserted, again.duplicates) == (0, 5)

@@ -378,8 +378,8 @@ def test_audio_kernel_raises_on_every_truncation_point(cut, body):
 
 def test_lsh_precap_matches_postcap_law_on_planted_band_attractor(spark):
     """The r14 pre-cap rewrite's equivalence proof, pinned in CI
-    (VERDICT r14 item 5 — tools/ab_precap_lsh.py ran the 2M-doc A/B
-    once, out-of-band; this keeps the property alive under future
+    (VERDICT r14 item 5 — tools/ab_precap_lsh.py, deleted after
+    d1f9644, ran the 2M-doc A/B once, out-of-band; this keeps the property alive under future
     edits, at seconds scale). A synthetic bands frame plants the
     degenerate shape the cap exists for — ONE band bucket holding 30%
     of the corpus (byte-identical signatures: boilerplate) — plus
