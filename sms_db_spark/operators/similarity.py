@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numbering import partition_offset_ids
 from ..plans import QuerySpec, clone_tuned_session
-from ..session import env_flag as _env_flag
+from ..session import concurrent, env_flag as _env_flag
 from ..tables import load_table, load_table_parallel
 
 DIM = 64
@@ -2275,7 +2275,7 @@ def _pq_shared(spark: SparkSession, sf_dir: str, variant: str = "base") -> dict:
     # run as CONCURRENT jobs (guide §2.6 — actions are only sequential
     # because driver code calls them sequentially; the K-row cent job
     # back-fills executors the nv job leaves idle)
-    nv_f, cent_f = _pq_parallel(
+    nv_f, cent_f = concurrent(
         lambda: _pq_nv(emb).localCheckpoint(eager=True),
         lambda: (
             emb.filter(F.col("vec_id") < N_CENTROIDS)
@@ -2284,20 +2284,6 @@ def _pq_shared(spark: SparkSession, sf_dir: str, variant: str = "base") -> dict:
         ),
     )
     return {"emb": emb, "nv": nv_f, "cent": cent_f}
-
-
-def _pq_parallel(*thunks):
-    """Run independent eager-checkpoint builds as concurrent driver
-    threads (job descriptions and scheduling are per-thread; FIFO
-    back-fill keeps the cluster busy through each job's tail). Returns
-    the thunk results in order; any failure propagates."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if len(thunks) == 1:
-        return (thunks[0](),)
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        return tuple(f.result() for f in futures)
 
 
 def _pq_shared_flat(
@@ -2329,7 +2315,7 @@ def _pq_shared_flat(
         )
 
     if with_assigned:
-        st["codes"], st["assigned"] = _pq_parallel(build_codes, build_assigned)
+        st["codes"], st["assigned"] = concurrent(build_codes, build_assigned)
     else:
         st["codes"] = build_codes()
     return st
@@ -2408,7 +2394,7 @@ def _pq_shared_residual(
         ).localCheckpoint(eager=True)
 
     if with_flat:
-        _pq_parallel(build_flat, build_residual)
+        concurrent(build_flat, build_residual)
     else:
         build_residual()
     return st
@@ -2855,7 +2841,7 @@ def _ivfpq_audit(
     nv_q = q_lut.select("query_id", "qn")
     # the ADC candidate window (feeds both answer sets, one pass) and
     # the exact baseline are independent — pin them concurrently (r17)
-    adc_ranked, exact = _pq_parallel(
+    adc_ranked, exact = concurrent(
         lambda: adc_frame.localCheckpoint(eager=True),
         lambda: _exact_topk(nv, nv_q).localCheckpoint(eager=True),
     )
@@ -3048,7 +3034,7 @@ def q177_pq_index_store_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # normalized corpus from several stages (LUTs, re-rank, exact
         # baseline).
         names = pqstore.PQ_INDEX_TABLES
-        *sums, nv = _pq_parallel(
+        *sums, nv = concurrent(
             *[lambda f=built[n]: _pq_table_checksum(f) for n in names],
             *[lambda f=loaded[n]: _pq_table_checksum(f) for n in names],
             lambda: _pq_nv(emb).localCheckpoint(eager=True),
@@ -3200,7 +3186,7 @@ def q168_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank_adc") <= IVFPQ_RERANK_R)
     )
     # candidate window and exact baseline pin concurrently (r17)
-    adc_ranked, exact = _pq_parallel(
+    adc_ranked, exact = concurrent(
         lambda: adc_frame.localCheckpoint(eager=True),
         lambda: _exact_topk(nv, nv_q).localCheckpoint(eager=True),
     )

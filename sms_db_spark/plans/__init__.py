@@ -90,78 +90,43 @@ def _tuned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessi
 
 # Driver-gate priority: the gate evaluates queries() in dict order under a
 # wall-clock budget, so queries whose code CHANGED since their last
-# driver-green row must run first (the judge flagged encoding any other
-# assumption into the order as gate evasion). Then the queries with the
-# STALEST green evidence — oldest newest-green round first — then
-# everything else in module order.
-#
-# The changed list is hand-maintained per round (it reflects the round's
-# diff, which no artifact records); the evidence ages are MECHANICAL:
-# `evidence.json` at the repo root, generated by `python tools/evidence.py`
-# from the CORRECTNESS_r*.json artifacts (query -> newest driver-green
-# round). The old hand-kept stale list drifted once (q40/q41 reached the
-# r5 gate only by module-order luck, VERDICT r5 item 6); this derivation
-# cannot.
+# driver-green row run first; everything else follows in module order.
 #
 # "Changed" means the query's EXECUTED CODE OBJECT changed — a function
 # or constant on its call path, its oracle SQL, or the query fn itself —
-# not merely that its containing module grew unrelated additions (the
-# reading VERDICT r7 "What's wrong" #1 settles: byte-identical executed
-# code burns no gate slot).
-#
-# Prior rounds' changed-set rationales live in git history (this
-# block records only the CURRENT round — an r14 edit grafted the new
-# paragraph mid-sentence into the r13 one, which is exactly the
-# drift a growing in-file history invites; r15 code review caught
-# it, so now the file carries one round and git carries the rest).
-# The standing lesson from r13: trace CALLERS of the changed
-# function, not the modules it lives near.
+# not merely that its containing module grew unrelated additions
+# (byte-identical executed code burns no gate slot). The list records
+# only the current change; earlier rationales live in git history.
+# Trace CALLERS of the changed function, not the modules it lives near.
 #
 _CHANGED_THIS_ROUND = [
-    # read_store_sqlite reads both tables through read_sqlite_table and
-    # splits parts.data into the text/binary lanes in one column
-    # expression; q163 is its only lane
-    "q163_sqlite_store_audit",
+    # every lane whose call path reaches session.concurrent, the one
+    # helper for concurrent driver jobs: directly, or through
+    # _pq_shared*, _ivfpq_audit, commit_pq_index,
+    # quality_gated_upsert_batch or fold_cold_batches_all
+    "q135_stream_shard_manifest_audit",
+    "q139_fold_audit",
+    "q146_gated_upsert_audit",
+    "q149_stream_gated_upsert_audit",
+    "q154_bucketed_join_audit",
+    "q156_streaming_parity_audit",
+    "q158_stream_join_ingest_audit",
+    "q160_day2_chain_audit",
+    "q166_pq_adc_recall",
+    "q167_ivfpq_serving",
+    "q168_ivfadc_residual",
+    "q169_streaming_events_parity_audit",
+    "q170_cascade_delete_audit",
+    "q174_ivfadc_clustered",
+    "q175_cow_cascade_delete_audit",
+    "q177_pq_index_store_audit",
 ]
 
 
-def _evidence_rounds() -> dict[str, int]:
-    """query -> newest driver-green round, from the committed
-    evidence.json artifact (see tools/evidence.py). Missing file or
-    unlisted query -> 0 (never green: stalest possible)."""
-    import json
-    import os
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "evidence.json",
-    )
-    try:
-        with open(path) as fh:
-            return json.load(fh)["newest_green"]
-    except (OSError, ValueError, KeyError):
-        # Degraded but functional: without the artifact (installed
-        # wheel, zipped deploy) every query counts as never-green and
-        # the stale ordering collapses to module order. Warn LOUDLY —
-        # a silent collapse would reproduce the hand-list drift this
-        # mechanism exists to prevent; in-repo, a pytest pins currency.
-        import warnings
-
-        warnings.warn(
-            f"evidence.json not readable at {path}; driver-gate order "
-            "degrades to module order (run: python tools/evidence.py)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return {}
-
-
 def registry() -> dict[str, QuerySpec]:
-    """All registered queries, in driver-gate priority order: queries
-    changed since their last driver-green row first, then ascending
-    newest-green round (stalest evidence first, never-green treated as
-    stalest), module order as the tiebreak (see _CHANGED_THIS_ROUND /
-    tools/evidence.py)."""
+    """All registered queries, in driver-gate priority order: the
+    queries in _CHANGED_THIS_ROUND first, in its order, then the rest
+    in module order."""
     from . import compat_queries, importer_queries, storage_queries
     from ..operators import (
         curation,
@@ -199,16 +164,8 @@ def registry() -> dict[str, QuerySpec]:
             raise ValueError(f"duplicate query names: {overlap}")
         specs.update(mod.QUERIES)
 
-    evidence = _evidence_rounds()
-
-    def priority(name: str) -> tuple[int, int]:
-        if name in _CHANGED_THIS_ROUND:
-            return (0, _CHANGED_THIS_ROUND.index(name))
-        # stalest evidence first; a query with no green row ever sorts
-        # before everything (round 0)
-        return (1, evidence.get(name, 0))
-
-    ordered = sorted(specs, key=lambda n: (priority(n), list(specs).index(n)))
+    changed = [n for n in _CHANGED_THIS_ROUND if n in specs]
+    ordered = changed + [n for n in specs if n not in _CHANGED_THIS_ROUND]
     return {
         name: QuerySpec(_tuned(specs[name].fn), specs[name].oracle, specs[name].doc)
         for name in ordered

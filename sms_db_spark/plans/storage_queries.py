@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from ..fsutil import hadoop_fs
 from ..operators.sketches import _h60_sql
 from ..plans import QuerySpec, clone_tuned_session
+from ..session import concurrent
 from ..sinks.shards import _shard_stats, write_training_shards
 from ..streaming.shards import apply_shard_batch, merged_manifest
 from ..tables import load_table, load_table_parallel
@@ -210,9 +211,7 @@ def q135_stream_shard_manifest_audit(spark: SparkSession, sf_dir: str) -> DataFr
         # the one-shot batch reference writes a DIFFERENT store dir and
         # shares nothing with the streaming landings — concurrent driver
         # jobs (guide §2.6; r18: it ran after the whole landing chain)
-        from ..operators.similarity import _pq_parallel
-
-        (merged, disk), batch_ref = _pq_parallel(
+        (merged, disk), batch_ref = concurrent(
             stream_side,
             lambda: write_training_shards(docs, bdir, N_AUDIT_SHARDS, key="doc_id"),
         )
@@ -633,11 +632,9 @@ def q146_gated_upsert_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         poisoned = part(2).withColumn("value", F.col("value") + F.lit(2000.0))
         v0 = quality_gated_upsert_batch(poisoned, 0, log_dir, store_dir)
         v1 = quality_gated_upsert_batch(part(3), 1, log_dir, store_dir)
-        from ..operators.similarity import _pq_parallel
-
         # the settled log's read-back and the poisoned-slice count are
         # independent read-only jobs — concurrent (guide §2.6; r18)
-        log_rows, n_poisoned = _pq_parallel(
+        log_rows, n_poisoned = concurrent(
             lambda: read_metrics(spark, log_dir).collect(),  # 8 rows
             lambda: poisoned.count(),
         )
@@ -1473,13 +1470,11 @@ def q154_bucketed_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     t_orders, t_line = f"orders_q154_{run}", f"lineitem_q154_{run}"
     with _scratch_dir(spark, "sms_db_spark_bucketed_join_audit_") as root:
         try:
-            from ..operators.similarity import _pq_parallel
-
             # two independent bucketed writes (distinct tables, distinct
             # paths, in-memory catalog) — concurrent driver jobs (guide
             # §2.6; r17): the lineitem shuffle+sort no longer waits for
             # the orders one to drain
-            _pq_parallel(
+            concurrent(
                 lambda: write_bucketed(
                     orders.select("o_orderkey", "o_orderstatus"),
                     t_orders,
@@ -1870,8 +1865,6 @@ def q156_streaming_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # state-store sizing on a CLONE (q152's discipline): 8 partitions fit
     # the audit corpus; the caller's session is never mutated
-    from ..operators.similarity import _pq_parallel
-
     session = clone_tuned_session(spark)
     session.conf.set("spark.sql.shuffle.partitions", "8")
     spark = session
@@ -1888,7 +1881,7 @@ def q156_streaming_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # the reference profile and the span probe are independent
         # read-only jobs over the pin — concurrent (guide §2.6; r18)
-        ref, mx = _pq_parallel(
+        ref, mx = concurrent(
             lambda: reference_profile(docs),
             lambda: int(docs.agg(F.max("doc_id")).first()[0]),
         )
@@ -1984,7 +1977,7 @@ def q156_streaming_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             replay = int(_lane_checksum(remerged, reg_parts) == (n, chk))
             return ("sketches", n, chk, replay)
 
-        lanes = list(_pq_parallel(drift_lane, curation_lane, sketches_lane))
+        lanes = list(concurrent(drift_lane, curation_lane, sketches_lane))
 
     return spark.createDataFrame(
         sorted(lanes),
@@ -2170,9 +2163,7 @@ def q169_streaming_events_parity_audit(
         # both lanes consume the fully-staged (static) drop dir through
         # their own checkpoints/sinks — independent chains, run as
         # concurrent driver jobs (guide §2.6; VERDICT r17 item 1)
-        from ..operators.similarity import _pq_parallel
-
-        lanes.extend(_pq_parallel(windows_lane, sessions_lane))
+        lanes.extend(concurrent(windows_lane, sessions_lane))
 
     return spark.createDataFrame(
         sorted(lanes),
@@ -2404,14 +2395,13 @@ def q170_cascade_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("_id") % _DELETE_MOD == _DELETE_REM
     ).select("_id")
     with _scratch_dir(spark, "sms_db_spark_cascade_delete_audit_") as root:
-        from ..operators.similarity import _pq_parallel
         from ..sinks.versioned import commit_version
 
         m_store, p_store = f"{root}/messages", f"{root}/parts"
         # the two v1 commits target independent store dirs — concurrent
         # driver jobs (guide §2.6; r17). The DELETE stays ordered (parts
         # before messages, the crash contract) inside delete_cascade.
-        _pq_parallel(
+        concurrent(
             lambda: commit_version(spark, m_store, msgs),
             lambda: commit_version(spark, p_store, parts),
         )
@@ -2548,13 +2538,11 @@ def q175_cow_cascade_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     )
     with _scratch_dir(spark, "sms_db_spark_cow_cascade_delete_audit_") as root:
-        from ..operators.similarity import _pq_parallel
-
         m_store, p_store = f"{root}/messages", f"{root}/parts"
         # the two clustered-store seed writes target independent dirs —
         # concurrent driver jobs (guide §2.6; r17). The DELETEs below
         # stay ordered: parts before messages is the crash contract.
-        _pq_parallel(
+        concurrent(
             lambda: (
                 msgs.repartitionByRange(_N_COWDEL_FILES, "_id")
                 .sortWithinPartitions("_id")
@@ -2908,12 +2896,10 @@ def q158_stream_join_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame
                 "attribution join",
             )
 
-        from ..operators.similarity import _pq_parallel
-
         def stage(pred):
             # the two sides' drop writes target distinct dirs —
             # concurrent driver jobs (guide §2.6; r18)
-            _pq_parallel(
+            concurrent(
                 *[
                     lambda side_df=side_df, side_dir=side_dir: (
                         side_df.filter(pred)
@@ -3365,8 +3351,6 @@ def q160_day2_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             quality_gated_upsert_batch(part(k), k, log_dir, store_dir)
             for k in range(_Q160_SLICES)
         ]
-        from ..operators.similarity import _pq_parallel
-
         # Stage-boundary concurrency (guide §2.6; VERDICT r17 item 4):
         # once the gated batches have settled, the log read-back, the
         # poisoned count, the gate checksum, and the serving-view pin
@@ -3382,7 +3366,7 @@ def q160_day2_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("total").cast("string"),
             F.col("passed").cast("string"),
         ]
-        log_rows, n_poisoned, (gn, gchk), snapshot = _pq_parallel(
+        log_rows, n_poisoned, (gn, gchk), snapshot = concurrent(
             lambda: read_metrics(spark, log_dir).collect(),  # 12 rows
             lambda: part(1).count(),
             lambda: _lane_checksum(read_metrics(spark, log_dir), gate_parts),
@@ -3415,7 +3399,7 @@ def q160_day2_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # upsert checksum reads the PINNED snapshot; the fragmented
         # landing write reads the same pin — independent, concurrent
         frag = f"{root}/landing"
-        (n, chk), _ = _pq_parallel(
+        (n, chk), _ = concurrent(
             lambda: _lane_checksum(snapshot, state_parts),
             lambda: snapshot.repartition(16).write.parquet(frag),
         )
@@ -3427,7 +3411,7 @@ def q160_day2_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the fragmentation probe, and the NEXT stage's z-order write
         # (which only READS the landing) run concurrently
         zdir = f"{root}/zorder"
-        (n, chk), frag_files, _ = _pq_parallel(
+        (n, chk), frag_files, _ = concurrent(
             lambda: _lane_checksum(spark.read.parquet(frag), state_parts),
             lambda: fragmentation_report(spark, frag, 1 << 30)["n_files"],
             lambda: write_zordered_cells(
@@ -3449,7 +3433,7 @@ def q160_day2_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # three independent consumers of the (static) z-ordered store:
         # span probe, conservation checksum, and the shard stage's write
         sdir = f"{root}/shards"
-        spans, (n, chk), manifest = _pq_parallel(
+        spans, (n, chk), manifest = concurrent(
             lambda: (
                 _zframe(
                     zed.select(
@@ -3481,7 +3465,7 @@ def q160_day2_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         back = spark.read.parquet(sdir).drop("_shard")
         # conservation checksum and the manifest verify both read the
         # finished shard store — concurrent
-        (n, chk), verify = _pq_parallel(
+        (n, chk), verify = concurrent(
             lambda: _lane_checksum(back, state_parts),
             lambda: verify_shards(spark, sdir),
         )

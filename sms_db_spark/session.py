@@ -4,13 +4,19 @@ The reference (sms-db.pl:47) is a single-threaded Perl process with one
 SQLite connection; our execution substrate is Spark, so the knobs that
 matter are AQE, shuffle sizing, Arrow transfer, and a pinned timezone
 (epoch-millis semantics per README.md:117 must not drift with local tz).
+
+The module also holds the driver-side helpers every layer shares
+(`local_frame`, `concurrent`). It imports nothing else from the
+package, so any module can import it at module level.
 """
 
 from __future__ import annotations
 
+import collections
 import os
 
 import pyarrow as pa
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
@@ -77,6 +83,62 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# The most threads one concurrent() call starts. The largest fixed call
+# passes 9 thunks (q177's checksums); the shard fold passes one per shard.
+_CONCURRENT_THREADS = 8
+
+
+def concurrent(*thunks):
+    """Run independent driver-side thunks at the same time and return
+    their results in argument order.
+
+    Spark runs actions only as concurrently as driver threads submit
+    them, so independent jobs (two pins of one frame, writes to
+    disjoint paths) overlap here and FIFO back-fill keeps the executors
+    busy through each job's tail. At most 8 threads run, a constant:
+    further thunks wait for a free thread. A single thunk runs inline
+    on the caller's thread.
+
+    Each thread is a `pyspark.InheritableThread`, which starts with a
+    copy of the caller's Spark local properties, so the job group, job
+    description and scheduler pool set in the calling thread label the
+    jobs the thunks submit too. A plain thread-pool thread starts with
+    none of them, and its jobs fall out of the caller's group.
+
+    Every thunk runs to completion; the first failure in argument order
+    is then re-raised.
+    """
+    if len(thunks) == 1:
+        return (thunks[0](),)
+    results: list = [None] * len(thunks)
+    errors: list[BaseException | None] = [None] * len(thunks)
+    pending = collections.deque(enumerate(thunks))
+
+    def drain() -> None:
+        while True:
+            try:
+                i, thunk = pending.popleft()
+            except IndexError:
+                return
+            try:
+                results[i] = thunk()
+            except BaseException as e:  # re-raised on the caller's thread
+                errors[i] = e
+
+    threads = [
+        InheritableThread(drain)
+        for _ in range(min(_CONCURRENT_THREADS, len(thunks)))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return tuple(results)
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:

@@ -50,6 +50,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 from ..fsutil import read_text, write_text_atomic
+from ..session import concurrent
 from . import versioned
 
 _META_NAME = "_PQ_META"
@@ -96,9 +97,7 @@ def commit_pq_index(
     # run as concurrent driver jobs (guide §2.6; r17). The module
     # contract is untouched: the meta document still lands LAST, in one
     # atomic write, after every table version exists.
-    from ..operators.similarity import _pq_parallel
-
-    results = _pq_parallel(
+    results = concurrent(
         *[
             lambda n=name: versioned.commit_version(
                 spark, f"{root}/{n}", tables[n]

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import concurrent
 from .metricslog import append_batch_report, read_batch_log
 
 # ONE wire schema for the events drop directory: quality and upsert read
@@ -122,7 +123,6 @@ def quality_gated_upsert_batch(
 
     Returns {'applied', 'failed_checks', 'total'} — bounded metadata.
     """
-    from ..operators.similarity import _pq_parallel
     from .upsert import apply_batch, skip_upsert_batch
 
     sess = batch.sparkSession
@@ -131,7 +131,7 @@ def quality_gated_upsert_batch(
     # and neither depends on the other — concurrent driver jobs (guide
     # §2.6; r18). Both complete before the apply/skip decision below, so
     # the log-before-merge crash contract is unchanged.
-    rows, _ = _pq_parallel(
+    rows, _ = concurrent(
         lambda: report.collect(),  # 4 rows: one per constraint
         lambda: append_batch_report(sess, log_dir, batch_id, report),
     )

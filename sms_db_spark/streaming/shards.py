@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fsutil import hadoop_fs, read_text, write_text_atomic
+from ..session import concurrent
 from ..sinks.shards import check_shard_input, row_hash_col, shard_transform
 from .windows import EVENT_SCHEMA  # noqa: F401 (one wire schema, see windows.py)
 
@@ -347,8 +348,9 @@ def fold_cold_batches_all(
     because the manifest collapse is a read-modify-write of one shared
     file. Splitting the fold honors it exactly: the stage half touches
     only the shard's own `.fold_*` dir (disjoint across shards — the
-    heavy data rewrite, parallelized as concurrent driver jobs), and
-    every manifest-touching step (_commit_fold) runs serially here.
+    heavy data rewrite, one `session.concurrent` thunk per shard, so
+    its jobs keep the caller's job group and description), and every
+    manifest-touching step (_commit_fold) runs serially here.
     Crash-safe at any point: each staged dir carries its marker, so
     recover_interrupted_fold finishes any subset of pending commits —
     the same replay path a single fold's crash uses.
@@ -356,24 +358,16 @@ def fold_cold_batches_all(
     Call from a maintenance window with no landing in flight (the same
     precondition serial folds had). Returns the committed fold metas.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     recover_interrupted_fold(spark, shard_dir)  # nothing else is in flight
     manifest = _load_manifest(spark, shard_dir)
     # sorted distinct: a repeated id would stage the same `.fold_*` dir
     # from two threads at once
-    ids = sorted({int(sid) for sid in shard_ids})
-    if not ids:
-        return []
-    with ThreadPoolExecutor(max_workers=min(8, len(ids))) as pool:
-        staged = list(
-            pool.map(
-                lambda sid: _stage_fold(
-                    spark, shard_dir, sid, manifest, target_bytes
-                ),
-                ids,
-            )
-        )
+    staged = concurrent(
+        *[
+            lambda sid=sid: _stage_fold(spark, shard_dir, sid, manifest, target_bytes)
+            for sid in sorted({int(sid) for sid in shard_ids})
+        ]
+    )
     out = []
     for s in staged:
         if s is not None:

@@ -2,15 +2,20 @@
 their plans scan a LocalTableScan, never an RDD of Python rows, so an
 action that re-scans them starts no Python worker. Zero-row inputs keep
 their schema and their counts, and a NULL in a non-nullable field fails
-loudly, as createDataFrame's verifySchema did for lists of rows."""
+loudly, as createDataFrame's verifySchema did for lists of rows.
+
+The session module's other helper, `concurrent`, is covered here too:
+its threads carry the caller's job group to the jobs they submit."""
 
 from __future__ import annotations
 
 import sqlite3
+import threading
+import time
 
 import pytest
 
-from sms_db_spark.session import local_frame
+from sms_db_spark.session import concurrent, local_frame
 from sms_db_spark.sinks.sqlite_sink import read_store_sqlite, write_store_sqlite
 from sms_db_spark.sinks.xml_export import export_xml
 from sms_db_spark.sources import demo
@@ -108,3 +113,43 @@ def test_read_sqlite_table_without_rowid_part_table_raises(spark, tmp_path):
     con.close()
     with pytest.raises(ValueError, match="'rowid' is not nullable"):
         read_sqlite_table(spark, db, "part", SIGNAL_PART_SCHEMA)
+
+
+def test_concurrent_keeps_the_callers_job_group(spark):
+    """Jobs submitted from concurrent()'s threads belong to the job
+    group the caller set; a plain thread pool drops it. The same test
+    pins the helper's contract on trivial thunks: results in argument
+    order, a failing thunk's exception reaches the caller, one thunk
+    runs on the caller's thread, and ten thunks share at most 8."""
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    sc.setJobGroup("concurrent-test", "jobs of concurrent() thunks")
+    try:
+        start = dag.nextJobId()
+        counts = concurrent(
+            lambda: spark.range(10).count(),
+            lambda: spark.range(0, 100, 1, 3).filter("id % 2 = 0").count(),
+        )
+        thunk_jobs = set(range(start, dag.nextJobId()))
+        in_group = set(sc.statusTracker().getJobIdsForGroup("concurrent-test"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert counts == (10, 50)
+    assert len(thunk_jobs) >= 2
+    assert thunk_jobs <= in_group, sorted(thunk_jobs - in_group)
+
+    assert concurrent(*[lambda i=i: i for i in range(5)]) == (0, 1, 2, 3, 4)
+
+    def fail():
+        raise KeyError("second thunk")
+
+    with pytest.raises(KeyError, match="second thunk"):
+        concurrent(lambda: 1, fail, lambda: 3)
+
+    assert concurrent(threading.get_ident) == (threading.get_ident(),)
+
+    def slow_ident():
+        time.sleep(0.05)  # keep each thread busy a moment
+        return threading.get_ident()
+
+    assert len(set(concurrent(*[slow_ident] * 10))) <= 8

@@ -13,6 +13,11 @@ warm-machine bias toward whichever tree runs second — the r18 sf1 spot
 check showed per-lane order effects of the same magnitude (±1.5 s) as
 several real wins.
 
+Each lane's jobs carry the description `ab_lane:LANE:rN`. Jobs a lane
+submits from worker threads carry it too: the lanes run concurrent
+jobs through `session.concurrent`, whose threads inherit the caller's
+local properties.
+
 Usage: python tools/ab_lane.py TREE_ROOT SF_DIR LANE [LANE ...]
 """
 
