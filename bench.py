@@ -14,9 +14,9 @@ of every output column, no driver collect, no column-pruning shortcut.
   last timed run (`time_lane`). Unlike a wall time it does not depend on
   the machine, so a re-added round-trip shows up as a changed count.
 
-Output: the main JSON line (also written to BENCH_local.json and
-BENCH_local_c{cores}.json, where cores is the session's
-defaultParallelism), compact per-query lines, and a totals line last.
+Output: one JSON line, printed last (also written to BENCH_local.json
+and BENCH_local_c{cores}.json, where cores is the session's
+defaultParallelism).
 Compare two runs with `tools/bench_compare.py`; for a speed claim, time
 the lanes in question with `tools/ab_lane.py` on both trees, in both
 orders.
@@ -143,9 +143,6 @@ WRITE_AUDITS = [
 ]
 
 BEST_OF = 3
-# headline lanes faster than this are left out of the compact per-query
-# lines (their values stay in the main line and BENCH_local*.json)
-COMPACT_MIN_SEC = 0.3
 
 
 def _next_job_id(spark) -> int:
@@ -220,56 +217,6 @@ def _warm_writers(spark) -> None:
         shutil.rmtree(warm_dir, ignore_errors=True)
 
 
-def _per_query_lines(headline: dict, write_audits: dict) -> list[str]:
-    """Compact per-query JSON lines for a capture that keeps only the
-    last ~2 KB of stdout.
-
-    A line survives only if it fits in that window with everything
-    printed after it, so the headline lanes are chunked into ~500-byte
-    lines in ascending measured time: the tail chunks carry the slowest
-    lanes. Lanes under COMPACT_MIN_SEC are left out and counted in
-    `n_omitted`. The write-audit line prints last, right before the
-    totals line. Values are rounded to 1 decimal; full precision stays
-    in the main line."""
-    shown = sorted(
-        (q for q, t in headline.items() if t >= COMPACT_MIN_SEC),
-        key=lambda q: (headline[q], q),
-    )
-    chunks: list[dict] = []
-    cur: dict = {}
-    for q in shown:
-        cur[q] = round(headline[q], 1)
-        if len(json.dumps(cur, separators=(",", ":"))) > 420:
-            chunks.append(cur)
-            cur = {}
-    if cur or not chunks:
-        chunks.append(cur)
-    out = [
-        json.dumps(
-            {
-                "metric": "per_query_headline",
-                "part": f"{k + 1}/{len(chunks)}",
-                "n_omitted": len(headline) - len(shown),
-                "queries": ch,
-            },
-            separators=(",", ":"),
-        )
-        for k, ch in enumerate(chunks)
-    ]
-    out.append(
-        json.dumps(
-            {
-                "metric": "per_query_write_audits",
-                "write_audits": {
-                    q: round(t, 1) for q, t in sorted(write_audits.items())
-                },
-            },
-            separators=(",", ":"),
-        )
-    )
-    return out
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -292,8 +239,6 @@ def main() -> None:
     _warm_writers(spark)
     write_audits = run(WRITE_AUDITS, 1, False)
 
-    # a capture that keeps only the tail of stdout loses the head of a
-    # long line, so the totals go last in the main line
     doc = {
         "metric": "headline_queries_total_wall",
         "unit": "sec",
@@ -315,22 +260,6 @@ def main() -> None:
         with open(os.path.join(here, fname), "w") as fh:
             fh.write(line + "\n")
     print(line)
-    for pq_line in _per_query_lines(headline, write_audits):
-        print(pq_line)
-    # compact totals-only final line: always survives a tail capture whole
-    print(
-        json.dumps(
-            {
-                "metric": doc["metric"],
-                "sf": sf,
-                "cpus": cpus,
-                "value": doc["value"],
-                "write_audits_total": doc["write_audits_total"],
-                "jobs_total": sum(jobs.values()),
-            },
-            separators=(",", ":"),
-        )
-    )
 
 
 if __name__ == "__main__":

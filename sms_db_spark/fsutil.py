@@ -1,7 +1,10 @@
 """Shared Hadoop-FS helpers for the maintenance sinks and streaming
-state stores. One implementation of (a) the JVM FileSystem handle and
-(b) the write-new-then-swap rename dance — so a fix to either (e.g.
-checking rename return values) lands everywhere at once.
+state stores: the JVM FileSystem handle, the write-new-then-swap rename
+dance, and `delete`/`rename`, the only way store code deletes or
+renames. One failure rule: raise RuntimeError naming the path(s) when
+the mutation did not happen; deleting a missing path is not an error.
+Both look up `hadoop_fs` as a module global, so one monkeypatch of
+`fsutil.hadoop_fs` reaches every store mutation.
 
 Hadoop FS API, not os.path: these paths live on HDFS/S3A in a real
 deployment; driver-local filesystem checks would silently misreport
@@ -42,6 +45,22 @@ def hadoop_fs(spark: SparkSession, path: str):
     return jvm, p.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
+def delete(spark: SparkSession, path: str) -> None:
+    """Recursive delete; raises if path still exists afterwards."""
+    jvm, fs = hadoop_fs(spark, path)
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    if not fs.delete(p, True) and fs.exists(p):
+        raise RuntimeError(f"delete failed: {path} still exists")
+
+
+def rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename; raises naming both paths when Hadoop returns False."""
+    jvm, fs = hadoop_fs(spark, src)
+    hpath = jvm.org.apache.hadoop.fs.Path
+    if not fs.rename(hpath(src), hpath(dst)):
+        raise RuntimeError(f"rename failed: {src} -> {dst}")
+
+
 def atomic_swap(spark: SparkSession, path: str, staged: str, backup: str) -> None:
     """Replace the dataset at `path` with the one at `staged` via
     rename-through-backup. Each rename is atomic, and every IN-PROCESS
@@ -56,13 +75,14 @@ def atomic_swap(spark: SparkSession, path: str, staged: str, backup: str) -> Non
     backup + recovery contract is the practical equivalent."""
     jvm, fs = hadoop_fs(spark, path)
     p_path = jvm.org.apache.hadoop.fs.Path(path)
-    p_staged = jvm.org.apache.hadoop.fs.Path(staged)
     p_backup = jvm.org.apache.hadoop.fs.Path(backup)
-    fs.delete(p_backup, True)
+    delete(spark, backup)
     if not fs.rename(p_path, p_backup):
-        fs.delete(p_staged, True)
-        raise RuntimeError(f"swap failed moving {path} aside; store untouched")
-    if not fs.rename(p_staged, p_path):
+        try:
+            delete(spark, staged)
+        finally:
+            raise RuntimeError(f"swap failed moving {path} aside; store untouched")
+    if not fs.rename(jvm.org.apache.hadoop.fs.Path(staged), p_path):
         # check the restore too: claiming "restored" while the store path
         # is actually gone would send the operator away from the data
         if fs.rename(p_backup, p_path):
@@ -74,7 +94,7 @@ def atomic_swap(spark: SparkSession, path: str, staged: str, backup: str) -> Non
             f"swap failed AND restore failed: {path} is missing — original "
             f"data is at {backup}, new data at {staged}; restore manually"
         )
-    fs.delete(p_backup, True)
+    delete(spark, backup)
 
 
 _SWAP_SUFFIXES = (".precompact", ".premerge")
@@ -87,15 +107,12 @@ def recover_interrupted_swap(spark: SparkSession, path: str) -> str | None:
     call unconditionally at maintenance-job entry (no-op when the store
     is present)."""
     jvm, fs = hadoop_fs(spark, path)
-    p_path = jvm.org.apache.hadoop.fs.Path(path)
-    if fs.exists(p_path):
+    if fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
         return None
     for suffix in _SWAP_SUFFIXES:
         backup = path.rstrip("/") + suffix
-        p_backup = jvm.org.apache.hadoop.fs.Path(backup)
-        if fs.exists(p_backup):
-            if not fs.rename(p_backup, p_path):
-                raise RuntimeError(f"recovery rename {backup} -> {path} failed")
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(backup)):
+            rename(spark, backup, path)
             return backup
     return None
 
@@ -170,11 +187,10 @@ def write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
         name = java_exc.getClass().getName() if java_exc is not None else ""
         if "UnsupportedFileSystemException" not in name:
             raise
-        fs.delete(dst, False)
-        if not fs.rename(tmp, dst):
-            raise RuntimeError(f"atomic text write failed landing {path}")
+        delete(spark, path)
+        rename(spark, path + ".tmp", path)
         return
-    rename = jvm.org.apache.hadoop.fs.Options.Rename
-    opts = spark.sparkContext._gateway.new_array(rename, 1)
-    opts[0] = rename.OVERWRITE
+    option = jvm.org.apache.hadoop.fs.Options.Rename
+    opts = spark.sparkContext._gateway.new_array(option, 1)
+    opts[0] = option.OVERWRITE
     fc.rename(fs.makeQualified(tmp), dst, opts)  # raises on failure

@@ -513,7 +513,7 @@ def bpe_train(spark: SparkSession, sf_dir: str, rounds: int = 8) -> list[str]:
     the corpus-Lloyd one: the looped table is vocab-sized, so round
     k's aggregate re-running k cheap map-side replaces over the pin
     costs far less than the per-round eager-checkpoint job each round
-    paid; A/B in OPTIMIZATION_r18.md, merges byte-identical).
+    paid; A/B in OPTIMIZATION_r18.md at da8599e, merges identical).
     """
     wf = _word_freqs(spark, sf_dir)
     syms = (

@@ -100,26 +100,34 @@ def _tuned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessi
 # Trace CALLERS of the changed function, not the modules it lives near.
 #
 _CHANGED_THIS_ROUND = [
-    # every lane whose call path reaches session.concurrent, the one
-    # helper for concurrent driver jobs: directly, or through
-    # _pq_shared*, _ivfpq_audit, commit_pq_index,
-    # quality_gated_upsert_batch or fold_cold_batches_all
+    # every lane whose call path reaches fsutil.delete/rename or read_batch_log
+    "q134_shard_manifest_audit",
     "q135_stream_shard_manifest_audit",
     "q139_fold_audit",
+    "q142_versioned_store_audit",
+    "q143_metricslog_readback",
+    "q145_versioned_merge_audit",
     "q146_gated_upsert_audit",
+    "q148_sharded_export_audit",
     "q149_stream_gated_upsert_audit",
+    "q150_cow_merge_audit",
+    "q151_layout_audit",
+    "q152_stream_neardup_audit",
+    "q153_band_store_audit",
     "q154_bucketed_join_audit",
+    "q155_partitioned_prune_audit",
     "q156_streaming_parity_audit",
+    "q157_bucketed_antijoin_dedup_audit",
     "q158_stream_join_ingest_audit",
+    "q159_stream_quality_monitor_audit",
     "q160_day2_chain_audit",
-    "q166_pq_adc_recall",
-    "q167_ivfpq_serving",
-    "q168_ivfadc_residual",
     "q169_streaming_events_parity_audit",
     "q170_cascade_delete_audit",
-    "q174_ivfadc_clustered",
+    "q172_quarantine_audit",
     "q175_cow_cascade_delete_audit",
     "q177_pq_index_store_audit",
+    "q178_stream_ingest_audit",
+    "q179_bpe_store_tokenize",
 ]
 
 

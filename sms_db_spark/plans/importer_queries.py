@@ -453,7 +453,7 @@ Q65_GOLDEN = [
 ]
 
 # q69/q65 first: the two entries with no row in CORRECTNESS_r01.json
-# (the driver's gate ran out of budget mid-module) — see plans.registry().
+# (commit da8599e; the gate ran out of budget) — see plans.registry().
 QUERIES = {
     "q69_import_scale": QuerySpec(
         q69_import_scale, Q69_SQL, "bench-scale import hash+dedup dataflow"

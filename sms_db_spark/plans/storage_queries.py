@@ -35,7 +35,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import hadoop_fs
+from .. import fsutil
 from ..operators.sketches import _h60_sql
 from ..plans import QuerySpec, clone_tuned_session
 from ..session import concurrent
@@ -63,13 +63,8 @@ def _scratch_dir(spark: SparkSession, prefix: str):
         try:
             yield path
         finally:
-            jvm, fs = hadoop_fs(spark, path)
-            p = jvm.org.apache.hadoop.fs.Path(path)
-            # a silently-failed delete leaks a full per-run store into
-            # shared storage on every gate/bench run — same loud-failure
-            # discipline as the metrics-log purge
-            if not fs.delete(p, True) and fs.exists(p):
-                raise RuntimeError(f"scratch cleanup failed deleting {path}")
+            # raises rather than leak a per-run store into shared storage
+            fsutil.delete(spark, path)
     else:
         path = tempfile.mkdtemp(prefix=prefix)
         try:

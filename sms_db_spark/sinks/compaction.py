@@ -37,14 +37,14 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import atomic_swap, hadoop_fs, recover_interrupted_swap
+from .. import fsutil
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # the HDFS-block-sized default
 
 
 def _data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     """(path, bytes) of every parquet data file under path, recursively."""
-    jvm, fs = hadoop_fs(spark, path)
+    jvm, fs = fsutil.hadoop_fs(spark, path)
     out: list[tuple[str, int]] = []
     it = fs.listFiles(jvm.org.apache.hadoop.fs.Path(path), True)
     while it.hasNext():
@@ -110,11 +110,11 @@ def compact(
     shuffle-free (coalesce); the partitioned path pays one shuffle to
     split hot partitions across their file budget.
     """
-    recover_interrupted_swap(spark, path)
+    fsutil.recover_interrupted_swap(spark, path)
     report = fragmentation_report(spark, path, target_bytes)
     if not report["fragmented"]:
         return {**report, "compacted": False}
-    jvm, fs = hadoop_fs(spark, path)
+    jvm, fs = fsutil.hadoop_fs(spark, path)
     staged = path.rstrip("/") + ".compacting"
     backup = path.rstrip("/") + ".precompact"
     df = spark.read.parquet(path)
@@ -178,8 +178,10 @@ def compact(
     n_in = spark.read.parquet(path).count()
     n_out = spark.read.parquet(staged).count()
     if n_in != n_out:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(staged), True)
-        raise RuntimeError(f"compaction row mismatch: {n_in} != {n_out}")
-    atomic_swap(spark, path, staged, backup)
+        try:
+            fsutil.delete(spark, staged)
+        finally:
+            raise RuntimeError(f"compaction row mismatch: {n_in} != {n_out}")
+    fsutil.atomic_swap(spark, path, staged, backup)
     after = fragmentation_report(spark, path, target_bytes)
     return {**report, "compacted": True, "n_files_final": after["n_files"]}

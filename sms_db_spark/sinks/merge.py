@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import atomic_swap, hadoop_fs, recover_interrupted_swap
+from .. import fsutil
 
 
 def _resolve(
@@ -114,7 +114,7 @@ def merge_into(
     delete_condition is evaluated on the MATCHED join row, where target
     columns appear as `t_<name>` and source columns as `s_<name>`
     (e.g. `F.col("s_status") == "tombstone"`)."""
-    recover_interrupted_swap(spark, target_path)
+    fsutil.recover_interrupted_swap(spark, target_path)
     target = spark.read.parquet(target_path)
     result = _resolve(target, source, keys, delete_condition)
     counts = _action_counts(result)
@@ -123,7 +123,7 @@ def merge_into(
     result.filter(F.col("_action") != "delete").drop("_action").write.mode(
         "overwrite"
     ).parquet(staged)
-    atomic_swap(spark, target_path, staged, backup)
+    fsutil.atomic_swap(spark, target_path, staged, backup)
     return _merge_stats(counts)
 
 
@@ -175,9 +175,7 @@ def merge_into_cow(
     `unchanged` counts only rows INSIDE rewritten files; rows in skipped
     files are untouched by construction and deliberately not counted.
     """
-    jvm, fs, source, touched_set, n_skipped = _cow_prune(
-        spark, target_path, source, key
-    )
+    source, touched_set, n_skipped = _cow_prune(spark, target_path, source, key)
     if touched_set:
         slice_df = spark.read.parquet(*sorted(touched_set))
     else:
@@ -189,7 +187,7 @@ def merge_into_cow(
     result.filter(F.col("_action") != "delete").drop("_action").write.mode(
         "append"
     ).parquet(target_path)
-    _delete_replaced(jvm, fs, touched_set, "merge_into_cow")
+    _delete_replaced(spark, touched_set, "merge_into_cow")
     return {
         **_merge_stats(counts),
         "files_rewritten": len(touched_set),
@@ -197,16 +195,18 @@ def merge_into_cow(
     }
 
 
-def _delete_replaced(jvm, fs, touched_set, who: str) -> None:
+def _delete_replaced(spark: SparkSession, touched_set, who: str) -> None:
     """Checked deletion of the replaced files (shared by the CoW merge
     and the CoW delete): a silently-failed delete would leave a stale
     duplicate file that the stats report as replaced."""
     for f in touched_set:
-        if not fs.delete(jvm.org.apache.hadoop.fs.Path(f), False):
+        try:
+            fsutil.delete(spark, f)
+        except RuntimeError as e:
             raise RuntimeError(
                 f"{who}: failed to delete replaced file {f}; the "
                 "store now holds duplicate key versions — dedup required"
-            )
+            ) from e
 
 
 def delete_cow(spark: SparkSession, target_path: str, ids: DataFrame, key: str) -> dict:
@@ -220,9 +220,7 @@ def delete_cow(spark: SparkSession, target_path: str, ids: DataFrame, key: str) 
     keys, stats-less files conservatively touched); absent ids are a
     no-op (DELETE is idempotent). Returns
     {deleted, files_rewritten, files_skipped}."""
-    jvm, fs, ids, touched_set, n_skipped = _cow_prune(
-        spark, target_path, ids.select(key).distinct(), key
-    )
+    ids, touched_set, n_skipped = _cow_prune(spark, target_path, ids.select(key).distinct(), key)
     if not touched_set:
         return {"deleted": 0, "files_rewritten": 0, "files_skipped": n_skipped}
     slice_df = spark.read.parquet(*sorted(touched_set)).localCheckpoint(
@@ -255,7 +253,7 @@ def delete_cow(spark: SparkSession, target_path: str, ids: DataFrame, key: str) 
                 "of the empty kept set produced none on this filesystem — "
                 "drop the store directory instead of row-deleting it empty"
             )
-    _delete_replaced(jvm, fs, touched_set, "delete_cow")
+    _delete_replaced(spark, touched_set, "delete_cow")
     return {
         "deleted": n_before - kept.count(),
         "files_rewritten": len(touched_set),
@@ -268,13 +266,13 @@ def _cow_prune(
 ):
     """The shared copy-on-write front half (merge_into_cow + delete_cow):
     crash recovery, structural refusals, the distributed footer scan,
-    and the broadcast BETWEEN prune join. Returns (jvm, fs,
-    checkpointed_source, touched_set, n_skipped). Every contract note
+    and the broadcast BETWEEN prune join. Returns
+    (checkpointed_source, touched_set, n_skipped). Every contract note
     in merge_into_cow's docstring (flat stores only, non-null keys,
     stats-less files conservatively touched, distributed footer reads)
     lives HERE."""
-    recover_interrupted_swap(spark, target_path)
-    jvm, fs = hadoop_fs(spark, target_path)
+    fsutil.recover_interrupted_swap(spark, target_path)
+    jvm, fs = fsutil.hadoop_fs(spark, target_path)
     # structural refusals FIRST (driver-side metadata only) — no cluster
     # job runs before the call is known to be valid. Flat-store check
     # compares each file's parent against the FS-qualified root, not
@@ -406,4 +404,4 @@ def _cow_prune(
     ]
     touched_set = set(touched)
     n_skipped = sum(1 for f in files if f not in touched_set)
-    return jvm, fs, source, touched_set, n_skipped
+    return source, touched_set, n_skipped

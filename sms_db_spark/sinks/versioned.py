@@ -59,7 +59,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import hadoop_fs, numbered_child_dirs, read_text, write_text_atomic
+from .. import fsutil
 
 _VERSIONS = "_versions"
 _HEAD = "_HEAD"
@@ -67,24 +67,24 @@ _MARKER = "_COMMITTED"
 
 
 def _root(spark: SparkSession, store: str) -> str:
-    jvm, fs = hadoop_fs(spark, store)
+    jvm, fs = fsutil.hadoop_fs(spark, store)
     return fs.makeQualified(jvm.org.apache.hadoop.fs.Path(store)).toString()
 
 
 def _versions(spark: SparkSession, root: str) -> list[tuple[int, str]]:
     """(number, name) pairs, sorted numerically."""
-    return numbered_child_dirs(spark, f"{root}/{_VERSIONS}", "v")
+    return fsutil.numbered_child_dirs(spark, f"{root}/{_VERSIONS}", "v")
 
 
 def _is_committed(spark: SparkSession, root: str, name: str) -> bool:
-    jvm, fs = hadoop_fs(spark, root)
+    jvm, fs = fsutil.hadoop_fs(spark, root)
     return fs.exists(
         jvm.org.apache.hadoop.fs.Path(f"{root}/{_VERSIONS}/{name}/{_MARKER}")
     )
 
 
 def _head_doc(spark: SparkSession, store: str) -> dict | None:
-    head = read_text(spark, f"{store.rstrip('/')}/{_HEAD}")
+    head = fsutil.read_text(spark, f"{store.rstrip('/')}/{_HEAD}")
     return None if head is None else json.loads(head)
 
 
@@ -98,7 +98,7 @@ def _write_head(
     doc = {"version": version, "published": published}
     if protected:
         doc["protected"] = sorted(protected)
-    write_text_atomic(spark, f"{root}/{_HEAD}", json.dumps(doc, sort_keys=True))
+    fsutil.write_text_atomic(spark, f"{root}/{_HEAD}", json.dumps(doc, sort_keys=True))
 
 
 def current_version(spark: SparkSession, store: str) -> str | None:
@@ -177,7 +177,7 @@ def commit_version(spark: SparkSession, store: str, df: DataFrame) -> str:
     name = f"v{n:08d}"
     vdir = f"{root}/{_VERSIONS}/{name}"
     df.write.mode("error").parquet(vdir)
-    write_text_atomic(spark, f"{vdir}/{_MARKER}", json.dumps({"version": name}))
+    fsutil.write_text_atomic(spark, f"{vdir}/{_MARKER}", json.dumps({"version": name}))
     doc = _head_doc(spark, root) or {}
     _write_head(
         spark,
@@ -436,10 +436,8 @@ def prune_versions(spark: SparkSession, store: str, keep: int = 2) -> list[str]:
             spark, root, live, new_published,
             protected=sorted(protected & existing) if protected else None,
         )
-    jvm, fs = hadoop_fs(spark, root)
     for n in doomed:
-        if not fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/{_VERSIONS}/{n}"), True):
-            raise RuntimeError(f"prune failed deleting {store}/{_VERSIONS}/{n}")
+        fsutil.delete(spark, f"{root}/{_VERSIONS}/{n}")
     return doomed
 
 

@@ -18,7 +18,7 @@ from base64 import b64encode
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import __version__
+from .. import __version__, fsutil
 from ..schemas import MSG_MMS, MSG_SMS
 
 # MMS attrs the reference hard-nulls (sms-db.pl:269) and constants (:270)
@@ -235,9 +235,7 @@ def export_xml(
         )
         if frame is not None
     ]
-    from ..fsutil import hadoop_fs
-
-    jvm, fs = hadoop_fs(spark, frag_root)
+    jvm, fs = fsutil.hadoop_fs(spark, frag_root)
     try:
         # each export frame has exactly one row per message of its type,
         # so one aggregate over the store sizes the header and fragments
@@ -287,5 +285,5 @@ def export_xml(
                     _stream_fragment(fh, jvm, fs, p)
             fh.write(b"</smses>\n")
     finally:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(frag_root), True)
+        fsutil.delete(spark, frag_root)
     return total

@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..fsutil import hadoop_fs, numbered_child_dirs
+from .. import fsutil
 
 
 def append_batch_report(
@@ -34,15 +34,13 @@ def append_batch_report(
     purge but before the write only loses this batch's report
     transiently, and the batch replays (at-least-once) and rewrites it.
     """
-    jvm, fs = hadoop_fs(sess, log_dir)
-    for bid, name in numbered_child_dirs(sess, log_dir, "batch_id="):
+    for bid, name in fsutil.numbered_child_dirs(sess, log_dir, "batch_id="):
         if bid >= batch_id:
             # own-id partitions are purged too (the overwrite below would
             # replace one, but a report=None batch must ALSO clear a
             # same-numbered pre-reset leftover); a silently-failed delete
             # leaves a stale epoch spliced into the log
-            if not fs.delete(jvm.org.apache.hadoop.fs.Path(f"{log_dir}/{name}"), True):
-                raise RuntimeError(f"metrics-log purge failed deleting {log_dir}/{name}")
+            fsutil.delete(sess, f"{log_dir}/{name}")
     if report is not None:
         part = os.path.join(log_dir, f"batch_id={batch_id}")
         report.coalesce(1).write.mode("overwrite").parquet(part)
@@ -53,14 +51,19 @@ def read_batch_log(
 ) -> DataFrame:
     """All per-batch reports; an empty/new log yields an empty frame,
     not an error — monitors must be safe to query at stream bootstrap.
-    basePath keeps batch_id as a partition column."""
+    basePath keeps batch_id as a partition column. The listed partitions
+    are read, not a `batch_id=*` glob: Spark stats a lone read path for a
+    streaming-sink log, which logs a FileNotFoundException on a glob."""
     from pyspark.sql.utils import AnalysisException
 
+    found = fsutil.numbered_child_dirs(spark, log_dir, "batch_id=")
+    if not found:
+        return spark.createDataFrame([], fallback_schema)
     try:
         return (
             spark.read.option("basePath", log_dir)
-            .parquet(os.path.join(log_dir, "batch_id=*"))
+            .parquet(*[f"{log_dir}/{name}" for _, name in found])
             .select(*columns)
         )
-    except AnalysisException:
+    except AnalysisException:  # partitions listed, none holding data yet
         return spark.createDataFrame([], fallback_schema)

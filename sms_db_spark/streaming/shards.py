@@ -45,7 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import hadoop_fs, read_text, write_text_atomic
+from .. import fsutil
 from ..session import concurrent
 from ..sinks.shards import check_shard_input, row_hash_col, shard_transform
 from .windows import EVENT_SCHEMA  # noqa: F401 (one wire schema, see windows.py)
@@ -54,7 +54,7 @@ STREAM_MANIFEST = "_stream_manifest.json"
 
 
 def _load_manifest(spark: SparkSession, shard_dir: str) -> dict:
-    text = read_text(spark, os.path.join(shard_dir, STREAM_MANIFEST))
+    text = fsutil.read_text(spark, os.path.join(shard_dir, STREAM_MANIFEST))
     return json.loads(text) if text else {"batches": {}}
 
 
@@ -65,49 +65,42 @@ def _purge_for_batch(sess: SparkSession, shard_dir: str, batch_id: int, manifest
     epoch) directory and staged fold. Manifest entries are NOT touched
     here (the caller trims and writes them; the order data-then-manifest
     keeps a crash conservative: leftover dirs re-purge next time)."""
-    jvm, fs = hadoop_fs(sess, shard_dir)
+    jvm, fs = fsutil.hadoop_fs(sess, shard_dir)
     base = jvm.org.apache.hadoop.fs.Path(shard_dir)
+    if not fs.exists(base):
+        return
     # Own-batch landing MUST be idempotent regardless of manifest state:
     # a crash between the data append and the manifest write leaves
     # `_batch=<batch_id>` data with NO manifest entry, so a manifest-gated
     # purge would skip it and the replay would append the same rows twice
     # (permanent checksum failure). Always clear this id's dirs first —
     # one glob over `_shard=*/_batch=<batch_id>`, O(n_shards), cheap.
-    if fs.exists(base):
-        own = fs.globStatus(
-            jvm.org.apache.hadoop.fs.Path(
-                os.path.join(shard_dir, "_shard=*", f"_batch={batch_id}")
-            )
-        )
-        for st in own or []:
-            fs.delete(st.getPath(), True)
-    stale_ids = {int(b) for b in manifest["batches"] if int(b) > batch_id}
-    if stale_ids:
-        # checkpoint reset: batch numbering restarted, so directories from
-        # ids ABOVE the current one are a dead epoch — purge them all.
-        # This walk stays manifest-gated (steady state never pays it);
-        # dirs a crash orphaned above batch_id without a manifest entry
-        # are unreachable to the restarted numbering only until it
-        # re-reaches that id, at which point the own-id glob above
-        # clears them.
-        if fs.exists(base):
-            for sh in fs.listStatus(base):
-                name = sh.getPath().getName()
-                if sh.isDirectory() and name.startswith(".fold_"):
-                    # a staged-but-uncommitted fold holds PRE-RESET rows;
-                    # letting recover_interrupted_fold replay it after
-                    # the reset would resurrect the dead epoch
-                    fs.delete(sh.getPath(), True)
-                    continue
-                if not sh.isDirectory() or not name.startswith("_shard="):
-                    continue
-                for bt in fs.listStatus(sh.getPath()):
-                    name = bt.getPath().getName()
-                    if (
-                        name.startswith("_batch=")
-                        and int(name.split("=", 1)[1]) > batch_id
-                    ):
-                        fs.delete(bt.getPath(), True)
+    own = fs.globStatus(
+        jvm.org.apache.hadoop.fs.Path(os.path.join(shard_dir, "_shard=*", f"_batch={batch_id}"))
+    )
+    for st in own or []:
+        fsutil.delete(sess, st.getPath().toString())
+    if not any(int(b) > batch_id for b in manifest["batches"]):
+        return
+    # checkpoint reset: batch numbering restarted, so directories from
+    # ids ABOVE the current one are a dead epoch — purge them all.
+    # This walk stays manifest-gated (steady state never pays it);
+    # dirs a crash orphaned above batch_id without a manifest entry
+    # are unreachable to the restarted numbering only until it
+    # re-reaches that id, at which point the own-id glob above
+    # clears them.
+    for sh in fs.listStatus(base):
+        name = sh.getPath().getName()
+        if sh.isDirectory() and name.startswith(".fold_"):
+            # a staged-but-uncommitted fold holds PRE-RESET rows;
+            # letting recover_interrupted_fold replay it after
+            # the reset would resurrect the dead epoch
+            fsutil.delete(sess, sh.getPath().toString())
+        elif sh.isDirectory() and name.startswith("_shard="):
+            for bt in fs.listStatus(sh.getPath()):
+                name = bt.getPath().getName()
+                if name.startswith("_batch=") and int(name.split("=", 1)[1]) > batch_id:
+                    fsutil.delete(sess, bt.getPath().toString())
 
 
 def skip_shard_batch(sess: SparkSession, shard_dir: str, batch_id: int) -> None:
@@ -123,14 +116,14 @@ def skip_shard_batch(sess: SparkSession, shard_dir: str, batch_id: int) -> None:
     protocol guards against, on the shard side. A fresh store is left
     untouched (no dirs, no manifest created)."""
     manifest = _load_manifest(sess, shard_dir)
-    jvm, fs = hadoop_fs(sess, shard_dir)
+    jvm, fs = fsutil.hadoop_fs(sess, shard_dir)
     if not fs.exists(jvm.org.apache.hadoop.fs.Path(shard_dir)):
         return
     _purge_for_batch(sess, shard_dir, batch_id, manifest)
     trimmed = {b: v for b, v in manifest["batches"].items() if int(b) < batch_id}
     if trimmed != manifest["batches"]:
         manifest["batches"] = trimmed
-        write_text_atomic(
+        fsutil.write_text_atomic(
             sess,
             os.path.join(shard_dir, STREAM_MANIFEST),
             json.dumps(manifest, sort_keys=True, indent=1),
@@ -173,7 +166,7 @@ def apply_shard_batch(
         str(int(r._shard)): {"n_rows": int(r.n_rows), "checksum": int(r.checksum)}
         for r in stats
     }
-    write_text_atomic(
+    fsutil.write_text_atomic(
         sess,
         os.path.join(shard_dir, STREAM_MANIFEST),
         json.dumps(manifest, sort_keys=True, indent=1),
@@ -209,13 +202,12 @@ def _finalize_fold(spark: SparkSession, shard_dir: str, live_dir: str, meta: dic
         # into acc above — a replay after a crashed marker-delete pops
         # the already-merged entry and writes the same value back.
         manifest["batches"].setdefault(str(tgt), {})[str(sid)] = acc
-        write_text_atomic(
+        fsutil.write_text_atomic(
             spark,
             os.path.join(shard_dir, STREAM_MANIFEST),
             json.dumps(manifest, sort_keys=True, indent=1),
         )
-    jvm, fs = hadoop_fs(spark, shard_dir)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(os.path.join(live_dir, _FOLD_META)), False)
+    fsutil.delete(spark, os.path.join(live_dir, _FOLD_META))
 
 
 def _commit_fold(spark: SparkSession, shard_dir: str, staged: str) -> dict | None:
@@ -225,24 +217,18 @@ def _commit_fold(spark: SparkSession, shard_dir: str, staged: str) -> dict | Non
     delete the folded cold dirs, rename the staged dir into place, then
     finalize (manifest collapse + marker drop). Returns the fold meta,
     or None if the staged dir has no marker (not a fold dir)."""
-    meta_text = read_text(spark, os.path.join(staged, _FOLD_META))
+    meta_text = fsutil.read_text(spark, os.path.join(staged, _FOLD_META))
     if meta_text is None:
         return None
     meta = json.loads(meta_text)
     sid, tgt = int(meta["shard"]), int(meta["target"])
-    jvm, fs = hadoop_fs(spark, shard_dir)
     shard_path = os.path.join(shard_dir, f"_shard={sid}")
+    # a failed delete raises before the rename: a leftover cold dir would count twice
     for b in meta["cold"]:  # idempotent: already-deleted dirs are skipped
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(os.path.join(shard_path, f"_batch={b}")),
-            True,
-        )
-    dst_str = os.path.join(shard_path, f"_batch={tgt}")
-    if not fs.rename(
-        jvm.org.apache.hadoop.fs.Path(staged), jvm.org.apache.hadoop.fs.Path(dst_str)
-    ):
-        raise RuntimeError(f"fold commit failed renaming {staged} -> {dst_str}")
-    _finalize_fold(spark, shard_dir, dst_str, meta)
+        fsutil.delete(spark, os.path.join(shard_path, f"_batch={b}"))
+    dst = os.path.join(shard_path, f"_batch={tgt}")
+    fsutil.rename(spark, staged, dst)
+    _finalize_fold(spark, shard_dir, dst, meta)
     return meta
 
 
@@ -261,7 +247,7 @@ def recover_interrupted_fold(
     DIFFERENT shard's fold that is legitimately still in flight. The
     unscoped form is for maintenance-window startup, when no fold is
     running."""
-    jvm, fs = hadoop_fs(spark, shard_dir)
+    jvm, fs = fsutil.hadoop_fs(spark, shard_dir)
     base = jvm.org.apache.hadoop.fs.Path(shard_dir)
     prefix = ".fold_" if shard_id is None else f".fold_{int(shard_id)}_"
     out = []
@@ -281,7 +267,7 @@ def recover_interrupted_fold(
     )
     for st in markers or []:
         live_dir = st.getPath().getParent().toString()
-        meta = json.loads(read_text(spark, st.getPath().toString()))
+        meta = json.loads(fsutil.read_text(spark, st.getPath().toString()))
         _finalize_fold(spark, shard_dir, live_dir, meta)
         out.append(meta)
     return out
@@ -311,8 +297,7 @@ def _stage_fold(
     shard_path = os.path.join(shard_dir, f"_shard={shard_id}")
     cold_dirs = [os.path.join(shard_path, f"_batch={b}") for b in cold]
     staged = os.path.join(shard_dir, _fold_dirname(shard_id, tgt))
-    jvm, fs = hadoop_fs(spark, shard_dir)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staged), True)  # stale attempt
+    fsutil.delete(spark, staged)  # stale attempt
     # the fold IS this layout's compaction, so it uses compaction's
     # sizing: ceil(cold_bytes / target) output files, measured from the
     # actual listing. A hardcoded coalesce(1) funneled a shard's whole
@@ -330,7 +315,7 @@ def _stage_fold(
         .parquet(staged)
     )
     meta = {"shard": int(shard_id), "target": int(tgt), "cold": [int(b) for b in cold]}
-    write_text_atomic(spark, os.path.join(staged, _FOLD_META), json.dumps(meta))
+    fsutil.write_text_atomic(spark, os.path.join(staged, _FOLD_META), json.dumps(meta))
     return staged
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.dedup import _tokens_col, shingles_col
-from ..fsutil import hadoop_fs
+from .. import fsutil
 from ..operators.sketches import HLL_M, HLL_P, _HLL_WBITS, _h60
 
 DOC_BATCH_SCHEMA = T.StructType(
@@ -78,9 +78,8 @@ def stream_hll(
         # Hadoop FS API (not os.path): register_dir may live on HDFS/S3A
         # in a real deployment; the driver-local filesystem check would
         # silently report "absent" there and reset the sketch.
-        jvm, fs = hadoop_fs(sess, current)
-        cur_path = jvm.org.apache.hadoop.fs.Path(current)
-        if fs.exists(cur_path):
+        jvm, fs = fsutil.hadoop_fs(sess, current)
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(current)):
             regs = merge_registers(sess.read.parquet(current), regs)
         # write-new-then-swap keeps readers consistent; 2^p rows, driver-cheap
         staged = os.path.join(register_dir, f"batch-{batch_id}")
@@ -88,7 +87,7 @@ def stream_hll(
         sess.read.parquet(staged).write.mode("overwrite").parquet(current)
         # drop the staged snapshot once swapped — otherwise one dir per
         # microbatch accumulates under register_dir without bound
-        fs.delete(jvm.org.apache.hadoop.fs.Path(staged), True)
+        fsutil.delete(sess, staged)
 
     stream = spark.readStream.schema(DOC_BATCH_SCHEMA).parquet(drop_dir)
     return (

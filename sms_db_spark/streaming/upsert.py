@@ -32,7 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import hadoop_fs, numbered_child_dirs
+from .. import fsutil
 from .windows import EVENT_SCHEMA  # noqa: F401 (one wire schema, see windows.py)
 
 
@@ -75,7 +75,7 @@ def merge_states(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 def _state_ids(sess: SparkSession, store_dir: str) -> list[int]:
-    return [n for n, _ in numbered_child_dirs(sess, store_dir, "state-")]
+    return [n for n, _ in fsutil.numbered_child_dirs(sess, store_dir, "state-")]
 
 
 def apply_batch(batch: DataFrame, batch_id: int, store_dir: str) -> None:
@@ -109,12 +109,9 @@ def _janitor_states(
     gate's skip path so the two can never diverge on policy. A failed
     delete raises: a silently-surviving snapshot is exactly the stale
     state read_upsert_store would then serve forever."""
-    jvm, fs = hadoop_fs(sess, store_dir)
     for i in ids:
         if i not in keep:
-            p = jvm.org.apache.hadoop.fs.Path(os.path.join(store_dir, f"state-{i}"))
-            if not fs.delete(p, True) and fs.exists(p):
-                raise RuntimeError(f"state janitor failed deleting {store_dir}/state-{i}")
+            fsutil.delete(sess, os.path.join(store_dir, f"state-{i}"))
 
 
 def skip_upsert_batch(sess: SparkSession, store_dir: str, batch_id: int) -> None:

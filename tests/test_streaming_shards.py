@@ -371,3 +371,99 @@ def test_fold_cold_batches_all_dedups_shard_ids(spark, tmp_path):
     assert merged_manifest(spark, shard_dir) == before
     assert verify_stream_shards(spark, shard_dir)["ok"]
     assert spark.read.parquet(shard_dir).count() == docs.count()
+
+
+class _RefusingFS:
+    """A Hadoop FileSystem proxy whose delete and rename of a path named
+    `name` return False without touching it; every other call goes to
+    the real FileSystem."""
+
+    def __init__(self, fs, name):
+        self._fs, self._name = fs, name
+
+    def delete(self, p, recursive):
+        return False if p.getName() == self._name else self._fs.delete(p, recursive)
+
+    def rename(self, src, dst):
+        return False if src.getName() == self._name else self._fs.rename(src, dst)
+
+    def __getattr__(self, attr):
+        return getattr(self._fs, attr)
+
+
+def _refusing(name):
+    from sms_db_spark import fsutil
+
+    real = fsutil.hadoop_fs
+
+    def hadoop_fs(spark, path):
+        jvm, fs = real(spark, path)
+        return jvm, _RefusingFS(fs, name)
+
+    return hadoop_fs
+
+
+def test_failed_cold_dir_delete_stops_the_fold(spark, tmp_path, monkeypatch):
+    """A cold-dir delete that Hadoop refuses must stop the fold before
+    the rename: renaming with `_batch=1` left behind would count its
+    rows twice under an unchanged manifest. The staged dir and marker
+    stay, so recovery finishes the fold exactly. Also pins the
+    fsutil.delete / fsutil.rename failure rule the fold relies on, and
+    write_text_atomic's delete + rename fallback."""
+    from types import SimpleNamespace as NS
+
+    import pytest
+
+    from sms_db_spark import fsutil
+    from sms_db_spark.streaming.shards import fold_cold_batches, recover_interrupted_fold
+
+    shard_dir = str(tmp_path / "stream")
+    docs = _three_batches(spark, shard_dir)
+    sid = _shard_in_all_batches(spark, shard_dir)
+    before = merged_manifest(spark, shard_dir)
+    monkeypatch.setattr(fsutil, "hadoop_fs", _refusing("_batch=1"))
+    with pytest.raises(RuntimeError, match="_batch=1"):
+        fold_cold_batches(spark, shard_dir, sid)
+    monkeypatch.undo()
+    assert [m["shard"] for m in recover_interrupted_fold(spark, shard_dir)] == [sid]
+    assert merged_manifest(spark, shard_dir) == before
+    assert verify_stream_shards(spark, shard_dir)["ok"]
+    assert spark.read.parquet(shard_dir).count() == docs.count()
+
+    fsutil.delete(spark, str(tmp_path / "missing"))  # already gone: no error
+    full = tmp_path / "full"
+    (full / "sub").mkdir(parents=True)
+    (full / "sub" / "f.txt").write_text("x")
+    fsutil.delete(spark, str(full))
+    assert not full.exists()
+
+    src, dst = tmp_path / "src", str(tmp_path / "dst")
+    src.mkdir()
+    monkeypatch.setattr(fsutil, "hadoop_fs", _refusing("src"))
+    with pytest.raises(RuntimeError) as err:
+        fsutil.rename(spark, str(src), dst)
+    assert str(src) in str(err.value) and dst in str(err.value)
+    monkeypatch.undo()
+
+    # write_text_atomic's fallback for a scheme with no FileContext
+    # binding lands the text through delete + rename
+    real = fsutil.hadoop_fs
+
+    class Unsupported(Exception):
+        java_exception = NS(
+            getClass=lambda: NS(getName=lambda: "x.UnsupportedFileSystemException")
+        )
+
+    def no_file_context(*_):
+        raise Unsupported()
+
+    def hadoop_fs(spark, path):
+        jvm, fs = real(spark, path)
+        hfs = NS(Path=jvm.org.apache.hadoop.fs.Path, FileContext=NS(getFileContext=no_file_context))
+        return NS(org=NS(apache=NS(hadoop=NS(fs=hfs)))), fs
+
+    monkeypatch.setattr(fsutil, "hadoop_fs", hadoop_fs)
+    text = tmp_path / "t.json"
+    for body in ("one", "two"):
+        fsutil.write_text_atomic(spark, str(text), body)
+    assert text.read_text() == "two" and not (tmp_path / "t.json.tmp").exists()

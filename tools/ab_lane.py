@@ -1,7 +1,8 @@
 """Per-lane A/B timing harness used for the r17/r18 optimization
-evidence (the /tmp/ab_write18*.py and /tmp/sf1_time2.py scripts cited in
-OPTIMIZATION_r17.md / OPTIMIZATION_r18.md are instances of this shape,
-committed here so the A/B methodology is reproducible from the repo).
+evidence (the A/B scripts cited in OPTIMIZATION_r17.md and
+OPTIMIZATION_r18.md, both in git at commit da8599e, are instances of
+this shape, committed here so the A/B methodology is reproducible from
+the repo).
 
 Times registry lanes with the noop sink (guide §1.4) against an
 arbitrary TREE (the working repo or a git worktree pinned at a "before"
