@@ -17,9 +17,7 @@ Callers:
   * `sources.canonical.finalize_import` numbers the kept messages of
     its own pinned, range-partitioned batch, and takes each message's
     first part id from a running sum of part counts (`sums`), so
-    messages and parts are numbered off one counts job;
-  * `operators.similarity._balanced_rank_ids` (packed-centroid chunk
-    numbering, where any balanced bijective numbering will do).
+    messages and parts are numbered off one counts job.
 
 CALLER CONTRACT — stable partition ids: the counts job and the
 numbering job are two Spark actions over the same frame, and the
@@ -30,21 +28,16 @@ samples fresh range bounds and shuffle reads arrive in a different row
 order. dense_ids and finalize_import localCheckpoint their
 range-partitioned frames (the partition count is left to AQE: probing
 `df.rdd.getNumPartitions()` would run the input's shuffle stages an
-extra time); _balanced_rank_ids requires a pinned frame of its caller.
+extra time).
 
 The kernel returns (frame, N, sum totals), N the row total of the
 counts job. Callers take their row count from N: a `count()` of the
 numbered frame is one more action over it.
 
-`strict` picks the failure mode when the contract breaks (a numbering
-task lands in a pid the counts job never saw):
-  * strict=True — `element_at`: Spark 4's default ANSI mode throws
-    MAP_KEY_DOES_NOT_EXIST mid-job. Fail-loud for call sites with no
-    downstream validation (the importer path).
-  * strict=False — `try_element_at`: the orphan pid's ids come back
-    NULL, so a caller that validates the numbering (the packed fold's
-    bijectivity aggregate over the checkpointed result) raises its own
-    explanatory error instead of Spark's opaque one (ADVICE r12 #1).
+When the contract breaks anyway (a numbering task lands in a pid the
+counts job never saw), the offset lookup is `element_at`, which Spark
+4's default ANSI mode turns into a MAP_KEY_DOES_NOT_EXIST failure
+mid-job: the numbering throws rather than yield NULL ids.
 """
 
 from __future__ import annotations
@@ -58,7 +51,6 @@ def partition_offset_ids(
     order_cols: list[str],
     id_col: str,
     start: int = 0,
-    strict: bool = True,
     sums: dict[str, Column] | None = None,
 ) -> tuple[DataFrame, int, dict[str, int]]:
     """Assign dense sequential ids start..start+N-1 to `df` as `id_col`;
@@ -70,7 +62,7 @@ def partition_offset_ids(
     partitions, ids follow ascending partition id. So the numbering is
     a total order over order_cols iff the caller's partitioning is
     range-ordered on them (dense_ids), and otherwise a balanced
-    bijection (chunk assignment needs nothing more).
+    bijection.
 
     `sums` maps extra output columns to non-null numeric weights. The
     same counts job totals each weight per partition, and each output
@@ -80,7 +72,7 @@ def partition_offset_ids(
     maps each `sums` column to its total over the frame.
 
     See the module docstring for the stable-partition-ids caller
-    contract and the `strict` failure-mode switch. An empty frame
+    contract and its failure mode. An empty frame
     degrades cleanly: no counts → constant offsets under a window that
     produces no rows.
     """
@@ -91,7 +83,6 @@ def partition_offset_ids(
     ).collect()
     pids = sorted(r["_pid"] for r in rows)
     by_pid = {r["_pid"]: r for r in rows}
-    pick = F.element_at if strict else F.try_element_at
 
     def offset_col(key: str, base: int) -> Column:
         """`base` plus the total of `key` over all earlier partitions,
@@ -102,7 +93,7 @@ def partition_offset_ids(
         for pid in pids:
             offsets.append(acc)
             acc += by_pid[pid][key]
-        return pick(
+        return F.element_at(
             F.map_from_arrays(
                 F.array(*[F.lit(p) for p in pids]), F.array(*[F.lit(o) for o in offsets])
             ),

@@ -22,9 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numbering import partition_offset_ids
 from ..plans import QuerySpec, clone_tuned_session
-from ..session import concurrent, env_flag as _env_flag
+from ..session import concurrent
 from ..tables import load_table, load_table_parallel
 
 DIM = 64
@@ -327,7 +326,7 @@ def q51_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # coarse assignment: argmax cosine, ties -> smallest cid
-    assigned = _argmax_cosine_packed(emb, cent, k_max_hint=N_CENTROIDS).select(
+    assigned = _argmax_cosine_packed(emb, cent).select(
         "vec_id", F.col("embedding").alias("c_emb"), "cid"
     )
 
@@ -432,29 +431,13 @@ def _unit(col_name: str, nrm_col: str) -> Column:
     return F.transform(F.col(col_name), lambda x: x.cast("double") / safe)
 
 
-# Packing ceiling (ADVICE r10 #3 / VERDICT r10 item 6): the packed
-# centroids ride ONE collect_list array inside one broadcast row,
-# bounded by Spark's ~2 GB single-array/row cap. At D=64 each centroid
-# is ~(D+2)×8 ≈ 528 bytes packed, so 10^6 centroids ≈ 528 MB — safely
-# inside the cap with headroom for struct overhead. ABOVE this the
-# packing CHUNKS automatically (_pack_chunks): B = ceil(K/cap) arrays,
-# each broadcast separately, argmax folded across chunks — max over a
-# union is the max of per-chunk maxes and the (sim, -cid) struct order
-# is associative, so chunking can never change a winner. Still
-# map-only: the corpus side gains B-1 extra broadcast nested-loop
-# stages and ZERO exchanges.
-MAX_PACKED_K = 1_000_000
-
-
 def _argmax_sql(cents_col: str) -> str:
     """The per-row nearest-centroid argmax as ONE expression over a
     packed centroid array: dot evaluated exactly once per centroid
     (transform), then array_max over (sim, -cid) structs — the
     identical total order max_by(cid, struct(sim, -cid)) ranks by
     (highest sim, ties to the LOWEST cid), and max over it is
-    order-independent, so the packing order cannot affect the result.
-    An EMPTY chunk array folds to NULL, which the cross-chunk
-    array_max skips."""
+    order-independent, so the packing order cannot affect the result."""
     return (
         f"array_max(transform({cents_col}, c -> named_struct("
         "'sim', aggregate(zip_with(embedding, c.c_unit,"
@@ -464,174 +447,42 @@ def _argmax_sql(cents_col: str) -> str:
     )
 
 
-def _n_pack_chunks(
-    cent: DataFrame, max_packed_k: int, k_max_hint: int | None
-) -> int:
-    """How many packing chunks K centroids need (1 = the single-array
-    fast path). A caller that statically knows an UPPER BOUND on K
-    passes it as k_max_hint and the decision costs ZERO jobs (an upper
-    bound is sound: chunking is only ever NEEDED above the cap, and
-    every in-repo consumer bounds K by N_CENTROIDS). Unhinted, the
-    probe is LIMIT-bounded, so deciding "fits in one array" never scans
-    more than cap+1 rows even against a huge centroid table; only an
-    over-cap K pays the full count."""
-    if k_max_hint is not None and _env_flag("SMS_DB_SPARK_VALIDATE_K_HINT"):
-        # Opt-in contract check (VERDICT r11 item 7): a hint BELOW the
-        # true K would otherwise surface only as Spark's opaque
-        # array-size error at broadcast time. Checked for EVERY hint,
-        # not just under-cap ones (ADVICE r12 #5) — the validator's
-        # advertised contract is "every hint is an upper bound". The
-        # probe's LIMIT is the hint, so an over-cap hint on a big frame
-        # pays a near-full scan — acceptable in a debug mode, but only
-        # ONCE (review r13): a passing probe returns the EXACT K
-        # (probed <= hint means the limit never truncated), so both
-        # the fits-in-one-array decision and the chunk count reuse it
-        # instead of re-probing/re-counting the frame up to twice more.
-        probed = cent.limit(k_max_hint + 1).count()
-        if probed > k_max_hint:
-            raise ValueError(
-                f"k_max_hint={k_max_hint} is not an upper bound: the "
-                f"centroid frame has more than {k_max_hint} rows "
-                "(observed via a LIMIT-bounded probe). Pass a true "
-                "upper bound (e.g. N_CENTROIDS) or omit the hint."
-            )
-        return 1 if probed <= max_packed_k else -(-probed // max_packed_k)
-    if k_max_hint is not None and k_max_hint <= max_packed_k:
-        return 1
-    probed = cent.limit(max_packed_k + 1).count()
-    if probed <= max_packed_k:
-        return 1
-    return -(-cent.count() // max_packed_k)
-
-
-def _balanced_rank_ids(pinned: DataFrame) -> tuple[DataFrame, int]:
-    """(frame, K): 0-based dense ids `_rn` (a permutation of 0..K-1) over a PINNED
-    (persisted or localCheckpointed) frame — the shared two-phase
-    partition-offset numbering (functions/numbering.py; extracted from
-    the r12 deliberate twin with canonical.dense_ids, VERDICT r12
-    item 4), WITHOUT dense_ids' range-repartition: chunk assignment
-    only needs a BALANCED bijective numbering, not a globally ordered
-    one, and the fold's output is chunk-invariant anyway (argmax over
-    a union == argmax of per-chunk argmaxes). The caller MUST pass a
-    pinned frame — the partition ids must be identical between the
-    kernel's counts job and its numbering job, which re-executed
-    lineage does not guarantee. strict=False (ADVICE r12 #1): if the
-    pin is violated anyway, try_element_at turns the orphan pid's ids
-    into NULLs, and _packed_fold's post-checkpoint bijectivity
-    aggregate raises its explanatory error instead of Spark's opaque
-    mid-job MAP_KEY_DOES_NOT_EXIST."""
-    numbered, k, _ = partition_offset_ids(pinned, ["cid"], "_rn", start=0, strict=False)
-    return numbered, k
-
-
 def _packed_fold(
     emb: DataFrame,
-    cent: DataFrame,
     rows: DataFrame,
     struct_cols: list[str],
     argmax_sql,
-    max_packed_k: int,
-    k_max_hint: int | None,
 ) -> DataFrame:
     """THE packed-broadcast argmax fold, shared by _assign and
-    _argmax_cosine_packed (one implementation of the dispatch, the
-    size-guarded single-array fast path, and the chunked
-    argmax-of-argmaxes — the two variants differ only in their packed
-    struct columns, their argmax SQL, and their output projection).
+    _argmax_cosine_packed (the two differ only in their packed struct
+    columns, their argmax SQL, and their output projection): the K
+    centroid rows pack into ONE collect_list array inside one broadcast
+    row, and the argmax runs per corpus row as an expression fold.
     Returns the corpus frame with `_best` attached; never shuffles it.
 
-    Chunked path: chunk membership is round-robin by cid-RANK, not cid
-    modulus — rank chunks are BALANCED by construction (sizes differ by
-    at most 1), so no chunk can exceed the single-array cap however the
-    cid values are distributed. The rank is the DISTRIBUTED two-phase
-    numbering (_balanced_rank_ids — per-partition window + driver-side
-    offset cumsum, the dense_ids pattern), never a global
-    no-partitionBy window: at the K ≈ 10^8 sizing this path exists for,
-    a single-task rank over ~50 GB of packed centroids would bottleneck
-    or OOM (ADVICE r11 #1). The centroid frame is PERSISTED before
-    numbering (stable partition ids between the two phases + centroid
-    lineage runs once) and the ranked frame localCheckpointed after
-    (the per-chunk filters re-scan K materialized rows instead of
-    re-shuffling them B times); the persist is RELEASED as soon as the
-    ranked checkpoint materializes, so two full copies of the K-row
-    frame never coexist past the numbering (review r12 — at the
-    ~50 GB K ≈ 10^8 sizing a leaked first copy would double executor
-    storage pressure exactly where this path matters). persist is
-    WEAKER than a checkpoint: on block loss Spark recomputes from
-    lineage, and a partition landing in a pid the counts job never
-    saw would make element_at return NULL → a silently dropped
-    centroid (review r12, second pass). So the numbering is VALIDATED
-    after the checkpoint — one aggregate over the K materialized rows
-    pins (no NULL _rn, count == the counts total, max == K-1), and a
-    violation raises loudly instead of mis-assigning. An empty
-    chunk's argmax folds to NULL, which the cross-chunk array_max
-    skips."""
-    n_chunks = _n_pack_chunks(cent, max_packed_k, k_max_hint)
-    if n_chunks == 1:
-        packed = rows.agg(
-            F.collect_list(F.struct(*struct_cols)).alias("cents")
-        ).where(F.size("cents") > 0)
-        return emb.crossJoin(F.broadcast(packed)).withColumn(
-            "_best", F.expr(argmax_sql("cents"))
-        )
-    pinned = rows.persist()
-    try:
-        # the counts job inside _balanced_rank_ids materializes the
-        # persist; the eager checkpoint then owns the ranked copy
-        ranked, k = _balanced_rank_ids(pinned)
-        ranked = ranked.localCheckpoint(eager=True)
-    finally:
-        pinned.unpersist()
-    # fail-loud bijectivity validation (see docstring): one aggregate
-    # over the K checkpointed rows — a permutation of 0..K-1 has the
-    # counts job's K rows, no NULLs, min 0, max K-1, and K distinct values
-    v = ranked.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.col("_rn").isNull().cast("int")), F.lit(0)).alias(
-            "nulls"
-        ),
-        F.min("_rn").alias("mn"),
-        F.max("_rn").alias("mx"),
-        F.count_distinct("_rn").alias("nd"),
-    ).first()
-    if v["n"] != k or (v["n"] > 0 and not (
-        v["nulls"] == 0
-        and v["mn"] == 0
-        and v["mx"] == v["n"] - 1
-        and v["nd"] == v["n"]
-    )):
-        raise RuntimeError(
-            "chunked packing rank is not a 0..K-1 permutation "
-            f"(K={k}, n={v['n']}, nulls={v['nulls']}, min={v['mn']}, max={v['mx']}, "
-            f"distinct={v['nd']}) — the persisted centroid frame was likely "
-            "recomputed with a different partition layout between the two "
-            "numbering phases; failing instead of silently mis-chunking"
-        )
-    df = emb
-    for i in range(n_chunks):
-        chunk = ranked.filter((F.col("_rn") % n_chunks) == i).agg(
-            F.collect_list(F.struct(*struct_cols)).alias(f"cents_{i}")
-        )
-        df = df.crossJoin(F.broadcast(chunk))
-    best = F.array_max(
-        F.array(*[F.expr(argmax_sql(f"cents_{i}")) for i in range(n_chunks)])
+    The array is bounded by Spark's ~2 GB single-array/row cap: at D=64
+    a packed centroid is ~(D+2)×8 ≈ 528 bytes, so about 10^6 centroids
+    fit. Every lane packs at most N_CENTROIDS rows (SCALE.md's IVF
+    bullet). An empty centroid table packs to an empty array, which the
+    size guard drops, so the result is zero rows."""
+    packed = rows.agg(
+        F.collect_list(F.struct(*struct_cols)).alias("cents")
+    ).where(F.size("cents") > 0)
+    return emb.crossJoin(F.broadcast(packed)).withColumn(
+        "_best", F.expr(argmax_sql("cents"))
     )
-    return df.withColumn("_best", best)
 
 
 def _assign(
     emb: DataFrame,
     cent: DataFrame,
     carry: tuple[str, ...] = (),
-    max_packed_k: int = MAX_PACKED_K,
-    k_max_hint: int | None = None,
 ) -> DataFrame:
     """Nearest-centroid assignment, MAP-ONLY: the K normalized centroids
     are packed into a single array row, broadcast, and the per-row
     argmax runs as one expression fold (_argmax_sql) — no groupBy, so
-    the corpus never shuffles for an assignment pass. K past
-    MAX_PACKED_K chunks the packing (see the constant; the corpus side
-    stays exchange-free, gaining only extra broadcast stages).
+    the corpus never shuffles for an assignment pass (K ceiling: see
+    _packed_fold).
 
     The previous shape (crossJoin to K rows + groupBy(vec_id) max_by)
     computed the same argmax but paid one full-corpus exchange per call
@@ -653,15 +504,7 @@ def _assign(
     just documented: an empty cent packs to an empty array, which the
     size guard drops, so the result is zero rows — never N rows with a
     NULL cid (review r10)."""
-    folded = _packed_fold(
-        emb,
-        cent,
-        _unit_centroids(cent),
-        ["cid", "c_unit"],
-        _argmax_sql,
-        max_packed_k,
-        k_max_hint,
-    )
+    folded = _packed_fold(emb, _unit_centroids(cent), ["cid", "c_unit"], _argmax_sql)
     return folded.select(
         "vec_id",
         (-F.col("_best.ncid")).cast("bigint").alias("cid"),
@@ -685,12 +528,7 @@ def _cos_argmax_sql(cents_col: str) -> str:
     )
 
 
-def _argmax_cosine_packed(
-    emb: DataFrame,
-    cent: DataFrame,
-    max_packed_k: int = MAX_PACKED_K,
-    k_max_hint: int | None = None,
-) -> DataFrame:
+def _argmax_cosine_packed(emb: DataFrame, cent: DataFrame) -> DataFrame:
     """(vec_id, cid, sim, embedding): nearest centroid by FULL cosine,
     map-only — _assign's packed-broadcast fold (same corpus-shuffle-
     removal rationale, see _assign) for consumers whose oracle compares
@@ -699,24 +537,16 @@ def _argmax_cosine_packed(
     the former per-pair cosine("embedding", "c_emb") (hash-gate-proven
     on q100). Empty cent yields zero rows (same size guard as _assign).
 
-    K ceiling: the broadcast payload is K×(D+2) doubles either way
-    (~34 MB at the K=2^16 IVF sizing SCALE.md §4 vouches for, D=64);
-    past MAX_PACKED_K the packing chunks automatically — B balanced
-    arrays, argmax-of-argmaxes, zero corpus exchanges (see the
-    constant; the q98-at-100 TB sizing k ≈ N/1000 now runs without a
-    prose caveat). The winner is chunk-invariant: max over a union is
-    the max of per-chunk maxes under the same (sim, -cid) order."""
+    K ceiling: the broadcast payload is K×(D+2) doubles (~34 MB at the
+    K=2^16 IVF sizing SCALE.md §4 vouches for, D=64); see _packed_fold."""
     folded = _packed_fold(
         # norms are hoisted as DIVISORS for _cos_argmax_sql — guard
         # zeros at creation (see _safe_nrm): a zero query embedding or
         # zero centroid scores sim 0 instead of throwing under ANSI
         emb.withColumn("_enrm", _safe_nrm(_norm("embedding"))),
-        cent,
         cent.select("cid", "c_emb", _safe_nrm(_norm("c_emb")).alias("c_nrm")),
         ["cid", "c_emb", "c_nrm"],
         _cos_argmax_sql,
-        max_packed_k,
-        k_max_hint,
     )
     return folded.select(
         "vec_id",
@@ -789,18 +619,10 @@ def _lloyd(emb: DataFrame, cent: DataFrame) -> DataFrame:
     and the standard iterative-algorithm lineage cut (same move as the
     q83 star-contraction loop)."""
     cent = cent.localCheckpoint(eager=True)
-    # N_CENTROIDS statically bounds EVERY round's K: both seeds are
-    # built ≤ N_CENTROIDS rows by construction and clusters only ever
-    # vanish in _update — an upper bound is all _n_pack_chunks needs
-    # (r17: the former cent.count() paid a whole job for a number the
-    # construction already guarantees)
-    k0 = N_CENTROIDS
     for _ in range(KMEANS_ITERS):
-        cent = _update(_assign(emb, cent, k_max_hint=k0)).localCheckpoint(
-            eager=True
-        )
+        cent = _update(_assign(emb, cent)).localCheckpoint(eager=True)
     return (
-        _assign(emb, cent, k_max_hint=k0)
+        _assign(emb, cent)
         .select("vec_id", "cid")
         .orderBy("vec_id")
     )
@@ -972,7 +794,7 @@ def q98_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # separate groupBy(cid) + broadcast-join formulation measured +26%
     # on the whole query at sf0.1).
     sized = (
-        _assign(emb, cent, k_max_hint=N_CENTROIDS)
+        _assign(emb, cent)
         .withColumn("rnk", F.row_number().over(w))
         .withColumn(
             "cluster_truncated",
@@ -1080,7 +902,7 @@ def q100_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb")
     )
-    assigned = _argmax_cosine_packed(emb, cent, k_max_hint=N_CENTROIDS).select(
+    assigned = _argmax_cosine_packed(emb, cent).select(
         "vec_id", "cid", F.col("sim").alias("centroid_sim")
     )
     w = Window.partitionBy("cid").orderBy("centroid_sim", "vec_id")
@@ -1249,7 +1071,7 @@ def q121_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb")
     )
-    assigned = _argmax_cosine_packed(emb, cent, k_max_hint=N_CENTROIDS).select(
+    assigned = _argmax_cosine_packed(emb, cent).select(
         "vec_id", "embedding", "cid"
     )
     q = emb.filter(F.col("vec_id") < 10).select(
@@ -1630,7 +1452,7 @@ def q133_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (_assign / _unit_centroids): ranking by dot(e, c/|c|) is cosine's
     # order at a third of the arithmetic, and there is exactly ONE
     # implementation of the tie-break to maintain
-    assigned = _assign(emb, cent, carry=("label",), k_max_hint=N_CENTROIDS)
+    assigned = _assign(emb, cent, carry=("label",))
     cent_n = _unit_centroids(cent)
     anchors = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("anchor_id"),
@@ -2309,7 +2131,7 @@ def _pq_shared_flat(
 
     def build_assigned():
         return (
-            _argmax_cosine_packed(st["emb"], st["cent"], k_max_hint=N_CENTROIDS)
+            _argmax_cosine_packed(st["emb"], st["cent"])
             .select("vec_id", "cid")
             .localCheckpoint(eager=True)
         )
@@ -2352,7 +2174,7 @@ def _pq_shared_residual(
 
     def build_residual():
         st["assigned"] = (
-            _argmax_cosine_packed(st["emb"], st["cent"], k_max_hint=N_CENTROIDS)
+            _argmax_cosine_packed(st["emb"], st["cent"])
             .select("vec_id", "cid")
             .localCheckpoint(eager=True)
         )

@@ -7,6 +7,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import TUNED_PARITY_CONFS
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -21,33 +23,6 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     doc: str = ""
-
-
-# The PARITY confs _tuned pins: semantics-bearing, runtime-settable SQL
-# confs that make plan shape and timestamp rendering identical under any
-# caller's session. Owned HERE and consumed by every query that re-clones
-# its session (`newSession()` inherits only builder-time options, so a
-# bare clone silently drops these — ADVICE r9): clones copy the LIVE
-# values for these keys from their parent instead of hand-listing them,
-# so a new pin added here propagates automatically. Sizing confs
-# (shuffle.partitions) are deliberately NOT in this dict — each entry
-# point sizes itself.
-#
-# On excludedRules: InferFiltersFromGenerate synthesizes
-# `size(e)>0 AND isnotnull(e)` ahead of every explode; when the generator
-# input is an EXPENSIVE derived array (shingles: regex+transform over the
-# full text) the inferred predicate embeds that whole expression and
-# predicate pushdown then drags it below the parallelizing exchange onto
-# the raw scan — re-evaluating the heavy transform once per row on the
-# narrowest partitioning (measured on q81: 18s vs 2.3s at sf0.1,
-# local[32]). The rule is a skip-empty-rows micro-optimization with no
-# correctness content, so exclude it session-wide.
-TUNED_PARITY_CONFS: dict[str, str] = {
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.optimizer.excludedRules": (
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-    ),
-}
 
 
 def clone_tuned_session(spark: SparkSession) -> SparkSession:
@@ -100,34 +75,30 @@ def _tuned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessi
 # Trace CALLERS of the changed function, not the modules it lives near.
 #
 _CHANGED_THIS_ROUND = [
-    # every lane whose call path reaches fsutil.delete/rename or read_batch_log
-    "q134_shard_manifest_audit",
-    "q135_stream_shard_manifest_audit",
-    "q139_fold_audit",
-    "q142_versioned_store_audit",
-    "q143_metricslog_readback",
-    "q145_versioned_merge_audit",
-    "q146_gated_upsert_audit",
+    # every lane whose call path reaches _packed_fold, _assign,
+    # _argmax_cosine_packed, partition_offset_ids, dense_ids,
+    # finalize_import or stream_ingest
+    "q51_ann_ivf_topk",
+    "q63_import_pipeline",
+    "q64_export_frame",
+    "q65_sql_verbatim",
+    "q86_kmeans_ivf_train",
+    "q98_semantic_dedup",
+    "q100_centroid_outliers",
+    "q121_ivf_recall",
+    "q123_ann_serving",
+    "q124_kmeans_hashed_seed_train",
+    "q133_hard_negatives",
+    "q141_epoch_shuffle",
     "q148_sharded_export_audit",
-    "q149_stream_gated_upsert_audit",
-    "q150_cow_merge_audit",
-    "q151_layout_audit",
-    "q152_stream_neardup_audit",
-    "q153_band_store_audit",
-    "q154_bucketed_join_audit",
-    "q155_partitioned_prune_audit",
-    "q156_streaming_parity_audit",
-    "q157_bucketed_antijoin_dedup_audit",
-    "q158_stream_join_ingest_audit",
-    "q159_stream_quality_monitor_audit",
-    "q160_day2_chain_audit",
-    "q169_streaming_events_parity_audit",
-    "q170_cascade_delete_audit",
+    "q166_pq_adc_recall",
+    "q167_ivfpq_serving",
+    "q168_ivfadc_residual",
+    "q171_sql_verbatim_ci",
     "q172_quarantine_audit",
-    "q175_cow_cascade_delete_audit",
+    "q174_ivfadc_clustered",
     "q177_pq_index_store_audit",
     "q178_stream_ingest_audit",
-    "q179_bpe_store_tokenize",
 ]
 
 

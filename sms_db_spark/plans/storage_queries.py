@@ -1196,7 +1196,7 @@ def q152_stream_neardup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pins — notably the InferFiltersFromGenerate exclusion, without
     # which the banded explode regains the heavy-generate pathology
     # _tuned exists to prevent (q81: 18s vs 2.3s). The copied key set
-    # is TUNED_PARITY_CONFS, owned by plans/__init__ (ADVICE r9: a
+    # is TUNED_PARITY_CONFS, owned by session.py (ADVICE r9: a
     # hand-list here would silently drop future pins).
     session = clone_tuned_session(spark)
     session.conf.set("spark.sql.shuffle.partitions", "8")

@@ -5,9 +5,10 @@ SQLite connection; our execution substrate is Spark, so the knobs that
 matter are AQE, shuffle sizing, Arrow transfer, and a pinned timezone
 (epoch-millis semantics per README.md:117 must not drift with local tz).
 
-The module also holds the driver-side helpers every layer shares
-(`local_frame`, `concurrent`). It imports nothing else from the
-package, so any module can import it at module level.
+The module also holds what every layer shares: the parity confs
+(`TUNED_PARITY_CONFS`) and the driver-side helpers (`local_frame`,
+`concurrent`). It imports nothing else from the package, so any
+module can import it at module level.
 """
 
 from __future__ import annotations
@@ -22,15 +23,32 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 
-def env_flag(name: str) -> bool:
-    """Boolean env switch: unset, empty, '0', 'false', 'no', and
-    'off' (any case) are OFF; anything else is ON. A wrapper exporting
-    FLAG=0 (or FLAG=off) must not silently ENABLE the flag (review
-    r13 — the raw-truthiness check read '0' as on; ADVICE r13 added
-    the no/off spellings)."""
-    return os.environ.get(name, "").strip().lower() not in (
-        "", "0", "false", "no", "off",
-    )
+# The PARITY confs: semantics-bearing, runtime-settable SQL confs that
+# make plan shape and timestamp rendering identical under any caller's
+# session. Owned HERE: get_spark builds its session with them,
+# plans._tuned pins them at every query entry point, and every query
+# that re-clones its session consumes them (`newSession()` inherits only
+# builder-time options, so a bare clone silently drops these — ADVICE
+# r9): clones copy the LIVE values for these keys from their parent
+# instead of hand-listing them, so a new pin added here propagates
+# automatically. Sizing confs (shuffle.partitions) are deliberately NOT
+# in this dict — each entry point sizes itself.
+#
+# On excludedRules: InferFiltersFromGenerate synthesizes
+# `size(e)>0 AND isnotnull(e)` ahead of every explode; when the generator
+# input is an EXPENSIVE derived array (shingles: regex+transform over the
+# full text) the inferred predicate embeds that whole expression and
+# predicate pushdown then drags it below the parallelizing exchange onto
+# the raw scan — re-evaluating the heavy transform once per row on the
+# narrowest partitioning (measured on q81: 18s vs 2.3s at sf0.1,
+# local[32]). The rule is a skip-empty-rows micro-optimization with no
+# correctness content, so exclude it session-wide.
+TUNED_PARITY_CONFS: dict[str, str] = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.optimizer.excludedRules": (
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    ),
+}
 
 
 def get_spark(
@@ -60,7 +78,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
@@ -69,18 +86,10 @@ def get_spark(
         # type for; read as long and convert in tables.load_table (lossless:
         # the generator's values are micro-precision).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # inferred size(e)>0 pre-explode filters duplicate expensive
-        # generator expressions below the parallelizing exchange (see
-        # plans._tuned for the measurement); skip-empty-rows only, no
-        # correctness content.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**TUNED_PARITY_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -85,13 +85,10 @@ def dense_ids(
     partitioning; the pin fixes whatever it picks. Then the shared
     two-phase partition-offset numbering — per-partition row_number +
     driver-side cumsum of per-partition counts, no global
-    single-partition window (functions/numbering.py). strict=True: this
-    path has no downstream bijectivity validation, so a broken-contract
-    pid should throw Spark's ANSI map-key error rather than silently
-    yield NULL ids.
+    single-partition window (functions/numbering.py).
     """
     ordered = df.repartitionByRange(*[F.col(c) for c in order_cols]).localCheckpoint()
-    numbered, n, _ = partition_offset_ids(ordered, order_cols, id_col, start=start, strict=True)
+    numbered, n, _ = partition_offset_ids(ordered, order_cols, id_col, start=start)
     return numbered, n
 
 

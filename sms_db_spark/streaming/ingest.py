@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import fsutil
 from ..schemas import MESSAGE_HASH_FIELDS
 
 STAGED_HASHED_SCHEMA = T.StructType(
@@ -64,11 +65,13 @@ def stream_ingest(
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         sp = batch.sparkSession
-        try:
+        jvm, fs = fsutil.hadoop_fs(sp, store_dir)
+        fresh = batch
+        # only a missing store means "first batch"; an existing store
+        # that cannot be read fails the batch instead of re-appending it
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(store_dir)):
             existing = sp.read.parquet(store_dir).select("hash")
             fresh = batch.join(existing, "hash", "left_anti")
-        except Exception:  # first batch: store doesn't exist yet
-            fresh = batch
         (
             fresh.select("local_id", *MESSAGE_HASH_FIELDS, "hash")
             .write.mode("append")

@@ -235,13 +235,11 @@ def test_assignment_folds_empty_centroids_yield_zero_rows(spark):
     assert S._argmax_cosine_packed(emb, no_cent).count() == 0
 
 
-def test_chunked_packing_matches_single_array_and_stays_map_only(spark):
-    """VERDICT r10 item 6: past MAX_PACKED_K the centroid packing must
-    chunk — and the forced-small-chunk path must (a) produce IDENTICAL
-    rows to the single-array fold (winner chunk-invariance, including
-    the full-cosine sim VALUE bit-for-bit), (b) plan one broadcast
-    nested-loop stage per chunk, and (c) never shuffle the corpus (no
-    vec_id exchange — the whole point of the fold)."""
+def test_packed_argmax_is_one_broadcast_and_stays_map_only(spark):
+    """The packed-centroid fold plans ONE broadcast nested-loop stage
+    (the single packed array) and never shuffles the corpus (no vec_id
+    exchange — the whole point of the fold), for both the
+    normalized-dot assignment and its full-cosine twin."""
     import io
     import re
     from contextlib import redirect_stdout
@@ -254,132 +252,16 @@ def test_chunked_packing_matches_single_array_and_stays_map_only(spark):
         F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb")
     )
 
-    def rows(df, *cols):
-        return sorted(tuple(r) for r in df.select(*cols).collect())
-
     def plan(df) -> str:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("simple")
         return buf.getvalue()
 
-    # 10 centroids, cap 3 -> 4 balanced chunks
-    single = S._assign(emb, cent)
-    chunked = S._assign(emb, cent, max_packed_k=3)
-    assert rows(chunked, "vec_id", "cid") == rows(single, "vec_id", "cid")
-    p = plan(chunked)
-    assert len(re.findall(r"BroadcastNestedLoopJoin", p)) == 4, p
-    assert not re.findall(r"hashpartitioning\(vec_id", p), p
-
-    # full-cosine twin: the sim VALUE must be bit-identical too
-    single = S._argmax_cosine_packed(emb, cent)
-    chunked = S._argmax_cosine_packed(emb, cent, max_packed_k=3)
-    assert rows(chunked, "vec_id", "cid", "sim") == rows(
-        single, "vec_id", "cid", "sim"
-    )
-    assert not re.findall(r"hashpartitioning\(vec_id", plan(chunked))
-
-    # at the cap boundary (K == cap) the fast single-array path holds:
-    # exactly ONE broadcast stage
-    at_cap = S._assign(emb, cent, max_packed_k=10)
-    assert len(re.findall(r"BroadcastNestedLoopJoin", plan(at_cap))) == 1
-    assert rows(at_cap, "vec_id", "cid") == rows(single, "vec_id", "cid")
-
-
-def test_chunk_invariance_across_cap_boundary_sweep(spark):
-    """The argmax-of-argmaxes law must hold at EVERY chunking shape,
-    not just the one the forced-small test pins: sweep caps that give
-    B = K (singleton chunks), uneven round-robin groups, the K-1 edge,
-    and the exact-cap boundary — each must reproduce the single-array
-    rows bit-for-bit (full-cosine sim included)."""
-    import sms_db_spark.operators.similarity as S
-    from sms_db_spark.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").filter(
-        F.col("vec_id") < 200
-    )
-    cent = emb.filter(F.col("vec_id") < 7).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb")
-    )
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    base_assign = rows(S._assign(emb, cent).select("vec_id", "cid"))
-    base_cos = rows(S._argmax_cosine_packed(emb, cent).select("vec_id", "cid", "sim"))
-    for cap in (1, 2, 3, 6, 7):  # B = 7, 4, 3, 2, 1 over K = 7
-        got = rows(S._assign(emb, cent, max_packed_k=cap).select("vec_id", "cid"))
-        assert got == base_assign, f"cap={cap}"
-        got = rows(
-            S._argmax_cosine_packed(emb, cent, max_packed_k=cap).select(
-                "vec_id", "cid", "sim"
-            )
-        )
-        assert got == base_cos, f"cap={cap}"
-
-
-def test_balanced_rank_ids_is_distributed_and_bijective(spark):
-    """ADVICE r11 #1: the chunked-packing rank must never be a global
-    no-partitionBy window (single task over ~50 GB at the K ~= 10^8
-    sizing the path exists for). Pin (a) the plan: the numbering window
-    partitions by the physical partition id — no SinglePartition
-    exchange feeds it; (b) the semantics: _rn is a permutation of
-    0..K-1 however the rows are distributed; (c) the debug hint
-    assertion (VERDICT r11 item 7) fires with the contract's name on
-    it."""
-    import io
-    import os
-    import re
-    from contextlib import redirect_stdout
-
-    import pytest
-
-    import sms_db_spark.operators.similarity as S
-
-    cent = (
-        spark.range(0, 101)
-        .select(F.col("id").alias("cid"), F.array(F.lit(1.0)).alias("c_emb"))
-        .repartition(7)  # deliberately scattered, uneven partitions
-        .localCheckpoint(eager=True)
-    )
-    ranked, k = S._balanced_rank_ids(cent)
-    assert k == 101
-    got = sorted(r["_rn"] for r in ranked.select("_rn").collect())
-    assert got == list(range(101))
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        ranked.explain("simple")
-    plan = buf.getvalue()
-    assert re.search(r"Window \[row_number", plan), plan
-    assert "SinglePartition" not in plan, plan
-    assert re.search(r"hashpartitioning\(_pid", plan), plan
-
-    # empty frame: zero rows, no crash
-    empty = cent.filter(F.lit(False)).localCheckpoint(eager=True)
-    ranked_empty, k_empty = S._balanced_rank_ids(empty)
-    assert ranked_empty.count() == 0 and k_empty == 0
-
-    # hint validation: opt-in, names the violated contract
-    os.environ["SMS_DB_SPARK_VALIDATE_K_HINT"] = "1"
-    try:
-        with pytest.raises(ValueError, match="k_max_hint=10 is not an upper bound"):
-            S._n_pack_chunks(cent, max_packed_k=1000, k_max_hint=10)
-        # a CORRECT hint passes under validation
-        assert S._n_pack_chunks(cent, max_packed_k=1000, k_max_hint=101) == 1
-        # over-cap hints are contract-checked too (ADVICE r12 #5): a
-        # bad over-cap bound raises; a good one returns the chunk
-        # count computed from the REUSED probe (ceil(101/40) = 3,
-        # review r13 — no second probe or count job)
-        with pytest.raises(ValueError, match="k_max_hint=10 is not an upper bound"):
-            S._n_pack_chunks(cent, max_packed_k=5, k_max_hint=10)
-        assert S._n_pack_chunks(cent, max_packed_k=40, k_max_hint=200) == 3
-        # env-flag semantics: '0' means OFF — the bad hint routes to
-        # the unvalidated probe path instead of raising
-        os.environ["SMS_DB_SPARK_VALIDATE_K_HINT"] = "0"
-        assert S._n_pack_chunks(cent, max_packed_k=1000, k_max_hint=10) == 1
-    finally:
-        del os.environ["SMS_DB_SPARK_VALIDATE_K_HINT"]
+    for folded in (S._assign(emb, cent), S._argmax_cosine_packed(emb, cent)):
+        p = plan(folded)
+        assert len(re.findall(r"BroadcastNestedLoopJoin", p)) == 1, p
+        assert not re.findall(r"hashpartitioning\(vec_id", p), p
 
 
 def test_zero_vector_centroid_does_not_crash_assignment(spark):

@@ -746,6 +746,8 @@ def test_tuned_and_clone_share_parity_confs(spark):
         "spark.sql.session.timeZone",
         "spark.sql.optimizer.excludedRules",
     }
+    # get_spark builds its session with the same dict
+    assert {k: spark.conf.get(k) for k in TUNED_PARITY_CONFS} == TUNED_PARITY_CONFS
 
     seen = {}
 

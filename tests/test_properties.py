@@ -286,37 +286,6 @@ def test_versioned_store_invariants_under_any_op_sequence(spark, tmp_path_factor
                 ), f"lineage names missing dir {n}"
 
 
-# ------------------------------------------- partition_offset_ids (r13)
-
-_cids = st.sets(
-    st.integers(min_value=-(2**40), max_value=2**40), min_size=1, max_size=50
-)
-
-
-@settings(max_examples=8, deadline=None)
-@given(cids=_cids, n_part=st.integers(min_value=1, max_value=7))
-def test_balanced_rank_ids_is_a_permutation_on_any_pinned_layout(
-    spark, cids, n_part
-):
-    """The strict=False arm of the shared numbering kernel
-    (functions/numbering.py, extracted r13): over ANY pinned
-    partitioning, `_rn` must be a permutation of 0..K-1 — the property
-    _packed_fold's bijectivity validation assumes the kernel provides
-    whenever the caller honors the pin contract."""
-    from sms_db_spark.operators.similarity import _balanced_rank_ids
-
-    pinned = (
-        spark.createDataFrame([(c,) for c in cids], "cid long")
-        .repartition(n_part)
-        .localCheckpoint(eager=True)
-    )
-    out, k = _balanced_rank_ids(pinned)
-    out = out.collect()
-    assert k == len(cids)
-    assert sorted(r._rn for r in out) == list(range(len(cids)))
-    assert {r.cid for r in out} == set(cids)  # nothing dropped or invented
-
-
 # ------------------------------------- banded-Hamming exact recall (r13)
 
 _bands4 = st.tuples(*([st.integers(min_value=0, max_value=0xFFFF)] * 4))

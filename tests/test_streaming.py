@@ -34,6 +34,25 @@ def test_stream_ingest_dedups_across_batches(spark, tmp_path):
     assert stored.select("hash").distinct().count() == 5
 
 
+def test_stream_ingest_fails_on_an_unreadable_store(spark, tmp_path):
+    """Only a missing store is a first batch: a store that exists but
+    cannot be read fails the drain, and the batch is not appended."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    drop = tmp_path / "drop"
+    store = tmp_path / "store"
+    store.mkdir()
+    (store / "part-0.parquet").write_bytes(b"not a parquet file")
+    _hashed_batch(spark).write.mode("append").parquet(str(drop))
+
+    q = stream_ingest(spark, str(drop), str(store), str(tmp_path / "ckpt"))
+    q = q.trigger(availableNow=True).start()
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert sorted(p.name for p in store.iterdir()) == ["part-0.parquet"]
+
+
 def test_stateful_sessions_across_batches(spark, tmp_path):
     """applyInPandasWithState: session state persists across microbatches;
     a closed session is emitted exactly once with correct bounds."""
