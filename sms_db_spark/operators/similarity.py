@@ -29,11 +29,15 @@ from ..tables import load_table, load_table_parallel
 DIM = 64
 
 
-def _dot(a: str, b: str) -> Column:
-    return F.expr(
+def _dot_sql(a: str, b: str) -> str:
+    return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
         f" CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
     )
+
+
+def _dot(a: str, b: str) -> Column:
+    return F.expr(_dot_sql(a, b))
 
 
 def _norm(a: str) -> Column:
@@ -513,19 +517,26 @@ def _assign(
     )
 
 
-def _cos_argmax_sql(cents_col: str) -> str:
-    """The full-cosine twin of _argmax_sql, for queries whose oracle
-    ranks by (or outputs) cosine itself: sim = dot/(|e|*|c|), with both
-    norms hoisted out of the per-centroid lambda (pure functions of
-    their own arrays — identical doubles, computed once per row / per
-    centroid instead of per pair)."""
+def _cos_sims_sql(cents_col: str) -> str:
+    """Per-row (sim, -cid) structs, one per packed centroid: sim is the
+    full cosine dot/(|e|*|c|) of the row's `embedding`, with both norms
+    hoisted out of the per-centroid lambda (`_enrm` per row, `c_nrm`
+    per centroid — pure functions of their own arrays, so identical
+    doubles to the per-pair cosine(), computed once instead of per
+    pair). Struct order is the window order (sim desc, cid asc)."""
     return (
-        f"array_max(transform({cents_col}, c -> named_struct("
+        f"transform({cents_col}, c -> named_struct("
         "'sim', aggregate(zip_with(embedding, c.c_emb,"
         " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
         " CAST(0 AS DOUBLE), (acc, v) -> acc + v) / (_enrm * c.c_nrm),"
-        " 'ncid', -c.cid)))"
+        " 'ncid', -c.cid))"
     )
+
+
+def _cos_argmax_sql(cents_col: str) -> str:
+    """The full-cosine twin of _argmax_sql, for queries whose oracle
+    ranks by (or outputs) cosine itself: the max of _cos_sims_sql."""
+    return f"array_max({_cos_sims_sql(cents_col)})"
 
 
 def _argmax_cosine_packed(emb: DataFrame, cent: DataFrame) -> DataFrame:
@@ -674,21 +685,15 @@ def _q86_sql() -> str:
 # ------------------------------------------------------------------ q124
 
 
-def _hashed_seed(
-    emb: DataFrame, k: int = N_CENTROIDS, with_vec_id: bool = False
-) -> DataFrame:
+def _hashed_seed(emb: DataFrame, k: int = N_CENTROIDS) -> DataFrame:
     """Deterministic hashed-sample seed centroids: the k vectors with
     the smallest md5(vec_id) — a reproducible stand-in for uniform
     random seeding, with none of the first-K-ids locality bias. cid is
     the rank in hash order (0..k-1), so the seed is a pure function of
     the id set in any engine and under any partitioning. THE one home
     of this law: the IVF trainers (q124 family, default k) and the PQ
-    codebook trainers (q166 raw / q168 residual, k=PQ_CODES) all draw
-    from here. with_vec_id additionally exposes the seed's source
-    vec_id — the residual lane keys its cb0 by joining the seed ids
-    against the already-built corpus residual rows (the SQL twin's
-    exact shape), instead of reconstructing the seed residuals through
-    a second normalization + assignment lineage (review r15)."""
+    codebook trainers (q166 raw; q168/q174 through _pq_column_codebook,
+    k=PQ_CODES) all draw from here."""
     seeds = (
         emb.select(
             F.md5(F.col("vec_id").cast("string")).alias("hk"), "vec_id", "embedding"
@@ -700,13 +705,10 @@ def _hashed_seed(
     )
     w = Window.orderBy("hk", "vec_id")  # K rows — single-partition window is fine
     ranked = seeds.withColumn("rn", F.row_number().over(w))
-    cols = [
+    return ranked.select(
         (F.col("rn") - 1).cast("bigint").alias("cid"),
         F.col("embedding").alias("c_emb"),
-    ]
-    if with_vec_id:
-        cols.append(F.col("vec_id"))
-    return ranked.select(*cols)
+    )
 
 
 def q124_kmeans_hashed_seed_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1859,30 +1861,89 @@ def _pq_update(assigned: DataFrame) -> DataFrame:
     )
 
 
+def _key_packed_sql(entries: str) -> str:
+    """THE by-key-not-by-position packing rule, as one SQL expression:
+    `entries` is an array of (k = m*PQ_CODES + cid, v) structs, and the
+    result is a DENSE PQ_M x PQ_CODES array whose slot k holds the
+    entry keyed k, NULL where there is none. Lloyd can drop an empty
+    code from a codebook (_pq_update aggregates only present cids), and
+    a position-packed array would then shift every later entry — ADC
+    reads of cids past the gap would return the WRONG code's weight
+    (review r14). The packed LUTs (_pq_pack_lut_by) and the packed
+    codebooks (_pq_pack_codebook, hence the encoder and the map-side
+    LUTs) all go through here."""
+    return (
+        f"transform(sequence(0, {PQ_M * PQ_CODES - 1}), i -> "
+        f"element_at(map_from_entries({entries}), CAST(i AS BIGINT)))"
+    )
+
+
 def _pq_pack_lut(lut_rows: DataFrame) -> DataFrame:
     """(query_id, lut): the per-query (m, cid, wi) rows packed into one
-    DENSE PQ_M x PQ_CODES flat array indexed lut[m*PQ_CODES + cid + 1].
-    Built by KEY through a map, never by sort position: Lloyd can drop
-    an empty code from the codebook (_pq_update aggregates only
-    present cids), and a position-packed array would then shift every
-    later entry — ADC reads of cids past the gap would return the
-    WRONG code's weight (review r14). A dropped (m, cid) slot holds 0;
-    it is unreachable anyway (the encoder assigns codes from the SAME
+    DENSE PQ_M x PQ_CODES flat array indexed lut[m*PQ_CODES + cid + 1]
+    (_key_packed_sql). A dropped (m, cid) slot holds 0; it is
+    unreachable anyway (the encoder assigns codes from the SAME
     codebook, so no vector carries a dropped cid)."""
     return _pq_pack_lut_by(lut_rows, ("query_id",))
 
 
 def _pq_pack_lut_by(lut_rows: DataFrame, keys: tuple[str, ...]) -> DataFrame:
-    """_pq_pack_lut's key-packed dense-array law under an arbitrary
+    """_pq_pack_lut's key-packed dense array under an arbitrary
     grouping key (the residual lane packs one LUT per (query, probed
-    cell)) — ONE implementation of the by-key-not-by-position rule."""
+    cell)); a dropped code's slot reads 0."""
+    entries = (
+        f"collect_list(struct(CAST(m * {PQ_CODES} + cid AS BIGINT) AS k,"
+        f" wi AS v))"
+    )
     return lut_rows.groupBy(*keys).agg(
         F.expr(
-            f"transform(sequence(0, {PQ_M * PQ_CODES - 1}), i -> "
-            f"coalesce(element_at(map_from_entries("
-            f"collect_list(struct(CAST(m * {PQ_CODES} + cid AS BIGINT) AS k,"
-            f" wi AS v))), CAST(i AS BIGINT)), CAST(0 AS BIGINT)))"
+            f"transform({_key_packed_sql(entries)}, v -> coalesce(v, CAST(0 AS BIGINT)))"
         ).alias("lut")
+    )
+
+
+def _pq_pack_codebook(cb: DataFrame, name: str = "cbd") -> DataFrame:
+    """ONE row, column `name`: the (m, cid, c) codebook key-packed
+    (_key_packed_sql) into a dense PQ_M x PQ_CODES array of (cid, c, h)
+    structs, h = |c|^2 / 2 precomputed for the encoder's L2 identity; a
+    dropped code's slot is NULL. The form every map-side consumer
+    broadcasts: the encoder (_pq_code_sql) and the per-query LUTs
+    (_pq_lut_sql)."""
+    entries = (
+        f"collect_list(struct(CAST(m * {PQ_CODES} + cid AS BIGINT) AS k,"
+        f" struct(cid, c, {_dot_sql('c', 'c')} / 2.0D AS h) AS v))"
+    )
+    return cb.agg(F.expr(_key_packed_sql(entries)).alias(name))
+
+
+def _pq_code_sql(vec: str, cbd: str) -> str:
+    """THE PQ encoder as one SQL expression: the PQ_M code word of the
+    unit vector `vec` against the packed codebook `cbd`
+    (_pq_pack_codebook). Per subspace, the nearest code by L2 through
+    _pq_assign's identity — argmax (s.c - |c|^2/2), ties to the smaller
+    cid (max over (score, -cid)) — over the PRESENT codes only, so no
+    code word ever addresses a dropped (m, cid) slot."""
+    return (
+        f"transform(sequence(0, {PQ_M - 1}), m -> CAST(-array_max(transform("
+        f"filter(slice({cbd}, m * {PQ_CODES} + 1, {PQ_CODES}), e -> e IS NOT NULL),"
+        f" e -> struct(aggregate(zip_with(slice({vec}, m * {PQ_DSUB} + 1, {PQ_DSUB}),"
+        f" e.c, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v) - e.h"
+        f" AS score, -e.cid AS ncid))).ncid AS BIGINT))"
+    )
+
+
+def _pq_lut_sql(q: str, cbd: str, weight) -> str:
+    """A query's dense ADC lookup table as one SQL expression over the
+    packed codebook `cbd` (_pq_pack_codebook): slot m*PQ_CODES + cid
+    holds floor(weight(q_m, c) * PQ_LUT_SCALE) — weight is _dot_sql
+    (flat ADC) or _sqdist_sql (residual ADC) over the query's m-th
+    subspace slice — and a dropped code's slot reads 0, as in
+    _pq_pack_lut. The same floored integers the row-wise LUT join
+    computes, without the explode, join and groupBy."""
+    s = f"slice({q}, CAST(i DIV {PQ_CODES} AS INT) * {PQ_DSUB} + 1, {PQ_DSUB})"
+    return (
+        f"transform({cbd}, (e, i) -> coalesce(CAST(floor("
+        f"{weight(s, 'e.c')} * {PQ_LUT_SCALE}) AS BIGINT), CAST(0 AS BIGINT)))"
     )
 
 
@@ -1927,43 +1988,39 @@ def _pq_lloyd(sub: DataFrame, cb0: DataFrame) -> DataFrame:
     return cb.localCheckpoint(eager=True)
 
 
+def _pq_column_codebook(frame: DataFrame, col: str) -> DataFrame:
+    """The PQ codebook of the unit-vector column `col` of a pinned
+    (vec_id, col) frame — q168's residual corpus, q174's flat (n) and
+    residual (r) index columns: cb0 is that column's subvectors on the
+    hashed-seed rows, keyed by their hash rank (the oracles'
+    `cb0 AS (... FROM seed JOIN sub ...)`), then _pq_lloyd's rounds.
+    The seed rows carry their own column values, so cb0 needs no join
+    back to the frame; it is consumed once (round 1's packed
+    broadcast) and stays lazy, as in _pq_train."""
+    rows = frame.select("vec_id", F.col(col).alias("n"))
+    seed = _hashed_seed(rows.withColumnRenamed("n", "embedding"), k=PQ_CODES)
+    cb0 = _pq_subvecs(
+        seed.select(F.col("cid").alias("vec_id"), F.col("c_emb").alias("n"))
+    ).select("m", F.col("vec_id").alias("cid"), F.col("s").alias("c"))
+    return _pq_lloyd(_pq_subvecs(rows), cb0)
+
+
 def _pq_encode(nvframe: DataFrame, cb: DataFrame) -> DataFrame:
     """(vec_id, codes): every vector collapsed to PQ_M small ints
     ordered by m — the 64-bit serving representation (64x compression;
     floats never consulted again on the ADC path).
 
-    MAP-SIDE (r17, guide §2.4): the PQ_M codebooks pack into ONE
-    broadcast row (m → cid-sorted (cid, c, h) structs) and each
-    vector's codes fold as a single expression over its own subspace
-    slices — the former shape exploded the corpus to M×N (vec_id, m)
-    rows, broadcast-joined, then re-collapsed with a groupBy(vec_id),
-    i.e. a corpus-sized shuffle that existed only to undo the explode.
+    MAP-SIDE (r17, guide §2.4): the codebook packs into ONE broadcast
+    row (_pq_pack_codebook) and each vector's code word is a single
+    expression over its own subspace slices (_pq_code_sql) — the
+    former shape exploded the corpus to M×N (vec_id, m) rows,
+    broadcast-joined, then re-collapsed with a groupBy(vec_id), i.e. a
+    corpus-sized shuffle that existed only to undo the explode.
     Arithmetic and tie-break are byte-identical to _pq_assign (score =
     subspace dot − half self-dot, argmax of (score, −cid)); input is
     the UN-exploded (vec_id, n) frame."""
-    packed = cb.groupBy("m").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("cid"),
-                    F.col("c"),
-                    (_dot("c", "c") / F.lit(2.0)).alias("h"),
-                )
-            )
-        ).alias("codes")
-    )
-    bym = packed.agg(
-        F.map_from_entries(F.collect_list(F.struct("m", "codes"))).alias("bym")
-    )
-    code_expr = F.expr(
-        f"transform(sequence(0, {PQ_M - 1}), m -> CAST(-array_max("
-        f"transform(element_at(bym, m), c -> struct("
-        f"aggregate(zip_with(slice(n, m * {PQ_DSUB} + 1, {PQ_DSUB}), c.c,"
-        f" (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v) - c.h"
-        f" AS score, -c.cid AS ncid))).ncid AS BIGINT))"
-    )
-    return nvframe.crossJoin(F.broadcast(bym)).select(
-        "vec_id", code_expr.alias("codes")
+    return nvframe.crossJoin(F.broadcast(_pq_pack_codebook(cb))).select(
+        "vec_id", F.expr(_pq_code_sql("n", "cbd")).alias("codes")
     )
 
 
@@ -1993,21 +2050,31 @@ def _pq_query_luts(nv: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
-# the ADC score: PQ_M integer table lookups summed, codes indexing the
-# key-packed LUT (cid gaps hold 0 and are unreachable — see
-# _pq_pack_lut). The unreachability invariant (encoder and LUT share
-# ONE codebook, so no stored code addresses a dropped cid) is
-# load-bearing in a direction-dependent way (ADVICE r15 #4): under
-# q166/q167's DESCENDING similarity rank a stray 0 would merely demote
-# a candidate, but q168 ranks ASCENDING distance, where 0 is the best
-# possible score — a reachable gap there would PROMOTE a wrong
-# candidate into the re-rank window. tests/test_pq.py pins the dense
-# packing under code dropout for exactly this reason.
-_ADC_EXPR = (
-    f"aggregate(sequence(0, {PQ_M - 1}), CAST(0 AS BIGINT),"
-    f" (acc, m) -> acc + element_at(lut,"
-    f" CAST(m * {PQ_CODES} + element_at(codes, m + 1) + 1 AS INT)))"
-)
+def _adc_sql(lut: str, codes: str) -> str:
+    """The ADC score: PQ_M integer table lookups summed, the code word
+    `codes` indexing the key-packed `lut` (cid gaps hold 0 and are
+    unreachable — see _key_packed_sql). The unreachability invariant
+    (encoder and LUT share ONE codebook, so no stored code addresses a
+    dropped cid) is load-bearing in a direction-dependent way (ADVICE
+    r15 #4): under q166/q167's DESCENDING similarity rank a stray 0
+    would merely demote a candidate, but q168/q174 rank ASCENDING
+    distance, where 0 is the best possible score — a reachable gap
+    there would PROMOTE a wrong candidate. tests/test_pq.py pins the
+    dense packing under code dropout for exactly this reason."""
+    return (
+        f"aggregate(sequence(0, {PQ_M - 1}), CAST(0 AS BIGINT),"
+        f" (acc, m) -> acc + element_at({lut},"
+        f" CAST(m * {PQ_CODES} + element_at({codes}, m + 1) + 1 AS INT)))"
+    )
+
+
+def _sqdist_sql(a: str, b: str) -> str:
+    """Subspace squared L2 distance |a - b|^2 as a left fold — the
+    residual ADC's LUT weight (q168, q174)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
+        f" CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
 
 
 # ---------------------------------------------------------- shared state
@@ -2076,23 +2143,13 @@ def _pq_clustered_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_shared(spark: SparkSession, sf_dir: str, variant: str = "base") -> dict:
-    """The per-invocation base frames: pinned nv (normalized corpus),
-    pinned cent (the K coarse centroids), and the lazily-added
-    codebook/index entries the lane helpers below fill in. `variant`
-    selects the corpus ("base" = the embeddings table, "clustered" =
-    the derived mixture fixture); the two corpora never share trained
-    state because each invocation's dict is its own (see the block
-    comment above — no cross-invocation memo)."""
-    if variant == "clustered":
-        # PINNED: the base corpus is a bare parquet scan, but the
-        # fixture is a corpus-wide broadcast join + DIM-wide
-        # transform — every downstream consumer (seeding's
-        # orderBy, the coarse-assignment fold, the query filters)
-        # would re-derive it per scan otherwise (review r16)
-        emb = _pq_clustered_emb(spark, sf_dir).localCheckpoint(eager=True)
-    else:
-        emb = load_table_parallel(spark, sf_dir, "embeddings")
+def _pq_shared(spark: SparkSession, sf_dir: str) -> dict:
+    """The per-invocation base frames over the embeddings table: pinned
+    nv (normalized corpus), pinned cent (the K coarse centroids), and
+    the lazily-added codebook/index entries the lane helpers below fill
+    in. Each invocation's dict is its own (see the block comment above
+    — no cross-invocation memo)."""
+    emb = load_table_parallel(spark, sf_dir, "embeddings")
     # nv and cent are independent reductions of emb: their eager pins
     # run as CONCURRENT jobs (guide §2.6 — actions are only sequential
     # because driver code calls them sequentially; the K-row cent job
@@ -2111,7 +2168,6 @@ def _pq_shared(spark: SparkSession, sf_dir: str, variant: str = "base") -> dict:
 def _pq_shared_flat(
     spark: SparkSession,
     sf_dir: str,
-    variant: str = "base",
     with_assigned: bool = True,
 ) -> dict:
     """Adds the FLAT-PQ artifacts to the shared state: `cb` (trained
@@ -2122,7 +2178,7 @@ def _pq_shared_flat(
     never reads it — r17 dropped its wasted corpus fold there). The
     codebook→codes chain and the coarse-assignment fold are
     independent given (nv, cent): they build as concurrent jobs."""
-    st = _pq_shared(spark, sf_dir, variant)
+    st = _pq_shared(spark, sf_dir)
     sub = _pq_subvecs(st["nv"])
 
     def build_codes():
@@ -2143,82 +2199,40 @@ def _pq_shared_flat(
     return st
 
 
-def _pq_shared_residual(
-    spark: SparkSession,
-    sf_dir: str,
-    variant: str = "base",
-    with_flat: bool = True,
-) -> dict:
+def _pq_shared_residual(spark: SparkSession, sf_dir: str) -> dict:
     """Adds the RESIDUAL artifacts (q168): `res` (the pinned residual
     corpus n − unit(c_cid), keyed by coarse cell), `rcb` (residual
     codebooks trained over it), and `rcodes` (the residual-encoded
-    corpus, pinned). Builds on the shared coarse assignment — the
-    stage q167 and q168 used to train twice (VERDICT r15 item 2).
-
-    with_flat=False skips the flat codebook/code build entirely:
-    q168's declared computation (its oracle twin's CTE list) has no
-    flat-PQ stage — per-invocation builds (r17) made that train+encode
-    a pure throwaway there. with_flat=True (q174 compares both coders)
-    builds the flat chain CONCURRENTLY with the residual chain
-    (guide §2.6): the two are independent given (nv, cent) — flat
-    reads (sub, nv), residual reads (assigned → res) — and previously
-    ran back-to-back."""
-    st = _pq_shared(spark, sf_dir, variant)
-    sub = _pq_subvecs(st["nv"])
-
-    def build_flat():
-        st["cb"] = _pq_train(st["emb"], sub)
-        st["codes"] = _pq_encode(st["nv"], st["cb"]).localCheckpoint(
-            eager=True
-        )
-
-    def build_residual():
-        st["assigned"] = (
-            _argmax_cosine_packed(st["emb"], st["cent"])
-            .select("vec_id", "cid")
-            .localCheckpoint(eager=True)
-        )
-        # (cid, c_unit), zero-safe — stored so the serving bodies
-        # (q168/q174 query-residual mapping) use the SAME frame the
-        # residual corpus was built from (review r16: three
-        # independent re-derivations of one law)
-        st["cu"] = cu = _unit_centroids(st["cent"])
-        residual = F.expr("zip_with(n, c_unit, (x, y) -> x - y)")
-        # PINNED: every Lloyd pass, the encoder, and the index build
-        # consume this frame — without the pin each _pq_assign scan
-        # re-executed the packed coarse-assignment fold plus the
-        # normalization join (pre-pin the sf0.001 selfcheck ran 115 s)
-        st["res"] = (
-            st["nv"]
-            .join(st["assigned"], "vec_id")
-            .join(F.broadcast(cu), "cid")
-            .select("vec_id", "cid", residual.alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        rsub = _pq_subvecs(st["res"].select("vec_id", "n"))
-        # cb0 = the corpus residual rows of the hashed-seed ids, keyed
-        # by the seed's hash-rank cid — a broadcast id join against
-        # the already-pinned residual frame, structurally identical to
-        # the oracle's `rcb0 AS (... FROM seed JOIN rsub ...)`
-        seed_ids = _hashed_seed(st["emb"], k=PQ_CODES, with_vec_id=True).select(
-            "vec_id", F.col("cid").alias("scid")
-        )
-        # rcb0 is consumed exactly once (round 1's packed broadcast) —
-        # lazy, same rationale as _pq_train's seed (r17): rsub reads
-        # from the pinned res frame, so the broadcast-build replay is a
-        # map pass over checkpointed blocks, not a lineage re-train
-        rcb0 = rsub.join(F.broadcast(seed_ids), "vec_id").select(
-            "m", F.col("scid").alias("cid"), F.col("s").alias("c")
-        )
-        st["rcb"] = _pq_lloyd(rsub, rcb0)
-        st["rcodes"] = _pq_encode(
-            st["res"].select("vec_id", "n"), st["rcb"]
-        ).localCheckpoint(eager=True)
-
-    if with_flat:
-        concurrent(build_flat, build_residual)
-    else:
-        build_residual()
+    corpus, pinned), on top of the pinned coarse assignment. q168's
+    declared computation (its oracle twin's CTE list) has no flat-PQ
+    stage, so no flat codebook is built here."""
+    st = _pq_shared(spark, sf_dir)
+    st["assigned"] = (
+        _argmax_cosine_packed(st["emb"], st["cent"])
+        .select("vec_id", "cid")
+        .localCheckpoint(eager=True)
+    )
+    # (cid, c_unit), zero-safe — stored so the serving body (q168's
+    # query-residual mapping) uses the SAME frame the residual corpus
+    # was built from (review r16: three independent re-derivations of
+    # one law)
+    st["cu"] = cu = _unit_centroids(st["cent"])
+    residual = F.expr("zip_with(n, c_unit, (x, y) -> x - y)")
+    # PINNED: every Lloyd pass, the encoder, and the index build
+    # consume this frame — without the pin each _pq_assign scan
+    # re-executed the packed coarse-assignment fold plus the
+    # normalization join (pre-pin the sf0.001 selfcheck ran 115 s)
+    st["res"] = (
+        st["nv"]
+        .join(st["assigned"], "vec_id")
+        .join(F.broadcast(cu), "cid")
+        .select("vec_id", "cid", residual.alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    st["rcb"] = _pq_column_codebook(st["res"], "n")
+    st["rcodes"] = _pq_encode(
+        st["res"].select("vec_id", "n"), st["rcb"]
+    ).localCheckpoint(eager=True)
     return st
 
 
@@ -2258,7 +2272,7 @@ def q166_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            F.expr(_ADC_EXPR).alias("adc_score"),
+            F.expr(_adc_sql("lut", "codes")).alias("adc_score"),
             # the shared unit-dot law (defined below with the serving
             # helpers; resolved at call time)
             F.expr(_UNIT_DOT_SQL).alias("cos_score"),
@@ -2590,7 +2604,7 @@ def q167_ivfpq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     LUT (_pq_query_luts), and candidates come from an EQUI-join of
     the broadcast (probes x lut) frame against the code table on cid —
     scanning ~N_PROBE/K of the corpus per query, never a crossJoin —
-    scored as PQ_M integer lookups summed (_ADC_EXPR). The ADC top
+    scored as PQ_M integer lookups summed (_adc_sql). The ADC top
     IVFPQ_RERANK_R then get the STANDARD full-precision re-rank:
     float vectors are fetched for only those NQ x R rows (broadcast
     into one hash probe of the corpus — codes in RAM, floats cold)
@@ -2655,7 +2669,7 @@ def _ivfpq_audit(
         .join(index, "list_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
-            "query_id", "neighbor_id", F.expr(_ADC_EXPR).alias("adc_score")
+            "query_id", "neighbor_id", F.expr(_adc_sql("lut", "codes")).alias("adc_score")
         )
         .withColumn("rank_adc", F.row_number().over(w_adc))
         .filter(F.col("rank_adc") <= IVFPQ_RERANK_R)
@@ -2932,11 +2946,10 @@ def q168_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_pq_shared_residual), which since r17 trains from parquet ONCE PER
     INVOCATION (the cross-invocation memo is gone — q166/q167's
     wording); the coarse stage is the same pinned assignment q167's
-    builder produces within one invocation. with_flat=False
-    (r17): this lane's declared computation has no flat-PQ stage (no
-    flat CTE in its oracle twin), so the flat train+encode the shared
-    builder used to run here was built and never read."""
-    st = _pq_shared_residual(spark, sf_dir, with_flat=False)
+    builder produces within one invocation. This lane's declared
+    computation has no flat-PQ stage (no flat CTE in its oracle twin),
+    so the builder trains no flat codebook."""
+    st = _pq_shared_residual(spark, sf_dir)
     emb, nv, cent = st["emb"], st["nv"], st["cent"]
     cu = st["cu"]  # (cid, c_unit), zero-safe — the residual frame's own
     index = (
@@ -2975,10 +2988,7 @@ def q168_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r̂, which is NEITHER the L2 law nor the inner-product law and
     # zeroed every LUT in a query's own cell since the audited
     # queries double as centroids on this corpus)
-    sqdist = F.expr(
-        "aggregate(zip_with(s, c, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
+    sqdist = F.expr(_sqdist_sql("s", "c"))
     rlut_rows = (
         _pq_subvecs(qcell, keys=("query_id", "list_id"))
         .join(F.broadcast(rcb), "m")
@@ -3002,7 +3012,7 @@ def q168_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(index, "list_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
-            "query_id", "neighbor_id", F.expr(_ADC_EXPR).alias("adc_dist")
+            "query_id", "neighbor_id", F.expr(_adc_sql("lut", "codes")).alias("adc_dist")
         )
         .withColumn("rank_adc", F.row_number().over(w_adc))
         .filter(F.col("rank_adc") <= IVFPQ_RERANK_R)
@@ -3143,6 +3153,72 @@ adc_ranked AS (
 # ------------------------------------------------------------------ q174
 
 
+# the packed coarse-centroid struct q174 broadcasts: the cosine argmax
+# and probe ranking read (cid, c_emb, c_nrm) (_cos_sims_sql), the
+# residual reads c_unit
+_Q174_CENT_FIELDS = ["cid", "c_emb", "c_nrm", "c_unit"]
+# the index keeps the raw embedding of its first rows only: the K
+# coarse centroids and the PQ_NQ audited queries
+_Q174_RAW_ROWS = max(N_CENTROIDS, PQ_NQ)
+
+
+def _q174_cent(rows: DataFrame) -> DataFrame:
+    """(cid, c_emb, c_nrm, c_unit): the K coarse centroids — the first
+    K rows' raw embeddings (q167's seed law) — with the zero-safe norm
+    the cosine divides by and the unit centroid the residual subtracts
+    (_unit_centroids' law)."""
+    return (
+        rows.filter(F.col("vec_id") < N_CENTROIDS)
+        .select(
+            F.col("vec_id").alias("cid"),
+            F.col("embedding").alias("c_emb"),
+            _safe_nrm(_norm("embedding")).alias("c_nrm"),
+        )
+        .withColumn("c_unit", _unit("c_emb", "c_nrm"))
+    )
+
+
+def _q174_index(emb: DataFrame) -> DataFrame:
+    """(vec_id, cid, n, r, embedding), pinned: the clustered corpus's
+    whole index input in ONE map-side projection over the packed
+    centroids — the coarse cell by the _cos_argmax_sql law
+    (_argmax_cosine_packed's), the zero-safe unit vector n
+    (_normalized_corpus's law), and the residual r = n − c_unit[cid]
+    (_pq_shared_residual's law). `embedding` stays only on the first
+    _Q174_RAW_ROWS rows (NULL elsewhere), so serving reads the
+    centroids and the queries off this pin instead of re-deriving the
+    fixture. Both codebooks train off this frame and the serving pass
+    encodes and scores it."""
+    folded = _packed_fold(
+        emb.withColumn("_enrm", _safe_nrm(_norm("embedding"))),
+        _q174_cent(emb),
+        _Q174_CENT_FIELDS,
+        _cos_argmax_sql,
+    )
+    return (
+        folded.select(
+            "vec_id",
+            (-F.col("_best.ncid")).cast("bigint").alias("cid"),
+            _unit("embedding", "_enrm").alias("n"),
+            "cents",
+            F.when(F.col("vec_id") < _Q174_RAW_ROWS, F.col("embedding")).alias(
+                "embedding"
+            ),
+        )
+        .select(
+            "vec_id",
+            "cid",
+            "n",
+            F.expr(
+                "zip_with(n, element_at(filter(cents, c -> c.cid = cid), 1).c_unit,"
+                " (x, y) -> x - y)"
+            ).alias("r"),
+            "embedding",
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
 def q174_ivfadc_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual vs flat ADC on the CLUSTERED fixture (VERDICT r15 item
     6): q168 measured residual encoding at parity with flat ADC
@@ -3151,10 +3227,11 @@ def q174_ivfadc_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     This lane derives a deterministic mixture-of-clusters corpus from
     the embeddings table (_pq_clustered_emb:
     CLUSTERED_SCALE·center(i % K) + CLUSTERED_EPS·emb_i[:RANK] —
-    tight, LOW-RANK within-cluster spread) and runs BOTH ADC
-    serving paths on it, ADC-as-is (no re-rank — the re-rank would
-    mask exactly the difference under test): q167's flat-code path and
-    q168's residual-code path, identical coarse probes, identical
+    tight, LOW-RANK within-cluster spread) and scores BOTH ADC paths on
+    it, ADC-as-is (no re-rank — the re-rank would mask exactly the
+    difference under test): flat codes ranked by descending integer
+    dot (q167's statistic) and residual codes by ascending integer
+    squared distance (q168's), identical coarse probes, identical
     budgets. Per query it reports both hit counts vs exact full-corpus
     cosine, both means, and `residual_wins` = (mean_res > mean_flat) —
     the paper's claim as a GATED column, not prose.
@@ -3167,145 +3244,146 @@ def q174_ivfadc_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean_res 0.58 vs mean_flat 0.29 — gated by the pytest's
     mean_res >= mean_flat + 0.1 margin.)
 
-    All training state is the per-invocation variant-keyed build
-    (_pq_shared_residual(variant="clustered")) — its state dict is
-    this invocation's own, never mixed with the base corpus's."""
-    st = _pq_shared_residual(spark, sf_dir, variant="clustered")
-    emb, nv, cent = st["emb"], st["nv"], st["cent"]
-    q = emb.filter(F.col("vec_id") < PQ_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    Build: ONE pinned (vec_id, cid, n, r) frame (_q174_index, which
+    also keeps the raw embeddings of the centroid and query rows); the
+    flat (n) and residual (r) codebooks train off it concurrently. No
+    code table is pinned.
+
+    Serving is one corpus pass, the distributed top-k shape (score
+    locally, keep a per-partition top-k, merge once): the PQ_NQ query
+    rows meet ONE broadcast state row (packed centroids + both packed
+    codebooks) and get, map-side, their N_PROBE probes (the first
+    entries of the sorted (cosine, −cid) array — the window's order),
+    their flat LUT and one residual LUT per probed list (_pq_lut_sql).
+    Each corpus row is encoded on the fly under both codebooks
+    (_pq_code_sql) and paired with every query: the pair always emits
+    its exact cosine key, and, when the neighbor sits in a probed list,
+    its flat and residual ADC keys. One row_number window over
+    (query_id, kind) ranks all three — Spark places a partial
+    WindowGroupLimit below its single exchange, so the shuffle carries
+    at most partitions × PQ_NQ × 3 × PQ_TOPK rows at any corpus size —
+    and one groupBy(query_id) counts both hit sets by intersection.
+
+    Jobs per call at sf0.01 (concurrent thunks run serially so each
+    job is attributed to one step), before → after:
+
+        corpus load + clustered-corpus, nv, cent,
+          coarse-assignment and residual pins   4+1+1+3+5 → 1+7
+        flat codebook                                   6 → 6
+        residual codebook                               8 → 6
+        flat and residual code pins                   4+4 → 0
+        exact pin + per_q pin + result          3+30+5 → 11
+        total                                          75 → 31
+
+    At sf0.001 the count is 31 at local[2], local[4] and local[8];
+    tests/test_job_ceilings.py holds it.
+
+    All training state is this invocation's own (no cross-invocation
+    memo)."""
+    index = _q174_index(_pq_clustered_emb(spark, sf_dir))
+    cb, rcb = concurrent(
+        lambda: _pq_column_codebook(index, "n"),
+        lambda: _pq_column_codebook(index, "r"),
     )
-    probes = _ivf_probes(q, cent)
-    # ---- flat path (q167's serving join, ADC-as-is) ----
-    index_f = (
-        st["assigned"]
-        .join(st["codes"], "vec_id")
+    # both packed codebooks in one row: the corpus side encodes with it,
+    # and the query state row (plus the packed centroids) reuses its
+    # broadcast
+    codebooks = _pq_pack_codebook(cb, "fcb").crossJoin(
+        F.broadcast(_pq_pack_codebook(rcb, "rcb"))
+    )
+    state = (
+        _q174_cent(index)
+        .agg(F.collect_list(F.struct(*_Q174_CENT_FIELDS)).alias("cents"))
+        .crossJoin(F.broadcast(codebooks))
+    )
+    # per query: probes, the flat LUT, and one residual LUT per probed
+    # list p (the query mapped into that cell's residual space,
+    # rq = qn − c_unit[p])
+    rq = (
+        "zip_with(qn, element_at(filter(cents, c -> c.cid = p), 1).c_unit,"
+        " (x, y) -> x - y)"
+    )
+    qstate = (
+        index.filter(F.col("vec_id") < PQ_NQ)
+        .withColumn("_enrm", _safe_nrm(_norm("embedding")))
+        .crossJoin(F.broadcast(state))
         .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("cid").alias("list_id"),
-            "codes",
+            F.col("vec_id").alias("query_id"),
+            F.col("n").alias("qn"),
+            F.expr(
+                f"transform(slice(sort_array({_cos_sims_sql('cents')}, false),"
+                f" 1, {N_PROBE}), p -> -p.ncid)"
+            ).alias("probes"),
+            "cents",
+            "fcb",
+            "rcb",
         )
-    )
-    q_lut = _pq_query_luts(nv, st["cb"])
-    w_desc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id")
-    )
-    ftop = (
-        F.broadcast(probes.join(q_lut.drop("qn"), "query_id"))
-        .join(index_f, "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.expr(_ADC_EXPR).alias("adc_score"))
-        .withColumn("r", F.row_number().over(w_desc))
-        .filter(F.col("r") <= PQ_TOPK)
-        .select(F.col("query_id").alias("fqid"), F.col("neighbor_id").alias("fid"))
-    )
-    # ---- residual path (q168's serving join, ADC-as-is) ----
-    cu = st["cu"]
-    index_r = (
-        st["res"]
-        .select("vec_id", "cid")
-        .join(st["rcodes"], "vec_id")
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("cid").alias("list_id"),
-            "codes",
-        )
-    )
-    nv_q = nv.filter(F.col("vec_id") < PQ_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("n").alias("qn")
-    )
-    qcell = (
-        probes.join(nv_q, "query_id")
-        .join(F.broadcast(cu.withColumnRenamed("cid", "list_id")), "list_id")
         .select(
             "query_id",
-            "list_id",
-            F.expr("zip_with(qn, c_unit, (x, y) -> x - y)").alias("n"),
+            "qn",
+            "probes",
+            F.expr(_pq_lut_sql("qn", "fcb", _dot_sql)).alias("flut"),
+            F.expr(
+                f"transform(probes, p -> {_pq_lut_sql(rq, 'rcb', _sqdist_sql)})"
+            ).alias("rluts"),
         )
     )
-    sqdist = F.expr(
-        "aggregate(zip_with(s, c, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+    coded = index.crossJoin(F.broadcast(codebooks)).select(
+        F.col("vec_id").alias("neighbor_id"),
+        "cid",
+        "n",
+        F.expr(_pq_code_sql("n", "fcb")).alias("fcode"),
+        F.expr(_pq_code_sql("r", "rcb")).alias("rcode"),
     )
-    rlut_rows = (
-        _pq_subvecs(qcell, keys=("query_id", "list_id"))
-        .join(F.broadcast(st["rcb"]), "m")
-        .select(
-            "query_id",
-            "list_id",
-            "m",
-            "cid",
-            F.floor(sqdist * PQ_LUT_SCALE).cast("bigint").alias("wi"),
+    # kind 0: exact cosine (descending), 1: flat ADC dot (descending),
+    # 2: residual ADC distance (ascending) — one ascending key for all
+    # three; the integer ADC sums are exact in DOUBLE (< 2^53)
+    j = "CAST(array_position(probes, cid) AS INT)"
+    keys = F.expr(
+        f"concat(array(named_struct('kind', 0, 'key', -({_UNIT_DOT_SQL}))),"
+        f" IF({j} > 0, array("
+        f"named_struct('kind', 1, 'key', -CAST({_adc_sql('flut', 'fcode')} AS DOUBLE)),"
+        f" named_struct('kind', 2, 'key',"
+        f" CAST({_adc_sql(f'element_at(rluts, {j})', 'rcode')} AS DOUBLE))),"
+        f" array()))"
+    )
+    w = Window.partitionBy("query_id", "kind").orderBy("key", "neighbor_id")
+    top = (
+        coded.crossJoin(F.broadcast(qstate))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", F.explode(keys).alias("k"))
+        .select("query_id", "neighbor_id", "k.kind", "k.key")
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= PQ_TOPK)
+    )
+
+    def hits(kind: int) -> Column:
+        return F.collect_list(
+            F.when(F.col("kind") == kind, F.col("neighbor_id"))
         )
-    )
-    w_asc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    rtop = (
-        F.broadcast(_pq_pack_lut_by(rlut_rows, ("query_id", "list_id")))
-        .join(index_r, "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.expr(_ADC_EXPR).alias("adc_dist"))
-        .withColumn("r", F.row_number().over(w_asc))
-        .filter(F.col("r") <= PQ_TOPK)
-        .select(F.col("query_id").alias("rqid"), F.col("neighbor_id").alias("rid"))
-    )
-    # ---- exact baseline + dual hit counts ----
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.col("cos_score").desc(), F.col("neighbor_id")
-    )
-    exact = (
-        F.broadcast(nv_q)
-        .crossJoin(nv.withColumnRenamed("vec_id", "neighbor_id"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.expr(_UNIT_DOT_SQL).alias("cos_score"))
-        .withColumn("rank", F.row_number().over(w_cos))
-        .filter(F.col("rank") <= PQ_TOPK)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # four consumers below
-    )
-    hits_f = exact.join(
-        ftop,
-        (exact.query_id == ftop.fqid) & (exact.neighbor_id == ftop.fid),
-        "left_semi",
-    )
-    hits_r = exact.join(
-        rtop,
-        (exact.query_id == rtop.rqid) & (exact.neighbor_id == rtop.rid),
-        "left_semi",
-    )
+
     per_q = (
-        exact.select("query_id")
-        .distinct()
-        .join(
-            hits_f.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits_flat")),
-            "query_id",
-            "left",
-        )
-        .join(
-            hits_r.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits_res")),
-            "query_id",
-            "left",
-        )
+        top.groupBy("query_id")
+        .agg(hits(0).alias("ex"), hits(1).alias("fl"), hits(2).alias("rs"))
         .select(
             "query_id",
-            F.coalesce("n_hits_flat", F.lit(0)).alias("n_hits_flat"),
-            F.coalesce("n_hits_res", F.lit(0)).alias("n_hits_res"),
+            F.size(F.array_intersect("ex", "fl")).cast("bigint").alias("n_hits_flat"),
+            F.size(F.array_intersect("ex", "rs")).cast("bigint").alias("n_hits_res"),
         )
-        .localCheckpoint(eager=True)  # result + the mean agg below
     )
-    stats = per_q.agg(
-        (
-            F.sum("n_hits_flat").cast("double")
-            / (F.count(F.lit(1)) * PQ_TOPK).cast("double")
-        ).alias("mean_flat"),
-        (
-            F.sum("n_hits_res").cast("double")
-            / (F.count(F.lit(1)) * PQ_TOPK).cast("double")
-        ).alias("mean_res"),
-    )
+
+    def mean(col: str) -> Column:
+        return F.sum(col).cast("double") / (F.count(F.lit(1)) * PQ_TOPK).cast("double")
+
+    # the means and the per-query rows in ONE aggregate over the PQ_NQ
+    # per_q rows, re-expanded: no second scan of per_q for the means
     return (
-        per_q.crossJoin(F.broadcast(stats))
+        per_q.agg(
+            F.collect_list(F.struct("query_id", "n_hits_flat", "n_hits_res")).alias("qs"),
+            mean("n_hits_flat").alias("mean_flat"),
+            mean("n_hits_res").alias("mean_res"),
+        )
+        .select(F.inline("qs"), "mean_flat", "mean_res")
         .select(
             "query_id",
             "n_hits_flat",

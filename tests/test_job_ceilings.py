@@ -1,14 +1,17 @@
-"""Job ceilings of the import → store → export round trip.
+"""Job ceilings of the import → store → export round trip and of the
+heaviest lane, q174.
 
 The scheduler's job-id delta over one call is a machine-independent
-count: the same at `local[4]` and `local[8]`. Each ceiling is the count
-the round trip reaches today, so a change that adds a Spark action or an
-AQE stage to one of these calls fails here, on any machine, instead of
-only showing up as a slower benchmark pass.
+count: the same at `local[2]`, `local[4]` and `local[8]`. Each ceiling
+is the count the call reaches today, so a change that adds a Spark
+action or an AQE stage to one of these calls fails here, on any machine,
+instead of only showing up as a slower benchmark pass.
 """
 
 from __future__ import annotations
 
+from sms_db_spark.operators.similarity import PQ_NQ
+from sms_db_spark.plans import registry
 from sms_db_spark.sinks.sqlite_sink import read_store_sqlite, write_store_sqlite
 from sms_db_spark.sinks.xml_export import export_xml
 from sms_db_spark.sources.canonical import finalize_import
@@ -22,6 +25,9 @@ CEILINGS = {
     "export_xml": 12,
     "finalize_import into a store": 11,
 }
+# q174_ivfadc_clustered at sf0.001: the call (index pin, two codebooks)
+# plus the collect of its serving pass
+Q174_CEILING = 31
 
 
 def _next_job_id(spark) -> int:
@@ -50,3 +56,14 @@ def test_round_trip_job_ceilings(spark, tmp_path):
     assert (again.inserted, again.duplicates) == (0, 5)
     over = {k: (n, CEILINGS[k]) for k, n in jobs.items() if n > CEILINGS[k]}
     assert not over, f"jobs over their ceiling (count, ceiling): {over}"
+
+
+def test_q174_job_ceiling(spark):
+    """q174 builds its index and both codebooks, then serves all three
+    rankings in one pass: one call and its collect stay within
+    Q174_CEILING jobs."""
+    start = _next_job_id(spark)
+    rows = registry()["q174_ivfadc_clustered"].fn(spark, "/root/testdata/sf0.001").collect()
+    n = _next_job_id(spark) - start
+    assert len(rows) == PQ_NQ
+    assert n <= Q174_CEILING, f"q174 launched {n} jobs, ceiling {Q174_CEILING}"

@@ -141,3 +141,76 @@ def test_pq_shared_builds_fresh_state_per_invocation(spark, tmp_path):
     assert s1["nv"].count() == s2["nv"].count() == 4
     # the module holds no cache structure at all
     assert not hasattr(S, "_PQ_SHARED_CACHE")
+
+
+def test_map_side_lut_and_encoder_skip_a_dropped_code(spark):
+    # the map-side twin of the dropout test above: a codebook missing
+    # (m=1, cid=3) packs (_pq_pack_codebook) to a NULL slot, the
+    # per-query LUTs (_pq_lut_sql, flat and residual weights) read 0
+    # there, and the encoder (_pq_code_sql) never emits that code —
+    # even for vectors whose subspace 1 sits exactly on the dropped
+    # code's centroid
+    from sms_db_spark.operators.similarity import (
+        PQ_CODES,
+        _dot_sql,
+        _pq_code_sql,
+        _pq_lut_sql,
+        _pq_pack_codebook,
+        _sqdist_sql,
+    )
+
+    def dropped(m, cid):
+        return m == 1 and cid == 3
+
+    def fold(terms):  # the kernels' left-to-right double fold
+        acc = 0.0
+        for t in terms:
+            acc += t
+        return acc
+
+    rng = np.random.RandomState(11)
+    cbv = rng.randn(PQ_M, PQ_CODES, PQ_DSUB)
+    cb = spark.createDataFrame(
+        [
+            (m, cid, [float(x) for x in cbv[m, cid]])
+            for m in range(PQ_M)
+            for cid in range(PQ_CODES)
+            if not dropped(m, cid)
+        ],
+        "m int, cid long, c array<double>",
+    )
+    vecs = rng.randn(6, DIM)
+    vecs[:, PQ_DSUB : 2 * PQ_DSUB] = cbv[1, 3]
+    nv = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, n array<double>",
+    )
+    got = (
+        nv.crossJoin(_pq_pack_codebook(cb))
+        .select(
+            "n",
+            F.expr(_pq_code_sql("n", "cbd")).alias("codes"),
+            F.expr(_pq_lut_sql("n", "cbd", _dot_sql)).alias("flut"),
+            F.expr(_pq_lut_sql("n", "cbd", _sqdist_sql)).alias("rlut"),
+        )
+        .collect()
+    )
+    assert len(got) == len(vecs)
+    for r in got:
+        assert len(r.flut) == len(r.rlut) == PQ_M * PQ_CODES
+        for m in range(PQ_M):
+            s = r.n[m * PQ_DSUB : (m + 1) * PQ_DSUB]
+            present = [cid for cid in range(PQ_CODES) if not dropped(m, cid)]
+            d2 = {c: ((cbv[m, c] - np.array(s)) ** 2).sum() for c in present}
+            assert r.codes[m] == min(present, key=lambda c: (d2[c], c)), m
+            for cid in range(PQ_CODES):
+                k = m * PQ_CODES + cid
+                if dropped(m, cid):
+                    assert r.flut[k] == r.rlut[k] == 0
+                    continue
+                c = cbv[m, cid]
+                dot = fold(x * float(y) for x, y in zip(s, c))
+                sq = fold((x - float(y)) * (x - float(y)) for x, y in zip(s, c))
+                assert r.flut[k] == int(np.floor(dot * PQ_LUT_SCALE)), k
+                assert r.rlut[k] == int(np.floor(sq * PQ_LUT_SCALE)), k
+        assert r.codes[1] != 3
