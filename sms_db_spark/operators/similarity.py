@@ -555,7 +555,7 @@ def _argmax_cosine_packed(emb: DataFrame, cent: DataFrame) -> DataFrame:
         # zeros at creation (see _safe_nrm): a zero query embedding or
         # zero centroid scores sim 0 instead of throwing under ANSI
         emb.withColumn("_enrm", _safe_nrm(_norm("embedding"))),
-        cent.select("cid", "c_emb", _safe_nrm(_norm("c_emb")).alias("c_nrm")),
+        _cent_fields(cent),
         ["cid", "c_emb", "c_nrm"],
         _cos_argmax_sql,
     )
@@ -567,13 +567,37 @@ def _argmax_cosine_packed(emb: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def _unit_centroids(cent: DataFrame) -> DataFrame:
-    """(cid, c_unit): centroids L2-normalized ONCE (K rows, driver-cheap)
-    so N x K scoring stages rank by a single dot fold — shared by
-    assignment (_assign) and probe-list selection (q133)."""
+# the packed coarse-centroid struct the PQ serving passes broadcast: the
+# cosine argmax and the probe ranking read (cid, c_emb, c_nrm)
+# (_cos_sims_sql), the residual reads c_unit
+_CENT_FIELDS = ["cid", "c_emb", "c_nrm", "c_unit"]
+
+
+def _cent_fields(cent: DataFrame) -> DataFrame:
+    """(cid, c_emb, c_nrm, c_unit) of a (cid, c_emb) centroid frame: the
+    zero-safe norm the cosine divides by (_safe_nrm) and the unit
+    centroid, computed ONCE per centroid (K rows, driver-cheap). THE
+    centroid law: assignment, probing and the residual all read it."""
     return cent.select(
-        "cid", _norm("c_emb").alias("c_nrm"), F.col("c_emb")
-    ).select("cid", _unit("c_emb", "c_nrm").alias("c_unit"))
+        "cid", "c_emb", _safe_nrm(_norm("c_emb")).alias("c_nrm")
+    ).withColumn("c_unit", _unit("c_emb", "c_nrm"))
+
+
+def _packed_cents(cent: DataFrame) -> DataFrame:
+    """ONE row, column `cents`: the centroid frame's _CENT_FIELDS
+    structs, the state a broadcast serving pass probes and maps
+    residuals against."""
+    return _cent_fields(cent).agg(
+        F.collect_list(F.struct(*_CENT_FIELDS)).alias("cents")
+    )
+
+
+def _unit_centroids(cent: DataFrame) -> DataFrame:
+    """(cid, c_unit): centroids L2-normalized ONCE (_cent_fields) so
+    N x K scoring stages rank by a single dot fold — shared by
+    assignment (_assign), probe-list selection (q133) and the residual
+    corpus (q168)."""
+    return _cent_fields(cent).select("cid", "c_unit")
 
 
 def _update(assigned: DataFrame) -> DataFrame:
@@ -1775,28 +1799,20 @@ def _normalized_corpus(emb: DataFrame) -> DataFrame:
     )
 
 
-def _pq_nv(emb: DataFrame) -> DataFrame:
-    """(vec_id, n): the shared zero-safe normalization (so |n| = 1 and
-    the full-vector inner product IS the cosine)."""
-    return _normalized_corpus(emb)
-
-
-def _pq_subvecs(nv: DataFrame, keys: tuple[str, ...] = ("vec_id",)) -> DataFrame:
-    """(*keys, m, s): one row per subspace of the `n` column — the
+def _pq_subvecs(nv: DataFrame) -> DataFrame:
+    """(vec_id, m, s): one row per subspace of the `n` column — the
     reshape that lets ONE keyed pass train all PQ_M codebooks
     (centroids keyed (m, cid)), instead of PQ_M separate corpus scans.
-    Same bytes as the full corpus, map-side slice, no shuffle. keys
-    defaults to the corpus shape; the residual lane (q168) slices
-    per-(query, probed-cell) residuals with a composite key."""
+    Same bytes as the full corpus, map-side slice, no shuffle."""
     return nv.select(
-        *keys,
+        "vec_id",
         F.explode(
             F.expr(
                 f"transform(sequence(0, {PQ_M - 1}), m -> "
                 f"struct(m AS m, slice(n, m * {PQ_DSUB} + 1, {PQ_DSUB}) AS s))"
             )
         ).alias("g"),
-    ).select(*keys, F.col("g.m").alias("m"), F.col("g.s").alias("s"))
+    ).select("vec_id", F.col("g.m").alias("m"), F.col("g.s").alias("s"))
 
 
 def _pq_assign(sub: DataFrame, cb: DataFrame) -> DataFrame:
@@ -1869,36 +1885,13 @@ def _key_packed_sql(entries: str) -> str:
     code from a codebook (_pq_update aggregates only present cids), and
     a position-packed array would then shift every later entry — ADC
     reads of cids past the gap would return the WRONG code's weight
-    (review r14). The packed LUTs (_pq_pack_lut_by) and the packed
-    codebooks (_pq_pack_codebook, hence the encoder and the map-side
-    LUTs) all go through here."""
+    (review r14). The packed codebooks (_pq_pack_codebook) go through
+    here, and with them the encoder (_pq_code_sql) and every LUT
+    (_pq_lut_sql), which is built slot by slot over the packed
+    codebook."""
     return (
         f"transform(sequence(0, {PQ_M * PQ_CODES - 1}), i -> "
         f"element_at(map_from_entries({entries}), CAST(i AS BIGINT)))"
-    )
-
-
-def _pq_pack_lut(lut_rows: DataFrame) -> DataFrame:
-    """(query_id, lut): the per-query (m, cid, wi) rows packed into one
-    DENSE PQ_M x PQ_CODES flat array indexed lut[m*PQ_CODES + cid + 1]
-    (_key_packed_sql). A dropped (m, cid) slot holds 0; it is
-    unreachable anyway (the encoder assigns codes from the SAME
-    codebook, so no vector carries a dropped cid)."""
-    return _pq_pack_lut_by(lut_rows, ("query_id",))
-
-
-def _pq_pack_lut_by(lut_rows: DataFrame, keys: tuple[str, ...]) -> DataFrame:
-    """_pq_pack_lut's key-packed dense array under an arbitrary
-    grouping key (the residual lane packs one LUT per (query, probed
-    cell)); a dropped code's slot reads 0."""
-    entries = (
-        f"collect_list(struct(CAST(m * {PQ_CODES} + cid AS BIGINT) AS k,"
-        f" wi AS v))"
-    )
-    return lut_rows.groupBy(*keys).agg(
-        F.expr(
-            f"transform({_key_packed_sql(entries)}, v -> coalesce(v, CAST(0 AS BIGINT)))"
-        ).alias("lut")
     )
 
 
@@ -1937,9 +1930,10 @@ def _pq_lut_sql(q: str, cbd: str, weight) -> str:
     packed codebook `cbd` (_pq_pack_codebook): slot m*PQ_CODES + cid
     holds floor(weight(q_m, c) * PQ_LUT_SCALE) — weight is _dot_sql
     (flat ADC) or _sqdist_sql (residual ADC) over the query's m-th
-    subspace slice — and a dropped code's slot reads 0, as in
-    _pq_pack_lut. The same floored integers the row-wise LUT join
-    computes, without the explode, join and groupBy."""
+    subspace slice — and a dropped code's slot reads 0 (unreachable:
+    the encoder never emits a dropped code, see _pq_code_sql). Each
+    serving pass builds its query LUTs with it, map-side, on the
+    query rows of its one broadcast state row."""
     s = f"slice({q}, CAST(i DIV {PQ_CODES} AS INT) * {PQ_DSUB} + 1, {PQ_DSUB})"
     return (
         f"transform({cbd}, (e, i) -> coalesce(CAST(floor("
@@ -2024,32 +2018,6 @@ def _pq_encode(nvframe: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
-def _pq_query_luts(nv: DataFrame, cb: DataFrame) -> DataFrame:
-    """(query_id, lut, qn): per-query packed ADC lookup table — PQ_M x
-    PQ_CODES subspace dots floored to 1e-6 ints (PQ_LUT_SCALE) —
-    plus the query's unit vector for the exact-cosine audit side. The
-    query attach stays bounded to the PQ_NQ rows (review r14: joining
-    the unfiltered corpus re-scanned every embedding to keep 10)."""
-    lut_rows = (
-        _pq_subvecs(nv.filter(F.col("vec_id") < PQ_NQ))
-        .join(F.broadcast(cb), "m")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "m",
-            "cid",
-            F.floor(_dot("s", "c") * PQ_LUT_SCALE).cast("bigint").alias("wi"),
-        )
-    )
-    return (
-        _pq_pack_lut(lut_rows)
-        .join(
-            nv.filter(F.col("vec_id") < PQ_NQ).withColumnRenamed("n", "qn"),
-            F.col("query_id") == F.col("vec_id"),
-        )
-        .drop("vec_id")
-    )
-
-
 def _adc_sql(lut: str, codes: str) -> str:
     """The ADC score: PQ_M integer table lookups summed, the code word
     `codes` indexing the key-packed `lut` (cid gaps hold 0 and are
@@ -2060,7 +2028,8 @@ def _adc_sql(lut: str, codes: str) -> str:
     would merely demote a candidate, but q168/q174 rank ASCENDING
     distance, where 0 is the best possible score — a reachable gap
     there would PROMOTE a wrong candidate. tests/test_pq.py pins the
-    dense packing under code dropout for exactly this reason."""
+    dense packing under code dropout (0 at the gap, and no code word
+    addressing it) for exactly this reason."""
     return (
         f"aggregate(sequence(0, {PQ_M - 1}), CAST(0 AS BIGINT),"
         f" (acc, m) -> acc + element_at({lut},"
@@ -2075,6 +2044,113 @@ def _sqdist_sql(a: str, b: str) -> str:
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
         f" CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
     )
+
+
+# ------------------------------------------------------- serving pass
+# Every PQ lane (q166, q167, q168, q174, q177) serves in ONE corpus
+# pass, the distributed top-k shape (score locally, keep a per-partition
+# top-k, merge once): the PQ_NQ query rows meet one broadcast state row
+# and get their probes and LUTs map-side (_pq_queries), each corpus row
+# is paired with every query and emits one (kind, key) struct per
+# ranking it enters, and _top_by_kind ranks all of them in one window.
+
+# the full-vector unit dot of a (qn, n) pair (both _normalized_corpus
+# outputs, so the dot IS cosine): the exact baseline's score and the
+# re-rank's. A SQL string, not a prebuilt Column: F.expr at module level
+# would demand an active SparkContext at import time.
+_UNIT_DOT_SQL = (
+    "aggregate(zip_with(qn, n, (x, y) -> x * y),"
+    " CAST(0 AS DOUBLE), (acc, z) -> acc + z)"
+)
+# the 1-based slot of a neighbor's coarse list `cid` among its query's
+# `probes`, 0 when the list is not probed; a neighbor lives in exactly
+# one list, so a probed pair scores once, against that list's LUT
+_PROBE_SLOT = "CAST(array_position(probes, cid) AS INT)"
+
+
+def _flat_key_sql(lut: str, codes: str) -> str:
+    """The flat ADC ranking key: the integer dot (_adc_sql) negated, so
+    ascending key order is descending similarity. The integer sums are
+    exact in DOUBLE (< 2^53)."""
+    return f"-CAST({_adc_sql(lut, codes)} AS DOUBLE)"
+
+
+def _residual_key_sql(codes: str) -> str:
+    """The residual ADC ranking key: the integer squared distance of
+    `codes` under the LUT of the neighbor's probed list (`rluts`,
+    _residual_luts_sql), ranked ascending as it is."""
+    return f"CAST({_adc_sql(f'element_at(rluts, {_PROBE_SLOT})', codes)} AS DOUBLE)"
+
+
+def _residual_luts_sql(cbd: str) -> str:
+    """A query's residual LUTs, one per probed list p: the query mapped
+    into that cell's residual space, rq = qn − c_unit[p], tabled against
+    the packed residual codebook `cbd` by squared subspace distance —
+    the paper's ADC tables (review r15: a dot of rq with r̂ is neither
+    the L2 nor the inner-product law)."""
+    rq = (
+        "zip_with(qn, element_at(filter(cents, c -> c.cid = p), 1).c_unit,"
+        " (x, y) -> x - y)"
+    )
+    return f"transform(probes, p -> {_pq_lut_sql(rq, cbd, _sqdist_sql)})"
+
+
+def _pq_queries(rows: DataFrame, state: DataFrame) -> DataFrame:
+    """(query_id, qn, probes, *state columns): the PQ_NQ audited query
+    rows of a (vec_id, embedding) frame, each crossed with the ONE
+    broadcast `state` row (packed `cents`, _packed_cents, plus the
+    lane's packed codebooks). qn is the zero-safe unit query
+    (_normalized_corpus's law) and probes its N_PROBE nearest lists by
+    full cosine, map-side: the first N_PROBE entries of the sorted
+    _cos_sims_sql array, whose (sim desc, cid asc) order is the probe
+    window's. Lanes build their LUTs over these columns."""
+    probes = (
+        f"transform(slice(sort_array({_cos_sims_sql('cents')}, false),"
+        f" 1, {N_PROBE}), p -> -p.ncid)"
+    )
+    return (
+        rows.filter(F.col("vec_id") < PQ_NQ)
+        .withColumn("_enrm", _safe_nrm(_norm("embedding")))
+        .crossJoin(F.broadcast(state))
+        .select(
+            F.col("vec_id").alias("query_id"),
+            _unit("embedding", "_enrm").alias("qn"),
+            F.expr(probes).alias("probes"),
+            *state.columns,
+        )
+    )
+
+
+def _top_by_kind(pairs: DataFrame, keys: Column, cut: int) -> DataFrame:
+    """THE ranking of a serving pass: every (query_id, neighbor_id ≠
+    query_id) pair of `pairs` explodes `keys`, an array of (kind, key,
+    …) structs (one per ranking the pair enters), and ONE row_number
+    window over (query_id, kind), ordered by (key, neighbor_id), keeps
+    the rows with rk ≤ cut. Spark plans a partial WindowGroupLimit
+    below the window's single exchange, so the shuffle carries at most
+    partitions × PQ_NQ × kinds × cut rows at any corpus size."""
+    w = Window.partitionBy("query_id", "kind").orderBy("key", "neighbor_id")
+    return (
+        pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", F.explode(keys).alias("k"))
+        .select("query_id", "neighbor_id", "k.*")
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= cut)
+    )
+
+
+def _hits(kind: int) -> Column:
+    """The neighbor ids of a _top_by_kind frame's `kind` ranking with
+    rk ≤ PQ_TOPK, collected per group (the top-k answer set)."""
+    return F.collect_list(
+        F.when((F.col("kind") == kind) & (F.col("rk") <= PQ_TOPK), F.col("neighbor_id"))
+    )
+
+
+def _mean_recall(n_hits: str) -> Column:
+    """The mean recall@PQ_TOPK of a per-query hit-count column, as an
+    aggregate: one division of exact integer counts."""
+    return F.sum(n_hits).cast("double") / (F.count(F.lit(1)) * PQ_TOPK).cast("double")
 
 
 # ---------------------------------------------------------- shared state
@@ -2155,7 +2231,7 @@ def _pq_shared(spark: SparkSession, sf_dir: str) -> dict:
     # because driver code calls them sequentially; the K-row cent job
     # back-fills executors the nv job leaves idle)
     nv_f, cent_f = concurrent(
-        lambda: _pq_nv(emb).localCheckpoint(eager=True),
+        lambda: _normalized_corpus(emb).localCheckpoint(eager=True),
         lambda: (
             emb.filter(F.col("vec_id") < N_CENTROIDS)
             .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb"))
@@ -2165,74 +2241,57 @@ def _pq_shared(spark: SparkSession, sf_dir: str) -> dict:
     return {"emb": emb, "nv": nv_f, "cent": cent_f}
 
 
-def _pq_shared_flat(
-    spark: SparkSession,
-    sf_dir: str,
-    with_assigned: bool = True,
-) -> dict:
-    """Adds the FLAT-PQ artifacts to the shared state: `cb` (trained
-    codebooks, pinned by _pq_lloyd) and `codes` (the encoded corpus,
-    pinned — the (vec_id, codes) table q166 audits and q167 serves
-    from). `assigned` (coarse IVF list per vector, pinned) is built
-    only for the IVF consumers (with_assigned; q166's flat-ADC audit
-    never reads it — r17 dropped its wasted corpus fold there). The
+def _pq_shared_flat(spark: SparkSession, sf_dir: str) -> dict:
+    """Adds the flat IVF-PQ index to the shared state (q167, q177): `cb`
+    (trained codebooks, pinned by _pq_lloyd), `codes` (the encoded
+    corpus, pinned) and `assigned` (the coarse IVF list per vector,
+    pinned) — the explicit tables q177 commits to the store. The
     codebook→codes chain and the coarse-assignment fold are
     independent given (nv, cent): they build as concurrent jobs."""
     st = _pq_shared(spark, sf_dir)
-    sub = _pq_subvecs(st["nv"])
 
     def build_codes():
-        st["cb"] = _pq_train(st["emb"], sub)
+        st["cb"] = _pq_train(st["emb"], _pq_subvecs(st["nv"]))
         return _pq_encode(st["nv"], st["cb"]).localCheckpoint(eager=True)
 
-    def build_assigned():
-        return (
+    st["codes"], st["assigned"] = concurrent(
+        build_codes,
+        lambda: (
             _argmax_cosine_packed(st["emb"], st["cent"])
             .select("vec_id", "cid")
             .localCheckpoint(eager=True)
-        )
-
-    if with_assigned:
-        st["codes"], st["assigned"] = concurrent(build_codes, build_assigned)
-    else:
-        st["codes"] = build_codes()
+        ),
+    )
     return st
 
 
 def _pq_shared_residual(spark: SparkSession, sf_dir: str) -> dict:
-    """Adds the RESIDUAL artifacts (q168): `res` (the pinned residual
-    corpus n − unit(c_cid), keyed by coarse cell), `rcb` (residual
-    codebooks trained over it), and `rcodes` (the residual-encoded
-    corpus, pinned), on top of the pinned coarse assignment. q168's
-    declared computation (its oracle twin's CTE list) has no flat-PQ
-    stage, so no flat codebook is built here."""
+    """Adds the RESIDUAL artifacts (q168) on top of the pinned coarse
+    assignment: `res` (vec_id, cid, n, r), the pinned corpus with its
+    unit vector n and its residual r = n − unit(c_cid), and `rcb`, the
+    residual codebooks trained over r. The serving pass encodes r on
+    the fly, so no code table is pinned. q168's declared computation
+    (its oracle twin's CTE list) has no flat-PQ stage, so no flat
+    codebook is built here."""
     st = _pq_shared(spark, sf_dir)
     st["assigned"] = (
         _argmax_cosine_packed(st["emb"], st["cent"])
         .select("vec_id", "cid")
         .localCheckpoint(eager=True)
     )
-    # (cid, c_unit), zero-safe — stored so the serving body (q168's
-    # query-residual mapping) uses the SAME frame the residual corpus
-    # was built from (review r16: three independent re-derivations of
-    # one law)
-    st["cu"] = cu = _unit_centroids(st["cent"])
     residual = F.expr("zip_with(n, c_unit, (x, y) -> x - y)")
-    # PINNED: every Lloyd pass, the encoder, and the index build
-    # consume this frame — without the pin each _pq_assign scan
-    # re-executed the packed coarse-assignment fold plus the
-    # normalization join (pre-pin the sf0.001 selfcheck ran 115 s)
+    # PINNED: every Lloyd pass and the serving pass consume this frame
+    # — without the pin each _pq_assign scan re-executed the packed
+    # coarse-assignment fold plus the normalization join (pre-pin the
+    # sf0.001 selfcheck ran 115 s)
     st["res"] = (
         st["nv"]
         .join(st["assigned"], "vec_id")
-        .join(F.broadcast(cu), "cid")
-        .select("vec_id", "cid", residual.alias("n"))
+        .join(F.broadcast(_unit_centroids(st["cent"])), "cid")
+        .select("vec_id", "cid", "n", residual.alias("r"))
         .localCheckpoint(eager=True)
     )
-    st["rcb"] = _pq_column_codebook(st["res"], "n")
-    st["rcodes"] = _pq_encode(
-        st["res"].select("vec_id", "n"), st["rcb"]
-    ).localCheckpoint(eager=True)
+    st["rcb"] = _pq_column_codebook(st["res"], "r")
     return st
 
 
@@ -2242,56 +2301,53 @@ def q166_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Training: hashed-sample seeds (q124's law — the PQ_CODES vectors
     with the smallest md5(vec_id), cid = hash-order rank, a pure
     function of the id set), then PQ_ITERS Lloyd rounds over the
-    subspace-exploded corpus; codebooks are localCheckpointed each
-    round (K x PQ_M rows — the q86 lineage cut). Encoding collapses to
-    PQ_M small ints per vector. Serving: each query precomputes its
-    PQ_M x PQ_CODES lookup table of subspace dots (floored to 1e-6
-    ints), and every candidate scores as PQ_M table lookups summed —
-    the LUT rides the same broadcast as the query. The audit ranks the
-    integer ADC score against the exact cosine on ONE scored frame
-    (two window ranks, the q128 shape) and reports overlap@k — the
-    number that tells you whether a 64x-compressed index is safe to
-    serve as-is or needs the standard full-precision re-rank of the
-    ADC top candidates. Exact scoring is a bounded baseline (PQ_NQ broadcast
-    queries), as documented for q48/q128; the production path routes
-    candidates through IVF (q123) first.
+    subspace-exploded corpus; the final codebook is pinned (K x PQ_M
+    rows — the q86 lineage cut) and packed into one broadcast row.
 
-    Training/encoding pull from the per-invocation build
-    (_pq_shared_flat; no cross-invocation memo since r17): the
-    codebooks and code table are index-build artifacts, pinned for
-    this invocation — this body is the SERVING + audit path."""
-    st = _pq_shared_flat(spark, sf_dir, with_assigned=False)
-    nv, cb = st["nv"], st["cb"]
-    # encoded corpus with n carried for the exact-cosine audit side
-    enc = st["codes"].join(nv, "vec_id")
-    q_lut = _pq_query_luts(nv, cb)
-    scored = (
-        F.broadcast(q_lut)
-        .crossJoin(enc.withColumnRenamed("vec_id", "neighbor_id"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
+    Serving is one corpus pass (the serving-pass block above): each of
+    the PQ_NQ queries gets its PQ_M x PQ_CODES lookup table of subspace
+    dots (floored to 1e-6 ints, _pq_lut_sql) map-side; each corpus row
+    is encoded on the fly (_pq_code_sql, PQ_M small ints) and paired
+    with every query, scoring as PQ_M table lookups summed. Every pair
+    emits its exact-cosine key and its ADC key, one window ranks both
+    (_top_by_kind), and n_overlap = |exact top-k ∩ ADC top-k| per query
+    — the number that tells you whether a 64x-compressed index is safe
+    to serve as-is or needs the standard full-precision re-rank of the
+    ADC top candidates. Exact scoring is a bounded baseline (PQ_NQ
+    broadcast queries), as documented for q48/q128; the production path
+    routes candidates through IVF (q167) first.
+
+    All training state is this invocation's own (_pq_shared; no
+    cross-invocation memo since r17)."""
+    st = _pq_shared(spark, sf_dir)
+    nv = st["nv"]
+    cbd = _pq_pack_codebook(_pq_train(st["emb"], _pq_subvecs(nv)))
+    queries = (
+        nv.filter(F.col("vec_id") < PQ_NQ)
+        .crossJoin(F.broadcast(cbd))
         .select(
-            "query_id",
-            "neighbor_id",
-            F.expr(_adc_sql("lut", "codes")).alias("adc_score"),
-            # the shared unit-dot law (defined below with the serving
-            # helpers; resolved at call time)
-            F.expr(_UNIT_DOT_SQL).alias("cos_score"),
+            F.col("vec_id").alias("query_id"),
+            F.col("n").alias("qn"),
+            F.expr(_pq_lut_sql("n", "cbd", _dot_sql)).alias("lut"),
         )
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id")
+    coded = nv.crossJoin(F.broadcast(cbd)).select(
+        F.col("vec_id").alias("neighbor_id"),
+        "n",
+        F.expr(_pq_code_sql("n", "cbd")).alias("codes"),
     )
-    we = Window.partitionBy("query_id").orderBy(
-        F.col("cos_score").desc(), F.col("neighbor_id")
+    # kind 0: exact cosine, 1: ADC dot — both descending
+    keys = F.expr(
+        f"array(named_struct('kind', 0, 'key', -({_UNIT_DOT_SQL})),"
+        f" named_struct('kind', 1, 'key', {_flat_key_sql('lut', 'codes')}))"
     )
     return (
-        scored.withColumn("rq", F.row_number().over(wq))
-        .withColumn("re", F.row_number().over(we))
+        _top_by_kind(coded.crossJoin(F.broadcast(queries)), keys, PQ_TOPK)
         .groupBy("query_id")
         .agg(
-            F.sum(
-                ((F.col("rq") <= PQ_TOPK) & (F.col("re") <= PQ_TOPK)).cast("bigint")
-            ).alias("n_overlap")
+            F.size(F.array_intersect(_hits(0), _hits(1)))
+            .cast("bigint")
+            .alias("n_overlap")
         )
         .select(
             "query_id",
@@ -2346,8 +2402,9 @@ def _sql_pq_update(assigned: str) -> str:
 
 def _pq_train_ctes() -> str:
     """THE PQ training/encoding/LUT CTE block (no WITH keyword),
-    shared by the q166 and q167 oracles in lockstep with the Spark
-    side's _pq_train/_pq_encode/_pq_query_luts: nv (zero-safe
+    shared by the q166, q167 and q174 oracles in lockstep with the
+    Spark side's _pq_train, its encoder (_pq_code_sql) and its
+    map-side LUTs (_pq_lut_sql with _dot_sql): nv (zero-safe
     normalized corpus), sub (subspace explode), seed -> cb0 -> PQ_ITERS
     unrolled assign/update rounds -> af (final per-subspace codes) and
     `lut` (per-query floored-int subspace dots against the final
@@ -2438,189 +2495,108 @@ IVFPQ_RECALL_TARGET = 0.7
 # codes-in-RAM / floats-cold serving trade)
 IVFPQ_RERANK_R = 3 * PQ_TOPK
 
-# the full-vector unit dot used by the re-rank and exact-baseline
-# stages (qn/n are _normalized_corpus outputs, so the dot IS cosine).
-# A SQL string, not a prebuilt Column: F.expr at module level would
-# demand an active SparkContext at import time.
-_UNIT_DOT_SQL = (
-    "aggregate(zip_with(qn, n, (x, y) -> x * y),"
-    " CAST(0 AS DOUBLE), (acc, z) -> acc + z)"
-)
+def _serving_audit(pairs: DataFrame, adc_key: str) -> DataFrame:
+    """THE dual-recall serving audit of the IVF-PQ lanes (q167, q168,
+    q177), in one corpus pass: every (query, neighbor) pair of `pairs`
+    (columns query_id, neighbor_id, qn, n, cid, probes and whatever the
+    SQL `adc_key` reads) emits two keys, both carrying the exact unit
+    dot: kind 0, −cos, always; kind 1, the ADC key, only when the
+    neighbor sits in a probed list (_PROBE_SLOT). ONE
+    window ranks both at cut IVFPQ_RERANK_R (_top_by_kind), and one
+    groupBy(query_id) takes the exact top-PQ_TOPK, the ADC top-PQ_TOPK
+    (served as-is) and the re-ranked answer — the first PQ_TOPK of the
+    ADC top-R window by (−cos, neighbor_id), the standard full-precision
+    re-rank — then counts both answer sets' overlap with the exact one
+    (n_hits re-ranked, n_hits_adc as-is). mean_recall (re-ranked) and
+    the meets_target verdict vs IVFPQ_RECALL_TARGET ride the same
+    one-row aggregate as the per-query rows."""
 
+    def key(kind: int, key_sql: str) -> str:
+        return f"named_struct('kind', {kind}, 'key', {key_sql}, 'cos', cos)"
 
-def _ivf_probes(q: DataFrame, cent: DataFrame) -> DataFrame:
-    """(query_id, list_id): each query's N_PROBE nearest coarse cells
-    by full cosine — a K-row broadcast fold + a per-query window.
-    Shared by the flat (q167) and residual (q168) serving lanes."""
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("q_sim").desc(), F.col("cid")
+    keys = F.expr(
+        f"concat(array({key(0, '-cos')}),"
+        f" IF({_PROBE_SLOT} > 0, array({key(1, adc_key)}), array()))"
     )
-    return (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "cid", cosine("q_emb", "c_emb").alias("q_sim"))
-        .withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= N_PROBE)
-        .select("query_id", F.col("cid").alias("list_id"))
+    top = _top_by_kind(
+        pairs.withColumn("cos", F.expr(_UNIT_DOT_SQL)), keys, IVFPQ_RERANK_R
     )
-
-
-def _exact_topk(nv: DataFrame, nv_q: DataFrame) -> DataFrame:
-    """The exact full-corpus top-PQ_TOPK baseline (bounded broadcast of
-    the PQ_NQ query set, q48's documented shape) — UN-pinned; callers
-    checkpoint it, in parallel with their ADC candidate pin (the two
-    are independent given nv, so their eager jobs overlap — r17). The
-    pin matters because the baseline's crossJoin scan has FOUR
-    consumers in _serving_audit (both hit joins, the distinct-query
-    anchor, and the mean aggregate's copy of the per_q subtree)."""
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.col("cos_score").desc(), F.col("neighbor_id")
+    cands = F.collect_list(
+        F.when(
+            F.col("kind") == 1, F.struct((-F.col("cos")).alias("key"), "neighbor_id")
+        )
     )
-    return (
-        F.broadcast(nv_q)
-        .crossJoin(nv.withColumnRenamed("vec_id", "neighbor_id"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.expr(_UNIT_DOT_SQL).alias("cos_score"))
-        .withColumn("rank", F.row_number().over(w_cos))
-        .filter(F.col("rank") <= PQ_TOPK)
-        .select("query_id", "neighbor_id")
-    )
-
-
-def _serving_audit(
-    adc_ranked: DataFrame, nv: DataFrame, nv_q: DataFrame, exact: DataFrame
-) -> DataFrame:
-    """THE dual-recall serving audit, shared by q167/q168 so the two
-    lanes stay directly comparable by construction: given the ADC
-    top-IVFPQ_RERANK_R candidate window (query_id, neighbor_id,
-    rank_adc — pinned by the caller) and the pinned exact baseline
-    (_exact_topk), re-rank the candidates by exact unit-dot (floats
-    fetched for only NQ x R rows), compare BOTH answer sets against
-    the baseline, and emit per-query n_hits/n_hits_adc/recalls plus
-    the mean_recall/meets_target verdict vs IVFPQ_RECALL_TARGET."""
-    served_adc = adc_ranked.filter(F.col("rank_adc") <= PQ_TOPK).select(
-        F.col("query_id").alias("bqid"), F.col("neighbor_id").alias("bid")
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.col("cos_score").desc(), F.col("neighbor_id")
-    )
-    served = (
-        F.broadcast(adc_ranked.join(nv_q, "query_id"))
-        .join(nv.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
-        .select("query_id", "neighbor_id", F.expr(_UNIT_DOT_SQL).alias("cos_score"))
-        .withColumn("rank", F.row_number().over(w_cos))
-        .filter(F.col("rank") <= PQ_TOPK)
-        .select(F.col("query_id").alias("aqid"), F.col("neighbor_id").alias("aid"))
-        # PIN the PQ_NQ x PQ_TOPK re-rank answer: the mean aggregate's
-        # crossJoin duplicates the whole per_q subtree in the final
-        # plan, and without this pin served's corpus-sized re-rank
-        # probe executed TWICE per run (r17 plan audit; the pinned
-        # frame is ≤100 rows, the saved branch scans the corpus)
-        .localCheckpoint(eager=True)
-    )
-    # every frame below is bounded at PQ_NQ x PQ_TOPK (≤100) rows; the
-    # hints matter because Spark planned SortMergeJoins for this tail —
-    # 16 of them in the r17 q167 plan, each paying shuffle+sort rounds
-    # a one-block broadcast replaces (guide §3.1: estimates after
-    # windows/aggregates are unreliable, hint what you know is small)
-    hits = exact.join(
-        F.broadcast(served),
-        (exact.query_id == served.aqid) & (exact.neighbor_id == served.aid),
-        "left_semi",
-    )
-    hits_adc = exact.join(
-        F.broadcast(served_adc),
-        (exact.query_id == served_adc.bqid)
-        & (exact.neighbor_id == served_adc.bid),
-        "left_semi",
+    reranked = F.expr(
+        f"transform(slice(array_sort(cands), 1, {PQ_TOPK}), x -> x.neighbor_id)"
     )
     per_q = (
-        exact.select("query_id")
-        .distinct()
-        .join(
-            F.broadcast(
-                hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-            ),
-            "query_id",
-            "left",
-        )
-        .join(
-            F.broadcast(
-                hits_adc.groupBy("query_id").agg(
-                    F.count(F.lit(1)).alias("n_hits_adc")
-                )
-            ),
-            "query_id",
-            "left",
-        )
+        top.groupBy("query_id")
+        .agg(_hits(0).alias("ex"), _hits(1).alias("adc"), cands.alias("cands"))
         .select(
             "query_id",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            F.coalesce("n_hits_adc", F.lit(0)).alias("n_hits_adc"),
+            F.size(F.array_intersect("ex", reranked)).cast("bigint").alias("n_hits"),
+            F.size(F.array_intersect("ex", "adc")).cast("bigint").alias("n_hits_adc"),
         )
     )
-    # global mean as a ONE-ROW aggregate crossJoined back (the repo's
-    # documented broadcast pattern for global stats, ADVICE r15 #5 —
-    # an unpartitioned window funnels every row through one partition;
-    # bounded here by PQ_NQ but wrong as a template to copy)
-    stats = per_q.agg(
-        (
-            F.sum("n_hits").cast("double")
-            / (F.count(F.lit(1)) * PQ_TOPK).cast("double")
-        ).alias("mean_recall")
-    )
+    # the mean and the per-query rows in ONE aggregate over the PQ_NQ
+    # per_q rows, re-expanded: no second scan of per_q for the mean
     mean = F.col("mean_recall")
-    return per_q.crossJoin(F.broadcast(stats)).select(
-        "query_id",
-        "n_hits",
-        "n_hits_adc",
-        (F.col("n_hits").cast("double") / F.lit(float(PQ_TOPK))).alias(
-            "recall_at_k"
-        ),
-        (F.col("n_hits_adc").cast("double") / F.lit(float(PQ_TOPK))).alias(
-            "recall_adc"
-        ),
-        mean.alias("mean_recall"),
-        (mean >= IVFPQ_RECALL_TARGET).alias("meets_target"),
-    ).orderBy("query_id")
+    return (
+        per_q.agg(
+            F.collect_list(F.struct("query_id", "n_hits", "n_hits_adc")).alias("qs"),
+            _mean_recall("n_hits").alias("mean_recall"),
+        )
+        .select(F.inline("qs"), "mean_recall")
+        .select(
+            "query_id",
+            "n_hits",
+            "n_hits_adc",
+            (F.col("n_hits").cast("double") / F.lit(float(PQ_TOPK))).alias(
+                "recall_at_k"
+            ),
+            (F.col("n_hits_adc").cast("double") / F.lit(float(PQ_TOPK))).alias(
+                "recall_adc"
+            ),
+            mean,
+            (mean >= IVFPQ_RECALL_TARGET).alias("meets_target"),
+        )
+        .orderBy("query_id")
+    )
 
 
 def q167_ivfpq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ serving: the memory-bounded layout a 100 TB vector store
-    actually serves from (VERDICT r14 item 4) — IVF coarse routing
-    (q123's crossJoin-free probe path) over PQ codes (q166) with ADC
-    scoring inside the probed cells, plus the in-query recall audit vs
-    exact cosine that q121/q123 made the family's discipline.
+    actually serves from (VERDICT r14 item 4) — IVF coarse routing over
+    PQ codes (q166) with ADC scoring inside the probed cells, plus the
+    in-query recall audit vs exact cosine that q121/q123 made the
+    family's discipline.
 
     Index build: every vector gets (cid, codes) — its IVF list from
     the map-only packed-broadcast cosine argmax (_argmax_cosine_packed,
     zero corpus shuffles) and its PQ_M-byte code word from the shared
     PQ training pass (_pq_train/_pq_encode). That pair is the entire
-    serving state: ~(8 + PQ_M) bytes a vector instead of 8*DIM — codes
-    stay in RAM, float vectors stay cold and are never consulted on
-    the serving path.
+    serving state: ~(8 + PQ_M) bytes a vector instead of 8*DIM.
 
-    Serving: each query picks its N_PROBE nearest centroid lists (a
-    K-row broadcast fold), precomputes its PQ_M x PQ_CODES integer
-    LUT (_pq_query_luts), and candidates come from an EQUI-join of
-    the broadcast (probes x lut) frame against the code table on cid —
-    scanning ~N_PROBE/K of the corpus per query, never a crossJoin —
-    scored as PQ_M integer lookups summed (_adc_sql). The ADC top
-    IVFPQ_RERANK_R then get the STANDARD full-precision re-rank:
-    float vectors are fetched for only those NQ x R rows (broadcast
-    into one hash probe of the corpus — codes in RAM, floats cold)
-    and the final top-PQ_TOPK ranks by exact unit-dot. Measured here,
-    the re-rank is what makes the config servable: ADC-as-is mean
-    recall 0.47-0.49 vs re-ranked (see IVFPQ_RECALL_TARGET) — both
-    numbers are in the result (recall_adc vs recall_at_k), so the
-    audit SHOWS the trade instead of asserting it.
+    Serving is one corpus pass (_ivfpq_audit): each query gets, map-side
+    on one broadcast state row, its N_PROBE nearest lists (_pq_queries)
+    and its PQ_M x PQ_CODES integer LUT (_pq_lut_sql). The index rows
+    pair with every query; ADC scoring (PQ_M integer lookups summed,
+    _adc_sql) rides the corpus pass that the exact baseline already
+    makes, for the pairs whose neighbor sits in a probed list. One
+    window ranks the exact and ADC keys (_serving_audit), and the ADC
+    top IVFPQ_RERANK_R get the STANDARD full-precision re-rank by exact
+    unit-dot. Measured here, the re-rank is what makes the config
+    servable: ADC-as-is mean recall 0.47-0.49 vs re-ranked (see
+    IVFPQ_RECALL_TARGET) — both numbers are in the result (recall_adc
+    vs recall_at_k), so the audit SHOWS the trade instead of asserting
+    it.
 
     Audit: exact cosine top-PQ_TOPK over the FULL corpus (the bounded
-    PQ_NQ-query broadcast baseline, q48's documented shape — at real
-    scale this runs on a query sample), overlap counted per query for
-    BOTH answer sets, plus mean_recall (re-ranked) and the
-    meets_target verdict vs IVFPQ_RECALL_TARGET. recall/mean are
-    single divisions of exact integer counts, bit-identical across
-    engines.
+    PQ_NQ-query baseline, q48's documented shape — at real scale this
+    runs on a query sample), overlap counted per query for BOTH answer
+    sets, plus mean_recall (re-ranked) and the meets_target verdict vs
+    IVFPQ_RECALL_TARGET. recall/mean are single divisions of exact
+    integer counts, bit-identical across engines.
 
     The index (coarse assignment + codebooks + code table) comes from
     the per-invocation build (_pq_shared_flat; every execution trains
@@ -2641,47 +2617,29 @@ def _ivfpq_audit(
     codes: DataFrame,
 ) -> DataFrame:
     """The flat IVF-PQ serving + dual-recall audit body over an EXPLICIT
-    index quadruple — ONE implementation shared by q167 (the in-session
+    index — ONE implementation shared by q167 (the in-session
     train-once state) and q177 (the same state round-tripped through
     the persisted store, sinks/pqstore.py), so "serves from the loaded
     artifact" means the literal same plan with a different index
-    provenance. See q167's docstring for the plan narrative."""
-    # the serving index: (neighbor_id, cid, codes) — the coarse
-    # assignment joined to the code table
-    index = assigned.join(codes, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cid").alias("list_id"),
-        "codes",
+    provenance: the index rows assigned ⋈ codes ⋈ nv pair with the
+    queries of emb (_pq_queries, over the packed centroids and
+    codebook). See q167's docstring for the plan narrative."""
+    queries = _pq_queries(
+        emb, _packed_cents(cent).crossJoin(F.broadcast(_pq_pack_codebook(cb)))
+    ).select(
+        "query_id",
+        "qn",
+        "probes",
+        F.expr(_pq_lut_sql("qn", "cbd", _dot_sql)).alias("lut"),
     )
-    q = emb.filter(F.col("vec_id") < PQ_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    index = (
+        assigned.join(codes, "vec_id")
+        .join(nv, "vec_id")
+        .withColumnRenamed("vec_id", "neighbor_id")
     )
-    probes = _ivf_probes(q, cent)
-    q_lut = _pq_query_luts(nv, cb)
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id")
+    return _serving_audit(
+        index.crossJoin(F.broadcast(queries)), _flat_key_sql("lut", "codes")
     )
-    # the ADC pass over the probed cells, ranked once; the top-PQ_TOPK
-    # prefix is the serve-as-is answer, the top-RERANK_R prefix feeds
-    # the full-precision re-rank
-    adc_frame = (
-        F.broadcast(probes.join(q_lut.drop("qn"), "query_id"))
-        .join(index, "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id", F.expr(_adc_sql("lut", "codes")).alias("adc_score")
-        )
-        .withColumn("rank_adc", F.row_number().over(w_adc))
-        .filter(F.col("rank_adc") <= IVFPQ_RERANK_R)
-    )
-    nv_q = q_lut.select("query_id", "qn")
-    # the ADC candidate window (feeds both answer sets, one pass) and
-    # the exact baseline are independent — pin them concurrently (r17)
-    adc_ranked, exact = concurrent(
-        lambda: adc_frame.localCheckpoint(eager=True),
-        lambda: _exact_topk(nv, nv_q).localCheckpoint(eager=True),
-    )
-    return _serving_audit(adc_ranked, nv, nv_q, exact)
 
 
 def _sql_serving_audit_tail() -> str:
@@ -2835,9 +2793,9 @@ def q177_pq_index_store_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector serving layout); the serve session re-derives nothing but
     the corpus normalization (floats stay in the corpus table — the
     store holds no vectors). Load-path scans are ordinary parquet
-    reads: the two small tables broadcast into the probe/LUT stages,
-    codes+assignment scan partitioned, exactly q167's shuffle
-    geometry."""
+    reads: the two small tables pack into the broadcast state row of
+    the queries' probes and LUTs, and codes ⋈ assignment ⋈ corpus is
+    the index side of q167's one serving pass."""
     from ..plans.storage_queries import _detached, _scratch_dir
     from ..sinks import pqstore
 
@@ -2864,23 +2822,20 @@ def q177_pq_index_store_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         loaded = pqstore.load_pq_index(serve, store, expect_params=params)
         emb = load_table_parallel(serve, sf_dir, "embeddings")
         # the eight per-table checksum collects (built side + loaded
-        # side) and the nv pin are independent jobs — previously nine
-        # sequential driver round-trips (guide §2.6; r17). nv stays
-        # PINNED like q167's shared frame: the audit consumes the
-        # normalized corpus from several stages (LUTs, re-rank, exact
-        # baseline).
+        # side) are independent jobs — previously sequential driver
+        # round-trips (guide §2.6; r17). The normalized corpus is read
+        # once, by the serving pass, so it stays lazy.
         names = pqstore.PQ_INDEX_TABLES
-        *sums, nv = concurrent(
+        sums = concurrent(
             *[lambda f=built[n]: _pq_table_checksum(f) for n in names],
             *[lambda f=loaded[n]: _pq_table_checksum(f) for n in names],
-            lambda: _pq_nv(emb).localCheckpoint(eager=True),
         )
         matches = all(
             sums[i] == sums[len(names) + i] for i in range(len(names))
         )
         audit = _ivfpq_audit(
             emb,
-            nv,
+            _normalized_corpus(emb),
             loaded["codebooks"],
             loaded["centroids"],
             loaded["assigned"],
@@ -2916,113 +2871,49 @@ def q168_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     CORPUS in the same audit shape, so the two rows are directly
     comparable (recall_adc here vs q167's).
 
-    Build: every vector gets (cid, codes) where codes now encode
-    n − unit(c_cid). One extra broadcast join (the K unit centroids)
-    on the training/encode path; assignment/training/encoding reuse
-    the exact q166 kernels over the residual frame (_pq_lloyd /
-    _pq_assign / _pq_update / _pq_encode — same laws, different
-    input). Seeds: the SAME hashed-sample id law; the 16 seed vectors
-    are coarse-assigned (a 16x16 broadcast fold) and their residuals
-    form cb0, which is exactly the corpus residual rows of the seed
-    ids — the SQL twin builds cb0 by that id join.
+    Build: the pinned residual corpus (vec_id, cid, n, r) with
+    r = n − unit(c_cid); assignment/training reuse the q166 kernels
+    over r (_pq_lloyd / _pq_assign / _pq_update — same laws, different
+    input). Seeds: the SAME hashed-sample id law; the 16 seed vectors'
+    residuals form cb0, which is exactly the corpus residual rows of
+    the seed ids — the SQL twin builds cb0 by that id join.
 
-    Serving — the paper's ADC, verbatim: the query is mapped into
-    each probed cell's residual space (rq = qn − c_unit) and the
-    distance estimate is d̂(q, x)² = Σ_m |rq_m − r̂_m|² — PQ_M lookups
-    in a per-(query, cell) table of floor-scaled subspace squared
-    distances, ranked ASCENDING. |rq − r̂|² approximates |qn − x̂|²
-    with x̂ = c_unit + r̂, so scores compare directly across probed
-    cells, and on unit queries L2 order is cosine order. Per-cell
+    Serving — the paper's ADC, verbatim, in q167's one corpus pass: the
+    query is mapped into each probed cell's residual space
+    (rq = qn − c_unit) and the distance estimate is
+    d̂(q, x)² = Σ_m |rq_m − r̂_m|² — PQ_M lookups in a per-(query, cell)
+    table of floor-scaled subspace squared distances
+    (_residual_luts_sql), ranked ASCENDING. |rq − r̂|² approximates
+    |qn − x̂|² with x̂ = c_unit + r̂, so scores compare directly across
+    probed cells, and on unit queries L2 order is cosine order. Per-cell
     LUTs are the price of residual encoding (N_PROBE tables per query
-    instead of q167's one). Candidates still come from the broadcast
-    equi-join on the list id; a neighbor lives in exactly one list,
-    so each pair scores once. ADC top-R gets the same full-precision
-    re-rank as q167 (floats for NQ x R rows only); the result reports
-    BOTH answer sets vs exact full-corpus cosine and gates the
-    re-ranked mean on IVFPQ_RECALL_TARGET.
+    instead of q167's one). Each corpus row is encoded on the fly
+    (_pq_code_sql over r) and scored against the LUT of its own list
+    when that list is probed; ADC top-R gets the same full-precision
+    re-rank as q167, and the result reports BOTH answer sets vs exact
+    full-corpus cosine and gates the re-ranked mean on
+    IVFPQ_RECALL_TARGET (_serving_audit).
 
-    The residual index (coarse assignment, residual frame, residual
-    codebooks, residual code table) comes from the shared builder
-    (_pq_shared_residual), which since r17 trains from parquet ONCE PER
-    INVOCATION (the cross-invocation memo is gone — q166/q167's
-    wording); the coarse stage is the same pinned assignment q167's
-    builder produces within one invocation. This lane's declared
+    All training state is this invocation's own (_pq_shared_residual,
+    no cross-invocation memo since r17). This lane's declared
     computation has no flat-PQ stage (no flat CTE in its oracle twin),
     so the builder trains no flat codebook."""
     st = _pq_shared_residual(spark, sf_dir)
-    emb, nv, cent = st["emb"], st["nv"], st["cent"]
-    cu = st["cu"]  # (cid, c_unit), zero-safe — the residual frame's own
-    index = (
-        st["res"]
-        .select("vec_id", "cid")
-        .join(st["rcodes"], "vec_id")
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("cid").alias("list_id"),
-            "codes",
-        )
+    rcb = _pq_pack_codebook(st["rcb"], "rcb")
+    queries = _pq_queries(
+        st["emb"], _packed_cents(st["cent"]).crossJoin(F.broadcast(rcb))
+    ).select(
+        "query_id", "qn", "probes", F.expr(_residual_luts_sql("rcb")).alias("rluts")
     )
-    rcb = st["rcb"]
-    nv_q = nv.filter(F.col("vec_id") < PQ_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("n").alias("qn")
+    coded = st["res"].crossJoin(F.broadcast(rcb)).select(
+        F.col("vec_id").alias("neighbor_id"),
+        "cid",
+        "n",
+        F.expr(_pq_code_sql("r", "rcb")).alias("rcode"),
     )
-    q = emb.filter(F.col("vec_id") < PQ_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    return _serving_audit(
+        coded.crossJoin(F.broadcast(queries)), _residual_key_sql("rcode")
     )
-    probes = _ivf_probes(q, cent)
-    # per-(query, probed cell): the RESIDUAL query rq = qn - c_unit —
-    # the paper's ADC operates entirely in residual space
-    qcell = (
-        probes.join(nv_q, "query_id")
-        .join(
-            F.broadcast(cu.withColumnRenamed("cid", "list_id")), "list_id"
-        )
-        .select(
-            "query_id",
-            "list_id",
-            F.expr("zip_with(qn, c_unit, (x, y) -> x - y)").alias("n"),
-        )
-    )
-    # LUT entry = the paper's subspace distance table: floor-scaled
-    # |rq_m - r̂_code|^2 (review r15 — the first draft dotted rq with
-    # r̂, which is NEITHER the L2 law nor the inner-product law and
-    # zeroed every LUT in a query's own cell since the audited
-    # queries double as centroids on this corpus)
-    sqdist = F.expr(_sqdist_sql("s", "c"))
-    rlut_rows = (
-        _pq_subvecs(qcell, keys=("query_id", "list_id"))
-        .join(F.broadcast(rcb), "m")
-        .select(
-            "query_id",
-            "list_id",
-            "m",
-            "cid",
-            F.floor(sqdist * PQ_LUT_SCALE).cast("bigint").alias("wi"),
-        )
-    )
-    q_lut = _pq_pack_lut_by(rlut_rows, ("query_id", "list_id"))
-    # ascending: the ADC statistic is an approximate squared DISTANCE
-    # |rq - r̂|^2 ≈ |qn - x̂|^2, directly comparable across probed
-    # cells (on unit queries L2 order == cosine order)
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    adc_frame = (
-        F.broadcast(q_lut)
-        .join(index, "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id", F.expr(_adc_sql("lut", "codes")).alias("adc_dist")
-        )
-        .withColumn("rank_adc", F.row_number().over(w_adc))
-        .filter(F.col("rank_adc") <= IVFPQ_RERANK_R)
-    )
-    # candidate window and exact baseline pin concurrently (r17)
-    adc_ranked, exact = concurrent(
-        lambda: adc_frame.localCheckpoint(eager=True),
-        lambda: _exact_topk(nv, nv_q).localCheckpoint(eager=True),
-    )
-    return _serving_audit(adc_ranked, nv, nv_q, exact)
 
 
 def _q168_sql() -> str:
@@ -3153,28 +3044,16 @@ adc_ranked AS (
 # ------------------------------------------------------------------ q174
 
 
-# the packed coarse-centroid struct q174 broadcasts: the cosine argmax
-# and probe ranking read (cid, c_emb, c_nrm) (_cos_sims_sql), the
-# residual reads c_unit
-_Q174_CENT_FIELDS = ["cid", "c_emb", "c_nrm", "c_unit"]
 # the index keeps the raw embedding of its first rows only: the K
 # coarse centroids and the PQ_NQ audited queries
 _Q174_RAW_ROWS = max(N_CENTROIDS, PQ_NQ)
 
 
 def _q174_cent(rows: DataFrame) -> DataFrame:
-    """(cid, c_emb, c_nrm, c_unit): the K coarse centroids — the first
-    K rows' raw embeddings (q167's seed law) — with the zero-safe norm
-    the cosine divides by and the unit centroid the residual subtracts
-    (_unit_centroids' law)."""
-    return (
-        rows.filter(F.col("vec_id") < N_CENTROIDS)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("c_emb"),
-            _safe_nrm(_norm("embedding")).alias("c_nrm"),
-        )
-        .withColumn("c_unit", _unit("c_emb", "c_nrm"))
+    """(cid, c_emb): the K coarse centroids — the first K rows' raw
+    embeddings (q167's seed law)."""
+    return rows.filter(F.col("vec_id") < N_CENTROIDS).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb")
     )
 
 
@@ -3191,8 +3070,8 @@ def _q174_index(emb: DataFrame) -> DataFrame:
     encodes and scores it."""
     folded = _packed_fold(
         emb.withColumn("_enrm", _safe_nrm(_norm("embedding"))),
-        _q174_cent(emb),
-        _Q174_CENT_FIELDS,
+        _cent_fields(_q174_cent(emb)),
+        _CENT_FIELDS,
         _cos_argmax_sql,
     )
     return (
@@ -3249,20 +3128,16 @@ def q174_ivfadc_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat (n) and residual (r) codebooks train off it concurrently. No
     code table is pinned.
 
-    Serving is one corpus pass, the distributed top-k shape (score
-    locally, keep a per-partition top-k, merge once): the PQ_NQ query
-    rows meet ONE broadcast state row (packed centroids + both packed
-    codebooks) and get, map-side, their N_PROBE probes (the first
-    entries of the sorted (cosine, −cid) array — the window's order),
-    their flat LUT and one residual LUT per probed list (_pq_lut_sql).
-    Each corpus row is encoded on the fly under both codebooks
-    (_pq_code_sql) and paired with every query: the pair always emits
-    its exact cosine key, and, when the neighbor sits in a probed list,
-    its flat and residual ADC keys. One row_number window over
-    (query_id, kind) ranks all three — Spark places a partial
-    WindowGroupLimit below its single exchange, so the shuffle carries
-    at most partitions × PQ_NQ × 3 × PQ_TOPK rows at any corpus size —
-    and one groupBy(query_id) counts both hit sets by intersection.
+    Serving is the family's one corpus pass (the serving-pass block
+    above): the PQ_NQ query rows meet ONE broadcast state row (packed
+    centroids + both packed codebooks) and get, map-side, their
+    N_PROBE probes, their flat LUT and one residual LUT per probed list
+    (_pq_queries, _residual_luts_sql). Each corpus row is encoded on
+    the fly under both codebooks (_pq_code_sql) and paired with every
+    query: the pair always emits its exact cosine key, and, when the
+    neighbor sits in a probed list, its flat and residual ADC keys. One
+    window ranks all three (_top_by_kind, cut PQ_TOPK), and one
+    groupBy(query_id) counts both hit sets by intersection.
 
     Jobs per call at sf0.01 (concurrent thunks run serially so each
     job is attributed to one step), before → after:
@@ -3291,42 +3166,14 @@ def q174_ivfadc_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks = _pq_pack_codebook(cb, "fcb").crossJoin(
         F.broadcast(_pq_pack_codebook(rcb, "rcb"))
     )
-    state = (
-        _q174_cent(index)
-        .agg(F.collect_list(F.struct(*_Q174_CENT_FIELDS)).alias("cents"))
-        .crossJoin(F.broadcast(codebooks))
-    )
-    # per query: probes, the flat LUT, and one residual LUT per probed
-    # list p (the query mapped into that cell's residual space,
-    # rq = qn − c_unit[p])
-    rq = (
-        "zip_with(qn, element_at(filter(cents, c -> c.cid = p), 1).c_unit,"
-        " (x, y) -> x - y)"
-    )
-    qstate = (
-        index.filter(F.col("vec_id") < PQ_NQ)
-        .withColumn("_enrm", _safe_nrm(_norm("embedding")))
-        .crossJoin(F.broadcast(state))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("n").alias("qn"),
-            F.expr(
-                f"transform(slice(sort_array({_cos_sims_sql('cents')}, false),"
-                f" 1, {N_PROBE}), p -> -p.ncid)"
-            ).alias("probes"),
-            "cents",
-            "fcb",
-            "rcb",
-        )
-        .select(
-            "query_id",
-            "qn",
-            "probes",
-            F.expr(_pq_lut_sql("qn", "fcb", _dot_sql)).alias("flut"),
-            F.expr(
-                f"transform(probes, p -> {_pq_lut_sql(rq, 'rcb', _sqdist_sql)})"
-            ).alias("rluts"),
-        )
+    state = _packed_cents(_q174_cent(index)).crossJoin(F.broadcast(codebooks))
+    # per query: probes, the flat LUT, and one residual LUT per probed list
+    queries = _pq_queries(index, state).select(
+        "query_id",
+        "qn",
+        "probes",
+        F.expr(_pq_lut_sql("qn", "fcb", _dot_sql)).alias("flut"),
+        F.expr(_residual_luts_sql("rcb")).alias("rluts"),
     )
     coded = index.crossJoin(F.broadcast(codebooks)).select(
         F.col("vec_id").alias("neighbor_id"),
@@ -3337,34 +3184,17 @@ def q174_ivfadc_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # kind 0: exact cosine (descending), 1: flat ADC dot (descending),
     # 2: residual ADC distance (ascending) — one ascending key for all
-    # three; the integer ADC sums are exact in DOUBLE (< 2^53)
-    j = "CAST(array_position(probes, cid) AS INT)"
     keys = F.expr(
         f"concat(array(named_struct('kind', 0, 'key', -({_UNIT_DOT_SQL}))),"
-        f" IF({j} > 0, array("
-        f"named_struct('kind', 1, 'key', -CAST({_adc_sql('flut', 'fcode')} AS DOUBLE)),"
-        f" named_struct('kind', 2, 'key',"
-        f" CAST({_adc_sql(f'element_at(rluts, {j})', 'rcode')} AS DOUBLE))),"
+        f" IF({_PROBE_SLOT} > 0, array("
+        f"named_struct('kind', 1, 'key', {_flat_key_sql('flut', 'fcode')}),"
+        f" named_struct('kind', 2, 'key', {_residual_key_sql('rcode')})),"
         f" array()))"
     )
-    w = Window.partitionBy("query_id", "kind").orderBy("key", "neighbor_id")
-    top = (
-        coded.crossJoin(F.broadcast(qstate))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.explode(keys).alias("k"))
-        .select("query_id", "neighbor_id", "k.kind", "k.key")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= PQ_TOPK)
-    )
-
-    def hits(kind: int) -> Column:
-        return F.collect_list(
-            F.when(F.col("kind") == kind, F.col("neighbor_id"))
-        )
-
+    top = _top_by_kind(coded.crossJoin(F.broadcast(queries)), keys, PQ_TOPK)
     per_q = (
         top.groupBy("query_id")
-        .agg(hits(0).alias("ex"), hits(1).alias("fl"), hits(2).alias("rs"))
+        .agg(_hits(0).alias("ex"), _hits(1).alias("fl"), _hits(2).alias("rs"))
         .select(
             "query_id",
             F.size(F.array_intersect("ex", "fl")).cast("bigint").alias("n_hits_flat"),
@@ -3372,16 +3202,13 @@ def q174_ivfadc_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def mean(col: str) -> Column:
-        return F.sum(col).cast("double") / (F.count(F.lit(1)) * PQ_TOPK).cast("double")
-
     # the means and the per-query rows in ONE aggregate over the PQ_NQ
     # per_q rows, re-expanded: no second scan of per_q for the means
     return (
         per_q.agg(
             F.collect_list(F.struct("query_id", "n_hits_flat", "n_hits_res")).alias("qs"),
-            mean("n_hits_flat").alias("mean_flat"),
-            mean("n_hits_res").alias("mean_res"),
+            _mean_recall("n_hits_flat").alias("mean_flat"),
+            _mean_recall("n_hits_res").alias("mean_res"),
         )
         .select(F.inline("qs"), "mean_flat", "mean_res")
         .select(

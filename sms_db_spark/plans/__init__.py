@@ -75,30 +75,23 @@ def _tuned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessi
 # Trace CALLERS of the changed function, not the modules it lives near.
 #
 _CHANGED_THIS_ROUND = [
-    # every lane whose call path reaches _dot, _cos_argmax_sql, the PQ
-    # packing/encoder/LUT/ADC helpers (_pq_pack_lut_by, _pq_encode,
-    # _adc_sql, ...), the _pq_shared builders, q168 or q174
-    "q174_ivfadc_clustered",
+    # the AST caller closure of the helpers this change edits or deletes:
+    # the PQ serving pass (_top_by_kind, _serving_audit, _pq_queries and
+    # the probe, LUT and ADC-key SQL), the _pq_shared builders and
+    # _pq_subvecs, plus the one centroid law (_cent_fields) that
+    # _unit_centroids and _argmax_cosine_packed now read
     "q166_pq_adc_recall",
     "q167_ivfpq_serving",
     "q168_ivfadc_residual",
+    "q174_ivfadc_clustered",
     "q177_pq_index_store_audit",
-    "q48_ann_bruteforce_topk",
-    "q49_ann_lsh_topk",
-    "q50_embedding_neardup",
     "q51_ann_ivf_topk",
-    "q58_filtered_ann",
-    "q74_embedding_neardup_lsh",
-    "q76_filtered_ann_lsh",
     "q86_kmeans_ivf_train",
     "q98_semantic_dedup",
     "q100_centroid_outliers",
-    "q120_ann_recall",
     "q121_ivf_recall",
-    "q122_multiprobe_recall",
     "q123_ann_serving",
     "q124_kmeans_hashed_seed_train",
-    "q128_sq8_ann_recall",
     "q133_hard_negatives",
 ]
 

@@ -1,5 +1,6 @@
 """Job ceilings of the import → store → export round trip and of the
-heaviest lane, q174.
+five product-quantization lanes (q166, q167, q168, q174, q177), the
+heaviest lanes of the registry.
 
 The scheduler's job-id delta over one call is a machine-independent
 count: the same at `local[2]`, `local[4]` and `local[8]`. Each ceiling
@@ -10,6 +11,8 @@ instead of only showing up as a slower benchmark pass.
 
 from __future__ import annotations
 
+import pytest
+
 from sms_db_spark.operators.similarity import PQ_NQ
 from sms_db_spark.plans import registry
 from sms_db_spark.sinks.sqlite_sink import read_store_sqlite, write_store_sqlite
@@ -17,6 +20,7 @@ from sms_db_spark.sinks.xml_export import export_xml
 from sms_db_spark.sources.canonical import finalize_import
 from sms_db_spark.sources.xml_source import normalize_xml
 from tests.fixtures import xml_frames
+from tests.test_plans import SF_DIR
 
 CEILINGS = {
     "finalize_import": 10,
@@ -25,9 +29,16 @@ CEILINGS = {
     "export_xml": 12,
     "finalize_import into a store": 11,
 }
-# q174_ivfadc_clustered at sf0.001: the call (index pin, two codebooks)
-# plus the collect of its serving pass
-Q174_CEILING = 31
+# the PQ lanes at sf0.001: the call (index pins, codebook training and,
+# for q177, the store commit, reload and checksums) plus the collect of
+# its one serving pass
+PQ_CEILINGS = {
+    "q166_pq_adc_recall": 20,
+    "q167_ivfpq_serving": 31,
+    "q168_ivfadc_residual": 28,
+    "q174_ivfadc_clustered": 31,
+    "q177_pq_index_store_audit": 58,
+}
 
 
 def _next_job_id(spark) -> int:
@@ -58,12 +69,13 @@ def test_round_trip_job_ceilings(spark, tmp_path):
     assert not over, f"jobs over their ceiling (count, ceiling): {over}"
 
 
-def test_q174_job_ceiling(spark):
-    """q174 builds its index and both codebooks, then serves all three
-    rankings in one pass: one call and its collect stay within
-    Q174_CEILING jobs."""
+@pytest.mark.parametrize("name", sorted(PQ_CEILINGS))
+def test_pq_lane_job_ceiling(spark, name):
+    """A PQ lane builds its index and codebooks, then serves every
+    ranking it audits in one pass: one call and its collect stay within
+    the lane's ceiling."""
     start = _next_job_id(spark)
-    rows = registry()["q174_ivfadc_clustered"].fn(spark, "/root/testdata/sf0.001").collect()
+    rows = registry()[name].fn(spark, SF_DIR).collect()
     n = _next_job_id(spark) - start
     assert len(rows) == PQ_NQ
-    assert n <= Q174_CEILING, f"q174 launched {n} jobs, ceiling {Q174_CEILING}"
+    assert n <= PQ_CEILINGS[name], f"{name} launched {n} jobs, ceiling {PQ_CEILINGS[name]}"

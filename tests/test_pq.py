@@ -13,8 +13,8 @@ from sms_db_spark.operators.similarity import (
     PQ_DSUB,
     PQ_LUT_SCALE,
     PQ_M,
+    _normalized_corpus,
     _pq_assign,
-    _pq_nv,
     _pq_subvecs,
     _pq_update,
     DIM,
@@ -30,9 +30,9 @@ def test_pq_assign_is_l2_argmin_with_cid_tiebreak(spark):
     rng = np.random.RandomState(7)
     vecs = rng.randn(20, DIM)
     cbv = rng.randn(4, DIM)  # 4 codes per subspace, from 4 donor vectors
-    nv = _pq_nv(_emb_df(spark, vecs))
+    nv = _normalized_corpus(_emb_df(spark, vecs))
     sub = _pq_subvecs(nv)
-    cb = _pq_subvecs(_pq_nv(_emb_df(spark, cbv))).select(
+    cb = _pq_subvecs(_normalized_corpus(_emb_df(spark, cbv))).select(
         "m", F.col("vec_id").alias("cid"), F.col("s").alias("c")
     )
     got = {
@@ -77,37 +77,12 @@ def test_pq_lut_scale_quantizes_identically_to_oracle_floor():
     assert PQ_LUT_SCALE == KMEANS_SCALE == 1_000_000
 
 
-def test_pq_lut_stays_dense_under_code_dropout(spark):
-    # Lloyd can drop an empty code from the codebook; the packed LUT
-    # must keep a DENSE PQ_M x PQ_CODES grid (0 at the hole) or every
-    # entry after the gap shifts and ADC reads the wrong code's weight
-    from sms_db_spark.operators.similarity import PQ_CODES, _pq_pack_lut
-
-    rows = [
-        (0, m, cid, (m * PQ_CODES + cid) * 10)
-        for m in range(PQ_M)
-        for cid in range(PQ_CODES)
-        if not (m == 1 and cid == 3)  # the dropped code
-    ]
-    lut_rows = spark.createDataFrame(
-        rows, "query_id long, m int, cid long, wi long"
-    )
-    [r] = _pq_pack_lut(lut_rows).collect()
-    assert len(r.lut) == PQ_M * PQ_CODES
-    for m in range(PQ_M):
-        for cid in range(PQ_CODES):
-            want = 0 if (m == 1 and cid == 3) else (m * PQ_CODES + cid) * 10
-            assert r.lut[m * PQ_CODES + cid] == want, (m, cid)
-
-
 def test_normalized_corpus_survives_zero_vector(spark):
     # the review-r14 crash path: one all-zero (failed-encode) embedding
     # under Spark 4's default ANSI mode threw DIVIDE_BY_ZERO in the
     # unguarded normalization; the shared _normalized_corpus routes the
     # divisor through _safe_nrm, mapping the zero vector to the zero
     # direction instead
-    from sms_db_spark.operators.similarity import _normalized_corpus
-
     emb = spark.createDataFrame(
         [(0, [0.0] * DIM), (1, [1.0] + [0.0] * (DIM - 1))],
         "vec_id long, embedding array<double>",
@@ -144,12 +119,14 @@ def test_pq_shared_builds_fresh_state_per_invocation(spark, tmp_path):
 
 
 def test_map_side_lut_and_encoder_skip_a_dropped_code(spark):
-    # the map-side twin of the dropout test above: a codebook missing
+    # Lloyd can drop an empty code from a codebook: one missing
     # (m=1, cid=3) packs (_pq_pack_codebook) to a NULL slot, the
-    # per-query LUTs (_pq_lut_sql, flat and residual weights) read 0
-    # there, and the encoder (_pq_code_sql) never emits that code —
-    # even for vectors whose subspace 1 sits exactly on the dropped
-    # code's centroid
+    # per-query LUTs (_pq_lut_sql, flat and residual weights) keep a
+    # DENSE PQ_M x PQ_CODES grid that reads 0 there — a position-packed
+    # grid would shift every later entry and ADC would read the wrong
+    # code's weight — and the encoder (_pq_code_sql) never emits that
+    # code, even for vectors whose subspace 1 sits exactly on the
+    # dropped code's centroid
     from sms_db_spark.operators.similarity import (
         PQ_CODES,
         _dot_sql,
