@@ -450,21 +450,31 @@ def q123_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     SERVING_RECALL_TARGET — a config only "serves" with its guardrail
     number attached (measured here: mean 0.92 at sf0.01).
 
-    Plan shape — candidate generation is crossJoin-free: the quality gate
-    prunes candidates FIRST (broadcast semi-join, before any assignment
-    cost), list assignment and query probing are broadcast-of-K-centroids
-    folds, and candidate selection is an EQUI-join on cid scanning
-    ~N_PROBE/K of the passing corpus per query. The only per-query-linear
-    stage is the exact-baseline audit itself (the q120-q122 pattern:
-    bounded query set, broadcast, documented), which at 100 TB runs on a
-    query SAMPLE — drop the audit columns and the serving plan stands
-    alone.
+    Plan shape: the quality gate prunes the corpus FIRST (broadcast
+    semi-join, before any assignment cost), and list assignment and
+    query probing are map-side folds over one broadcast row of the K
+    packed centroids. The audit is q121's one pass (_cos_recall): every
+    (query, passing vector) pair enters the exact ranking, and the
+    served candidates are a predicate on that pass, the pairs whose
+    list is among the query's N_PROBE probes. q51 is the standalone
+    serving plan (an equi-join on cid scanning ~N_PROBE/K of the
+    corpus per query); the per-query-linear exact baseline is the
+    audit's bounded query set (the q120-q122 pattern), which at 100 TB
+    runs on a query SAMPLE.
 
     Cross-engine determinism: recall_at_k and mean_recall are single
     divisions of exact integer counts (no float accumulation), so the
-    doubles are bit-identical in both engines.
+    doubles are bit-identical in both engines. mean_recall and
+    meets_target ride one aggregate over the per-query rows.
     """
-    from .similarity import N_CENTROIDS, N_PROBE, _argmax_cosine_packed, cosine
+    from .similarity import (
+        N_CENTROIDS,
+        _PROBE_SLOT,
+        _argmax_cosine_packed,
+        _cos_recall,
+        _mean_recall,
+        _with_probes,
+    )
 
     s = _scored(spark, sf_dir)
     passing_ids = s.filter(
@@ -482,88 +492,27 @@ def q123_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb")
     )
     # quality gate BEFORE assignment: only passing vectors pay the
-    # broadcast-centroid fold, and both audit and serving see the same
-    # candidate universe. Assignment is the shared map-only packed fold
+    # broadcast-centroid fold, and both rankings see the same candidate
+    # universe. Assignment is the shared map-only packed fold
     # (similarity._argmax_cosine_packed): no groupBy, so the passing
     # corpus never shuffles to pick its list.
-    cand = (
-        _argmax_cosine_packed(
-            emb.join(F.broadcast(passing_ids), "vec_id", "left_semi"), cent
+    cand = _argmax_cosine_packed(
+        emb.join(F.broadcast(passing_ids), "vec_id", "left_semi"), cent
+    ).select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"), "cid")
+    q = _with_probes(
+        emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding"),
+        cent,
+    ).select("query_id", F.col("embedding").alias("q_emb"), "probes")
+    per_q = _cos_recall(F.broadcast(q).crossJoin(cand), f"{_PROBE_SLOT} > 0", ANN_TOPK)
+    mean = F.col("mean_recall")
+    return (
+        per_q.agg(
+            F.collect_list(F.struct("query_id", "n_hits", "recall_at_k")).alias("qs"),
+            _mean_recall("n_hits", ANN_TOPK).alias("mean_recall"),
         )
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("cid").alias("c_cid"),
-        )
-        # feeds BOTH the serving equi-join and the exact audit — one pass
-        .localCheckpoint(eager=True)
+        .select(F.inline("qs"), mean, (mean >= SERVING_RECALL_TARGET).alias("meets_target"))
+        .orderBy("query_id")
     )
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.col("q_sim").desc(), F.col("cid"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "q_emb", "cid", cosine("q_emb", "c_emb").alias("q_sim"))
-        .withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= N_PROBE)
-        .select("query_id", "q_emb", "cid")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    served = (
-        F.broadcast(probes)
-        .join(cand, probes.cid == cand.c_cid)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine("q_emb", "c_emb").alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_TOPK)
-        .select(F.col("query_id").alias("aqid"), F.col("neighbor_id").alias("aid"))
-    )
-    exact = (
-        F.broadcast(q)
-        .crossJoin(cand.select("neighbor_id", "c_emb"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine("q_emb", "c_emb").alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_TOPK)
-        .select("query_id", "neighbor_id")
-    )
-    # both audit frames are bounded at NQ x ANN_TOPK rows (≤25 here, a
-    # query-sample x k at scale) — without the hints Spark planned
-    # SortMergeJoins for these, paying two shuffle exchanges + sorts on
-    # row counts a broadcast ships in one block (r17 plan audit)
-    hits = exact.join(
-        F.broadcast(served),
-        (exact.query_id == served.aqid) & (exact.neighbor_id == served.aid),
-        "left_semi",
-    )
-    per_q = (
-        exact.select("query_id")
-        .distinct()
-        .join(
-            F.broadcast(
-                hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-            ),
-            "query_id",
-            "left",
-        )
-        .select("query_id", F.coalesce("n_hits", F.lit(0)).alias("n_hits"))
-    )
-    w_all = Window.partitionBy()
-    return per_q.select(
-        "query_id",
-        "n_hits",
-        (F.col("n_hits").cast("double") / F.lit(float(ANN_TOPK))).alias("recall_at_k"),
-        (
-            F.sum("n_hits").over(w_all).cast("double")
-            / (F.count(F.lit(1)).over(w_all) * ANN_TOPK).cast("double")
-        ).alias("mean_recall"),
-        (
-            F.sum("n_hits").over(w_all).cast("double")
-            / (F.count(F.lit(1)).over(w_all) * ANN_TOPK).cast("double")
-            >= SERVING_RECALL_TARGET
-        ).alias("meets_target"),
-    ).orderBy("query_id")
 
 
 def _q123_sql() -> str:

@@ -13,8 +13,9 @@ with the oracle. No Python UDFs in the hot path.
 Scale notes: brute-force is O(Q·N) — fine for small Q (re-ranking); the
 LSH variant is the 100TB path: bucket ids are computed map-side, the
 join is an equi-join on bucket id, and per-bucket top-k is a bounded
-window. For real ANN recall targets you'd add multi-probe or IVF; the
-bucketing plumbing here is the same.
+window. Multi-probe LSH (q122) and IVF (q51, q121) are the paths that
+reach real recall targets; the recall audits (q120-q123, q138) measure
+each path against the exact baseline in one ranking pass.
 """
 
 from __future__ import annotations
@@ -319,8 +320,10 @@ def q51_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (_argmax_cosine_packed): the corpus never shuffles to pick its
         list (the former crossJoin + groupBy(vec_id) paid a full-corpus
         exchange to finalize a partition-local argmax);
-      - the probe table is Q×N_PROBE rows and broadcasts into the
-        candidate join, so candidate selection is also shuffle-free;
+      - each query's N_PROBE lists are one map-side expression over
+        the same packed centroids (_with_probes); the Q×N_PROBE probe
+        rows broadcast into the candidate equi-join on cid, so
+        candidate selection is also shuffle-free;
       - only the final per-query top-k window shuffles, on query_id
         (cardinality Q, uniform).
     """
@@ -335,15 +338,10 @@ def q51_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+        F.col("vec_id").alias("query_id"), "embedding"
     )
-    w_probe = Window.partitionBy("query_id").orderBy(F.col("q_sim").desc(), F.col("cid"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "q_emb", "cid", cosine("q_emb", "c_emb").alias("q_sim"))
-        .withColumn("probe_rank", F.row_number().over(w_probe))
-        .filter(F.col("probe_rank") <= N_PROBE)
-        .select("query_id", "q_emb", "cid")
+    probes = _with_probes(q, cent).select(
+        "query_id", F.col("embedding").alias("q_emb"), F.explode("probes").alias("cid")
     )
 
     scored = (
@@ -435,20 +433,25 @@ def _unit(col_name: str, nrm_col: str) -> Column:
     return F.transform(F.col(col_name), lambda x: x.cast("double") / safe)
 
 
+def _unit_sims_sql(cents_col: str) -> str:
+    """Per-row (sim, -cid) structs, one per packed centroid: sim is the
+    dot of the row's `embedding` with the unit centroid c_unit, cosine's
+    order at a third of the arithmetic (see _assign). Struct order is
+    (sim desc, cid asc) under a descending sort."""
+    return (
+        f"transform({cents_col}, c -> named_struct("
+        f"'sim', {_dot_sql('embedding', 'c.c_unit')}, 'ncid', -c.cid))"
+    )
+
+
 def _argmax_sql(cents_col: str) -> str:
     """The per-row nearest-centroid argmax as ONE expression over a
     packed centroid array: dot evaluated exactly once per centroid
-    (transform), then array_max over (sim, -cid) structs — the
+    (_unit_sims_sql), then array_max over (sim, -cid) structs — the
     identical total order max_by(cid, struct(sim, -cid)) ranks by
     (highest sim, ties to the LOWEST cid), and max over it is
     order-independent, so the packing order cannot affect the result."""
-    return (
-        f"array_max(transform({cents_col}, c -> named_struct("
-        "'sim', aggregate(zip_with(embedding, c.c_unit,"
-        " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        " CAST(0 AS DOUBLE), (acc, v) -> acc + v),"
-        " 'ncid', -c.cid)))"
-    )
+    return f"array_max({_unit_sims_sql(cents_col)})"
 
 
 def _packed_fold(
@@ -539,6 +542,34 @@ def _cos_argmax_sql(cents_col: str) -> str:
     return f"array_max({_cos_sims_sql(cents_col)})"
 
 
+def _probes_sql(sims: str) -> str:
+    """A row's N_PROBE nearest coarse lists as one expression: the cids
+    of the first N_PROBE entries of its (sim, -cid) structs `sims`
+    (_cos_sims_sql or _unit_sims_sql) sorted descending, which is the
+    (sim desc, cid asc) order the oracles' probe windows rank by."""
+    return f"transform(slice(sort_array({sims}, false), 1, {N_PROBE}), p -> -p.ncid)"
+
+
+# the 1-based slot of a neighbor's coarse list `cid` among its query's
+# `probes`, 0 when the list is not probed; a neighbor lives in exactly
+# one list, so a probed pair is one candidate (in the PQ lanes, scored
+# against that list's LUT)
+_PROBE_SLOT = "CAST(array_position(probes, cid) AS INT)"
+
+
+def _with_probes(q: DataFrame, cent: DataFrame) -> DataFrame:
+    """The rows of `q` (an `embedding` column among them) plus `probes`,
+    their N_PROBE nearest lists by full cosine (_probes_sql over
+    _cos_sims_sql), computed map-side against one broadcast row of the
+    packed (cid, c_emb) centroids `cent` (_packed_cents)."""
+    return (
+        q.withColumn("_enrm", _safe_nrm(_norm("embedding")))
+        .crossJoin(F.broadcast(_packed_cents(cent)))
+        .withColumn("probes", F.expr(_probes_sql(_cos_sims_sql("cents"))))
+        .drop("_enrm", "cents")
+    )
+
+
 def _argmax_cosine_packed(emb: DataFrame, cent: DataFrame) -> DataFrame:
     """(vec_id, cid, sim, embedding): nearest centroid by FULL cosine,
     map-only — _assign's packed-broadcast fold (same corpus-shuffle-
@@ -567,9 +598,9 @@ def _argmax_cosine_packed(emb: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-# the packed coarse-centroid struct the PQ serving passes broadcast: the
+# the packed coarse-centroid struct the probing lanes broadcast: the
 # cosine argmax and the probe ranking read (cid, c_emb, c_nrm)
-# (_cos_sims_sql), the residual reads c_unit
+# (_cos_sims_sql), q133's probes and the residual read c_unit
 _CENT_FIELDS = ["cid", "c_emb", "c_nrm", "c_unit"]
 
 
@@ -585,8 +616,8 @@ def _cent_fields(cent: DataFrame) -> DataFrame:
 
 def _packed_cents(cent: DataFrame) -> DataFrame:
     """ONE row, column `cents`: the centroid frame's _CENT_FIELDS
-    structs, the state a broadcast serving pass probes and maps
-    residuals against."""
+    structs, the state a broadcast serving pass probes (_probes_sql)
+    and maps residuals against."""
     return _cent_fields(cent).agg(
         F.collect_list(F.struct(*_CENT_FIELDS)).alias("cents")
     )
@@ -595,8 +626,7 @@ def _packed_cents(cent: DataFrame) -> DataFrame:
 def _unit_centroids(cent: DataFrame) -> DataFrame:
     """(cid, c_unit): centroids L2-normalized ONCE (_cent_fields) so
     N x K scoring stages rank by a single dot fold — shared by
-    assignment (_assign), probe-list selection (q133) and the residual
-    corpus (q168)."""
+    assignment (_assign) and the residual corpus (q168)."""
     return _cent_fields(cent).select("cid", "c_unit")
 
 
@@ -974,6 +1004,80 @@ RECALL_K = 5
 RECALL_QUERIES = 20  # query set: vec_id < 20, matching q49
 
 
+# ------------------------------------------------------- ranking pass
+# Every recall audit (q120-q123, q138) and every PQ lane (q166, q167,
+# q168, q174, q177) ranks in ONE pass, the distributed top-k shape
+# (score locally, keep a per-partition top-k, merge once): the broadcast
+# query rows meet the corpus, each (query, neighbor) pair emits one
+# (kind, key) struct per ranking it enters, and _top_by_kind ranks all
+# of them in one window.
+
+
+def _top_by_kind(pairs: DataFrame, keys: Column, cut: int) -> DataFrame:
+    """THE ranking of a one-pass audit: every (query_id, neighbor_id ≠
+    query_id) pair of `pairs` explodes `keys`, an array of (kind, key,
+    …) structs (one per ranking the pair enters), and ONE row_number
+    window over (query_id, kind), ordered by (key, neighbor_id), keeps
+    the rows with rk ≤ cut. Spark plans a partial WindowGroupLimit
+    below the window's single exchange, so the shuffle carries at most
+    partitions × queries × kinds × cut rows at any corpus size."""
+    w = Window.partitionBy("query_id", "kind").orderBy("key", "neighbor_id")
+    return (
+        pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", F.explode(keys).alias("k"))
+        .select("query_id", "neighbor_id", "k.*")
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= cut)
+    )
+
+
+def _hits(kind: int, k: int) -> Column:
+    """The neighbor ids of a _top_by_kind frame's `kind` ranking with
+    rk ≤ k, collected per group (the top-k answer set)."""
+    return F.collect_list(
+        F.when((F.col("kind") == kind) & (F.col("rk") <= k), F.col("neighbor_id"))
+    )
+
+
+def _mean_recall(n_hits: str, k: int) -> Column:
+    """The mean recall@k of a per-query hit-count column, as an
+    aggregate: one division of exact integer counts."""
+    return F.sum(n_hits).cast("double") / (F.count(F.lit(1)) * k).cast("double")
+
+
+def _recall_pass(pairs: DataFrame, keys: Column, k: int) -> DataFrame:
+    """(query_id, n_hits, recall_at_k): the recall@k audit of one pass.
+    `keys` emits kind 0 (the exact key) for every pair and kind 1 (the
+    approx key) for the pairs the approximate path scores; one window
+    ranks both at cut k (_top_by_kind) and one groupBy(query_id) counts
+    |exact top-k ∩ approx top-k|. Every query with a neighbor gets a
+    row, so one without a single candidate reads 0, as the oracles'
+    LEFT JOIN + COALESCE does."""
+    return (
+        _top_by_kind(pairs, keys, k)
+        .groupBy("query_id")
+        .agg(
+            F.size(F.array_intersect(_hits(0, k), _hits(1, k)))
+            .cast("bigint")
+            .alias("n_hits")
+        )
+        .withColumn("recall_at_k", F.col("n_hits").cast("double") / F.lit(float(k)))
+    )
+
+
+def _cos_recall(pairs: DataFrame, candidate: str, k: int) -> DataFrame:
+    """_recall_pass for the candidate-pruning audits (q120-q123), whose
+    approx path ranks its candidates by the exact score itself: each
+    (q_emb, c_emb) pair's −cosine, the three-fold law the oracles rank
+    by, is computed once and keyed as kind 0, and again as kind 1 when
+    the SQL predicate `candidate` holds for the pair."""
+    key = "named_struct('kind', {}, 'key', -cos)"
+    keys = F.expr(
+        f"concat(array({key.format(0)}), IF({candidate}, array({key.format(1)}), array()))"
+    )
+    return _recall_pass(pairs.withColumn("cos", cosine("q_emb", "c_emb")), keys, k)
+
+
 def q120_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k audit for the sign-LSH ANN path: per query vector, how
     many of the EXACT top-k neighbors the bucketed search recovered —
@@ -982,10 +1086,13 @@ def q120_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     and q103's HLL error. Queries and k match q49 exactly, so this
     measures the production path, not a toy variant.
 
-    Scale: ground truth is the q48 broadcast-crossJoin over the SAME
-    bounded query set — the exact baseline is per-query-linear and the
-    audit runs on a sample of queries at any corpus size; the recall
-    join itself touches 2·K·|queries| rows.
+    Scale: one pass over the q48 broadcast-crossJoin of the SAME bounded
+    query set — every pair is scored once and enters the exact ranking,
+    the pairs in the query's bucket enter the approx ranking too, and
+    one window ranks both (_cos_recall). The exact baseline is
+    per-query-linear, so the audit runs on a sample of queries at any
+    corpus size; the window's shuffle carries at most 2·K·|queries|
+    rows per partition.
 
     Measured verdict on the synthetic embeddings: mean recall@5 ≈ 0.02 —
     single-probe, 8-plane sign-LSH buys its 2^8× candidate reduction at
@@ -997,51 +1104,15 @@ def q120_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table_parallel(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < RECALL_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
-        _bucket("embedding").alias("bucket"),
+        _bucket("embedding").alias("q_bucket"),
     )
     cand = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"),
-        _bucket("embedding").alias("c_bucket"),
+        _bucket("embedding").alias("bucket"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    exact = (
-        F.broadcast(q)
-        .crossJoin(cand)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine("q_emb", "c_emb").alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= RECALL_K)
-        .select("query_id", "neighbor_id")
-    )
-    approx = (
-        F.broadcast(q)
-        .join(cand, q.bucket == cand.c_bucket)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine("q_emb", "c_emb").alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= RECALL_K)
-        .select("query_id", F.col("neighbor_id").alias("approx_id"))
-    )
-    hits = exact.join(
-        approx,
-        (exact.query_id == approx.query_id) & (exact.neighbor_id == approx.approx_id),
-        "left_semi",
-    )
-    return (
-        exact.select("query_id")
-        .distinct()
-        .join(hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits")), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            (F.coalesce("n_hits", F.lit(0)).cast("double") / F.lit(float(RECALL_K))).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return _cos_recall(
+        F.broadcast(q).crossJoin(cand), "bucket = q_bucket", RECALL_K
+    ).orderBy("query_id")
 
 
 Q120_SQL = f"""
@@ -1088,6 +1159,12 @@ def q121_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     that shows whether multi-probe fixes what single-bucket LSH loses.
     Queries match q51 (vec_id < 10), k matches q51's top-5.
 
+    One pass (_cos_recall): every corpus row carries its list from the
+    map-only packed argmax (_argmax_cosine_packed), each query its
+    N_PROBE lists from one map-side expression over the same packed
+    centroids (_with_probes), and a pair enters the approx ranking when
+    the neighbor's list is among the query's probes (_PROBE_SLOT > 0).
+
     Probing 2 of 16 lists scans ~1/8 of the corpus per query, so the
     ceiling is bounded by how often true neighbors land in the query's
     top-2 lists — the recall/scan-fraction trade is the tunable, and
@@ -1097,66 +1174,16 @@ def q121_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb")
     )
-    assigned = _argmax_cosine_packed(emb, cent).select(
-        "vec_id", "embedding", "cid"
+    cand = _argmax_cosine_packed(emb, cent).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"), "cid"
     )
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.col("q_sim").desc(), F.col("cid"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "q_emb", "cid", cosine("q_emb", "c_emb").alias("q_sim"))
-        .withColumn("probe_rank", F.row_number().over(w_probe))
-        .filter(F.col("probe_rank") <= N_PROBE)
-        .select("query_id", "q_emb", "cid")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    approx = (
-        F.broadcast(probes)
-        .join(assigned, "cid")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine("q_emb", "embedding").alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= RECALL_K)
-        .select("query_id", F.col("neighbor_id").alias("approx_id"))
-    )
-    cand = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-    )
-    exact = (
-        F.broadcast(q)
-        .crossJoin(cand)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine("q_emb", "c_emb").alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= RECALL_K)
-        .select("query_id", "neighbor_id")
-    )
-    hits = exact.join(
-        approx,
-        (exact.query_id == approx.query_id) & (exact.neighbor_id == approx.approx_id),
-        "left_semi",
-    )
-    return (
-        exact.select("query_id")
-        .distinct()
-        .join(hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits")), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            (F.coalesce("n_hits", F.lit(0)).cast("double") / F.lit(float(RECALL_K))).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    q = _with_probes(
+        emb.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), "embedding"),
+        cent,
+    ).select("query_id", F.col("embedding").alias("q_emb"), "probes")
+    return _cos_recall(
+        F.broadcast(q).crossJoin(cand), f"{_PROBE_SLOT} > 0", RECALL_K
+    ).orderBy("query_id")
 
 
 Q121_SQL = f"""
@@ -1226,71 +1253,35 @@ def q122_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query recall rows as q120/q121 so the three configurations form
     one measured recall/scan-fraction curve.
 
-    Scale: identical plan shape to q49 — the probe table is 9×|queries|
-    rows and broadcasts; each corpus vector still lives in exactly one
-    bucket, so candidates are naturally deduplicated and candidate
-    selection stays an equi-join.
+    One pass (_cos_recall): each query carries its 9 probe buckets as
+    one map-side array, and a pair enters the approx ranking when the
+    neighbor's bucket is among them. Each corpus vector lives in exactly
+    one bucket, so a candidate is scored once however many probes a
+    query has.
     """
     emb = load_table_parallel(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < RECALL_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        _bucket("embedding").alias("bucket"),
-    )
-    probes = q.select(
+        _bucket("embedding").alias("b"),
+    ).select(
         "query_id",
         "q_emb",
-        F.explode(
-            F.expr(
-                f"concat(array(bucket), transform(sequence(0, {N_PLANES - 1}),"
-                f" i -> bucket ^ shiftleft(CAST(1 AS BIGINT), i)))"
-            )
-        ).alias("probe_bucket"),
+        F.expr(
+            f"concat(array(b), transform(sequence(0, {N_PLANES - 1}),"
+            f" i -> b ^ shiftleft(CAST(1 AS BIGINT), i)))"
+        ).alias("probe_buckets"),
     )
     cand = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"),
-        _bucket("embedding").alias("c_bucket"),
+        _bucket("embedding").alias("bucket"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    approx = (
-        F.broadcast(probes)
-        .join(cand, probes.probe_bucket == cand.c_bucket)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine("q_emb", "c_emb").alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= RECALL_K)
-        .select("query_id", F.col("neighbor_id").alias("approx_id"))
-    )
-    exact = (
-        F.broadcast(q.select("query_id", "q_emb"))
-        .crossJoin(cand.select("neighbor_id", "c_emb"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine("q_emb", "c_emb").alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= RECALL_K)
-        .select("query_id", "neighbor_id")
-    )
-    hits = exact.join(
-        approx,
-        (exact.query_id == approx.query_id) & (exact.neighbor_id == approx.approx_id),
-        "left_semi",
-    )
-    return (
-        exact.select("query_id")
-        .distinct()
-        .join(hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits")), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            (F.coalesce("n_hits", F.lit(0)).cast("double") / F.lit(float(RECALL_K))).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return _cos_recall(
+        F.broadcast(q).crossJoin(cand),
+        "array_contains(probe_buckets, bucket)",
+        RECALL_K,
+    ).orderBy("query_id")
 
 
 Q122_SQL = f"""
@@ -1461,8 +1452,9 @@ def q133_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary).
 
     Mining rides the existing ANN serving path, not a fresh scan: q51's
-    IVF probe mechanics (broadcast centroids → per-anchor N_PROBE lists
-    → candidates from those lists only) with the label-mismatch filter
+    IVF probe mechanics (broadcast packed centroids → per-anchor N_PROBE
+    lists as one map-side expression, _probes_sql over _unit_sims_sql →
+    candidates from those lists only) with the label-mismatch filter
     applied BEFORE scoring's window, so each anchor scores ~corpus/
     (N_CENTROIDS/N_PROBE) candidates. At 100 TB this is the nightly
     mining job over the training set: anchors are a hashed sample, the
@@ -1474,27 +1466,19 @@ def q133_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb")
     )
-    # assignment + probes reuse the shared normalized-centroid machinery
-    # (_assign / _unit_centroids): ranking by dot(e, c/|c|) is cosine's
-    # order at a third of the arithmetic, and there is exactly ONE
-    # implementation of the tie-break to maintain
+    # assignment + probes rank by the unit-centroid dot (_assign,
+    # _unit_sims_sql): cosine's order at a third of the arithmetic, and
+    # exactly ONE implementation of the tie-break to maintain
     assigned = _assign(emb, cent, carry=("label",))
-    cent_n = _unit_centroids(cent)
-    anchors = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("embedding").alias("a_emb"),
-        F.col("label").alias("anchor_label"),
-    )
-    w_probe = Window.partitionBy("anchor_id").orderBy(F.col("q_sim").desc(), F.col("cid"))
     probes = (
-        anchors.crossJoin(F.broadcast(cent_n))
+        emb.filter(F.col("vec_id") < 10)
+        .crossJoin(F.broadcast(_packed_cents(cent)))
         .select(
-            "anchor_id", "a_emb", "anchor_label", "cid",
-            _dot("a_emb", "c_unit").alias("q_sim"),
+            F.col("vec_id").alias("anchor_id"),
+            F.col("embedding").alias("a_emb"),
+            F.col("label").alias("anchor_label"),
+            F.explode(F.expr(_probes_sql(_unit_sims_sql("cents")))).alias("cid"),
         )
-        .withColumn("probe_rank", F.row_number().over(w_probe))
-        .filter(F.col("probe_rank") <= N_PROBE)
-        .select("anchor_id", "a_emb", "anchor_label", "cid")
     )
     w = Window.partitionBy("anchor_id").orderBy(
         F.col("cos_sim").desc(), F.col("negative_id")
@@ -1606,7 +1590,8 @@ def q138_jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side pass (store the 16 ints next to the vector); the exact
     baseline stays the bounded-query audit lane (broadcast crossJoin
     over RECALL_QUERIES queries, q48's shape), never a corpus
-    self-join.
+    self-join. Each pair scores both spaces once and one window ranks
+    the two keys (_recall_pass).
 
     Measured verdict on the synthetic embeddings: mean recall@5 ≈ 0.09
     at 4× compression — near-uniform random vectors are JL's worst case
@@ -1640,68 +1625,19 @@ def q138_jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("_ei").alias("q_ei"),
         F.col("_pj").alias("q_pj"),
     )
-    dot = lambda a, b: F.expr(  # noqa: E731
+    dot = lambda a, b: (  # noqa: E731
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0 AS BIGINT), (a, x) -> a + x)"
     )
-    # ONE pass over the crossJoin scores BOTH spaces (the exact and
-    # approx rankings consume the same pair relation, unlike q120 whose
-    # approx side is a genuinely different bucketed join); the
-    # checkpoint stops the two window branches from re-running the join
-    scored = (
-        F.broadcast(q)
-        .crossJoin(base.select(F.col("vec_id").alias("neighbor_id"), "_ei", "_pj"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot("q_ei", "_ei").alias("dot_exact"),
-            dot("q_pj", "_pj").alias("dot_approx"),
-        )
-        .localCheckpoint(eager=True)
+    # every pair enters both rankings: kind 0 by the original-space
+    # dot, kind 1 by the projected one, both BIGINT and descending
+    keys = F.expr(
+        f"array(named_struct('kind', 0, 'key', -{dot('q_ei', '_ei')}),"
+        f" named_struct('kind', 1, 'key', -{dot('q_pj', '_pj')}))"
     )
-    w_e = Window.partitionBy("query_id").orderBy(
-        F.col("dot_exact").desc(), F.col("neighbor_id")
+    pairs = F.broadcast(q).crossJoin(
+        base.select(F.col("vec_id").alias("neighbor_id"), "_ei", "_pj")
     )
-    w_a = Window.partitionBy("query_id").orderBy(
-        F.col("dot_approx").desc(), F.col("neighbor_id")
-    )
-    exact = (
-        scored.withColumn("rank", F.row_number().over(w_e))
-        .filter(F.col("rank") <= RECALL_K)
-        .select("query_id", "neighbor_id")
-    )
-    approx = (
-        scored.withColumn("rank", F.row_number().over(w_a))
-        .filter(F.col("rank") <= RECALL_K)
-        .select("query_id", F.col("neighbor_id").alias("approx_id"))
-    )
-    # bounded audit frames (RECALL_QUERIES x RECALL_K rows): hint the
-    # broadcasts — Spark planned SortMergeJoins here (r17 plan audit),
-    # paying shuffle+sort rounds on rows that fit one broadcast block
-    hits = exact.join(
-        F.broadcast(approx),
-        (exact.query_id == approx.query_id) & (exact.neighbor_id == approx.approx_id),
-        "left_semi",
-    )
-    return (
-        exact.select("query_id")
-        .distinct()
-        .join(
-            F.broadcast(
-                hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-            ),
-            "query_id",
-            "left",
-        )
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            (F.coalesce("n_hits", F.lit(0)) / F.lit(float(RECALL_K))).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return _recall_pass(pairs, keys, RECALL_K).orderBy("query_id")
 
 
 def _jl_sql() -> str:
@@ -2047,12 +1983,11 @@ def _sqdist_sql(a: str, b: str) -> str:
 
 
 # ------------------------------------------------------- serving pass
-# Every PQ lane (q166, q167, q168, q174, q177) serves in ONE corpus
-# pass, the distributed top-k shape (score locally, keep a per-partition
-# top-k, merge once): the PQ_NQ query rows meet one broadcast state row
-# and get their probes and LUTs map-side (_pq_queries), each corpus row
-# is paired with every query and emits one (kind, key) struct per
-# ranking it enters, and _top_by_kind ranks all of them in one window.
+# Every PQ lane (q166, q167, q168, q174, q177) serves in the one ranking
+# pass (see the ranking-pass block above q120): the PQ_NQ query rows
+# meet one broadcast state row and get their probes and LUTs map-side
+# (_pq_queries), and each corpus row, paired with every query, emits
+# its exact and ADC keys for _top_by_kind.
 
 # the full-vector unit dot of a (qn, n) pair (both _normalized_corpus
 # outputs, so the dot IS cosine): the exact baseline's score and the
@@ -2062,10 +1997,6 @@ _UNIT_DOT_SQL = (
     "aggregate(zip_with(qn, n, (x, y) -> x * y),"
     " CAST(0 AS DOUBLE), (acc, z) -> acc + z)"
 )
-# the 1-based slot of a neighbor's coarse list `cid` among its query's
-# `probes`, 0 when the list is not probed; a neighbor lives in exactly
-# one list, so a probed pair scores once, against that list's LUT
-_PROBE_SLOT = "CAST(array_position(probes, cid) AS INT)"
 
 
 def _flat_key_sql(lut: str, codes: str) -> str:
@@ -2101,13 +2032,8 @@ def _pq_queries(rows: DataFrame, state: DataFrame) -> DataFrame:
     broadcast `state` row (packed `cents`, _packed_cents, plus the
     lane's packed codebooks). qn is the zero-safe unit query
     (_normalized_corpus's law) and probes its N_PROBE nearest lists by
-    full cosine, map-side: the first N_PROBE entries of the sorted
-    _cos_sims_sql array, whose (sim desc, cid asc) order is the probe
-    window's. Lanes build their LUTs over these columns."""
-    probes = (
-        f"transform(slice(sort_array({_cos_sims_sql('cents')}, false),"
-        f" 1, {N_PROBE}), p -> -p.ncid)"
-    )
+    full cosine, map-side (_probes_sql over _cos_sims_sql). Lanes build
+    their LUTs over these columns."""
     return (
         rows.filter(F.col("vec_id") < PQ_NQ)
         .withColumn("_enrm", _safe_nrm(_norm("embedding")))
@@ -2115,42 +2041,10 @@ def _pq_queries(rows: DataFrame, state: DataFrame) -> DataFrame:
         .select(
             F.col("vec_id").alias("query_id"),
             _unit("embedding", "_enrm").alias("qn"),
-            F.expr(probes).alias("probes"),
+            F.expr(_probes_sql(_cos_sims_sql("cents"))).alias("probes"),
             *state.columns,
         )
     )
-
-
-def _top_by_kind(pairs: DataFrame, keys: Column, cut: int) -> DataFrame:
-    """THE ranking of a serving pass: every (query_id, neighbor_id ≠
-    query_id) pair of `pairs` explodes `keys`, an array of (kind, key,
-    …) structs (one per ranking the pair enters), and ONE row_number
-    window over (query_id, kind), ordered by (key, neighbor_id), keeps
-    the rows with rk ≤ cut. Spark plans a partial WindowGroupLimit
-    below the window's single exchange, so the shuffle carries at most
-    partitions × PQ_NQ × kinds × cut rows at any corpus size."""
-    w = Window.partitionBy("query_id", "kind").orderBy("key", "neighbor_id")
-    return (
-        pairs.filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.explode(keys).alias("k"))
-        .select("query_id", "neighbor_id", "k.*")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= cut)
-    )
-
-
-def _hits(kind: int) -> Column:
-    """The neighbor ids of a _top_by_kind frame's `kind` ranking with
-    rk ≤ PQ_TOPK, collected per group (the top-k answer set)."""
-    return F.collect_list(
-        F.when((F.col("kind") == kind) & (F.col("rk") <= PQ_TOPK), F.col("neighbor_id"))
-    )
-
-
-def _mean_recall(n_hits: str) -> Column:
-    """The mean recall@PQ_TOPK of a per-query hit-count column, as an
-    aggregate: one division of exact integer counts."""
-    return F.sum(n_hits).cast("double") / (F.count(F.lit(1)) * PQ_TOPK).cast("double")
 
 
 # ---------------------------------------------------------- shared state
@@ -2220,11 +2114,12 @@ def _pq_clustered_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_shared(spark: SparkSession, sf_dir: str) -> dict:
-    """The per-invocation base frames over the embeddings table: pinned
-    nv (normalized corpus), pinned cent (the K coarse centroids), and
-    the lazily-added codebook/index entries the lane helpers below fill
-    in. Each invocation's dict is its own (see the block comment above
-    — no cross-invocation memo)."""
+    """The per-invocation base frames of the IVF-PQ lanes (q167 and q177
+    through _pq_shared_flat, q168 through _pq_shared_residual) over the
+    embeddings table: pinned nv (normalized corpus), pinned cent (the K
+    coarse centroids), and the lazily-added codebook/index entries the
+    lane helpers below fill in. Each invocation's dict is its own (see
+    the block comment above — no cross-invocation memo)."""
     emb = load_table_parallel(spark, sf_dir, "embeddings")
     # nv and cent are independent reductions of emb: their eager pins
     # run as CONCURRENT jobs (guide §2.6 — actions are only sequential
@@ -2310,18 +2205,20 @@ def q166_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is encoded on the fly (_pq_code_sql, PQ_M small ints) and paired
     with every query, scoring as PQ_M table lookups summed. Every pair
     emits its exact-cosine key and its ADC key, one window ranks both
-    (_top_by_kind), and n_overlap = |exact top-k ∩ ADC top-k| per query
+    (_recall_pass), and n_overlap = |exact top-k ∩ ADC top-k| per query
     — the number that tells you whether a 64x-compressed index is safe
     to serve as-is or needs the standard full-precision re-rank of the
     ADC top candidates. Exact scoring is a bounded baseline (PQ_NQ
     broadcast queries), as documented for q48/q128; the production path
     routes candidates through IVF (q167) first.
 
-    All training state is this invocation's own (_pq_shared; no
-    cross-invocation memo since r17)."""
-    st = _pq_shared(spark, sf_dir)
-    nv = st["nv"]
-    cbd = _pq_pack_codebook(_pq_train(st["emb"], _pq_subvecs(nv)))
+    All training state is this invocation's own (no cross-invocation
+    memo since r17): one pinned normalized corpus, and no coarse
+    centroids, since nothing here probes."""
+    emb = load_table_parallel(spark, sf_dir, "embeddings")
+    # pinned: training, the encoder and the query LUTs all read it
+    nv = _normalized_corpus(emb).localCheckpoint(eager=True)
+    cbd = _pq_pack_codebook(_pq_train(emb, _pq_subvecs(nv)))
     queries = (
         nv.filter(F.col("vec_id") < PQ_NQ)
         .crossJoin(F.broadcast(cbd))
@@ -2342,20 +2239,8 @@ def q166_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" named_struct('kind', 1, 'key', {_flat_key_sql('lut', 'codes')}))"
     )
     return (
-        _top_by_kind(coded.crossJoin(F.broadcast(queries)), keys, PQ_TOPK)
-        .groupBy("query_id")
-        .agg(
-            F.size(F.array_intersect(_hits(0), _hits(1)))
-            .cast("bigint")
-            .alias("n_overlap")
-        )
-        .select(
-            "query_id",
-            "n_overlap",
-            (F.col("n_overlap").cast("double") / F.lit(float(PQ_TOPK))).alias(
-                "recall_at_k"
-            ),
-        )
+        _recall_pass(coded.crossJoin(F.broadcast(queries)), keys, PQ_TOPK)
+        .withColumnRenamed("n_hits", "n_overlap")
         .orderBy("query_id")
     )
 
@@ -2531,7 +2416,7 @@ def _serving_audit(pairs: DataFrame, adc_key: str) -> DataFrame:
     )
     per_q = (
         top.groupBy("query_id")
-        .agg(_hits(0).alias("ex"), _hits(1).alias("adc"), cands.alias("cands"))
+        .agg(_hits(0, PQ_TOPK).alias("ex"), _hits(1, PQ_TOPK).alias("adc"), cands.alias("cands"))
         .select(
             "query_id",
             F.size(F.array_intersect("ex", reranked)).cast("bigint").alias("n_hits"),
@@ -2544,7 +2429,7 @@ def _serving_audit(pairs: DataFrame, adc_key: str) -> DataFrame:
     return (
         per_q.agg(
             F.collect_list(F.struct("query_id", "n_hits", "n_hits_adc")).alias("qs"),
-            _mean_recall("n_hits").alias("mean_recall"),
+            _mean_recall("n_hits", PQ_TOPK).alias("mean_recall"),
         )
         .select(F.inline("qs"), "mean_recall")
         .select(
@@ -3194,7 +3079,11 @@ def q174_ivfadc_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = _top_by_kind(coded.crossJoin(F.broadcast(queries)), keys, PQ_TOPK)
     per_q = (
         top.groupBy("query_id")
-        .agg(_hits(0).alias("ex"), _hits(1).alias("fl"), _hits(2).alias("rs"))
+        .agg(
+            _hits(0, PQ_TOPK).alias("ex"),
+            _hits(1, PQ_TOPK).alias("fl"),
+            _hits(2, PQ_TOPK).alias("rs"),
+        )
         .select(
             "query_id",
             F.size(F.array_intersect("ex", "fl")).cast("bigint").alias("n_hits_flat"),
@@ -3207,8 +3096,8 @@ def q174_ivfadc_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_q.agg(
             F.collect_list(F.struct("query_id", "n_hits_flat", "n_hits_res")).alias("qs"),
-            _mean_recall("n_hits_flat").alias("mean_flat"),
-            _mean_recall("n_hits_res").alias("mean_res"),
+            _mean_recall("n_hits_flat", PQ_TOPK).alias("mean_flat"),
+            _mean_recall("n_hits_res", PQ_TOPK).alias("mean_res"),
         )
         .select(F.inline("qs"), "mean_flat", "mean_res")
         .select(

@@ -76,23 +76,25 @@ def _tuned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessi
 #
 _CHANGED_THIS_ROUND = [
     # the AST caller closure of the helpers this change edits or deletes:
-    # the PQ serving pass (_top_by_kind, _serving_audit, _pq_queries and
-    # the probe, LUT and ADC-key SQL), the _pq_shared builders and
-    # _pq_subvecs, plus the one centroid law (_cent_fields) that
-    # _unit_centroids and _argmax_cosine_packed now read
+    # the one ranking pass (_top_by_kind, _hits, _mean_recall and the new
+    # _recall_pass/_cos_recall tail), the probe expression (_probes_sql,
+    # _with_probes, _pq_queries, _PROBE_SLOT), _argmax_sql's factored
+    # _unit_sims_sql, _pq_shared, and the lanes rewritten onto them
+    "q120_ann_recall",
+    "q121_ivf_recall",
+    "q122_multiprobe_recall",
+    "q123_ann_serving",
+    "q138_jl_projection_recall",
+    "q51_ann_ivf_topk",
+    "q133_hard_negatives",
     "q166_pq_adc_recall",
     "q167_ivfpq_serving",
     "q168_ivfadc_residual",
     "q174_ivfadc_clustered",
     "q177_pq_index_store_audit",
-    "q51_ann_ivf_topk",
     "q86_kmeans_ivf_train",
     "q98_semantic_dedup",
-    "q100_centroid_outliers",
-    "q121_ivf_recall",
-    "q123_ann_serving",
     "q124_kmeans_hashed_seed_train",
-    "q133_hard_negatives",
 ]
 
 

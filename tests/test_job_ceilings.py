@@ -1,6 +1,7 @@
-"""Job ceilings of the import → store → export round trip and of the
+"""Job ceilings of the import → store → export round trip, of the
 five product-quantization lanes (q166, q167, q168, q174, q177), the
-heaviest lanes of the registry.
+heaviest lanes of the registry, and of the five recall audits that rank
+in the same one pass (q120, q121, q122, q123, q138).
 
 The scheduler's job-id delta over one call is a machine-independent
 count: the same at `local[2]`, `local[4]` and `local[8]`. Each ceiling
@@ -33,11 +34,20 @@ CEILINGS = {
 # for q177, the store commit, reload and checksums) plus the collect of
 # its one serving pass
 PQ_CEILINGS = {
-    "q166_pq_adc_recall": 20,
+    "q166_pq_adc_recall": 18,
     "q167_ivfpq_serving": 31,
     "q168_ivfadc_residual": 28,
     "q174_ivfadc_clustered": 31,
     "q177_pq_index_store_audit": 58,
+}
+# the recall audits at sf0.001: the call plus the collect of its one
+# ranking pass, with the rows it returns (one per audited query)
+RECALL_CEILINGS = {
+    "q120_ann_recall": (9, 20),
+    "q121_ivf_recall": (14, 10),
+    "q122_multiprobe_recall": (9, 20),
+    "q123_ann_serving": (16, 5),
+    "q138_jl_projection_recall": (9, 20),
 }
 
 
@@ -79,3 +89,16 @@ def test_pq_lane_job_ceiling(spark, name):
     n = _next_job_id(spark) - start
     assert len(rows) == PQ_NQ
     assert n <= PQ_CEILINGS[name], f"{name} launched {n} jobs, ceiling {PQ_CEILINGS[name]}"
+
+
+@pytest.mark.parametrize("name", sorted(RECALL_CEILINGS))
+def test_recall_lane_job_ceiling(spark, name):
+    """A recall audit ranks its exact and approx keys in one pass: one
+    call and its collect stay within the lane's ceiling and return one
+    row per audited query."""
+    ceiling, n_rows = RECALL_CEILINGS[name]
+    start = _next_job_id(spark)
+    rows = registry()[name].fn(spark, SF_DIR).collect()
+    n = _next_job_id(spark) - start
+    assert len(rows) == n_rows
+    assert n <= ceiling, f"{name} launched {n} jobs, ceiling {ceiling}"

@@ -114,18 +114,41 @@ def test_q48_broadcast_not_cartesian(spark):
     assert "BroadcastNestedLoopJoin" in p, p
 
 
-def _one_serving_pass(p: str) -> None:
-    """The PQ lanes' serving shape: the broadcast query rows meet the
+def _one_ranking_pass(p: str) -> None:
+    """The one-pass ranking shape: the broadcast query rows meet the
     corpus in one pass and ONE row_number window ranks every key, so the
     plan holds exactly one partial WindowGroupLimit (the per-partition
     top-k below the single ranking exchange); no shuffle
-    CartesianProduct and no SortMergeJoin of the corpus; the trained
-    codebook is pinned (ExistingRDD)."""
+    CartesianProduct and no SortMergeJoin of the corpus."""
     assert "CartesianProduct" not in p, p
     assert "SortMergeJoin" not in p, p
     partial = [ln for ln in p.splitlines() if "WindowGroupLimit" in ln and "Partial" in ln]
     assert len(partial) == 1, p
+
+
+def _one_serving_pass(p: str) -> None:
+    """The PQ lanes' serving shape: one ranking pass
+    (_one_ranking_pass) whose trained codebook is pinned (ExistingRDD)."""
+    _one_ranking_pass(p)
     assert "ExistingRDD" in p, p
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q120_ann_recall",
+        "q121_ivf_recall",
+        "q122_multiprobe_recall",
+        "q123_ann_serving",
+        "q138_jl_projection_recall",
+    ],
+)
+def test_recall_audit_ranks_in_one_pass(spark, name):
+    """The recall audits score every (query, neighbor) pair once and
+    rank the exact and approx keys in one window (_recall_pass): one
+    partial WindowGroupLimit, and no SortMergeJoin from a semi-join or
+    left join of the two answer sets."""
+    _one_ranking_pass(plan(spark, name, mode="simple"))
 
 
 def test_q166_pq_broadcast_codebooks_not_cartesian(spark):
@@ -145,10 +168,12 @@ def test_q49_lsh_bucket_equijoin(spark):
 
 def test_q51_ivf_broadcasts(spark):
     """IVF ANN: centroid assign + probe joins broadcast the small sides;
-    no sort-merge join of the corpus."""
+    no sort-merge join of the corpus. The probes are one map-side
+    expression, so the top-k is the plan's only Window."""
     p = plan(spark, "q51_ann_ivf_topk", mode="simple")
     assert "SortMergeJoin" not in p, p
     assert "CartesianProduct" not in p, p
+    assert len(re.findall(r"\bWindow \[", p)) == 1, p
 
 
 def test_q41_text_quality_no_python_udf(spark):
@@ -532,13 +557,15 @@ def test_q119_star_join_broadcast_dims_pushed_filters(spark):
 
 
 def test_q123_ann_serving_recall_gated_equijoin(spark):
-    """Recall-gated serving: the candidate-selection join on the IVF list
-    id must be a broadcast HASH equi-join (probes side broadcast), and
-    the only nested-loop joins in the plan are the three documented
+    """Recall-gated serving: the quality gate is a broadcast HASH
+    semi-join that prunes the corpus before assignment (the served
+    candidates are a predicate on the audit's one pass, so no candidate
+    equi-join remains; q51 is the standalone serving plan), and the
+    only nested-loop joins in the plan are the three documented
     broadcast-of-bounded folds (candidate assignment x centroids, query
-    probing x centroids, and the exact-baseline audit over the bounded
-    query set) — nothing corpus x corpus. The emitted verdict must clear
-    the stated target on the test data."""
+    probing x centroids, and the one pass over the bounded query set) —
+    nothing corpus x corpus. The emitted verdict must clear the stated
+    target on the test data."""
     df = registry()["q123_ann_serving"].fn(spark, SF_DIR)
     p = _explain_str(df, "simple")
     assert "CartesianProduct" not in p, p
@@ -655,11 +682,14 @@ def test_q133_candidates_come_from_probe_lists(spark):
     """Hard-negative mining must ride the IVF probe equi-join: candidate
     selection is a broadcast hash join (on cid), never a sort-merge or
     cartesian pairing of the corpus with itself. The only nested-loop
-    joins allowed are the tiny broadcast-centroid crossJoins."""
+    joins allowed are the tiny broadcast-centroid crossJoins. The probes
+    are one map-side expression, so the top-k is the plan's only
+    Window."""
     p = plan(spark, "q133_hard_negatives")
     assert len(re.findall(r"\(\d+\) BroadcastHashJoin\b", p)) >= 1, p
     assert len(re.findall(r"\(\d+\) SortMergeJoin\b", p)) == 0, p
     assert len(re.findall(r"\(\d+\) CartesianProduct\b", p)) == 0, p
+    assert len(re.findall(r"\(\d+\) Window\b", p)) == 1, p
 
 
 def test_gate_priority_lists_reference_real_queries(spark, monkeypatch):

@@ -19,6 +19,11 @@ submits from worker threads carry it too: the lanes run concurrent
 jobs through `session.concurrent`, whose threads inherit the caller's
 local properties.
 
+Each run prints `rN LANE WALL_S jobs N`: N is the scheduler's job-id
+delta over the run (`dagScheduler().nextJobId()`, the counter
+tests/test_job_ceilings.py and bench.py read), a machine-independent
+count to set beside the wall.
+
 Usage: python tools/ab_lane.py TREE_ROOT SF_DIR LANE [LANE ...]
 """
 
@@ -38,6 +43,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     print(f"cores {spark.sparkContext.defaultParallelism}", flush=True)
     specs = registry()
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     # untimed scheduler/codegen warm-up job
     (
         spark.range(1000)
@@ -51,9 +57,11 @@ def main() -> None:
     for rnd in (1, 2):
         for n in sys.argv[3:]:
             spark.sparkContext.setJobDescription(f"ab_lane:{n}:r{rnd}")
+            j0 = scheduler.nextJobId()
             t0 = time.time()
             specs[n].fn(spark, sf).write.format("noop").mode("overwrite").save()
-            print(f"r{rnd} {n} {time.time() - t0:.3f}", flush=True)
+            wall = time.time() - t0
+            print(f"r{rnd} {n} {wall:.3f} jobs {scheduler.nextJobId() - j0}", flush=True)
 
 
 if __name__ == "__main__":
